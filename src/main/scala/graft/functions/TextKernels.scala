@@ -456,8 +456,8 @@ object TextKernels {
     * min-rank-present loop therefore fires the same merges in the same
     * order, restricted to ranks that still apply. Per-word cost is
     * O(len²) hash probes — INDEPENDENT of merge-table size, unlike the
-    * chained-replace formulation's O(nMerges · len) (the `bpe_encode`
-    * ScaleProbe pins this). */
+    * chained-replace formulation's O(nMerges · len) (measured by the
+    * `bpe_encode` probe, BENCH_NOTES.md "Round 15"). */
   def bpeEncode(text: UTF8String,
                 ranks: java.util.HashMap[String, Integer]): ArrayData =
     bpeEncode(text, ranks, marked = false)
@@ -516,7 +516,8 @@ object TextKernels {
     * occurrences in place, until no trained pair remains. Returns the
     * surviving symbol count; `syms(0 until result)` is the encoding.
     * Per-word cost is O(len²) hash probes — INDEPENDENT of merge-table
-    * size (the `bpe_encode` ScaleProbe pins this). */
+    * size (measured by the `bpe_encode` probe, BENCH_NOTES.md
+    * "Round 15"). */
   private def mergeLoop(syms: Array[String], n: Int,
                         ranks: java.util.HashMap[String, Integer]): Int = {
     var count = n

@@ -673,7 +673,8 @@ object Dedup {
   /** [[spanExcise]] with the start-list pin optional: the plan-guard
     * spec passes `pinMarks = false` so the WHOLE mark pipeline (window
     * hashing, first-occurrence agg, join-back) stays visible in one
-    * executed plan; production callers always pin. */
+    * executed plan; production callers pin whenever the guard count
+    * runs. */
   private[graft] def spanExciseImpl(docs: DataFrame, id: Column,
                                     text: Column, k: Int,
                                     maxBroadcastMarks: Long,
@@ -700,18 +701,20 @@ object Dedup {
       .filter(col("doc_id") =!= col("f_doc") || col("pos") =!= col("f_pos"))
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_set(col("pos"))).as("starts"))
-    val marks = if (pinMarks) marks0.localCheckpoint(true) else marks0
-    // With the pin the guard count is a count over materialized
-    // partitions, not a second pipeline run. maxBroadcastMarks =
-    // Long.MaxValue still documents "always broadcast";
-    // maxBroadcastMarks = 0 still forces the planner's choice.
+    // Pinned only when the guard count will run: maxBroadcastMarks =
+    // Long.MaxValue ("always broadcast") and maxBroadcastMarks <= 0
+    // ("planner's choice") skip the count, leaving the rewrite join as
+    // the one consumer, so a pin would only add a write and a read. With
+    // the pin the guard count is a count over materialized partitions,
+    // not a second pipeline run.
+    val guardCounts = maxBroadcastMarks != Long.MaxValue && maxBroadcastMarks > 0L
+    val marks = if (pinMarks && guardCounts) marks0.localCheckpoint(true) else marks0
     val broadcastSafe =
-      if (maxBroadcastMarks == Long.MaxValue) true
-      else if (maxBroadcastMarks <= 0L) false
-      else marks.count() <= maxBroadcastMarks
+      if (guardCounts) marks.count() <= maxBroadcastMarks
+      else maxBroadcastMarks == Long.MaxValue
     // warn only on a MEASURED over-limit — the <= 0 escape hatch is a
     // deliberate config, not a counted excess
-    if (!broadcastSafe && maxBroadcastMarks > 0L)
+    if (!broadcastSafe && guardCounts)
       System.err.println(
         s"[graft] spanExcise: marked-doc count exceeds $maxBroadcastMarks — " +
           "dropping the broadcast hint; affected documents' text will move " +

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * tuple-keyed shuffle, NOT a table re-read — which wins on the cold
   * 100 TB table this exists for (k separate checks re-read the corpus
   * k times, IO dominates) but LOSES on an already-cached frame, where
-  * re-scans are nearly free and expansion is not (the `dq` ScaleProbe
-  * prices it: 64M cached rows, one-pass 48 s vs five scans 20 s). So
+  * re-scans are nearly free and expansion is not (the `dq` probe in
+  * BENCH_NOTES.md, "Round 13, wave 5-6", prices it: 64M cached rows,
+  * one-pass 48 s vs five scans 20 s). So
   * `report` chooses by `df.storageLevel` — cold input rides one
   * aggregate, cached input runs each Unique as its own count-distinct
   * scan — overridable via `splitUnique`. Referential integrity is a

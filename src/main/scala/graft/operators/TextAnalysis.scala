@@ -101,10 +101,6 @@ object TextAnalysis {
     graft.functions.TextHashExpressions.langIdProfile(norm, langProfiles)
   }
 
-  /** Quality features + a composite score in [0,1]: rewards mid-length
-    * documents and word-like content, penalizes punctuation soup. The
-    * formula is arbitrary but fixed — the operator contract is the feature
-    * extraction, which is what the oracle verifies. */
   /** Engine-exact 6-dp quantizer for NON-NEGATIVE doubles:
     * `floor(x·10⁶ + 0.5)/10⁶`. Every step is a correctly-rounded IEEE
     * op (multiply, add, floor-exact, divide), so ANY engine computes the
@@ -118,12 +114,26 @@ object TextAnalysis {
   private[graft] def quant6(c: Column): Column =
     floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
 
-  /** `extra` columns ride the same single map-side pass (each evaluated
+  private val qualityColumns = Seq("doc_id", "n_chars", "n_tokens", "n_punct",
+    "avg_token_len", "punct_ratio", "quality_score")
+
+  /** Quality features + a composite score in [0,1]: rewards mid-length
+    * documents and word-like content, penalizes punctuation soup. The
+    * formula is arbitrary but fixed — the operator contract is the feature
+    * extraction, which is what the oracle verifies.
+    *
+    * `extra` columns ride the same single map-side pass (each evaluated
     * against the input row, aliased to its name) — a caller who needs,
     * say, a language id NEXT TO the quality features gets one corpus
-    * scan instead of two map-only scans glued by a doc-keyed join. */
+    * scan instead of two map-only scans glued by a doc-keyed join. Their
+    * names must not collide with the operator's own output columns: a
+    * clash would either duplicate a column or be silently overwritten. */
   def qualityFeatures(df: DataFrame, id: Column, text: Column,
                       extra: Seq[(String, Column)] = Nil): DataFrame = {
+    val clashes = extra.map(_._1).filter(qualityColumns.contains)
+    require(clashes.isEmpty,
+      s"qualityFeatures: extra columns ${clashes.mkString(", ")} clash with " +
+        s"its output columns (${qualityColumns.mkString(", ")})")
     val toks = tokens(text)
     df.select(Seq(
         id.as("doc_id"),
@@ -631,6 +641,15 @@ object TextAnalysis {
         x => x.getField("para")), sep).as("clean_text"))
   }
 
+  /** The word-frequency table BPE training runs on — ONE corpus scan
+    * (whitespace tokens, lowercase-letter words of length ≥ 2). Its
+    * cost at 2M docs is recorded in BENCH_NOTES.md, "Round 13, wave
+    * 5-6" (the `bpe` probe). */
+  private def bpeWordCounts(docs: DataFrame, text: Column): DataFrame =
+    docs.select(explode(tokens(text)).as("w"))
+      .filter(col("w").rlike("^[a-z]+$") && length(col("w")) >= 2)
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+
   /** Distributed BPE MERGE TRAINING — learn the first `nMerges` byte-pair
     * merge rules from the corpus (the classic Sennrich et al. algorithm;
     * [[bpeTokens]] only counts pre-tokenizer segments, this learns the
@@ -661,15 +680,6 @@ object TextAnalysis {
     * Stops early if every word has collapsed to one symbol. Output:
     * `(rank, left, right, freq)` — freq is the classical sliding pair
     * count at selection time. */
-  /** The word-frequency table BPE training runs on — ONE corpus scan
-    * (whitespace tokens, lowercase-letter words of length ≥ 2).
-    * Shared with the `bpe` ScaleProbe so what the probe times IS the
-    * scan [[bpeTrain]] performs, by construction. */
-  private[graft] def bpeWordCounts(docs: DataFrame, text: Column): DataFrame =
-    docs.select(explode(tokens(text)).as("w"))
-      .filter(col("w").rlike("^[a-z]+$") && length(col("w")) >= 2)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-
   def bpeTrain(docs: DataFrame, text: Column, nMerges: Int,
                checkpointEvery: Int = 8): DataFrame =
     bpeTrainLoop(
@@ -1835,7 +1845,8 @@ object TextAnalysis {
     * (never corpus-row-shaped once pruned), lazily derived — a caller
     * scoring MANY batches against one model should pin the tables
     * (localCheckpoint) so the corpus scan is not replayed per batch (the
-    * `ngram` ScaleProbe's shape). `broadcastHint=true` records
+    * shape priced in BENCH_NOTES.md, "Round 15", ngramScore join-regime
+    * price). `broadcastHint=true` records
     * [[ngramTrain]]'s measured verdict that every table fits the
     * broadcast threshold; [[ngramScore]] then pins the five model joins
     * as explicit broadcasts (a pinned/checkpointed table loses its size
@@ -1869,8 +1880,8 @@ object TextAnalysis {
     * never pruned, so every in-vocabulary context keeps its denominator
     * count.
     *
-    * The SHUFFLE-REGIME GUARD (the `ngram_join_regime` ScaleProbe priced
-    * this cliff: an unpruned wide-vocab trigram table turns the five
+    * The SHUFFLE-REGIME GUARD (BENCH_NOTES.md, "Round 15", prices this
+    * cliff: an unpruned wide-vocab trigram table turns the five
     * [[ngramScore]] model joins from broadcasts into shuffles of the
     * gram stream — 3.4–7.3× slower at 200–500k docs and an OOM cliff if
     * the corpus-shaped table is ever materialized). Two phases, neither
@@ -1929,7 +1940,7 @@ object TextAnalysis {
           }.mkString(", ") +
           " — the ngramScore joins would silently enter the measured " +
           "shuffle regime (3.4–7.3× slower, OOM cliff; see the " +
-          s"ngram_join_regime probe). Raise minCount (currently $minCount) " +
+          s"ngram_join_regime probe in BENCH_NOTES.md). Raise minCount (currently $minCount) " +
           "to prune the singleton tail, or pass allowShuffle = true to " +
           "deliberately train an over-threshold model")
 

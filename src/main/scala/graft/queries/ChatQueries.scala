@@ -46,8 +46,9 @@ object ChatQueries {
         seg(2).as("q2"), seg(3).as("q3"))
   }
 
-  /** Assemble the turns array, with the query-specific plants. Shared
-    * with the ScaleProbe chat probe (same derivation, 1M-doc corpus). */
+  /** Assemble the turns array, with the query-specific plants. Its cost
+    * on a 1M-doc corpus is recorded in BENCH_NOTES.md, "Round 17
+    * continuation: SFT chat-data family" (the `chat_scale` probe). */
   private[graft] def convs(docs: DataFrame, plantInvalid: Boolean,
                            plantDup: Boolean): DataFrame = {
     val q = quarters(docs)

@@ -539,13 +539,14 @@ object RelationalQueries {
       val done = new java.io.File(s"$tmp/_done")
       if (!done.exists) {
         // stale-v1 sweep, best-effort only: listFiles() can return null,
-        // a matching entry may be a plain file, and a failed delete (e.g.
-        // an older-binary session mid-read) must never fail THIS query
+        // a matching entry may be a plain file (forceDelete removes files
+        // and directories alike), and a failed delete (e.g. an
+        // older-binary session mid-read) must never fail THIS query
         Option(new java.io.File(System.getProperty("java.io.tmpdir"))
             .listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("graft_fmt_") && f.isDirectory)
+          .filter(_.getName.startsWith("graft_fmt_"))
           .foreach { f =>
-            try org.apache.commons.io.FileUtils.deleteDirectory(f)
+            try org.apache.commons.io.FileUtils.forceDelete(f)
             catch { case _: Exception => () }
           }
         val stage = tmp + ".build_" + java.util.UUID.randomUUID

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions.col
 /** The one table-properties helper behind every version-fenced store
   * (IndexStore, TextIndexStore, FencedStore): fence correctness lives
   * in exactly how these strings are quoted and read back, so three
-  * drifting private copies were the same risk the SocketServerBase and
-  * bm25Score extractions removed — a fix to quoting or error wording
-  * must reach every store at once. */
+  * drifting private copies were the same risk the bm25Score extraction
+  * removed — a fix to quoting or error wording must reach every store
+  * at once. */
 private[graft] object CatalogProps {
 
   def setProps(spark: SparkSession, table: String,

@@ -31,7 +31,7 @@ trait KVStore extends Serializable {
 object KVStore {
   /** Serializable handle that resolves the backend from the per-JVM
     * registry at every call — for JVM-singleton stores addressed by name
-    * (tests, local mode). Network-backed stores ([[SocketKVStore]]) are
+    * (tests, local mode). Network-backed stores ([[RespKVStore]]) are
     * their own serializable handles and skip the registry entirely. */
   def named(name: String): KVStore = new NamedKVStore(name)
 }

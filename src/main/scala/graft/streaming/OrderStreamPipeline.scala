@@ -39,7 +39,7 @@ final class OrderStreamPipeline(
 
   /** Registry-addressed store (JVM-singleton backends; tests/local mode).
     * The primary constructor takes any serializable [[KVStore]] handle —
-    * e.g. [[SocketKVStore]] — which executor closures capture directly, so
+    * e.g. [[RespKVStore]] — which executor closures capture directly, so
     * nothing needs registering on executors. */
   def this(storeName: String, keyPrefix: String = "n-ko-",
            idempotent: Boolean = false) =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException,
   IOException, InputStream, OutputStream}
-import java.net.Socket
+import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
@@ -23,9 +23,10 @@ import java.util.concurrent.atomic.AtomicLong
   *  - `markBatch` → `SADD <appliedSetKey> id` → 1 added / 0 present
   *  - `batchSeen` → `SISMEMBER <appliedSetKey> id`
   *
-  * The instance is a cheap serializable handle (the [[SocketKVStore]]
-  * pattern): executor closures capture it, and the actual connection is
-  * established lazily ONCE PER JVM PER ENDPOINT in [[RespKVStore.pooled]]
+  * The instance is a cheap serializable handle: executor closures
+  * capture it directly (no registry on executors), and the actual
+  * connection is established lazily ONCE PER JVM PER ENDPOINT in
+  * [[RespKVStore.pooled]]
   * — per-executor connection reuse, the opposite of the reference's
   * pool-per-call leak. A protocol-level `-ERR` reply throws but keeps the
   * connection (the link is healthy); a transport failure evicts the
@@ -151,9 +152,12 @@ object RespKVStore {
 
   private val conns = new ConcurrentHashMap[(String, Int), Conn]()
 
-  /** One shared connection per JVM per endpoint, calls serialized on it;
-    * eviction on transport failure so the next call reconnects — the
-    * [[SocketKVStore.pooled]] protocol, verbatim, for RESP streams. */
+  /** One shared connection per JVM per endpoint; calls are serialized on
+    * it (a production client would hold a pool instead of a mutex). A
+    * dead connection is evicted on transport failure so the NEXT call
+    * reconnects — without the eviction one server restart would poison
+    * the cache entry and fail every later call to that endpoint for the
+    * life of the JVM. */
   private def pooled(host: String, port: Int, args: Seq[String]): Resp = {
     val key = (host, port)
     val c = conns.computeIfAbsent(key, _ => new Conn(host, port))
@@ -179,8 +183,11 @@ object RespKVStore {
     conns.clear()
   }
 
-  /** Sever every cached connection WITHOUT forgetting it — crash-injection
-    * hook, same semantics as [[SocketKVStore.killConnections]]. */
+  /** Sever every cached connection WITHOUT forgetting it (crash-injection
+    * test hook): the next call on a severed connection fails at the
+    * transport level and takes the eviction path — to the pooled client
+    * this is indistinguishable from the link dying under a running task,
+    * which is exactly the executor-side failure the crash specs inject. */
   def killConnections(): Unit =
     conns.values.forEach(c => try c.socket.close() catch { case _: Throwable => () })
 }
@@ -219,21 +226,100 @@ final class RespState {
   * uses (HINCRBY, HGETALL, SADD, SISMEMBER, PING), so [[RespKVStore]] is
   * exercised against REAL RESP framing across a real socket — byte-level
   * compatible with what redis-cli would send for the same commands (the
-  * specs pin this with handcrafted wire bytes). Lifecycle (fixed-port
-  * restart with retry, restart over a surviving [[RespState]], stop()
-  * drops live clients) is [[SocketServerBase]], shared with
-  * [[KVServer]]. */
+  * specs pin this with handcrafted wire bytes). Lifecycle: the
+  * SO_REUSEADDR bind with fixed-port retry, the daemon acceptor with
+  * backoff, the client registry with its stop-window guard, restart over
+  * a surviving [[RespState]], and a stop() that drops live connections so
+  * a restart looks like a real server death to pooled clients. */
 final class RespServer(bind: String = "127.0.0.1", fixedPort: Int = 0,
-                       backing: RespState = new RespState)
-    extends SocketServerBase(bind, fixedPort) {
+                       backing: RespState = new RespState) {
   val state: RespState = backing
 
   /** Total connections accepted — the spec hook proving per-JVM reuse. */
   @volatile var accepted: Int = 0
 
-  override protected def onAccept(): Unit = accepted += 1
+  // SO_REUSEADDR before bind: a fixed-port restart right after a stop()
+  // must not fail on the dead process's lingering TIME_WAIT sockets —
+  // restartability is the point of the fixed-port mode. Reuseaddr does
+  // not cover the port being transiently held as some unrelated outbound
+  // connection's local ephemeral port in the gap between the old server's
+  // close and this bind, so fixed-port mode also retries the bind briefly
+  // (such holders are short-lived by nature).
+  private val server = {
+    val s = new ServerSocket()
+    s.setReuseAddress(true)
+    val addr = new java.net.InetSocketAddress(
+      java.net.InetAddress.getByName(bind), fixedPort)
+    var attempt = 0
+    var bound = false
+    while (!bound) {
+      try { s.bind(addr, 64); bound = true }
+      catch {
+        case _: java.net.BindException if fixedPort != 0 && attempt < 100 =>
+          attempt += 1; Thread.sleep(100)
+        case e: Throwable => throw e
+      }
+    }
+    s
+  }
+  private val clients = ConcurrentHashMap.newKeySet[Socket]()
+  @volatile private var running = false
 
-  override protected def serveLoop(sock: Socket): Unit = {
+  def port: Int = server.getLocalPort
+
+  def start(): Unit = {
+    running = true
+    val acceptor = new Thread(() => {
+      while (running && !server.isClosed) {
+        try {
+          val sock = server.accept()
+          accepted += 1
+          val t = new Thread(() => serve(sock))
+          t.setDaemon(true)
+          t.start()
+        } catch {
+          // closed during stop() exits via the loop condition; any other
+          // accept failure (fd exhaustion, transient socket error) must not
+          // hot-spin — back off briefly before retrying
+          case _: Throwable => if (running && !server.isClosed) Thread.sleep(50)
+        }
+      }
+    })
+    acceptor.setDaemon(true)
+    acceptor.start()
+  }
+
+  private def serve(sock: Socket): Unit = {
+    clients.add(sock)
+    // Re-check AFTER registering: a connection accepted in the window
+    // between stop()'s `running = false` and its client sweep would
+    // otherwise be served by a "stopped" server — the half-open behavior
+    // stop() exists to prevent. Register-then-check pairs with stop()'s
+    // flag-then-sweep: whichever thread runs second sees the other's
+    // write, so the socket is closed on at least one path.
+    if (!running) {
+      clients.remove(sock)
+      try sock.close() catch { case _: Throwable => () }
+      return
+    }
+    try serveLoop(sock)
+    catch { case _: java.io.IOException => () } // connection closed under us
+    finally { clients.remove(sock); sock.close() }
+  }
+
+  /** Stop accepting AND drop live client connections — a restart must
+    * look like a real server death to pooled clients, not a half-open
+    * socket that keeps serving from the old process. */
+  def stop(): Unit = {
+    running = false
+    try server.close() catch { case _: Throwable => () }
+    clients.forEach(s => try s.close() catch { case _: Throwable => () })
+    clients.clear()
+  }
+
+  /** The per-connection protocol loop: read commands, write replies,
+    * return on clean EOF. */
+  private def serveLoop(sock: Socket): Unit = {
     val in = new BufferedInputStream(sock.getInputStream)
     val out = new BufferedOutputStream(sock.getOutputStream)
     while (true) {

@@ -652,6 +652,28 @@ class DedupSpec extends SparkSpec {
             org.apache.spark.sql.types.StringType).map(_.name)
         assert(stringy.isEmpty, s"string columns shuffled: $stringy\n$root")
       }
+      // The pinned production path (a counting guard, so the start-lists
+      // are checkpointed in their own job): what is left to plan is the
+      // corpus scan joined with the pinned start-lists, and the only
+      // text-carrying input of that join is the scan-side projection.
+      import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+      import org.apache.spark.sql.execution.joins.BaseJoinExec
+      import org.apache.spark.sql.types.StringType
+      val pinned = Dedup.spanExcise(docs, col("doc_id"), col("text"), k = 6)
+        .queryExecution.executedPlan
+      def carriesText(p: SparkPlan): Boolean =
+        p.output.exists(_.dataType == StringType)
+      assert(pinned.collect { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"the pin should leave no exchange in the final plan:\n$pinned")
+      val joins = pinned.collect { case j: BaseJoinExec => j }
+      assert(joins.size == 1, s"expected one rewrite join:\n$pinned")
+      val (textSide, markSide) = joins.head.children.partition(carriesText)
+      assert(textSide.size == 1 && markSide.size == 1, s"join sides:\n$pinned")
+      assert(markSide.head.collect { case p if carriesText(p) => p }.isEmpty,
+        s"text reached the start-list side:\n$pinned")
+      val scanProject = textSide.head.collectFirst { case p: ProjectExec => p }
+      assert(scanProject.exists(_.output.map(_.name) == Seq("doc_id", "__text")),
+        s"text should enter the join through the scan-side projection:\n$pinned")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 

@@ -60,7 +60,7 @@ class RespKVStoreSpec extends SparkSpec {
   test("client round trip: binary-unsafe keys and fields survive RESP framing") {
     // RESP bulk strings are length-prefixed, never parsed — spaces,
     // CRLFs, unicode, and empty strings must all pass through unharmed
-    // (the line-protocol SocketKVStore needs base64 for this; RESP
+    // (a line protocol would need an escape or base64 for this; RESP
     // is binary-safe natively)
     val server = new RespServer()
     server.start()

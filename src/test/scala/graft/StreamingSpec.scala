@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.MockOrderGenerator
-import graft.streaming.{InMemoryKVStore, KVServer, KVStoreRegistry, OrderStreamPipeline, SocketKVStore}
+import graft.streaming.{InMemoryKVStore, KVStoreRegistry, OrderStreamPipeline, RespKVStore, RespServer}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +12,7 @@ import java.nio.file.Files
   * @transient: increments run inside executor task closures (which must
   * serialize this handle), while markBatch only ever runs on the driver,
   * where the hook is live. */
-private final class CrashAtMarkStore(inner: SocketKVStore, kill0: () => Unit)
+private final class CrashAtMarkStore(inner: RespKVStore, kill0: () => Unit)
     extends graft.streaming.KVStore {
   @transient private val kill = kill0
   def hincrBy(k: String, f: String, d: Long): Long = inner.hincrBy(k, f, d)
@@ -38,11 +38,11 @@ private object CrashMidApply {
   * batch already landed. The server stays alive: this injects a transport
   * failure (executor-side), not a server death (that window is
   * [[CrashAtMarkStore]]'s). */
-private final class CrashMidApplyStore(inner: SocketKVStore, crashOn: Int)
+private final class CrashMidApplyStore(inner: RespKVStore, crashOn: Int)
     extends graft.streaming.KVStore {
   def hincrBy(k: String, f: String, d: Long): Long = {
     if (CrashMidApply.armed && CrashMidApply.calls.incrementAndGet() == crashOn)
-      SocketKVStore.killConnections()
+      RespKVStore.killConnections()
     inner.hincrBy(k, f, d)
   }
   def hgetAll(k: String): Map[String, Long] = inner.hgetAll(k)
@@ -94,28 +94,28 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("TCP KVStore: sink accumulates across a real network boundary") {
-    // The serializable SocketKVStore handle is captured by the task
-    // closure directly — no registry on the "executor" side — and every
-    // increment crosses an actual socket to the server's store. This is
-    // the path a cluster deployment takes (reference: Redis), without the
-    // shared-JVM registry shortcut the in-memory tests use.
-    val server = new KVServer()
+    // The serializable RespKVStore handle is captured by the task closure
+    // directly — no registry on the "executor" side — and every increment
+    // crosses an actual socket to the server's state. This is the path a
+    // cluster deployment takes (reference: Redis), without the shared-JVM
+    // registry shortcut the in-memory tests use.
+    val server = new RespServer()
     server.start()
     try {
-      val store = new SocketKVStore("127.0.0.1", server.port)
+      val store = new RespKVStore("127.0.0.1", server.port)
       val p = new OrderStreamPipeline(store, "n-ko-", true)
       val batch = Seq(
         wire("2024-05-01 09:00:00", 40, "1"),
         wire("2024-05-01 10:00:00", 25, "0"),
         wire("2024-05-02 08:00:00", 11, "1")).toDF("value").repartition(3)
       p.applyBatch(batch, 0L)
-      assert(server.store.hgetAll("n-ko-2024-05-01") ==
+      assert(server.state.hgetAll("n-ko-2024-05-01") ==
         Map("total" -> 2L, "success" -> 1L, "fee" -> 40L))
-      assert(server.store.hgetAll("n-ko-2024-05-02") ==
+      assert(server.state.hgetAll("n-ko-2024-05-02") ==
         Map("total" -> 1L, "success" -> 1L, "fee" -> 11L))
-      // replay of an applied batch id is a no-op (SEEN goes over the wire)
+      // replay of an applied batch id is a no-op (SISMEMBER goes over the wire)
       p.applyBatch(batch, 0L)
-      assert(server.store.hgetAll("n-ko-2024-05-01") ==
+      assert(server.state.hgetAll("n-ko-2024-05-01") ==
         Map("total" -> 2L, "success" -> 1L, "fee" -> 40L))
       // the handle survives java serialization like any task closure
       val bos = new java.io.ByteArrayOutputStream()
@@ -123,29 +123,29 @@ class StreamingSpec extends SparkSpec {
       oos.writeObject(store); oos.close()
       val copy = new java.io.ObjectInputStream(
         new java.io.ByteArrayInputStream(bos.toByteArray))
-        .readObject().asInstanceOf[SocketKVStore]
+        .readObject().asInstanceOf[RespKVStore]
       assert(copy.hgetAll("n-ko-2024-05-02") ==
         Map("total" -> 1L, "success" -> 1L, "fee" -> 11L))
-    } finally { server.stop(); SocketKVStore.resetConnections() }
+    } finally { server.stop(); RespKVStore.resetConnections() }
   }
 
   test("TCP KVStore: a server restart does not poison the pooled connection") {
-    val server = new KVServer()
+    val server = new RespServer()
     server.start()
     val port = server.port
     try {
-      val store = new SocketKVStore("127.0.0.1", port)
+      val store = new RespKVStore("127.0.0.1", port)
       assert(store.hincrBy("k", "f", 1L) == 1L)
       // kill the server mid-life: the cached connection is now dead
       server.stop()
       intercept[Exception](store.hincrBy("k", "f", 1L))
       // a new server on the SAME endpoint: the failed call must have
       // evicted the dead connection so this call reconnects and succeeds
-      val server2 = new KVServer(fixedPort = port)
+      val server2 = new RespServer(fixedPort = port)
       server2.start()
       try assert(store.hincrBy("k", "f", 5L) == 5L)
       finally server2.stop()
-    } finally { server.stop(); SocketKVStore.resetConnections() }
+    } finally { server.stop(); RespKVStore.resetConnections() }
   }
 
   test("TCP KVStore: server death between apply and mark degrades to " +
@@ -154,10 +154,10 @@ class StreamingSpec extends SparkSpec {
     // land on the store, then the server dies BEFORE markBatch. The batch
     // is deliberately not marked up front, so its replay must re-apply
     // (double-count — at-least-once), never be skipped (silent loss).
-    val server = new KVServer()
+    val server = new RespServer()
     server.start()
     val port = server.port
-    val store = new SocketKVStore("127.0.0.1", port)
+    val store = new RespKVStore("127.0.0.1", port)
     // Kills the serving process at the exact apply→mark boundary. The
     // store DATA survives (server restarts over the same backing), the
     // mark does not happen — a real crash of a persistent KV backend.
@@ -165,7 +165,7 @@ class StreamingSpec extends SparkSpec {
     // server's close.)
     val crashing = new CrashAtMarkStore(store, () => {
       server.stop()
-      SocketKVStore.resetConnections()
+      RespKVStore.resetConnections()
     })
     try {
       val p = new OrderStreamPipeline(crashing, "n-ko-", true)
@@ -173,25 +173,25 @@ class StreamingSpec extends SparkSpec {
       // crash in the window: increments applied, mark call dies
       intercept[Exception](p.applyBatch(batch, 0L))
       // serving process restarts over the SURVIVING data
-      val server2 = new KVServer(fixedPort = port, backing = server.store)
+      val server2 = new RespServer(fixedPort = port, backing = server.state)
       server2.start()
       try {
-        assert(server2.store.hgetAll("n-ko-2024-06-01") ==
+        assert(server2.state.hgetAll("n-ko-2024-06-01") ==
           Map("total" -> 1L, "success" -> 1L, "fee" -> 20L))
         assert(!store.batchSeen(0L))   // the crash window: applied, unmarked
         // replay: MUST re-apply (batch 0 was never marked) → double-count,
         // the documented at-least-once degradation for exactly this batch
         val p2 = new OrderStreamPipeline(store, "n-ko-", true)
         p2.applyBatch(batch, 0L)
-        assert(server2.store.hgetAll("n-ko-2024-06-01") ==
+        assert(server2.state.hgetAll("n-ko-2024-06-01") ==
           Map("total" -> 2L, "success" -> 2L, "fee" -> 40L))
         // this replay marked the batch, so a further replay is a no-op —
         // effectively-once resumes after the one degraded batch
         p2.applyBatch(batch, 0L)
-        assert(server2.store.hgetAll("n-ko-2024-06-01") ==
+        assert(server2.state.hgetAll("n-ko-2024-06-01") ==
           Map("total" -> 2L, "success" -> 2L, "fee" -> 40L))
       } finally server2.stop()
-    } finally { server.stop(); SocketKVStore.resetConnections() }
+    } finally { server.stop(); RespKVStore.resetConnections() }
   }
 
   test("TCP KVStore: connection death mid-apply leaves partial increments; " +
@@ -202,12 +202,12 @@ class StreamingSpec extends SparkSpec {
     // never silent loss), the batch is NOT marked, the failed connection's
     // eviction lets the replay reconnect and re-apply in full, and once
     // the replay marks the batch, further replays are no-ops.
-    val server = new KVServer()
+    val server = new RespServer()
     server.start()
-    val store = new SocketKVStore("127.0.0.1", server.port)
+    val store = new RespKVStore("127.0.0.1", server.port)
     val days = Seq("2024-08-01", "2024-08-02")
     def state(): Map[String, Map[String, Long]] =
-      days.map(d => d -> server.store.hgetAll("n-ko-" + d)).toMap
+      days.map(d => d -> server.state.hgetAll("n-ko-" + d)).toMap
     def total(s: Map[String, Map[String, Long]]): Long =
       s.values.flatMap(_.values).sum
     try {
@@ -249,7 +249,7 @@ class StreamingSpec extends SparkSpec {
       // convergence: the marked batch makes every further replay a no-op
       p.applyBatch(batch, 0L)
       assert(state() == afterReplay)
-    } finally { server.stop(); SocketKVStore.resetConnections() }
+    } finally { server.stop(); RespKVStore.resetConnections() }
   }
 
   test("checkpoint resume: restart continues from stored offsets, no recount") {

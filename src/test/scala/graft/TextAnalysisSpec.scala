@@ -373,6 +373,13 @@ class TextAnalysisSpec extends SparkSpec {
     assert(rows(0).getAs[Double]("quality_score") == 0.0)      // empty
     assert(rows(1).getAs[Double]("quality_score") == 0.0)      // punct soup
     assert(rows(2).getAs[Double]("quality_score") == 1.0)      // long clean text
+    // an `extra` column named like an output column fails by name
+    // instead of duplicating (n_tokens) or being overwritten (punct_ratio)
+    Seq("n_tokens", "punct_ratio").foreach { clash =>
+      val e = intercept[IllegalArgumentException](TextAnalysis.qualityFeatures(
+        df, col("doc_id"), col("text"), extra = Seq(clash -> lit(1))))
+      assert(e.getMessage.contains(clash), e.getMessage)
+    }
   }
 
   test("unigram logprob: rare tokens score higher; decimal sum is partitioning-invariant") {
