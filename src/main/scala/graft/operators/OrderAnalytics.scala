@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.WireFields
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,6 +21,12 @@ import org.apache.spark.sql.types._
   * `HashAggregateExec` partial→final, i.e. the map-side combine the
   * reference got from `reduceByKey` is free, and whole-stage codegen covers
   * the parse→project→agg pipeline.
+  *
+  * The parse is [[graft.functions.WireFields]]: one pass over the bytes of
+  * each canonical line (the producer's flat, all-string, whitespace-free
+  * object), with `from_json(value, wireSchema)` as the exact fallback for
+  * every other line, so malformed, escaped, nested or re-ordered records
+  * read exactly as the JSON parser reads them.
   */
 object OrderAnalytics {
 
@@ -35,17 +42,25 @@ object OrderAnalytics {
   ))
 
   /** Parse a column of raw JSON strings into the wire fields (reference P1/P2).
-    * PERMISSIVE: malformed records yield nulls instead of killing the batch
-    * (an upgrade over the reference, which would throw inside foreachRDD). */
+    *
+    * Canonical lines take [[graft.functions.WireFields]]'s single-pass fast
+    * path; every other line (whitespace, escapes, non-string or nested
+    * values, repeated fields, bytes after the object, malformed or null
+    * input) is parsed by `from_json(value, wireSchema)`, whose PERMISSIVE
+    * mode turns a malformed record into null fields instead of killing the
+    * batch (an upgrade over the reference, which would throw inside
+    * foreachRDD). A fee that is not a decimal(18,2) number ("abc", "1e40")
+    * reads null under ANSI too (`try_cast`), for the same reason. */
   def parseWire(raw: DataFrame, valueCol: String = "value"): DataFrame =
     raw
-      .withColumn("o", from_json(col(valueCol).cast("string"), wireSchema))
+      .withColumn("o", WireFields(col(valueCol).cast("string"), wireSchema,
+        Seq("time", "fee", "flag")))
       .select(
         col("o.time").as("time"),
         // decimal, not long: a non-integral fee string ("12.50") must not
         // silently null out of the revenue sum; decimal also keeps the
         // downstream aggregation summation-order-exact
-        col("o.fee").cast(DecimalType(18, 2)).as("fee"),
+        col("o.fee").try_cast(DecimalType(18, 2)).as("fee"),
         col("o.flag").as("flag"))
 
   /** Derive day/hour/minute from the `time` string (reference P3 — positional

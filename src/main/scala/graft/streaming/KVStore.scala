@@ -9,11 +9,11 @@ import java.util.concurrent.atomic.AtomicLong
   * interface so the engine never hard-depends on a Redis client.
   *
   * Implementations must be safe to call from executor tasks (the sink runs
-  * `foreachPartition`). A production Redis implementation would hold a
-  * per-executor pooled client (object-level lazy val — unlike the
-  * reference's pool-per-call leak, `CommonUtil.scala:39-49`); it is not
-  * compiled here because no Redis client jar ships with the build, which
-  * is exactly why this is an interface.
+  * `foreachPartition`). The Redis implementation is [[RespKVStore]]: it
+  * speaks RESP on a JDK socket (no Redis client jar ships with the build)
+  * and holds one pooled connection per executor JVM and endpoint — unlike
+  * the reference's pool-per-call leak, `CommonUtil.scala:39-49`.
+  * [[InMemoryKVStore]] is the shared-JVM backend for tests and local mode.
   */
 trait KVStore extends Serializable {
   def hincrBy(key: String, field: String, delta: Long): Long

@@ -29,8 +29,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    effectively-once by skipping already-applied batch ids.
   *
   * Scale: each micro-batch runs the same partial→final hash aggregation as
-  * the batch engine; sink traffic is one row per distinct day per batch —
-  * independent of input volume — so the store never becomes the bottleneck.
+  * the batch engine; the sink sends three synchronous `HINCRBY`s per
+  * distinct day in the batch. That is independent of input volume but not
+  * small: late orders spread a batch over many days, and `perfbench`'s
+  * `stream_live` (25% late orders) sends 700–1,050 `HINCRBY`s per batch,
+  * so store round trips are a real share of each batch's time.
   */
 final class OrderStreamPipeline(
     store: KVStore,
@@ -61,8 +64,10 @@ final class OrderStreamPipeline(
         Seq(col("day")), col("flag") === "1", col("fee"))
       val prefix = keyPrefix
       val kv = store   // serializable handle, captured by the task closure
+      // a day whose successful orders all carry an unreadable fee sums to
+      // null: it adds 0, not a failed batch
       agg.select(col("day"), col("total"), col("success"),
-          col("fee").cast("long").as("fee"))
+          coalesce(col("fee").cast("long"), lit(0L)).as("fee"))
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
           rows.foreach { r =>
             val key = prefix + r.getString(0)

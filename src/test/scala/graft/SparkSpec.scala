@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the spec suite — one session per JVM
-  * (suites run forked in one JVM; getOrCreate dedups). */
+  * (suites run forked in one JVM; getOrCreate dedups), with the confs of
+  * [[GraftSession.localConf]]. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.localConf.foldLeft(
+      SparkSession.builder()
+        .withExtensions(new GraftExtensions)
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4")) { case (b, (k, v)) => b.config(k, v) }
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
