@@ -33,8 +33,15 @@ object ParityQueries {
 
   private def feeDec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "daily_order_stats" -> { (s, dir) =>
+  def all: Seq[Query] = Seq(
+    Query("daily_order_stats",
+      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
+         count(*) AS total,
+         CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS success,
+         CAST(sum(CASE WHEN o_orderstatus = 'F'
+                       THEN CAST(o_totalprice AS DECIMAL(18,2))
+                       ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS fee
+         FROM orders GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       t.orders
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
@@ -46,7 +53,14 @@ object ParityQueries {
         .orderBy(col("day"))
     },
 
-    "order_wire_pipeline" -> { (s, dir) =>
+    Query("order_wire_pipeline",
+      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
+         count(*) AS total,
+         CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS success,
+         CAST(sum(CASE WHEN o_orderstatus = 'F'
+                       THEN CAST(CAST(round(o_totalprice, 0) AS BIGINT) AS DECIMAL(18,2))
+                       ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS fee
+         FROM orders GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       // Encode rows as the reference's Kafka wire format (all string fields,
       // KafkaProducerApp.scala:38-52), then run the genuine parse pipeline.
@@ -60,7 +74,14 @@ object ParityQueries {
       OrderAnalytics.dailyStatsFromWire(wire)
     },
 
-    "event_hourly_stats" -> { (s, dir) =>
+    Query("event_hourly_stats",
+      """SELECT strftime(ts, '%Y-%m-%d %H') AS hour,
+         count(*) AS total,
+         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS success,
+         CAST(sum(CASE WHEN event_type = 'purchase'
+                       THEN CAST(value AS DECIMAL(18,6))
+                       ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS fee
+         FROM events GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       t.events
         .groupBy(date_format(col("ts"), "yyyy-MM-dd HH").as("hour"))
@@ -72,7 +93,14 @@ object ParityQueries {
         .orderBy(col("hour"))
     },
 
-    "event_minute_stats" -> { (s, dir) =>
+    Query("event_minute_stats",
+      """SELECT strftime(ts, '%Y-%m-%d %H:%M') AS minute,
+         count(*) AS total,
+         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS success,
+         CAST(sum(CASE WHEN event_type = 'purchase'
+                       THEN CAST(value AS DECIMAL(18,6))
+                       ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS fee
+         FROM events GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       t.events
         .groupBy(date_format(col("ts"), "yyyy-MM-dd HH:mm").as("minute"))
@@ -84,7 +112,17 @@ object ParityQueries {
         .orderBy(col("minute"))
     },
 
-    "event_stats_rollup" -> { (s, dir) =>
+    Query("event_stats_rollup",
+      """SELECT day, hour, minute,
+         count(*) AS total,
+         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS success,
+         CAST(sum(CASE WHEN event_type = 'purchase'
+                       THEN CAST(value AS DECIMAL(18,6))
+                       ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS fee
+         FROM (SELECT strftime(ts, '%Y-%m-%d') AS day, strftime(ts, '%H') AS hour,
+                      strftime(ts, '%M') AS minute, event_type, value FROM events)
+         GROUP BY ROLLUP(day, hour, minute)
+         ORDER BY day NULLS FIRST, hour NULLS FIRST, minute NULLS FIRST""") { (s, dir) =>
       val t = Tables(s, dir)
       t.events
         .select(
@@ -102,67 +140,15 @@ object ParityQueries {
           col("minute").asc_nulls_first)
     },
 
-    "json_prop_extract" -> { (s, dir) =>
+    Query("json_prop_extract",
+      """SELECT event_id,
+         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+         FROM events ORDER BY event_id""") { (s, dir) =>
       val t = Tables(s, dir)
       t.events
         .select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .orderBy(col("event_id"))
     }
-  )
-
-  def oracle: Map[String, String] = Map(
-    "daily_order_stats" ->
-      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-         count(*) AS total,
-         CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS success,
-         CAST(sum(CASE WHEN o_orderstatus = 'F'
-                       THEN CAST(o_totalprice AS DECIMAL(18,2))
-                       ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS fee
-         FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "order_wire_pipeline" ->
-      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-         count(*) AS total,
-         CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS success,
-         CAST(sum(CASE WHEN o_orderstatus = 'F'
-                       THEN CAST(CAST(round(o_totalprice, 0) AS BIGINT) AS DECIMAL(18,2))
-                       ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS fee
-         FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "event_hourly_stats" ->
-      """SELECT strftime(ts, '%Y-%m-%d %H') AS hour,
-         count(*) AS total,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS success,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(value AS DECIMAL(18,6))
-                       ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS fee
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "event_minute_stats" ->
-      """SELECT strftime(ts, '%Y-%m-%d %H:%M') AS minute,
-         count(*) AS total,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS success,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(value AS DECIMAL(18,6))
-                       ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS fee
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "event_stats_rollup" ->
-      """SELECT day, hour, minute,
-         count(*) AS total,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS success,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                       THEN CAST(value AS DECIMAL(18,6))
-                       ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE) AS fee
-         FROM (SELECT strftime(ts, '%Y-%m-%d') AS day, strftime(ts, '%H') AS hour,
-                      strftime(ts, '%M') AS minute, event_type, value FROM events)
-         GROUP BY ROLLUP(day, hour, minute)
-         ORDER BY day NULLS FIRST, hour NULLS FIRST, minute NULLS FIRST""",
-
-    "json_prop_extract" ->
-      """SELECT event_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-         FROM events ORDER BY event_id"""
   )
 }

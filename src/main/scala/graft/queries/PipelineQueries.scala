@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   * similarity search (brute-force and LSH ANN), and text analysis
   * (token stats, quality, language-ID, fingerprinting).
   *
-  * Oracle strategy: everything deterministic & SQL-expressible gets DuckDB
-  * SQL — including MinHash-LSH near-dup, whose verified output equals the
-  * brute-force all-pairs answer on well-separated corpora (recall ≈ 1-4e-8
-  * at j=0.9 with 16×4 bands; the sf0.01 corpus's planted near-dup pairs
-  * all sit above 0.9 while everything else is < 0.2). Hash-seeded ops whose
-  * intermediate values are engine-specific (SimHash pairs, LSH ANN) are
-  * rows-only here and verified against brute force in the spec suite.
+  * Oracle strategy: every entry carries DuckDB SQL — including MinHash-LSH
+  * near-dup, whose verified output equals the brute-force all-pairs answer
+  * on well-separated corpora (recall ≈ 1-4e-8 at j=0.9 with 16×4 bands; the
+  * sf0.01 corpus's planted near-dup pairs all sit above 0.9 while
+  * everything else is < 0.2). Hash-seeded ops whose intermediate values are
+  * engine-specific (SimHash pairs, LSH ANN) run on a planted corpus or at
+  * parameters whose expected output is hash-free, so their oracles are id
+  * arithmetic or brute-force top-k; the spec suite checks them against
+  * brute force besides.
   */
 object PipelineQueries {
 
@@ -342,17 +344,7 @@ object PipelineQueries {
         val tbl = graft.sources.DsirStore.table(p)
         if (!s.catalog.tableExists(tbl) ||
             graft.sources.DsirStore.loadCalibration(s, p).isEmpty) {
-          val wh = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"))
-          val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-            val nm = st.getPath.getName
-            if (nm.startsWith("q_dsir_store_") && nm != tbl) {
-              if (s.catalog.tableExists(nm))
-                graft.sources.Bucketing.dropManagedTable(s, nm)
-              else fs.delete(st.getPath, true)
-            }
-          }
+          graft.sources.Bucketing.sweepStale(s, "q_dsir_store_", key)
           val m0 = dsirModel(s, dir, 1 << 20)
           graft.sources.DsirStore.buildFrom(s, p, m0)
           val (raw, _) = dsirCorpora(s, dir)
@@ -432,17 +424,7 @@ object PipelineQueries {
         val p = "q_unib_store_" + key
         val tbl = graft.sources.TokenizerStore.unigramTable(p)
         if (!s.catalog.tableExists(tbl)) {
-          val wh = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"))
-          val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-            val nm = st.getPath.getName
-            if (nm.startsWith("q_unib_store_") && nm != tbl) {
-              if (s.catalog.tableExists(nm))
-                graft.sources.Bucketing.dropManagedTable(s, nm)
-              else fs.delete(st.getPath, true)
-            }
-          }
+          graft.sources.Bucketing.sweepStale(s, "q_unib_store_", key)
           graft.sources.TokenizerStore.buildUnigramBytesFrom(s, p,
             TextAnalysis.unigramTrainBytes(plantedDocs(s, dir),
               col("text")),
@@ -474,21 +456,9 @@ object PipelineQueries {
           "documents.parquet")
         val bp = "q_bpeb_store_" + key
         if (!TokenizerStore.isComplete(s, bp)) {
-          val wh = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"))
-          val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-            val nm = st.getPath.getName
-            if (nm.startsWith("q_bpeb_store_") &&
-                nm != TokenizerStore.bpeTable(bp)) {
-              if (s.catalog.tableExists(nm))
-                graft.sources.Bucketing.dropManagedTable(s, nm)
-              else fs.delete(st.getPath, true)
-            }
-            // stale interop exports of superseded corpus keys
-            if (nm.startsWith("q_tok_export_") && !nm.contains(key))
-              fs.delete(st.getPath, true)
-          }
+          graft.sources.Bucketing.sweepStale(s, "q_bpeb_store_", key)
+          // stale interop exports of superseded corpus keys
+          graft.sources.Bucketing.sweepStale(s, "q_tok_export_", key)
           TokenizerStore.build(s, bp, Tables(s, dir).documents,
             col("text"), nMerges = 8, byteLevel = true)
         }
@@ -540,19 +510,10 @@ object PipelineQueries {
   private def ensurePqStore(s: SparkSession,
                             dir: String): (String, DataFrame) = {
     val t = Tables(s, dir)
-    val p = "sim_pq_store_" +
-      graft.sources.CatalogProps.contentKey(dir, "embeddings.parquet")
+    val key = graft.sources.CatalogProps.contentKey(dir, "embeddings.parquet")
+    val p = "sim_pq_store_" + key
     if (!s.catalog.tableExists(IndexStore.pqTable(p))) {
-      val wh = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("sim_pq_store_") && !nm.startsWith(p + "_")) {
-          if (s.catalog.tableExists(nm)) IndexStore.dropTable(s, nm)
-          else fs.delete(st.getPath, true)
-        }
-      }
+      graft.sources.Bucketing.sweepStale(s, "sim_pq_store_", key)
       IndexStore.dropVecs(s, p) // clear any cross-JVM warehouse leftovers
       IndexStore.buildVecs(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"), p)
@@ -570,20 +531,10 @@ object PipelineQueries {
     * other sf dirs are cleared so the warehouse doesn't accumulate). */
   private def ensureTextStore(s: SparkSession, dir: String): String = {
     val t = Tables(s, dir)
-    val p = "text_bm25_store_" +
-      graft.sources.CatalogProps.contentKey(dir, "documents.parquet")
+    val key = graft.sources.CatalogProps.contentKey(dir, "documents.parquet")
+    val p = "text_bm25_store_" + key
     if (!graft.sources.TextIndexStore.isComplete(s, p)) {
-      val wh = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("text_bm25_store_") && !nm.startsWith(p + "_")) {
-          if (s.catalog.tableExists(nm))
-            graft.sources.Bucketing.dropManagedTable(s, nm)
-          else fs.delete(st.getPath, true)
-        }
-      }
+      graft.sources.Bucketing.sweepStale(s, "text_bm25_store_", key)
       graft.sources.TextIndexStore.drop(s, p)
       graft.sources.TextIndexStore.build(s, p, t.documents,
         col("doc_id"), col("text"))
@@ -591,14 +542,25 @@ object PipelineQueries {
     p
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> { (s, dir) =>
+  def all: Seq[Query] = Seq(
+    Query("dedup_exact",
+      """WITH corpus AS (
+           SELECT doc_id, text FROM documents
+           UNION ALL
+           SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id < 100)
+         SELECT min(doc_id) AS keep_id, count(*) AS n_copies
+         FROM corpus GROUP BY text ORDER BY keep_id""") { (s, dir) =>
       Dedup.exactGroups(dupCorpus(Tables(s, dir)), col("text"), col("doc_id"))
         .select(col("keep_id"), col("n_copies"))
         .orderBy(col("keep_id"))
     },
 
-    "dedup_keep_first" -> { (s, dir) =>
+    Query("dedup_keep_first",
+      """SELECT user_id, event_type, event_id FROM (
+           SELECT user_id, event_type, event_id,
+             row_number() OVER (PARTITION BY user_id, event_type
+                                ORDER BY ts, event_id) AS rn
+           FROM events) WHERE rn = 1 ORDER BY user_id, event_type""") { (s, dir) =>
       val t = Tables(s, dir)
       Dedup.keepFirst(t.events,
           Seq(col("user_id"), col("event_type")),
@@ -607,7 +569,19 @@ object PipelineQueries {
         .orderBy(col("user_id"), col("event_type"))
     },
 
-    "dedup_minhash_lsh" -> { (s, dir) =>
+    Query("dedup_minhash_lsh",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+            d AS (SELECT doc_id,
+                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                   for i in range(1, len(toks) - 1)]) AS sh
+                  FROM t WHERE len(toks) >= 3)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
+         FROM d a JOIN d b ON a.doc_id < b.doc_id
+         WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8
+         ORDER BY id_a, id_b""") { (s, dir) =>
       val t = Tables(s, dir)
       Dedup.minhashLshPairs(t.documents, col("doc_id"), col("text"))
         .orderBy(col("id_a"), col("id_b"))
@@ -632,7 +606,13 @@ object PipelineQueries {
     // stays covered by DedupSpec's seeded-corpus tests — near-identical
     // simhash distance is probabilistic, so only the identical-twin
     // config has a provable oracle.
-    "dedup_simhash" -> { (s, dir) =>
+    Query("dedup_simhash",
+      // The planted-corpus pair set is hash-free (see the query comment):
+      // byte-identical twins at +100000 are the ONLY pairs within hamming 3,
+      // so the oracle is pure id arithmetic over the same documents table.
+      """SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
+           CAST(0 AS INTEGER) AS hamming
+         FROM documents WHERE doc_id % 20 = 0 ORDER BY id_a, id_b""") { (s, dir) =>
       val base = Tables(s, dir).documents.select(
         belowPlantedOffset(col("doc_id"), 100000).as("doc_id"),
         concat_ws(" ", transform(sequence(lit(0), lit(39)),
@@ -648,7 +628,14 @@ object PipelineQueries {
     // ORACLE BASELINE ONLY — exact all-pairs cosine (quadratic). The
     // production operator for embedding dedup is cosineNearDupPairsLsh
     // ("dedup_embedding_lsh" below); this entry exists to anchor it.
-    "dedup_embedding" -> { (s, dir) =>
+    Query("dedup_embedding",
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v)
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) AS cosine
+         FROM n a JOIN n b ON a.vec_id < b.vec_id
+         WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.4
+         ORDER BY id_a, id_b""") { (s, dir) =>
       val t = Tables(s, dir)
       val emb = Similarity.prepared(t.embeddings, col("vec_id"), col("embedding"))
       Similarity.cosineNearDupPairs(emb, threshold = 0.4)
@@ -661,7 +648,18 @@ object PipelineQueries {
     // IvfIndex/k-means assignment): exact within-cluster near-dup
     // removal, zero cross-cluster work — see Similarity.semDedupKeep
     // for the cost/recall position vs the global exact and LSH paths.
-    "dedup_semdedup" -> { (s, dir) =>
+    Query("dedup_semdedup",
+      """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, label, vec,
+                    sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            d AS (SELECT DISTINCT b.vec_id
+                  FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
+                  WHERE CASE WHEN a.nrm * b.nrm = 0 THEN NULL
+                        ELSE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm)
+                        END >= 0.3)
+         SELECT vec_id, CAST(label AS INT) AS cluster FROM v
+         WHERE vec_id NOT IN (SELECT vec_id FROM d)
+         ORDER BY vec_id""") { (s, dir) =>
       val t = Tables(s, dir)
       Similarity.semDedupKeep(t.embeddings, col("vec_id"), col("embedding"),
           col("label"), threshold = 0.3)
@@ -695,7 +693,20 @@ object PipelineQueries {
     //    attest that the clustering is a real semantic partition and
     //    not noise. A broken assignment, a broken pruning, or a broken
     //    kernel each flips a boolean → hash mismatch.
-    "dedup_semdedup_ivf" -> { (s, dir) =>
+    Query("dedup_semdedup_ivf",
+      // Self-certifying (see the query comment): the DuckDB side is the
+      // deterministic expectation — every original kept, every twin's
+      // prune decision consistent with its cell, colocation ≥ 90% — with
+      // the n column anchored to corpus counts so a silently-empty Spark
+      // result can't hash-match.
+      """SELECT * FROM (VALUES
+           ('originals_all_kept',
+            (SELECT count(*) FROM embeddings), true),
+           ('twin_colocation_floor',
+            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true),
+           ('twins_pruned_iff_colocated',
+            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true))
+         AS t(check_name, n, ok) ORDER BY check_name""") { (s, dir) =>
       val planted = plantedEmbeddings(Tables(s, dir))
       val prep = Similarity.prepared(planted, col("vec_id"), col("embedding"))
       // Pin the assignment and the kept set (eager localCheckpoint):
@@ -726,7 +737,17 @@ object PipelineQueries {
     // geometry). Same three self-certifying invariants as
     // dedup_semdedup_ivf — a lost twin candidate, a broken SDC kernel, a
     // broken exact re-check, or a broken assignment each flips a boolean.
-    "dedup_semdedup_pq" -> { (s, dir) =>
+    Query("dedup_semdedup_pq",
+      // Same invariant protocol as dedup_semdedup_ivf: the PQ-coded path
+      // must reproduce exactly the same planted-corpus booleans.
+      """SELECT * FROM (VALUES
+           ('originals_all_kept',
+            (SELECT count(*) FROM embeddings), true),
+           ('twin_colocation_floor',
+            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true),
+           ('twins_pruned_iff_colocated',
+            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true))
+         AS t(check_name, n, ok) ORDER BY check_name""") { (s, dir) =>
       val planted = plantedEmbeddings(Tables(s, dir))
       val prep = Similarity.prepared(planted, col("vec_id"), col("embedding"))
       val (assignedRaw, _) = IvfIndex.build(prep, k = 16)
@@ -749,7 +770,16 @@ object PipelineQueries {
     // self-certifying planted invariants — they hold for ANY
     // deterministic assignment that colocates near-identical vectors,
     // which is exactly what both k-means levels' argmins guarantee.
-    "dedup_semdedup_hier" -> { (s, dir) =>
+    Query("dedup_semdedup_hier",
+      // Same invariant protocol for the hierarchical-quantizer composition.
+      """SELECT * FROM (VALUES
+           ('originals_all_kept',
+            (SELECT count(*) FROM embeddings), true),
+           ('twin_colocation_floor',
+            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true),
+           ('twins_pruned_iff_colocated',
+            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true))
+         AS t(check_name, n, ok) ORDER BY check_name""") { (s, dir) =>
       val planted = plantedEmbeddings(Tables(s, dir))
       val prep = Similarity.prepared(planted, col("vec_id"), col("embedding"))
       // model memoized per corpus (driver-side arrays; buildTwoLevel is
@@ -778,7 +808,27 @@ object PipelineQueries {
     // tables at threshold 0.4, quadratic candidates) remains a spec-level
     // tripwire in SimilaritySpec — it is the knob's other end, not the
     // production registration.
-    "dedup_embedding_lsh" -> { (s, dir) =>
+    Query("dedup_embedding_lsh",
+      // The LSH path at the registered selective parameters returns the
+      // exact all-pairs answer on the planted gapped corpus (precision 1 by
+      // construction, recall 1 measured) — so its oracle IS the brute-force
+      // SQL over the same planted corpus, rebuilt here with identical
+      // double arithmetic.
+      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            planted AS (
+              SELECT vec_id, vec FROM base
+              UNION ALL
+              SELECT vec_id + 100000 AS vec_id,
+                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
+                      for i in range(1, len(vec) + 1)] AS vec
+              FROM base WHERE vec_id % 10 = 0),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                  FROM planted)
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) AS cosine
+         FROM n a JOIN n b ON a.vec_id < b.vec_id
+         WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.8
+         ORDER BY id_a, id_b""") { (s, dir) =>
       val emb = Similarity.prepared(plantedEmbeddings(Tables(s, dir)),
         col("vec_id"), col("embedding"))
       Similarity.cosineNearDupPairsLsh(emb, threshold = 0.8, nPlanes = 8, nTables = 4)
@@ -791,7 +841,26 @@ object PipelineQueries {
     // config runs on two hash columns over disjoint plane sets
     // (Similarity.LshLayout) — the >1M-vector regime's shape, held to
     // exact brute-force equality on the same planted corpus.
-    "dedup_embedding_lsh_wide" -> { (s, dir) =>
+    Query("dedup_embedding_lsh_wide",
+      // Same brute-force contract as dedup_embedding_lsh: the wide config
+      // also carries recall 1.0 on the gapped corpus (finer buckets can
+      // only shrink candidates, and the 4-table OR keeps every planted
+      // pair), so its oracle is the identical SQL.
+      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            planted AS (
+              SELECT vec_id, vec FROM base
+              UNION ALL
+              SELECT vec_id + 100000 AS vec_id,
+                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
+                      for i in range(1, len(vec) + 1)] AS vec
+              FROM base WHERE vec_id % 10 = 0),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                  FROM planted)
+         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) AS cosine
+         FROM n a JOIN n b ON a.vec_id < b.vec_id
+         WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.8
+         ORDER BY id_a, id_b""") { (s, dir) =>
       val emb = Similarity.prepared(plantedEmbeddings(Tables(s, dir)),
         col("vec_id"), col("embedding"))
       Similarity.cosineNearDupPairsLsh(emb, threshold = 0.8, nPlanes = 16, nTables = 4)
@@ -803,7 +872,41 @@ object PipelineQueries {
     // components (shared hybrid componentsFromPairs) → keep the largest-
     // norm member per cluster. The embedding mirror of dedup_canonical,
     // on the same planted gapped corpus as dedup_embedding_lsh.
-    "dedup_embedding_canonical" -> { (s, dir) =>
+    Query("dedup_embedding_canonical",
+      """WITH RECURSIVE
+           base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+           planted AS (
+             SELECT vec_id, vec FROM base
+             UNION ALL
+             SELECT vec_id + 100000 AS vec_id,
+                    [vec[i] + vec[len(vec) + 1 - i] * 0.01
+                     for i in range(1, len(vec) + 1)] AS vec
+             FROM base WHERE vec_id % 10 = 0),
+           n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                 FROM planted),
+           pairs AS (
+             SELECT a.vec_id AS id_a, b.vec_id AS id_b
+             FROM n a JOIN n b ON a.vec_id < b.vec_id
+             WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.8),
+           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                 UNION ALL SELECT id_b, id_a FROM pairs),
+           reach(id, r) AS (
+             SELECT vec_id, vec_id FROM planted
+             UNION
+             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
+           c AS (SELECT id, CAST(min(r) AS BIGINT) AS cluster_id
+                 FROM reach GROUP BY id),
+           m AS (SELECT c.cluster_id, c.id, n.nrm
+                 FROM c JOIN n ON n.vec_id = c.id),
+           rnk AS (SELECT cluster_id, id, nrm,
+                     row_number() OVER (PARTITION BY cluster_id
+                                        ORDER BY nrm DESC, id) AS rn,
+                     count(*) OVER (PARTITION BY cluster_id) AS n_members,
+                     max(nrm) OVER (PARTITION BY cluster_id) AS keep_norm
+                   FROM m)
+         SELECT cluster_id, id AS keep_id, n_members,
+           round(keep_norm, 6) AS keep_norm
+         FROM rnk WHERE rn = 1 ORDER BY cluster_id""") { (s, dir) =>
       val emb = Similarity.prepared(plantedEmbeddings(Tables(s, dir)),
         col("vec_id"), col("embedding"))
       Similarity.cosineCanonical(emb, threshold = 0.8, nPlanes = 8, nTables = 4)
@@ -814,7 +917,14 @@ object PipelineQueries {
     // Range join: chunked point-in-interval (hash equi-join on time chunk
     // + residual predicate) instead of the nested loop a non-equi join
     // plans. Intervals: 2h windows anchored at every 499th event.
-    "q_range_join" -> { (s, dir) =>
+    Query("q_range_join",
+      """WITH w AS (
+           SELECT event_id AS window_id, ts AS w_start,
+                  ts + INTERVAL 2 HOUR AS w_end
+           FROM events WHERE event_id % 499 = 0)
+         SELECT w.window_id, count(*) AS n_events
+         FROM w JOIN events e ON e.ts >= w.w_start AND e.ts < w.w_end
+         GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       val windows = t.events.filter(pmod(col("event_id"), lit(499)) === 0)
         .select(col("event_id").as("window_id"), col("ts").as("w_start"),
@@ -830,7 +940,54 @@ object PipelineQueries {
     // language filter → transitive near-dup dedup (keep cluster min) →
     // deterministic stratified 50% sample per source → LLM token counts.
     // One oracle checks the composition of five operators.
-    "pipeline_funnel" -> { (s, dir) =>
+    Query("pipeline_funnel", {
+      val hits = langHitsSql
+      val cases = langCaseSql
+      s"""WITH RECURSIVE
+           q AS (
+             SELECT doc_id, text, source,
+               CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
+               length(text) AS n_chars,
+               length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct,
+               $hits
+             FROM documents),
+           f AS (
+             SELECT doc_id, text, source FROM q
+             WHERE n_tokens >= 10
+               AND (CASE WHEN n_chars > 0
+                         THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000
+                         ELSE 0.0 END) < 0.2
+               AND (CASE $cases ELSE 'und' END) = 'en'),
+           t2 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM f),
+           d AS (SELECT doc_id,
+                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                  for i in range(1, len(toks) - 1)]) AS sh
+                 FROM t2 WHERE len(toks) >= 3),
+           pairs AS (
+             SELECT a.doc_id AS id_a, b.doc_id AS id_b
+             FROM d a JOIN d b ON a.doc_id < b.doc_id
+             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
+           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                 UNION ALL SELECT id_b, id_a FROM pairs),
+           reach(id, r) AS (
+             SELECT doc_id, doc_id FROM f
+             UNION
+             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
+           keep AS (SELECT id AS doc_id FROM reach GROUP BY id HAVING min(r) = id),
+           kept AS (SELECT f.doc_id, f.text, f.source FROM f JOIN keep USING (doc_id)),
+           ranked AS (
+             SELECT doc_id, text, source,
+               row_number() OVER (PARTITION BY source
+                 ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
+               count(*) OVER (PARTITION BY source) AS n
+             FROM kept)
+         SELECT doc_id, source,
+           CAST(len(regexp_extract_all(text,
+             '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+'))
+             AS BIGINT) AS n_bpe
+         FROM ranked WHERE rn <= ceil(n * 0.5) ORDER BY doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       // Predicates inline (same TextAnalysis formulas as qualityFeatures)
       // rather than a join against the feature frame: downstream operators
@@ -858,7 +1015,49 @@ object PipelineQueries {
     // token-window chunks → per-doc chunk/BPE counts. Every stage is
     // map-only until the final per-doc aggregation; ONE oracle checks the
     // whole composition.
-    "pipeline_chunks" -> { (s, dir) =>
+    Query("pipeline_chunks", {
+      import graft.operators.Sampling.hexThreshold
+      s"""WITH planted AS (
+           SELECT doc_id,
+             text || ' reach me at user' || doc_id || '@example.com' AS text
+           FROM documents),
+          clean AS (
+           SELECT doc_id,
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(
+                   regexp_replace(text,
+                     '${TextAnalysis.EmailRe}', '<EMAIL>', 'g'),
+                   '${TextAnalysis.Ipv4Re}', '<IP>', 'g'),
+                 '${TextAnalysis.LongNumRe}', '<NUM>', 'g'),
+               '${TextAnalysis.PhoneRe}', '<PHONE>', 'g') AS text
+           FROM planted),
+          tok AS (
+           SELECT doc_id, text, $tokensSql AS toks,
+             len($tokensSql) AS n
+           FROM clean WHERE NOT $blankSql),
+          kept AS (
+           SELECT doc_id, text, toks, n FROM tok
+           WHERE n >= 10
+             AND CAST(coalesce(list_max([len(list_filter(toks, y -> y = x))
+                                         for x in list_distinct(toks)]), 0)
+                      AS DOUBLE) / n <= 0.2),
+          sampled AS (
+           SELECT * FROM kept
+           WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
+             < '${hexThreshold(0.5)}'),
+          chunks AS (
+           SELECT doc_id,
+             array_to_string(list_slice(toks, i*24 + 1, i*24 + 32), ' ') AS chunk_text
+           FROM sampled,
+             unnest(range(0, greatest(1,
+               CAST(ceil(CAST(n - 8 AS DOUBLE) / 24) AS INT)))) AS u(i))
+         SELECT doc_id, count(*) AS n_chunks,
+           CAST(sum(len(regexp_extract_all(chunk_text,
+             '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+')))
+             AS BIGINT) AS n_bpe
+         FROM chunks GROUP BY doc_id ORDER BY doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val planted = Tables.spread(t.documents).select(col("doc_id"),
         concat(col("text"), lit(" reach me at user"), col("doc_id"),
@@ -881,7 +1080,17 @@ object PipelineQueries {
 
     // Benchmark-contamination scan: training docs sharing >= 3 distinct
     // 3-grams with the "benchmark" slice (doc_id < 50), exact counts.
-    "contamination_ngram" -> { (s, dir) =>
+    Query("contamination_ngram",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+            d AS (SELECT doc_id,
+                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                   for i in range(1, len(toks) - 1)]) AS sh
+                  FROM t WHERE len(toks) >= 3)
+         SELECT a.doc_id AS doc_id, b.doc_id AS test_id,
+           CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_shared
+         FROM d a JOIN d b ON b.doc_id < 50 AND a.doc_id != b.doc_id
+         WHERE len(list_intersect(a.sh, b.sh)) >= 3
+         ORDER BY doc_id, test_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val test = t.documents.filter(col("doc_id") < 50)
       graft.operators.Contamination
@@ -896,7 +1105,15 @@ object PipelineQueries {
     // the same benchmark slice contamination_ngram scans).
     // Every fragment matches its own source doc, so rows >= |frags|; the
     // interesting hits are the near-dup copies.
-    "contamination_exact" -> { (s, dir) =>
+    Query("contamination_exact",
+      """WITH f AS (
+           SELECT doc_id AS test_id,
+             array_to_string((string_split(text, ' '))[6:13], ' ') AS frag
+           FROM documents
+           WHERE doc_id < 50 AND len(string_split(text, ' ')) >= 13)
+         SELECT d.doc_id, f.test_id
+         FROM documents d JOIN f ON position(f.frag IN d.text) > 0
+         ORDER BY d.doc_id, f.test_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val frags = t.documents.filter(col("doc_id") < 50)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -911,7 +1128,19 @@ object PipelineQueries {
     // The multi-pattern scale form: fragment window hashes equi-join the
     // corpus's 8-token window hashes (token-aligned containment) — one
     // corpus scan + a broadcast hash join, whatever the benchmark size.
-    "contamination_exact_indexed" -> { (s, dir) =>
+    Query("contamination_exact_indexed",
+      """WITH f AS (
+           SELECT doc_id AS test_id,
+             array_to_string((string_split(text, ' '))[6:13], ' ') AS frag
+           FROM documents
+           WHERE doc_id < 50 AND len(string_split(text, ' ')) >= 13),
+          t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+          w AS (SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS win
+                FROM t, unnest(range(1, len(toks) - 6)) AS u(i)
+                WHERE len(toks) >= 8)
+         SELECT DISTINCT w.doc_id, f.test_id
+         FROM w JOIN f ON w.win = f.frag
+         ORDER BY w.doc_id, f.test_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val frags = t.documents.filter(col("doc_id") < 50)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -924,7 +1153,14 @@ object PipelineQueries {
     },
 
     // Deterministic exact-fraction stratified sample (md5-of-id order).
-    "sample_stratified" -> { (s, dir) =>
+    Query("sample_stratified",
+      """SELECT event_id, event_type FROM (
+           SELECT event_id, event_type,
+             row_number() OVER (PARTITION BY event_type
+               ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS rn,
+             count(*) OVER (PARTITION BY event_type) AS n
+           FROM events)
+         WHERE rn <= ceil(n * 0.1) ORDER BY event_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .stratified(t.events, Seq(col("event_type")), col("event_id"), 0.1)
@@ -934,7 +1170,16 @@ object PipelineQueries {
 
     // Scale-path sampler: per-row hash-threshold mixing — no window, no
     // shuffle, immune to giant strata (approximate counts, deterministic).
-    "sample_hash_mixture" -> { (s, dir) =>
+    Query("sample_hash_mixture", {
+      import graft.operators.Sampling.hexThreshold
+      s"""SELECT doc_id, source FROM documents
+         WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
+           CASE source WHEN 'src0' THEN '${hexThreshold(0.5)}'
+                       WHEN 'src1' THEN '${hexThreshold(0.2)}'
+                       WHEN 'src3' THEN '${hexThreshold(1.0)}'
+                       ELSE '${hexThreshold(0.05)}' END
+         ORDER BY doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .mixtureHash(t.documents, col("source"), col("doc_id"),
@@ -951,7 +1196,19 @@ object PipelineQueries {
     // DuckDB oracle independently re-derives counts, weights,
     // thresholds, AND the kept row set; a wrong count pass, weight
     // formula, or threshold encoding all hash-mismatch.
-    "sample_temperature" -> { (s, dir) =>
+    Query("sample_temperature",
+      """WITH c AS (SELECT lang AS s, count(*) AS n FROM documents GROUP BY 1),
+            m AS (SELECT min(n) AS nmin FROM c),
+            w AS (SELECT s, sqrt(CAST(nmin AS DOUBLE) / n) AS wt FROM c, m),
+            t AS (SELECT s,
+                    CASE WHEN CAST(round(wt * 4294967296) AS BIGINT) >= 4294967296
+                         THEN 'g'
+                         ELSE printf('%08x', CAST(round(wt * 4294967296) AS BIGINT))
+                    END AS thr
+                  FROM w)
+         SELECT d.doc_id, d.lang FROM documents d JOIN t ON d.lang = t.s
+         WHERE substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < t.thr
+         ORDER BY d.doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .temperatureMixture(t.documents, col("lang"), col("doc_id"), alpha = 0.5)
@@ -962,7 +1219,17 @@ object PipelineQueries {
     // Curriculum binning: quartile difficulty bins over document length
     // — exact interpolated boundaries (one aggregate, broadcast) + a
     // map-only comparison; ties share a bin by construction.
-    "sample_curriculum" -> { (s, dir) =>
+    Query("sample_curriculum",
+      // quantile_cont == Spark's percentile (the q_percentile-established
+      // mapping); bin = 1 + Σ indicator(score > boundary), same ints.
+      """WITH b AS (SELECT quantile_cont(n_chars, 0.25) AS b1,
+               quantile_cont(n_chars, 0.5) AS b2,
+               quantile_cont(n_chars, 0.75) AS b3
+             FROM documents)
+         SELECT doc_id, n_chars,
+           CAST(1 + (n_chars > b1)::INT + (n_chars > b2)::INT
+              + (n_chars > b3)::INT AS INT) AS bin
+         FROM documents, b ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .curriculumBins(t.documents.select(col("doc_id"), col("n_chars")),
@@ -977,7 +1244,38 @@ object PipelineQueries {
     // ladder on cluster_id — deterministic, partition-invariant, and
     // stable under corpus growth (an existing group's split never
     // changes when new docs arrive).
-    "split_leakage_safe" -> { (s, dir) =>
+    Query("split_leakage_safe", {
+      // Same cluster derivation as dedup_canonical, then the md5-threshold
+      // split ladder on cluster_id (thresholds interpolated from the same
+      // hexThreshold the Spark side uses).
+      import graft.operators.Sampling.hexThreshold
+      s"""WITH RECURSIVE
+           t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+           d AS (SELECT doc_id,
+                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                  for i in range(1, len(toks) - 1)]) AS sh
+                 FROM t WHERE len(toks) >= 3),
+           pairs AS (
+             SELECT a.doc_id AS id_a, b.doc_id AS id_b
+             FROM d a JOIN d b ON a.doc_id < b.doc_id
+             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
+           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                 UNION ALL SELECT id_b, id_a FROM pairs),
+           reach(id, r) AS (
+             SELECT doc_id, doc_id FROM documents
+             UNION
+             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
+           c AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
+                 FROM reach GROUP BY id)
+         SELECT doc_id, cluster_id,
+           CASE WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8)
+                  < '${hexThreshold(0.8)}' THEN 'train'
+                WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8)
+                  < '${hexThreshold(0.9)}' THEN 'val'
+                ELSE 'test' END AS split
+         FROM c ORDER BY doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val clusters = Dedup.minhashClusters(t.documents, col("doc_id"), col("text"))
       graft.operators.Sampling.splitByGroup(clusters, col("cluster_id"),
@@ -988,7 +1286,27 @@ object PipelineQueries {
 
     // Weighted sampling without replacement (A-Res): 50 documents drawn
     // with probability proportional to length, deterministically.
-    "sample_weighted" -> { (s, dir) =>
+    Query("sample_weighted",
+      // Fully independent re-derivation: counts → sqrt weights →
+      // 8-hex-digit thresholds (round half-up × 2^32, 'g' = keep-all) →
+      // kept rows. sqrt and the division are IEEE-correctly-rounded on
+      // both engines, so the thresholds — and therefore the row set —
+      // agree bit-for-bit at α = 0.5.
+      // Independent re-derivation of Sampling.uniformFromId's 52-bit
+      // uniform: per-hex-digit arithmetic instead of Spark's conv — the
+      // same integer, the same exactly-representable double.
+      s"""WITH h AS (SELECT doc_id, n_chars,
+              substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
+            FROM documents WHERE n_chars > 0),
+            u AS (SELECT doc_id, n_chars,
+                    CAST(($md5DigitSumSql) + 1 AS DOUBLE)
+                      / 4503599627370496.0 AS u
+                  FROM h),
+            p AS (SELECT doc_id, n_chars,
+                    round(ln(u) / CAST(n_chars AS DOUBLE), 6) AS priority
+                  FROM u)
+         SELECT doc_id, n_chars, priority FROM p
+         ORDER BY priority DESC, doc_id LIMIT 50""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .weightedTopK(t.documents, col("doc_id"), col("n_chars"), k = 50)
@@ -997,7 +1315,23 @@ object PipelineQueries {
     },
 
     // Per-stratum form: the 10 highest-priority documents of each source.
-    "sample_weighted_strata" -> { (s, dir) =>
+    Query("sample_weighted_strata",
+      s"""WITH h AS (SELECT doc_id, source, n_chars,
+              substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
+            FROM documents WHERE n_chars > 0),
+            u AS (SELECT doc_id, source, n_chars,
+                    CAST(($md5DigitSumSql) + 1 AS DOUBLE)
+                      / 4503599627370496.0 AS u
+                  FROM h),
+            p AS (SELECT doc_id, source,
+                    round(ln(u) / CAST(n_chars AS DOUBLE), 6) AS priority
+                  FROM u),
+            r AS (SELECT doc_id, source, priority,
+                    row_number() OVER (PARTITION BY source
+                      ORDER BY priority DESC, doc_id) AS rk
+                  FROM p)
+         SELECT doc_id, source, priority FROM r WHERE rk <= 10
+         ORDER BY source, priority DESC, doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .weightedStratifiedTopK(t.documents, Seq(col("source")),
@@ -1009,7 +1343,17 @@ object PipelineQueries {
     // Fill a 600-whitespace-token budget per source in deterministic
     // hash order; the first overshooting doc is kept (budget = coverage
     // floor).
-    "sample_token_budget" -> { (s, dir) =>
+    Query("sample_token_budget",
+      s"""SELECT doc_id, source FROM (
+           SELECT doc_id, source,
+             coalesce(sum(n_tok) OVER (PARTITION BY source
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+           FROM (SELECT doc_id, source,
+                   CASE WHEN $blankSql THEN 0
+                        ELSE len($tokensSql) END AS n_tok
+                 FROM documents))
+         WHERE cum < 600 ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .tokenBudget(t.documents, Seq(col("source")), col("doc_id"),
@@ -1023,7 +1367,34 @@ object PipelineQueries {
     // whitespace proxy for comparison): each source's 600-token budget
     // fills against bpeEncodeCount, so documents that compress well
     // under the tokenizer stretch the budget further.
-    "sample_token_budget_bpe" -> { (s, dir) =>
+    Query("sample_token_budget_bpe", {
+      // Training replayed, every document's ENCODED length re-derived, and
+      // the identical budget window run over those counts.
+      val rounds = 8
+      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainCtes(rounds) +
+        s""",
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t FROM documents),
+           encw AS (SELECT doc_id,
+                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
+                           THEN len(string_split(trim($chained, '|'), '||'))
+                           ELSE 1 END AS ntok
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           d AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n
+                 FROM encw GROUP BY doc_id),
+           wd AS (SELECT dd.doc_id, dd.source, coalesce(d.n, 0) AS n_tok
+                  FROM documents dd LEFT JOIN d USING (doc_id))
+         SELECT doc_id, source FROM (
+           SELECT doc_id, source,
+             coalesce(sum(n_tok) OVER (PARTITION BY source
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+           FROM wd)
+         WHERE cum < 600 ORDER BY doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedMerges(s, dir)
       graft.operators.Sampling
@@ -1039,7 +1410,32 @@ object PipelineQueries {
     // Viterbi piece count under the TokenizerStore-loaded model. Byte
     // pieces run well above the BPE subword counts at this vocabulary
     // depth, so the budget doubles to keep the fill depth comparable.
-    "sample_token_budget_unigram" -> { (s, dir) =>
+    Query("sample_token_budget_unigram",
+      // The unigram budget fill: per-doc Viterbi piece counts re-derived
+      // through the shared byte-DP CTEs, then the identical budget window
+      // over those counts.
+      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
+            sbwseg AS MATERIALIZED (
+              SELECT hw,
+                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
+              FROM bdp WHERE i = len(hw) // 2),
+            sbdoctok AS (SELECT doc_id, unnest($tokensSql) AS t
+                         FROM bdocs),
+            sbdocsum AS (SELECT d.doc_id, sum(w.n_pieces) AS np
+                         FROM sbdoctok d
+                         JOIN sbwseg w ON lower(hex(d.t)) = w.hw
+                         GROUP BY 1),
+            sbwd AS (SELECT dd.doc_id, dd.source,
+                       coalesce(np, 0) AS n_tok
+                     FROM documents dd
+                     LEFT JOIN sbdocsum s2 ON dd.doc_id = s2.doc_id)
+         SELECT doc_id, source FROM (
+           SELECT doc_id, source,
+             coalesce(sum(n_tok) OVER (PARTITION BY source
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+           FROM sbwd)
+         WHERE cum < 1200 ORDER BY doc_id""") { (s, dir) =>
       val (pieces, maxLen) = storedUnigramBytes(s, dir)
       graft.operators.Sampling
         .tokenBudget(plantedDocsWithSource(s, dir), Seq(col("source")),
@@ -1053,7 +1449,19 @@ object PipelineQueries {
 
     // Deterministic corpus shuffle: shard + pseudo-random training order
     // from md5(id || salt) — one shard-keyed window, no global sort.
-    "corpus_shuffle" -> { (s, dir) =>
+    Query("corpus_shuffle",
+      """WITH h AS (
+           SELECT doc_id,
+             md5(CAST(doc_id AS VARCHAR) || 'r3') AS hh
+           FROM documents),
+          s AS (
+           SELECT doc_id, hh,
+             CAST(CAST(('0x' || substr(hh, 1, 8)) AS BIGINT) % 8 AS INT) AS shard
+           FROM h)
+         SELECT doc_id, shard,
+           CAST(row_number() OVER (PARTITION BY shard ORDER BY hh, doc_id)
+             AS INT) AS pos
+         FROM s ORDER BY shard, pos""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .shuffleShards(t.documents.select(col("doc_id")), col("doc_id"),
@@ -1065,7 +1473,11 @@ object PipelineQueries {
     // Sequence packing: concat-and-chunk into 256-token training
     // sequences within 4 deterministic shards; output is the packing map
     // (which doc contributes which token range to which sequence).
-    "pack_sequences" -> { (s, dir) =>
+    Query("pack_sequences",
+      (packSeqCtes +
+        """
+         SELECT shard, seq_id, doc_id, tok_start, n_toks
+         FROM pieces ORDER BY shard, seq_id, doc_id""")) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .packSequences(t.documents, col("doc_id"), col("text"),
@@ -1078,7 +1490,15 @@ object PipelineQueries {
     // materializes next to each packed sequence (the chat_pack_masks
     // sibling for plain document packing). Pure re-projection of the
     // position-carrying packing map.
-    "pack_doc_spans" -> { (s, dir) =>
+    Query("pack_doc_spans",
+      // seq_pos comes from the same shared pieces CTE: a piece sits at 0
+      // when it continues a document across the cut, else at strt − seq·256.
+      (packSeqCtes +
+        """
+         SELECT shard, seq_id, doc_id,
+           CAST(seq_pos AS BIGINT) AS span_start,
+           CAST(seq_pos + n_toks AS BIGINT) AS span_end
+         FROM pieces ORDER BY shard, seq_id, doc_id""")) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling.packSequencesPosBy(t.documents,
           col("doc_id"), TextAnalysis.tokenCount(col("text")).cast("long"),
@@ -1091,7 +1511,27 @@ object PipelineQueries {
 
     // Packing-efficiency report over the pack_sequences map: per-shard
     // sequence/doc/piece counts, split incidence, tail waste, fill.
-    "pack_report" -> { (s, dir) =>
+    Query("pack_report",
+      // One grouped pass over the packing map — the loader-team health
+      // report: sequence counts, split incidence, and fill (waste is the
+      // tail sequence only, since every non-last sequence is exactly
+      // seqLen by construction — asserted by the fill arithmetic itself).
+      (packSeqCtes +
+        s""",
+          pd AS (SELECT shard, doc_id, count(*) AS pieces,
+                   sum(n_toks) AS dtoks, max(seq_id) AS mseq
+                 FROM pieces GROUP BY shard, doc_id)
+         SELECT shard,
+           CAST(max(mseq) + 1 AS BIGINT) AS n_seqs,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(pieces) AS BIGINT) AS n_pieces,
+           CAST(sum(CASE WHEN pieces > 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_split_docs,
+           CAST(sum(dtoks) AS BIGINT) AS total_tokens,
+           CAST((max(mseq) + 1) * 256 - sum(dtoks) AS BIGINT) AS tail_waste,
+           floor(CAST(sum(dtoks) AS DOUBLE) / ((max(mseq) + 1) * 256)
+             * 1000000 + 0.5) / 1000000 AS fill_frac
+         FROM pd GROUP BY shard ORDER BY shard""")) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling.packReport(
           graft.operators.Sampling.packSequences(t.documents, col("doc_id"),
@@ -1105,7 +1545,12 @@ object PipelineQueries {
     // The oracle replays the BFD heuristic move for move as a recursive
     // CTE carrying the open-bin remaining-capacity list — a wrong sort
     // order, fit rule, or tie-break diverges on the first affected doc.
-    "pack_bestfit" -> { (s, dir) =>
+    Query("pack_bestfit",
+      (bfdCtes +
+        """
+         SELECT doc_id, CAST(bin - 1 AS BIGINT) AS seq_id,
+           n AS n_toks, pos AS seq_pos
+         FROM bfp WHERE i > 0 ORDER BY doc_id""")) { (s, dir) =>
       graft.operators.Sampling.packSequencesWholeBy(
           bestFitDocs(s, dir), col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long"),
@@ -1117,7 +1562,19 @@ object PipelineQueries {
 
     // The report over the best-fit map: padding waste and fill of the
     // no-split regime, zero split docs by construction.
-    "pack_bestfit_report" -> { (s, dir) =>
+    Query("pack_bestfit_report",
+      (bfdCtes +
+        """
+         SELECT CAST(0 AS INT) AS shard,
+           CAST(max(bin) AS BIGINT) AS n_seqs,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(count(*) AS BIGINT) AS n_pieces,
+           CAST(0 AS BIGINT) AS n_split_docs,
+           CAST(sum(n) AS BIGINT) AS total_tokens,
+           CAST(max(bin) * 256 - sum(n) AS BIGINT) AS tail_waste,
+           floor(CAST(sum(n) AS DOUBLE) / (max(bin) * 256)
+             * 1000000 + 0.5) / 1000000 AS fill_frac
+         FROM bfp WHERE i > 0""")) { (s, dir) =>
       graft.operators.Sampling.packReport(
           graft.operators.Sampling.packSequencesWholeBy(
             bestFitDocs(s, dir), col("doc_id"),
@@ -1132,7 +1589,46 @@ object PipelineQueries {
     // sequences on THAT budget — the tokenize-then-pack step a training
     // pipeline actually ships (pack_sequences keeps the whitespace-proxy
     // form for comparison).
-    "pack_bpe_sequences" -> { (s, dir) =>
+    Query("pack_bpe_sequences", {
+      // BPE-token packing: the pack_sequences map recomputed over REAL
+      // trained-tokenizer counts — training CTEs + per-token encoded
+      // lengths + the identical md5-shard/window/bin-explode chain.
+      val rounds = 8
+      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainCtes(rounds) +
+        s""",
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t FROM documents),
+           encw AS (SELECT doc_id,
+                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
+                           THEN len(string_split(trim($chained, '|'), '||'))
+                           ELSE 1 END AS ntok
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           d AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n
+                 FROM encw GROUP BY doc_id),
+           nz AS (SELECT doc_id, n FROM d WHERE n > 0),
+           h AS (SELECT doc_id, n,
+                   md5(CAST(doc_id AS VARCHAR) || 'r5b') AS hh
+                 FROM nz),
+           sh AS (SELECT doc_id, n, hh,
+                    CAST(CAST(('0x' || substr(hh, 1, 8)) AS BIGINT) % 4 AS INT) AS shard
+                  FROM h),
+           p AS (SELECT doc_id, n, shard,
+                   CAST(coalesce(sum(n) OVER (PARTITION BY shard
+                     ORDER BY hh, doc_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS BIGINT) AS strt
+                 FROM sh),
+           e AS (SELECT shard, doc_id, n, strt, b AS seq_id
+                 FROM p, unnest(range(strt // 256, (strt + n - 1) // 256 + 1)) AS u(b))
+         SELECT shard, CAST(seq_id AS BIGINT) AS seq_id, doc_id,
+           greatest(0, seq_id * 256 - strt) AS tok_start,
+           least(n, (seq_id + 1) * 256 - strt)
+             - greatest(0, seq_id * 256 - strt) AS n_toks
+         FROM e ORDER BY shard, seq_id, doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedMerges(s, dir)
       graft.operators.Sampling
@@ -1143,7 +1639,16 @@ object PipelineQueries {
     },
 
     // Data mixing by source weights; unlisted sources keep 5%.
-    "sample_mixture" -> { (s, dir) =>
+    Query("sample_mixture",
+      """SELECT doc_id, source FROM (
+           SELECT doc_id, source,
+             CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.2
+                         WHEN 'src3' THEN 1.0 ELSE 0.05 END AS w,
+             row_number() OVER (PARTITION BY source
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
+             count(*) OVER (PARTITION BY source) AS n
+           FROM documents)
+         WHERE rn <= ceil(n * w) ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sampling
         .mixture(t.documents, col("source"), col("doc_id"),
@@ -1154,7 +1659,26 @@ object PipelineQueries {
 
     // Transitive near-dup clusters — the consumable form of dedup (keep one
     // row per cluster_id). Oracle: recursive CTE over brute-force pairs.
-    "dedup_minhash_clusters" -> { (s, dir) =>
+    Query("dedup_minhash_clusters",
+      """WITH RECURSIVE
+           t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+           d AS (SELECT doc_id,
+                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                  for i in range(1, len(toks) - 1)]) AS sh
+                 FROM t WHERE len(toks) >= 3),
+           pairs AS (
+             SELECT a.doc_id AS id_a, b.doc_id AS id_b
+             FROM d a JOIN d b ON a.doc_id < b.doc_id
+             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
+           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                 UNION ALL SELECT id_b, id_a FROM pairs),
+           reach(id, r) AS (
+             SELECT doc_id, doc_id FROM documents
+             UNION
+             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id)
+         SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
+         FROM reach GROUP BY id ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       Dedup.minhashClusters(t.documents, col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
@@ -1162,7 +1686,37 @@ object PipelineQueries {
 
     // Canonical-document selection: one surviving doc per near-dup cluster,
     // highest quality (here: longest text) wins, ties to the smallest id.
-    "dedup_canonical" -> { (s, dir) =>
+    Query("dedup_canonical",
+      """WITH RECURSIVE
+           t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+           d AS (SELECT doc_id,
+                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                  for i in range(1, len(toks) - 1)]) AS sh
+                 FROM t WHERE len(toks) >= 3),
+           pairs AS (
+             SELECT a.doc_id AS id_a, b.doc_id AS id_b
+             FROM d a JOIN d b ON a.doc_id < b.doc_id
+             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
+           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
+                 UNION ALL SELECT id_b, id_a FROM pairs),
+           reach(id, r) AS (
+             SELECT doc_id, doc_id FROM documents
+             UNION
+             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
+           c AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
+                 FROM reach GROUP BY id),
+           m AS (SELECT c.cluster_id, c.doc_id,
+                   CAST(length(documents.text) AS BIGINT) AS q
+                 FROM c JOIN documents USING (doc_id)),
+           rnk AS (SELECT cluster_id, doc_id, q,
+                     row_number() OVER (PARTITION BY cluster_id
+                                        ORDER BY q DESC, doc_id) AS rn,
+                     count(*) OVER (PARTITION BY cluster_id) AS n_members,
+                     max(q) OVER (PARTITION BY cluster_id) AS keep_quality
+                   FROM m)
+         SELECT cluster_id, doc_id AS keep_id, n_members, keep_quality
+         FROM rnk WHERE rn = 1 ORDER BY cluster_id""") { (s, dir) =>
       val t = Tables(s, dir)
       Dedup.canonicalize(t.documents, col("doc_id"), col("text"),
           length(col("text")).cast("long"))
@@ -1172,7 +1726,21 @@ object PipelineQueries {
     // Incremental dedup: new batch (doc_id % 4 == 0) against the prebuilt
     // banded signature index of the rest of the corpus — old×new pairs
     // only, the corpus is never self-joined or re-hashed.
-    "dedup_incremental" -> { (s, dir) =>
+    Query("dedup_incremental",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+            d AS (SELECT doc_id,
+                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                   for i in range(1, len(toks) - 1)]) AS sh
+                  FROM t WHERE len(toks) >= 3),
+            side_old AS (SELECT * FROM d WHERE doc_id % 4 <> 0),
+            side_new AS (SELECT * FROM d WHERE doc_id % 4 = 0)
+         SELECT o.doc_id AS old_id, n.doc_id AS new_id,
+           CAST(len(list_intersect(o.sh, n.sh)) AS DOUBLE)
+             / (len(o.sh) + len(n.sh) - len(list_intersect(o.sh, n.sh))) AS jaccard
+         FROM side_old o JOIN side_new n ON true
+         WHERE CAST(len(list_intersect(o.sh, n.sh)) AS DOUBLE)
+             / (len(o.sh) + len(n.sh) - len(list_intersect(o.sh, n.sh))) >= 0.8
+         ORDER BY new_id, old_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val docs = t.documents.select(col("doc_id"), col("text"))
       val corpus = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
@@ -1188,7 +1756,16 @@ object PipelineQueries {
     // true duplicates). Result is exact for any fpp — bloom-negatives are
     // definitively new, positives are confirmed against the real index —
     // so the oracle is the plain text-keyed NOT EXISTS.
-    "dedup_bloom_admission" -> { (s, dir) =>
+    Query("dedup_bloom_admission",
+      """WITH corpus AS (
+           SELECT doc_id, text FROM documents WHERE doc_id % 4 <> 0),
+         batch AS (
+           SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
+           UNION ALL
+           SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id < 40)
+         SELECT b.doc_id FROM batch b
+         WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)
+         ORDER BY doc_id""") { (s, dir) =>
       val docs = Tables(s, dir).documents.select(
         belowPlantedOffset(col("doc_id"), 200000).as("doc_id"), col("text"))
       val corpus = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
@@ -1207,7 +1784,35 @@ object PipelineQueries {
     // tracking params, fragment + shuffled params) of one logical page
     // must collapse to a single canonical key. The fixture is the string
     // construction; the operator under test is normalizeUrl.
-    "url_normalize" -> { (s, dir) =>
+    Query("url_normalize",
+      """WITH u AS (
+           SELECT (CASE WHEN event_id % 2 = 0 THEN 'HTTP://WWW.Ex'
+                        ELSE 'https://ex' END)
+               || (event_id % 5) || '.COM/' || event_type || '/item'
+               || (user_id % 100)
+               || (CASE WHEN event_id % 3 = 0 THEN '/?utm_source=feed&b=2&a=1'
+                        WHEN event_id % 3 = 1 THEN '?b=2&a=1#frag'
+                        ELSE '?a=1&b=2&gclid=xyz' END) AS url
+           FROM events),
+         s1 AS (SELECT split_part(trim(url), '#', 1) AS no_frag FROM u),
+         s2 AS (SELECT
+             regexp_replace(regexp_replace(split_part(no_frag, '?', 1),
+               '^[Hh][Tt][Tt][Pp][Ss]?://', ''), '^[Ww]{3}\.', '') AS rest,
+             split_part(no_frag, '?', 2) AS query
+           FROM s1),
+         s3 AS (SELECT
+             lower(split_part(rest, '/', 1)) AS host,
+             regexp_replace(regexp_replace(rest, '^[^/]*', ''), '/+$', '') AS path,
+             list_sort(list_filter(string_split(query, '&'),
+               p -> NOT (starts_with(p, 'utm_') OR starts_with(p, 'gclid=')
+                         OR starts_with(p, 'fbclid=') OR p = ''))) AS kept
+           FROM s2),
+         n AS (SELECT 'https://' || host || path ||
+             (CASE WHEN len(kept) = 0 THEN ''
+                   ELSE '?' || array_to_string(kept, '&') END) AS url_norm
+           FROM s3)
+         SELECT url_norm, count(*) AS n FROM n
+         GROUP BY url_norm ORDER BY url_norm""") { (s, dir) =>
       val e = Tables(s, dir).events
       val url = concat(
         when(pmod(col("event_id"), lit(2)) === 0, lit("HTTP://WWW.Ex"))
@@ -1228,7 +1833,18 @@ object PipelineQueries {
     // return exactly the brute-force levenshtein<=1 pair set over distinct
     // key values, which the oracle computes as a cross join (fine at
     // oracle scale, impossible at operator scale).
-    "fuzzy_key_join" -> { (s, dir) =>
+    Query("fuzzy_key_join",
+      """WITH keys AS (
+           SELECT p_name AS key FROM part
+           UNION ALL
+           SELECT substr(p_name, 1, 2) || substr(p_name, 4) AS key
+           FROM part WHERE p_partkey < 30),
+         dk AS (SELECT DISTINCT key FROM keys)
+         SELECT a.key AS key_a, b.key AS key_b,
+           levenshtein(a.key, b.key) AS dist
+         FROM dk a JOIN dk b ON a.key < b.key
+         WHERE levenshtein(a.key, b.key) <= 1
+         ORDER BY key_a, key_b""") { (s, dir) =>
       val p = Tables(s, dir).part.select(col("p_partkey"), col("p_name"))
       val keys = p.select(col("p_name"))
         .unionByName(p.filter(col("p_partkey") < 30)
@@ -1244,7 +1860,25 @@ object PipelineQueries {
     // (v + 0.01·reverse(v), the gapped shape). Recall 1 on the gap, so
     // the oracle is exact brute-force old x new — the same anchoring
     // dedup_embedding_lsh uses.
-    "dedup_embedding_incremental" -> { (s, dir) =>
+    Query("dedup_embedding_incremental",
+      // Exact brute force old x new over the same planted construction —
+      // the incremental LSH path returns exactly this set on the gapped
+      // corpus (recall 1 at 8x4, anchored like dedup_embedding_lsh).
+      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            newb AS (
+              SELECT vec_id + 100000 AS vec_id,
+                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
+                      for i in range(1, len(vec) + 1)] AS vec
+              FROM base WHERE vec_id % 10 = 0),
+            no AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                   FROM base),
+            nn AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                   FROM newb)
+         SELECT o.vec_id AS old_id, n.vec_id AS new_id,
+           round(list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm), 6) AS cosine
+         FROM no o JOIN nn n ON true
+         WHERE list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm) >= 0.8
+         ORDER BY old_id, new_id""") { (s, dir) =>
       val base = Tables(s, dir).embeddings
         .select(belowPlantedOffset(col("vec_id"), 100000).as("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))
@@ -1270,7 +1904,26 @@ object PipelineQueries {
     // the answer is the arrival-ordered old x new pair set. maxPerBucket
     // is effectively unbounded here: eviction is a recall trade for
     // endless streams, not wanted under an exactness oracle.
-    "dedup_embedding_stream" -> { (s, dir) =>
+    Query("dedup_embedding_stream",
+      // Same planted construction, streamed: arrival order is ts = vec_id,
+      // so the within-stream operator's answer is again exact brute-force
+      // old x new (originals precede their twins; no other pair reaches
+      // the threshold on the gapped corpus, sf0.01 AND sf0.1).
+      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            newb AS (
+              SELECT vec_id + 100000 AS vec_id,
+                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
+                      for i in range(1, len(vec) + 1)] AS vec
+              FROM base WHERE vec_id % 10 = 0),
+            no AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                   FROM base),
+            nn AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
+                   FROM newb)
+         SELECT o.vec_id AS old_id, n.vec_id AS new_id,
+           round(list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm), 6) AS cosine
+         FROM no o JOIN nn n ON true
+         WHERE list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm) >= 0.8
+         ORDER BY old_id, new_id""") { (s, dir) =>
       val base = Tables(s, dir).embeddings
         .select(belowPlantedOffset(col("vec_id"), 100000).as("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))
@@ -1295,7 +1948,21 @@ object PipelineQueries {
     // benchmark leakage). Windows shuffle as 64-bit kernel hashes, never
     // as strings; the oracle rebuilds the same counts from the window
     // strings themselves.
-    "dedup_span" -> { (s, dir) =>
+    Query("dedup_span",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+            w AS (SELECT doc_id,
+                    [array_to_string(toks[i:i+5], ' ')
+                     for i in range(1, len(toks) - 4)] AS wins
+                  FROM t WHERE len(toks) >= 6),
+            e AS (SELECT doc_id, unnest(wins) AS win FROM w),
+            g AS (SELECT win, count(DISTINCT doc_id) AS nd FROM e GROUP BY win),
+            j AS (SELECT e.doc_id,
+                    CASE WHEN g.nd >= 2 THEN 1 ELSE 0 END AS isdup
+                  FROM e JOIN g USING (win))
+         SELECT doc_id, count(*) AS n_windows,
+           CAST(sum(isdup) AS BIGINT) AS n_dup_windows,
+           round(CAST(sum(isdup) AS DOUBLE) / count(*), 6) AS dup_frac
+         FROM j GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       Dedup.spanStats(t.documents, col("doc_id"), col("text"), k = 6, minDocs = 2)
         .orderBy(col("doc_id"))
@@ -1304,7 +1971,20 @@ object PipelineQueries {
     // Ingest-time span check: batch docs (doc_id % 4 == 0) against the
     // window-hash index of the rest of the corpus — which new spans
     // already exist in training data, without re-hashing the corpus.
-    "dedup_span_incremental" -> { (s, dir) =>
+    Query("dedup_span_incremental",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+            w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
+                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
+                  WHERE len(toks) >= 6),
+            idx AS (SELECT DISTINCT win FROM w WHERE doc_id % 4 <> 0),
+            b AS (SELECT doc_id, win FROM w WHERE doc_id % 4 = 0),
+            j AS (SELECT b.doc_id,
+                    CASE WHEN idx.win IS NOT NULL THEN 1 ELSE 0 END AS hit
+                  FROM b LEFT JOIN idx USING (win))
+         SELECT doc_id, count(*) AS n_windows,
+           CAST(sum(hit) AS BIGINT) AS n_indexed_windows,
+           round(CAST(sum(hit) AS DOUBLE) / count(*), 6) AS overlap_frac
+         FROM j GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val docs = t.documents.select(col("doc_id"), col("text"))
       val corpus = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)
@@ -1318,13 +1998,44 @@ object PipelineQueries {
     // duplicated 6-token window is excised (overlaps merge), documents
     // reassembled from surviving tokens; the shared run survives once,
     // in the lowest-(doc_id, pos) occurrence.
-    "dedup_span_excise" -> { (s, dir) =>
+    Query("dedup_span_excise",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, text
+                    FROM documents),
+            w AS (SELECT doc_id, i - 1 AS pos,
+                    array_to_string(toks[i:i+5], ' ') AS win
+                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
+                  WHERE len(toks) >= 6),
+            r AS (SELECT doc_id, pos,
+                    row_number() OVER (PARTITION BY win ORDER BY doc_id, pos) AS rn,
+                    count(*) OVER (PARTITION BY win) AS n
+                  FROM w),
+            m AS (SELECT doc_id, list(pos ORDER BY pos) AS starts
+                  FROM r WHERE n > 1 AND rn > 1 GROUP BY doc_id)
+         SELECT t.doc_id,
+           CASE WHEN m.starts IS NULL THEN t.text
+                ELSE coalesce(array_to_string(
+                  [toks[i] for i in range(1, len(toks) + 1)
+                   if len(list_filter(m.starts,
+                         s -> i - 1 >= s AND i - 1 < s + 6)) = 0], ' '), '')
+           END AS clean_text
+         FROM t LEFT JOIN m USING (doc_id)
+         ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       Dedup.spanExcise(t.documents, col("doc_id"), col("text"), k = 6)
         .orderBy(col("doc_id"))
     },
 
-    "dedup_ngram_jaccard" -> { (s, dir) =>
+    Query("dedup_ngram_jaccard",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+            d AS (SELECT doc_id,
+                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                   for i in range(1, len(toks) - 1)]) AS sh
+                  FROM t WHERE len(toks) >= 3)
+         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
+         FROM d a JOIN d b ON b.doc_id = a.doc_id + 1
+         ORDER BY id_a""") { (s, dir) =>
       val t = Tables(s, dir)
       val np = s.sessionState.conf.numShufflePartitions
       // ONE exchange, after the shingle projection: it materializes the
@@ -1353,7 +2064,11 @@ object PipelineQueries {
     // 100x margin over the sketch's guarantee — rank-monotonicity makes
     // the value-interval check sound), and only the exact group counts
     // plus the attestation booleans are dumped for the hash compare.
-    "q_approx_quantile" -> { (s, dir) =>
+    Query("q_approx_quantile",
+      // Self-certifying estimator (see q_approx_quantile's query comment):
+      // the oracle is the deterministic remainder — group counts + `true`.
+      """SELECT l_returnflag, count(*) AS n, true AS p50_ok, true AS p95_ok
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem.groupBy(col("l_returnflag"))
         .agg(
@@ -1370,7 +2085,12 @@ object PipelineQueries {
 
     // Typed Aggregator (UDAF): per-label centroid of embeddings; scalar
     // projections of the centroid keep the oracle comparable.
-    "sim_centroids" -> { (s, dir) =>
+    Query("sim_centroids",
+      """WITH e AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings)
+         SELECT label, count(*) AS n,
+           round(sum(vec[1]) / count(*), 6) AS c0,
+           round(sum(vec[64]) / count(*), 6) AS c63
+         FROM e GROUP BY label ORDER BY label""") { (s, dir) =>
       val t = Tables(s, dir)
       val vmean = udaf(graft.functions.VectorMeanAggregator)
       t.embeddings
@@ -1386,7 +2106,21 @@ object PipelineQueries {
     // ORACLE BASELINE — exact top-k; O(N) per query. Right at scale only
     // when the query set is small; for many queries use sim_ann_lsh /
     // sim_ivf_top1 (the scale paths).
-    "sim_topk_bruteforce" -> { (s, dir) =>
+    Query("sim_topk_bruteforce",
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id AS query_id, vec AS qvec, nrm AS qnrm FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk <= 5 ORDER BY query_id, rk""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings, col("vec_id"), col("embedding"))
       val queries = all.filter(col("vec_id") < 10)
@@ -1397,7 +2131,45 @@ object PipelineQueries {
 
     // Quantized candidate generation + exact re-rank; fully deterministic,
     // so the ENTIRE two-stage pipeline is oracle-checked.
-    "sim_quantized_topk" -> { (s, dir) =>
+    Query("sim_quantized_topk",
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            m AS (SELECT vec_id, vec,
+                    list_max(list_transform(vec, x -> abs(x))) AS ma FROM v),
+            qz AS (SELECT vec_id,
+                     CASE WHEN ma = 0
+                          THEN list_transform(vec, x -> CAST(0 AS DOUBLE))
+                          ELSE list_transform(vec, x -> CAST(CAST(
+                            round(x * 127.0 / ma) AS INTEGER) AS DOUBLE)) END AS codes
+                   FROM m),
+            qn AS (SELECT vec_id, codes,
+                     sqrt(list_inner_product(codes, codes)) AS cn FROM qz),
+            qq AS (SELECT vec_id AS query_id, codes AS qcodes, cn AS qcn
+                   FROM qn WHERE vec_id < 10),
+            approx AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                CASE WHEN c.cn * q.qcn = 0 THEN NULL
+                     ELSE list_inner_product(c.codes, q.qcodes) / (c.cn * q.qcn)
+                END AS acos
+              FROM qn c, qq q WHERE c.vec_id <> q.query_id),
+            cand AS (
+              SELECT query_id, cand_id FROM (
+                SELECT query_id, cand_id,
+                  row_number() OVER (PARTITION BY query_id
+                                     ORDER BY acos DESC, cand_id) AS ark
+                FROM approx) WHERE ark <= 20),
+            rescored AS (
+              SELECT cand.query_id, cand.cand_id,
+                list_inner_product(c.vec, q.vec) / (c.nrm * q.nrm) AS cosine
+              FROM cand JOIN n c ON c.vec_id = cand.cand_id
+                        JOIN n q ON q.vec_id = cand.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM rescored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk <= 5 ORDER BY query_id, rk""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings, col("vec_id"), col("embedding"))
       Similarity.quantizedTopK(all, all.filter(col("vec_id") < 10), k = 5, rerank = 4)
@@ -1410,7 +2182,23 @@ object PipelineQueries {
     // DuckDB oracle holds the output to exact equality with brute-force
     // top-k (a single lost neighbor shifts every rank below it and fails
     // the hash). Fewer tables/probes is the recall-for-cost knob at scale.
-    "sim_ann_lsh" -> { (s, dir) =>
+    Query("sim_ann_lsh",
+      // Multi-table ANN at the registered parameters covers every exact
+      // top-5 neighbor, so its oracle is brute-force top-k verbatim.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id AS query_id, vec AS qvec, nrm AS qnrm FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk <= 5 ORDER BY query_id, rk""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings, col("vec_id"), col("embedding"))
       val queries = all.filter(col("vec_id") < 10)
@@ -1432,7 +2220,26 @@ object PipelineQueries {
     // ≤ 0.61 background. The isotropic-spectrum recall ladder (general
     // top-k, the config-dependent part) stays the spec's contract;
     // embed_pca certifies the trained model itself.
-    "sim_pca_topk" -> { (s, dir) =>
+    Query("sim_pca_topk",
+      // Planted-twin top-1 where the twin's survival is STRUCTURAL (the
+      // reduced-space score is maximized exactly at cz = qz — see the
+      // query comment), so brute-force top-1 holds train → project →
+      // reduced scan → re-rank to exact equality.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1461,7 +2268,25 @@ object PipelineQueries {
     // re-rank pipeline to exact equality. General top-k recall at
     // rerank=10 is measured in the spec suite — on this corpus's noisy
     // background it is the honest statistical contract, not a hash.
-    "sim_pq_topk" -> { (s, dir) =>
+    Query("sim_pq_topk",
+      // Planted-copy top-1 (the sim_ivf_top1 protocol): the measured ADC
+      // rank of every planted original is 1, rerank=32 is the headroom, so
+      // the full PQ pipeline is held to brute-force top-1 verbatim.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1482,7 +2307,25 @@ object PipelineQueries {
     // twin is always scanned, and ADC ranks it first (measured rank 1
     // everywhere; rerank=32 headroom regardless). Multi-probe top-k
     // recall at non-degenerate params is the spec suite's contract.
-    "sim_ivfpq_topk" -> { (s, dir) =>
+    Query("sim_ivfpq_topk",
+      // nProbe=1 is provably exact for planted-copy queries (the query's
+      // nearest centroid IS its twin's list), so the same top-1 oracle
+      // holds IVF-PQ at its most selective config.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1508,7 +2351,26 @@ object PipelineQueries {
     // argmin, rerank=32 headroom over the measured ADC rank 1), so the
     // same brute-force oracle holds train → residual-encode → pruned
     // ADC → re-rank to exact equality.
-    "sim_ivfpq_residual" -> { (s, dir) =>
+    Query("sim_ivfpq_residual",
+      // Residual (true-IVFADC) codes answer the same planted-twin
+      // question — the twin guarantee and rerank headroom are unchanged —
+      // so the identical brute-force top-1 oracle holds the residual
+      // train/encode/probe pipeline to exact equality.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1539,7 +2401,27 @@ object PipelineQueries {
     // everywhere, rerank=32 headroom), so the same DuckDB brute-force
     // oracle holds the whole persisted pipeline — stored codes, stored
     // codebooks, version fence, key-pushed fetch — to exact equality.
-    "sim_pq_store" -> { (s, dir) =>
+    Query("sim_pq_store",
+      // The persisted-store probe answers the same question as the
+      // in-query form — planted-twin top-1 over the same corpus — so the
+      // identical brute-force oracle holds it; what changes is WHAT is
+      // exercised (stored codes + codebooks + version fence + key-pushed
+      // fetch), not the answer.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val (p, queries) = ensurePqStore(s, dir)
       IndexStore.searchPq(s, p, queries, k = 1, rerank = 32)
         .withColumn("cosine", round(col("cosine"), 6))
@@ -1558,7 +2440,24 @@ object PipelineQueries {
     // centroids) makes nProbe=1 exact, so the same brute-force oracle
     // holds stored centroids, stored list-coded codes, both version
     // fences, and the pruned scan to exact equality.
-    "sim_ivfpq_store" -> { (s, dir) =>
+    Query("sim_ivfpq_store",
+      // The persisted IVF-PQ probe answers the same planted-twin question;
+      // the brute-force oracle transfers unchanged.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val (p, queries) = ensurePqStore(s, dir)
       if (!s.catalog.tableExists(IndexStore.ivfPqTable(p)))
         IndexStore.buildIvf(s, p, kLists = 16)
@@ -1578,7 +2477,25 @@ object PipelineQueries {
     // stored-centroid argmin) transfers verbatim, so the same
     // brute-force top-1 oracle holds stored residual codebooks, stored
     // crn, both fences, and the pruned scan to exact equality.
-    "sim_ivfadc_store" -> { (s, dir) =>
+    Query("sim_ivfadc_store",
+      // The persisted residual-IVFADC probe answers the same planted-twin
+      // question through the `_ivfr` family; the brute-force oracle
+      // transfers unchanged.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val (p, queries) = ensurePqStore(s, dir)
       if (!s.catalog.tableExists(IndexStore.ivfrTable(p)))
         IndexStore.buildIvfResidual(s, p, kLists = 16, m = 16, ks = 16)
@@ -1597,7 +2514,25 @@ object PipelineQueries {
     // DuckDB brute-force top-1 oracle hold the output to exact equality;
     // multi-probe top-k recall at non-degenerate params is measured in
     // the spec suite and by the LshTune sweep instead.
-    "sim_ivf_top1" -> { (s, dir) =>
+    Query("sim_ivf_top1",
+      // IVF at nProbe=1 returns the exact nearest neighbor for the planted
+      // twin queries (the twin's list is always the probed list), so its
+      // oracle is brute-force top-1 over the same planted query set.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1619,7 +2554,25 @@ object PipelineQueries {
     // A flat nearest-centroid probe over the two-level centroid table
     // would NOT carry this guarantee (hierarchical assignment ≠ global
     // argmin), which is the design point the query pins.
-    "sim_ivf_hier" -> { (s, dir) =>
+    Query("sim_ivf_hier",
+      // The hierarchical probe replays the assignment's own two-step
+      // argmin, so the twin guarantee — and therefore the brute-force
+      // top-1 oracle — transfers unchanged from the flat IVF.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1644,7 +2597,25 @@ object PipelineQueries {
     // spec suite's recall-floor contract (IvfTwoLevelSpec), mirroring
     // sim_ann_lsh's split between exact-oracle query and statistical
     // spec.
-    "sim_ivf_hier_multi" -> { (s, dir) =>
+    Query("sim_ivf_hier_multi",
+      // Multi-probe only ADDS cells around the pinned descent cell and
+      // scores exact cosine, so the twin still wins and the identical
+      // brute-force top-1 oracle holds at nProbe=4.
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
+                  FROM n WHERE vec_id < 10),
+            scored AS (
+              SELECT q.query_id, c.vec_id AS cand_id,
+                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
+              FROM n c, q WHERE c.vec_id <> q.query_id),
+            ranked AS (
+              SELECT query_id, cand_id, cosine,
+                row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cosine DESC, cand_id) AS rk
+              FROM scored)
+         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
+         FROM ranked WHERE rk = 1 ORDER BY query_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val all = Similarity.prepared(t.embeddings,
         belowPlantedOffset(col("vec_id"), 100000), col("embedding"))
@@ -1665,7 +2636,48 @@ object PipelineQueries {
     // oracle reproduces the whole page → text pipeline exactly; every
     // 5th doc swaps its spaces for &nbsp; to force entity-decode work
     // through the body text itself.
-    "text_strip_html" -> { (s, dir) =>
+    Query("text_strip_html",
+      // The synth and the strip are the same regex/concat pipeline on
+      // both engines; (?is)/(?s) inline flags and 'g' are RE2-valid, and
+      // &amp; decodes LAST on both sides.
+      """WITH pages AS (
+           SELECT doc_id,
+             '<html><head><script type="text/javascript">var id=' || doc_id
+             || ';</script><style>p{color:red}</style></head>'
+             || '<body><!-- doc --><h1>Doc &#39;' || doc_id
+             || '&#39;</h1><p class="main">'
+             || CASE WHEN doc_id % 5 = 0 THEN replace(text, ' ', '&nbsp;')
+                     ELSE text END
+             || '</p><div>Tom &amp; Jerry &lt;escaped&gt;</div></body></html>'
+             AS html
+           FROM documents),
+          stripped AS (
+           SELECT doc_id,
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(
+                   regexp_replace(html, '(?is)<script\b(?:>|[^>]*[^/>]>).*?</script>', ' ', 'g'),
+                   '(?is)<style\b(?:>|[^>]*[^/>]>).*?</style>', ' ', 'g'),
+                 '(?s)<!--.*?-->', ' ', 'g'),
+               '<[^>]*>', ' ', 'g') AS t
+           FROM pages),
+          decoded AS (
+           SELECT doc_id,
+             replace(
+               replace(
+                 regexp_replace(
+                   replace(
+                     replace(
+                       replace(t, '&lt;', '<'),
+                       '&gt;', '>'),
+                     '&quot;', '"'),
+                   '&#39;|&apos;', '''', 'g'),
+                 '&nbsp;', ' '),
+               '&amp;', '&') AS t
+           FROM stripped)
+         SELECT doc_id,
+           trim(regexp_replace(t, '[ \t\n\f\r\x0B]+', ' ', 'g')) AS text
+         FROM decoded ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val body = when(pmod(col("doc_id"), lit(5)) === 0,
         regexp_replace(col("text"), " ", "&nbsp;")).otherwise(col("text"))
@@ -1680,7 +2692,11 @@ object PipelineQueries {
         .orderBy(col("doc_id"))
     },
 
-    "text_token_stats" -> { (s, dir) =>
+    Query("text_token_stats",
+      s"""SELECT doc_id,
+         CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
+         length(text) AS len_chars
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       t.documents.select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
@@ -1690,7 +2706,14 @@ object PipelineQueries {
 
     // LLM token-count proxy: GPT-2-style pre-tokenizer segment counts
     // next to the whitespace count.
-    "text_bpe_tokens" -> { (s, dir) =>
+    Query("text_bpe_tokens",
+      s"""SELECT doc_id,
+         CAST(len(regexp_extract_all(text,
+           '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+'))
+           AS BIGINT) AS n_bpe,
+         CAST(CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END
+           AS BIGINT) AS n_ws
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       t.documents.select(col("doc_id"),
           TextAnalysis.bpeTokenCount(col("text")).cast("long").as("n_bpe"),
@@ -1702,7 +2725,19 @@ object PipelineQueries {
     // frequency-initialized SentencePiece-unigram piece table — every
     // 1..4-char substring of the corpus words counted over occurrences,
     // scored as micro-nat log-probabilities. Top-40 window certified.
-    "text_unigram_train" -> { (s, dir) =>
+    Query("text_unigram_train",
+      // All 8 training rounds replayed as chained CTEs: pair counts from
+      // the double-separator symbol strings, the (freq DESC, l, r) argmax,
+      // and the SAME literal replace the Spark side applies (the
+      // double-bar encoding makes replace-all's non-overlapping scan a
+      // correct greedy merge — see TextAnalysis.bpeTrain).
+      s"""WITH $unigramTrainCtes
+         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
+           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T AS DOUBLE))
+             * 1000000 + 0.5) AS BIGINT) AS logp_micro
+         FROM ukeep CROSS JOIN utot
+         WHERE length(piece) >= 2
+         ORDER BY cnt DESC, piece LIMIT 40""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.unigramTrain(t.documents, col("text"))
         .where(length(col("piece")) >= 2)
@@ -1715,7 +2750,37 @@ object PipelineQueries {
     // then fewest pieces. The oracle replays the DP as a recursive CTE
     // carrying a 4-slot sliding window of (score, count)-encoded keys —
     // bit-exact Long arithmetic on both engines, no float in the path.
-    "text_unigram_segment" -> { (s, dir) =>
+    Query("text_unigram_segment",
+      // The Viterbi DP as a recursive CTE: one level per character
+      // position, each row carrying a 4-slot sliding window of DP states
+      // encoded as key = score_micro·2^20 − n_pieces (maximizing the key
+      // IS maximizing (score, fewest pieces) for n < 2^20 — corpus words
+      // are far shorter). Missing length-1 pieces take the −20e6 UNK
+      // penalty; missing longer pieces get a −4e18 sentinel. All exact
+      // BIGINT arithmetic — the quantization to micro-nats happened once
+      // in ptab.
+      s"""WITH RECURSIVE $unigramDpCtes,
+            wseg AS MATERIALIZED (
+              SELECT w,
+                (k0 + (((-k0) % 1048576 + 1048576) % 1048576)) // 1048576
+                  AS score_micro,
+                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
+              FROM dp WHERE i = len(w)),
+            doctok AS (SELECT doc_id, unnest($tokensSql) AS t
+                       FROM documents),
+            docsum AS (
+              SELECT d.doc_id,
+                sum(CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
+                         THEN ws.score_micro ELSE -20000000 END) AS lm,
+                sum(CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
+                         THEN ws.n_pieces ELSE 1 END) AS np
+              FROM doctok d LEFT JOIN wseg ws ON d.t = ws.w
+              GROUP BY 1)
+         SELECT doc_id,
+           CAST(coalesce(lm, 0) AS BIGINT) AS logp_micro,
+           CAST(coalesce(np, 0) AS BIGINT) AS n_pieces
+         FROM documents LEFT JOIN docsum USING (doc_id)
+         ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val pieces = trainedUnigram(s, dir)
       t.documents.select(col("doc_id"),
@@ -1729,7 +2794,42 @@ object PipelineQueries {
     // Best-path segmentation to VOCABULARY IDS (ids by (cnt DESC,
     // piece ASC) rank) — the unigram twin of text_bpe_ids: whole id
     // sequence per doc as text, OOV positions counted.
-    "text_unigram_ids" -> { (s, dir) =>
+    Query("text_unigram_ids",
+      // Ids replayed from the shared backward paths: vocabulary ids by
+      // (cnt DESC, piece ASC) rank, per-word id strings in path order
+      // (bk rows sort forward on their start position), doc sequences
+      // assembled in token order with -1 for OOV passthrough tokens.
+      s"""WITH RECURSIVE $unigramBkCtes,
+            uvocab AS (SELECT piece,
+                         CAST(row_number() OVER (ORDER BY cnt DESC, piece)
+                           - 1 AS INT) AS id
+                       FROM ukeep),
+            wids AS MATERIALIZED (
+              SELECT b.w,
+                string_agg(CAST(coalesce(v.id, -1) AS VARCHAR),
+                  ' ' ORDER BY b.pos) AS wt,
+                count(CASE WHEN v.id IS NULL THEN 1 END) AS woov
+              FROM bk b LEFT JOIN uvocab v ON b.piece = v.piece
+              WHERE b.piece IS NOT NULL
+              GROUP BY b.w),
+            idoctok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                          unnest(range(1, len($tokensSql) + 1)) AS j
+                        FROM documents),
+            idocids AS (
+              SELECT d.doc_id,
+                string_agg(
+                  CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
+                       THEN wa.wt ELSE '-1' END, ' ' ORDER BY d.j)
+                  AS ids_text,
+                sum(CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
+                         THEN wa.woov ELSE 1 END) AS n_oov
+              FROM idoctok d LEFT JOIN wids wa ON d.t = wa.w
+              GROUP BY 1)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
+           coalesce(a.ids_text, '') AS ids_text
+         FROM documents d LEFT JOIN idocids a USING (doc_id)
+         ORDER BY d.doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       Tables.spread(t.documents).select(col("doc_id"),
           TextAnalysis.unigramSegmentIds(col("text"),
@@ -1747,7 +2847,25 @@ object PipelineQueries {
     // walk), occurrence-weighted piece counts, re-normalized micro-nat
     // scores. The oracle re-derives the paths with a BACKWARD recursive
     // CTE that re-checks the forward DP's exact key identities.
-    "text_unigram_em" -> { (s, dir) =>
+    Query("text_unigram_em", {
+      // Hard-EM round: the backward walk re-derives each word's unique
+      // Viterbi path by checking the forward DP's EXACT key identities
+      // longest-piece-first (k=4..2, else 1 — the kernel's tie-break),
+      // then occurrence-weighted piece counts re-normalize.
+      s"""WITH RECURSIVE $unigramBkCtes,
+            emcnt AS MATERIALIZED (
+              SELECT bk.piece, sum(u.f) AS cnt
+              FROM bk JOIN uwords u ON bk.w = u.w
+              WHERE bk.piece IS NOT NULL
+              GROUP BY 1),
+            emtot AS (SELECT sum(cnt) AS T2 FROM emcnt)
+         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
+           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T2 AS DOUBLE))
+             * 1000000 + 0.5) AS BIGINT) AS logp_micro
+         FROM emcnt CROSS JOIN emtot
+         WHERE length(piece) >= 2
+         ORDER BY cnt DESC, piece LIMIT 40"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.unigramEmStep(t.documents, col("text"),
           trainedUnigram(s, dir))
@@ -1761,7 +2879,17 @@ object PipelineQueries {
     // token's UTF-8 bytes, all 1..8-byte substrings, hex pieces — the
     // production alphabet with no OOV path. Oracle replays the counting
     // over hex(token) substrings.
-    "text_unigram_bytes_train" -> { (s, dir) =>
+    Query("text_unigram_bytes_train",
+      // BYTE-level training replay: hex-substring counting over the
+      // planted corpus — every script participates, single bytes always
+      // kept.
+      s"""WITH ${unigramBytesTrainCtes(8)}
+         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
+           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T AS DOUBLE))
+             * 1000000 + 0.5) AS BIGINT) AS logp_micro
+         FROM bukeep CROSS JOIN butot
+         WHERE length(piece) >= 4
+         ORDER BY cnt DESC, piece LIMIT 40""") { (s, dir) =>
       TextAnalysis.unigramTrainBytes(plantedDocs(s, dir), col("text"))
         .where(length(col("piece")) >= 4)
         .orderBy(col("cnt").desc, col("piece"))
@@ -1771,7 +2899,29 @@ object PipelineQueries {
     // BYTE Viterbi segmentation per planted doc: exact-Long DP over
     // UTF-8 bytes, score·2^20 − n_pieces key encoding in the oracle's
     // recursive CTE (8-slot sliding window, one level per byte).
-    "text_unigram_bytes_segment" -> { (s, dir) =>
+    Query("text_unigram_bytes_segment",
+      // The byte Viterbi DP as a recursive CTE: one level per BYTE over
+      // the hex-encoded token, an 8-slot sliding window of
+      // score·2^20 − n_pieces keys; every token of every script joins —
+      // there is no OOV branch at all.
+      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
+            bwseg AS MATERIALIZED (
+              SELECT hw,
+                (k0 + (((-k0) % 1048576 + 1048576) % 1048576)) // 1048576
+                  AS score_micro,
+                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
+              FROM bdp WHERE i = len(hw) // 2),
+            bdoctok AS (SELECT doc_id, unnest($tokensSql) AS t FROM bdocs),
+            bdocsum AS (
+              SELECT d.doc_id, sum(ws.score_micro) AS lm,
+                sum(ws.n_pieces) AS np
+              FROM bdoctok d JOIN bwseg ws ON lower(hex(d.t)) = ws.hw
+              GROUP BY 1)
+         SELECT doc_id,
+           CAST(coalesce(lm, 0) AS BIGINT) AS logp_micro,
+           CAST(coalesce(np, 0) AS BIGINT) AS n_pieces
+         FROM documents LEFT JOIN bdocsum USING (doc_id)
+         ORDER BY doc_id""") { (s, dir) =>
       val pieces = trainedUnigramBytes(s, dir)
       plantedDocs(s, dir).select(col("doc_id"),
           TextAnalysis.unigramSegmentBytes(col("text"), pieces).as("__s"))
@@ -1784,7 +2934,37 @@ object PipelineQueries {
     // Byte best-path to VOCABULARY IDS: with byte fallback the id
     // sequence has no -1 on in-corpus text — n_oov certifies exactly
     // that, and ids_text pins every path piece and its rank.
-    "text_unigram_bytes_ids" -> { (s, dir) =>
+    Query("text_unigram_bytes_ids",
+      // Byte ids replayed from the shared backward paths; byte fallback
+      // means coalesce(v.id, -1) never actually fires on in-corpus text
+      // and n_oov pins that at 0 per doc.
+      s"""WITH RECURSIVE ${unigramBytesBkCtes(8)},
+            buvocab AS (SELECT piece,
+                          CAST(row_number() OVER (ORDER BY cnt DESC, piece)
+                            - 1 AS INT) AS id
+                        FROM bukeep),
+            bwids AS MATERIALIZED (
+              SELECT b.hw,
+                string_agg(CAST(coalesce(v.id, -1) AS VARCHAR),
+                  ' ' ORDER BY b.pos) AS wt,
+                count(CASE WHEN v.id IS NULL THEN 1 END) AS woov
+              FROM bbk b LEFT JOIN buvocab v ON b.piece = v.piece
+              WHERE b.piece IS NOT NULL
+              GROUP BY b.hw),
+            bidoctok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                           unnest(range(1, len($tokensSql) + 1)) AS j
+                         FROM bdocs),
+            bidocids AS (
+              SELECT d.doc_id,
+                string_agg(wa.wt, ' ' ORDER BY d.j) AS ids_text,
+                sum(wa.woov) AS n_oov
+              FROM bidoctok d JOIN bwids wa ON lower(hex(d.t)) = wa.hw
+              GROUP BY 1)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
+           coalesce(a.ids_text, '') AS ids_text
+         FROM documents d LEFT JOIN bidocids a USING (doc_id)
+         ORDER BY d.doc_id""") { (s, dir) =>
       plantedDocs(s, dir).select(col("doc_id"),
           TextAnalysis.unigramSegmentBytesIds(col("text"),
             trainedUnigramBytes(s, dir), trainedUnigramBytesVocab(s, dir))
@@ -1799,7 +2979,7 @@ object PipelineQueries {
     // One hard-EM round for the byte model — the DISTRIBUTED classic
     // formulation (the kernel expression over the word table). The
     // oracle re-derives every byte path with the backward recursive CTE.
-    "text_unigram_bytes_em" -> { (s, dir) =>
+    Query("text_unigram_bytes_em", unigramBytesEmOracle) { (s, dir) =>
       TextAnalysis.unigramEmStepBytes(plantedDocs(s, dir), col("text"),
           trainedUnigramBytes(s, dir))
         .where(length(col("piece")) >= 4)
@@ -1813,7 +2993,19 @@ object PipelineQueries {
     // per-doc DECIMAL-summed log-weights, rank-limited top-20. Domain
     // planted on every 10th raw doc; the target is the %7 sample with
     // the domain suffix.
-    "dsir_select" -> { (s, dir) =>
+    Query("dsir_select",
+      // DSIR replayed end to end: md5-bucketed uni+bigram features,
+      // full-outer count join, Laplace over the shared bucket vocabulary,
+      // round-once log-ratios, DECIMAL-summed doc weights, top-20.
+      s"""WITH ${dsirCtes(4096)},
+          docw AS (SELECT rf.doc_id, count(*) AS n_feats,
+                     CAST(sum(lr) AS DOUBLE) AS logw
+                   FROM rfeat rf JOIN ratio USING (f) GROUP BY 1),
+          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
+                      coalesce(logw, 0.0) AS logw
+                    FROM rawd d LEFT JOIN docw USING (doc_id))
+         SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats, logw
+         FROM fullw ORDER BY logw DESC, doc_id LIMIT 20""") { (s, dir) =>
       val (raw, _) = dsirCorpora(s, dir)
       graft.operators.Dsir
         .weightsWith(raw, dsirModel(s, dir, 4096), col("doc_id"),
@@ -1831,7 +3023,48 @@ object PipelineQueries {
     // take the Laplace-default ratio at counts 0/0 under the trained
     // totals; n_unseen pins that path fired, and the admission verdict
     // thresholds the engine-exact DECIMAL-summed logw.
-    "dsir_gate" -> { (s, dir) =>
+    Query("dsir_gate",
+      // The gate replay: the 2^20-bucket model, a fresh batch (%5 docs,
+      // in-domain suffix on %10, novel grams on %20) scored through a
+      // LEFT join with the Laplace-default ratio on unseen buckets
+      // (counts 0/0 under the trained totals), and the threshold verdict.
+      s"""WITH ${dsirCtes(1L << 20)},
+          l0 AS (SELECT CAST(round(
+                   ln(1.0 / (NT + V)) - ln(1.0 / (NR + V)), 6)
+                   AS DECIMAL(38,6)) AS lr0
+                 FROM st),
+          batch AS (SELECT doc_id,
+              text
+                || CASE WHEN doc_id % 10 = 0
+                        THEN ' quantum flux capacitor' ELSE '' END
+                || CASE WHEN doc_id % 20 = 0
+                        THEN ' zz9novelgram zz9weird' ELSE '' END
+                AS text
+            FROM documents WHERE doc_id % 5 = 0),
+          btok AS (SELECT doc_id, $tokensSql AS tk FROM batch),
+          bfeat AS (
+            SELECT doc_id,
+              CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT)
+                % ${1L << 20} AS VARCHAR) AS f
+            FROM (SELECT doc_id, unnest(list_concat(tk,
+                    [tk[i] || ' ' || tk[i+1]
+                     for i in range(1, len(tk))])) AS g
+                  FROM btok)),
+          docw AS (SELECT b.doc_id, count(*) AS n_feats,
+                     sum(CASE WHEN r.lr IS NULL THEN 1 ELSE 0 END)
+                       AS n_unseen,
+                     CAST(sum(coalesce(r.lr, (SELECT lr0 FROM l0)))
+                       AS DOUBLE) AS logw
+                   FROM bfeat b LEFT JOIN ratio r ON b.f = r.f
+                   GROUP BY 1),
+          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
+                      coalesce(n_unseen, 0) AS n_unseen,
+                      coalesce(logw, 0.0) AS logw
+                    FROM batch d LEFT JOIN docw USING (doc_id))
+         SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats,
+           CAST(n_unseen AS BIGINT) AS n_unseen, logw,
+           (n_feats = 0 OR logw >= $DsirGateMinLogw) AS admitted
+         FROM fullw ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val m = dsirModel(s, dir, 1 << 20)
       val batch = Tables.spread(
@@ -1855,7 +3088,28 @@ object PipelineQueries {
     // exp(logw), deterministic from md5(doc_id) (the sample_weighted
     // machinery in log space). The oracle replays u digit-by-digit and
     // the Gumbel transform verbatim.
-    "dsir_sampled" -> { (s, dir) =>
+    Query("dsir_sampled",
+      // Gumbel-top-k replay: u re-derived digit-by-digit from
+      // md5(doc_id) (the sample_weighted machinery), priority =
+      // round(logw − ln(−ln(u)), 6), top-20 without replacement.
+      s"""WITH ${dsirCtes(4096)},
+          docw AS (SELECT rf.doc_id, count(*) AS n_feats,
+                     CAST(sum(lr) AS DOUBLE) AS logw
+                   FROM rfeat rf JOIN ratio USING (f) GROUP BY 1),
+          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
+                      coalesce(logw, 0.0) AS logw
+                    FROM rawd d LEFT JOIN docw USING (doc_id)),
+          gh AS (SELECT doc_id, n_feats, logw,
+                   substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
+                 FROM fullw),
+          gp AS (SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats,
+                   logw,
+                   round(logw - ln(-ln(least(
+                     CAST(($md5DigitSumSql) + 1 AS DOUBLE)
+                       / 4503599627370496.0, 1.0 - 1e-16))), 6) AS priority
+                 FROM gh)
+         SELECT doc_id, n_feats, logw, priority FROM gp
+         ORDER BY priority DESC, doc_id LIMIT 20""") { (s, dir) =>
       val (raw, _) = dsirCorpora(s, dir)
       graft.operators.Sampling.gumbelTopK(
           graft.operators.Dsir.weightsWith(raw,
@@ -1870,7 +3124,30 @@ object PipelineQueries {
     // form: every source draws its own 3-doc sample from
     // softmax(logw) without replacement (one stratum-keyed window,
     // WindowGroupLimit-pruned; no global sort).
-    "dsir_sampled_strata" -> { (s, dir) =>
+    Query("dsir_sampled_strata",
+      // Per-domain draw: the same priority arithmetic under a
+      // source-partitioned rank window, 3 per source.
+      s"""WITH ${dsirCtes(4096)},
+          docw AS (SELECT rf.doc_id, count(*) AS n_feats,
+                     CAST(sum(lr) AS DOUBLE) AS logw
+                   FROM rfeat rf JOIN ratio USING (f) GROUP BY 1),
+          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
+                      coalesce(logw, 0.0) AS logw
+                    FROM rawd d LEFT JOIN docw USING (doc_id)),
+          gh AS (SELECT f.doc_id, d.source, f.logw,
+                   substr(md5(CAST(f.doc_id AS VARCHAR)), 1, 13) AS h
+                 FROM fullw f JOIN documents d USING (doc_id)),
+          gp AS (SELECT doc_id, source, logw,
+                   round(logw - ln(-ln(least(
+                     CAST(($md5DigitSumSql) + 1 AS DOUBLE)
+                       / 4503599627370496.0, 1.0 - 1e-16))), 6) AS priority
+                 FROM gh),
+          grk AS (SELECT doc_id, source, logw, priority,
+                    row_number() OVER (PARTITION BY source
+                      ORDER BY priority DESC, doc_id) AS rn
+                  FROM gp)
+         SELECT doc_id, source, logw, priority FROM grk WHERE rn <= 3
+         ORDER BY source, priority DESC, doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val (raw, _) = dsirCorpora(s, dir)
       val w = graft.operators.Dsir.weightsWith(raw,
@@ -1898,7 +3175,23 @@ object PipelineQueries {
     // nonempty), and the PRODUCTION entry point
     // (Dsir.gateRejects(batch, m) — no explicit threshold) emits
     // exactly the thresholded reject set.
-    "dsir_gate_calibrated" -> { (s, dir) =>
+    Query("dsir_gate_calibrated",
+      // Self-certifying (the q_quantile_rollup pattern — the gate
+      // threshold is the store's stamped KLL median of the training
+      // logw distribution, not SQL-replayable): the oracle states the
+      // deterministic remainder (corpus counts) plus the four
+      // scale-robust attestations — exact rank within 2·eps, rejected
+      // strictly below admitted, a median threshold splitting the batch
+      // nonempty both ways, and the no-threshold gateRejects entry point
+      // agreeing with the thresholded scores.
+      """SELECT
+           (SELECT count(*) FROM documents) AS n_train,
+           (SELECT count(*) FROM documents WHERE doc_id % 5 = 0)
+             AS n_batch,
+           true AS rank_ok,
+           true AS separation_ok,
+           true AS both_sides_nonempty,
+           true AS gate_api_consistent""") { (s, dir) =>
       val t = Tables(s, dir)
       val (m, q, eps) = dsirCalibratedStore(s, dir)
       val thr = m.minLogw.get
@@ -1957,7 +3250,56 @@ object PipelineQueries {
     // never saw) vs the in-vocabulary cohort, each reporting its exact
     // unseen-feature fraction. The oracle replays the whole thing —
     // model, buckets, Laplace-left-join, quant6 quotient, verdict.
-    "dsir_staleness" -> { (s, dir) =>
+    Query("dsir_staleness",
+      // Staleness replay: the dsir_gate machinery (2^20-bucket model,
+      // %5 batch with planted novel grams on %20) folded per cohort —
+      // unseen counts, the quant6 unseen fraction, and the verdict
+      // against the 0.001 threshold, all re-derived from scratch.
+      s"""WITH ${dsirCtes(1L << 20)},
+          batch AS (SELECT doc_id,
+              text
+                || CASE WHEN doc_id % 10 = 0
+                        THEN ' quantum flux capacitor' ELSE '' END
+                || CASE WHEN doc_id % 20 = 0
+                        THEN ' zz9novelgram zz9weird' ELSE '' END
+                AS text
+            FROM documents WHERE doc_id % 5 = 0),
+          btok AS (SELECT doc_id, $tokensSql AS tk FROM batch),
+          bfeat AS (
+            SELECT doc_id,
+              CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT)
+                % ${1L << 20} AS VARCHAR) AS f
+            FROM (SELECT doc_id, unnest(list_concat(tk,
+                    [tk[i] || ' ' || tk[i+1]
+                     for i in range(1, len(tk))])) AS g
+                  FROM btok)),
+          docw AS (SELECT b.doc_id, count(*) AS n_feats,
+                     sum(CASE WHEN r.lr IS NULL THEN 1 ELSE 0 END)
+                       AS n_unseen
+                   FROM bfeat b LEFT JOIN ratio r ON b.f = r.f
+                   GROUP BY 1),
+          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
+                      coalesce(n_unseen, 0) AS n_unseen
+                    FROM batch d LEFT JOIN docw USING (doc_id)),
+          coh AS (SELECT
+                    CASE WHEN doc_id % 20 = 0 THEN 'novel'
+                         ELSE 'in_vocab' END AS cohort,
+                    count(*) AS n_docs,
+                    CAST(sum(n_feats) AS BIGINT) AS n_feats,
+                    CAST(sum(n_unseen) AS BIGINT) AS n_unseen
+                  FROM fullw GROUP BY 1)
+         SELECT cohort, n_docs, n_feats, n_unseen,
+           CASE WHEN n_feats > 0
+                THEN floor(CAST(n_unseen AS DOUBLE)
+                       / CAST(n_feats AS DOUBLE) * 1000000.0 + 0.5)
+                     / 1000000.0
+                ELSE 0.0 END AS unseen_frac,
+           (CASE WHEN n_feats > 0
+                 THEN floor(CAST(n_unseen AS DOUBLE)
+                        / CAST(n_feats AS DOUBLE) * 1000000.0 + 0.5)
+                      / 1000000.0
+                 ELSE 0.0 END) > CAST(0.001 AS DOUBLE) AS stale
+         FROM coh ORDER BY cohort""") { (s, dir) =>
       val t = Tables(s, dir)
       val m = dsirModel(s, dir, 1 << 20)
       val batch = Tables.spread(
@@ -1984,7 +3326,30 @@ object PipelineQueries {
     // (gumbelStratifiedTopK on `domain`, 3 winners each). The oracle
     // re-derives both domain models over the shared vocabulary and
     // replays the draw.
-    "dsir_multi" -> { (s, dir) =>
+    Query("dsir_multi",
+      // Multi-target replay: both domain models re-derived over the
+      // SHARED vocabulary (per-domain Laplace totals, common raw side),
+      // one stacked ratio grid, per-(doc, domain) DECIMAL folds, and the
+      // per-domain Gumbel draw — the engine's one-exchange scoring
+      // reproduced as plain SQL.
+      s"""WITH ${dsirMultiCtes(4096)},
+          gh AS (SELECT doc_id, domain, n_feats, logw,
+                   substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
+                 FROM fullw),
+          gp AS (SELECT doc_id, domain,
+                   CAST(n_feats AS BIGINT) AS n_feats, logw,
+                   round(logw - ln(-ln(least(
+                     CAST(($md5DigitSumSql) + 1 AS DOUBLE)
+                       / 4503599627370496.0, 1.0 - 1e-16))), 6)
+                     AS priority
+                 FROM gh),
+          grk AS (SELECT doc_id, domain, n_feats, logw, priority,
+                    row_number() OVER (PARTITION BY domain
+                      ORDER BY priority DESC, doc_id) AS rn
+                  FROM gp)
+         SELECT doc_id, domain, n_feats, logw, priority
+         FROM grk WHERE rn <= 3
+         ORDER BY domain, priority DESC, doc_id""") { (s, dir) =>
       val (raw, _) = dsirMultiCorpora(s, dir)
       val mm = dsirMultiModel(s, dir, 4096)
       val w = graft.operators.Dsir.weightsMultiWith(raw, mm,
@@ -2004,7 +3369,65 @@ object PipelineQueries {
     // domain's totals); n_unseen is domain-independent. The oracle
     // replays the whole thing — shared vocabulary, per-domain
     // defaults, DECIMAL folds.
-    "dsir_multi_gate" -> { (s, dir) =>
+    Query("dsir_multi_gate",
+      // Multi-target gate replay: both domain models at 2^20 buckets,
+      // the fresh batch, unseen buckets counted once per doc and charged
+      // each domain's OWN Laplace default, DECIMAL folds — the
+      // one-exchange scoring reproduced as SQL.
+      s"""WITH ${dsirMultiCtes(1L << 20)},
+          l0 AS (SELECT 'a' AS domain,
+                   CAST(round(ln(1.0 / ((SELECT nt FROM nta) + V))
+                     - ln(1.0 / (NR + V)), 6) AS DECIMAL(38,6)) AS lr0
+                 FROM st
+                 UNION ALL
+                 SELECT 'b',
+                   CAST(round(ln(1.0 / ((SELECT nt FROM ntb) + V))
+                     - ln(1.0 / (NR + V)), 6) AS DECIMAL(38,6))
+                 FROM st),
+          gbatch AS (SELECT doc_id,
+              text
+                || CASE WHEN doc_id % 10 = 0
+                        THEN ' quantum flux capacitor' ELSE '' END
+                || CASE WHEN doc_id % 15 = 0
+                        THEN ' neural lattice resonator' ELSE '' END
+                || CASE WHEN doc_id % 20 = 0
+                        THEN ' zz9novelgram zz9weird' ELSE '' END
+                AS text
+            FROM documents WHERE doc_id % 5 = 0),
+          gbtok AS (SELECT doc_id, $tokensSql AS tk FROM gbatch),
+          gbfeat AS (
+            SELECT doc_id,
+              CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT)
+                % ${1L << 20} AS VARCHAR) AS f
+            FROM (SELECT doc_id, unnest(list_concat(tk,
+                    [tk[i] || ' ' || tk[i+1]
+                     for i in range(1, len(tk))])) AS g
+                  FROM gbtok)),
+          gseen AS (SELECT b.doc_id, r.domain, count(*) AS n_seen,
+                      sum(r.lr) AS seen_sum
+                    FROM gbfeat b JOIN ratio_m r USING (f)
+                    GROUP BY 1, 2),
+          guns AS (SELECT b.doc_id, count(*) AS n_unseen
+                   FROM gbfeat b LEFT JOIN vocab v ON b.f = v.f
+                   WHERE v.f IS NULL GROUP BY 1),
+          gfull AS (SELECT d.doc_id, dom.domain,
+                      CAST(coalesce(s.n_seen, 0)
+                        + coalesce(u.n_unseen, 0) AS BIGINT) AS n_feats,
+                      CAST(coalesce(u.n_unseen, 0) AS BIGINT) AS n_unseen,
+                      CAST(coalesce(s.seen_sum,
+                          CAST(0 AS DECIMAL(38,6)))
+                        + CAST(coalesce(u.n_unseen, 0) AS DECIMAL(18,0))
+                          * (SELECT lr0 FROM l0
+                             WHERE l0.domain = dom.domain)
+                        AS DOUBLE) AS logw
+                    FROM gbatch d
+                    CROSS JOIN (SELECT 'a' AS domain
+                                UNION ALL SELECT 'b') dom
+                    LEFT JOIN gseen s
+                      ON d.doc_id = s.doc_id AND dom.domain = s.domain
+                    LEFT JOIN guns u ON d.doc_id = u.doc_id)
+         SELECT doc_id, domain, n_feats, n_unseen, logw
+         FROM gfull ORDER BY doc_id, domain""") { (s, dir) =>
       val t = Tables(s, dir)
       val mm = dsirMultiModel(s, dir, 1 << 20)
       val batch = Tables.spread(
@@ -2033,7 +3456,54 @@ object PipelineQueries {
     // equality; n_pieces pins the totals to the independent DuckDB
     // replay (the text_bpe_bytes / tokenizer_report_unigram
     // machinery), so an empty or degenerate cycle can't pass.
-    "tokenizer_export" -> { (s, dir) =>
+    Query("tokenizer_export", {
+      // Interop parity replay: the per-family piece totals are
+      // re-derived from scratch (byte-BPE 8-round training + encode over
+      // `documents`; byte-unigram Viterbi DP over the planted corpus —
+      // the text_bpe_bytes / tokenizer_report_unigram machinery), and
+      // the round-trip flag is the deterministic expectation `true` —
+      // export → import must be lossless by construction.
+      val rounds = 8
+      val sep =
+        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      s"""SELECT * FROM (
+           ${bpeTrainBytesCtes(rounds)},
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM documents),
+           encw AS (SELECT doc_id, i,
+                      string_split(trim($chained, '|'), '||') AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS allsyms
+                   FROM encw GROUP BY doc_id)
+           SELECT 'bpe_bytes' AS family,
+             count(*) AS n_docs,
+             CAST(sum(coalesce(len(e.allsyms), 0)) AS BIGINT) AS n_pieces,
+             true AS roundtrip_ok
+           FROM documents d LEFT JOIN enc e ON d.doc_id = e.doc_id)
+         UNION ALL
+         SELECT * FROM (
+           WITH RECURSIVE ${unigramBytesDpCtes(8)},
+             iwseg AS MATERIALIZED (
+               SELECT hw,
+                 ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
+               FROM bdp WHERE i = len(hw) // 2),
+             idoctok AS (SELECT doc_id, unnest($tokensSql) AS t
+                         FROM bdocs),
+             idocsum AS (
+               SELECT d.doc_id, sum(w.n_pieces) AS np
+               FROM idoctok d JOIN iwseg w ON lower(hex(d.t)) = w.hw
+               GROUP BY 1)
+           SELECT 'unigram_bytes' AS family,
+             count(*) AS n_docs,
+             CAST(sum(coalesce(s2.np, 0)) AS BIGINT) AS n_pieces,
+             true AS roundtrip_ok
+           FROM bdocs b LEFT JOIN idocsum s2 ON b.doc_id = s2.doc_id)
+         ORDER BY family"""
+    }) { (s, dir) =>
       val (bpe0, bpe1, (uni0, uMax0), (uni1, uMax1)) =
         interopModels(s, dir)
       val bpeModelsEq = bpe0 == bpe1
@@ -2072,7 +3542,28 @@ object PipelineQueries {
     // decode exactly. The oracle states the round-trip target — the
     // whitespace-joined token stream — verbatim, plus the DP's piece
     // count, so the hash pins the whole decoded string per doc.
-    "text_unigram_bytes_detok" -> { (s, dir) =>
+    Query("text_unigram_bytes_detok",
+      // The detok round-trip target is closed-form: the whitespace-joined
+      // token stream; n_pieces rides the existing byte-DP CTEs.
+      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
+            dwseg AS MATERIALIZED (
+              SELECT hw,
+                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
+              FROM bdp WHERE i = len(hw) // 2),
+            ddoctok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                          unnest(range(1, len($tokensSql) + 1)) AS j
+                        FROM bdocs),
+            ddocsum AS (
+              SELECT d.doc_id,
+                string_agg(d.t, ' ' ORDER BY d.j) AS detok,
+                sum(ws.n_pieces) AS np
+              FROM ddoctok d JOIN dwseg ws ON lower(hex(d.t)) = ws.hw
+              GROUP BY 1)
+         SELECT doc_id,
+           coalesce(detok, '') AS detok,
+           CAST(coalesce(np, 0) AS BIGINT) AS n_pieces
+         FROM documents LEFT JOIN ddocsum USING (doc_id)
+         ORDER BY doc_id""") { (s, dir) =>
       val pieces = trainedUnigramBytes(s, dir)
       plantedDocs(s, dir).select(col("doc_id"),
           TextAnalysis.unigramDetokBytes(
@@ -2090,7 +3581,38 @@ object PipelineQueries {
     // retention rule, the renormalization, AND the full byte-DP /
     // backward-walk round over the PRUNED score table — a wrong cut,
     // tie-break, or renormalization moves paths and diverges.
-    "text_unigram_bytes_prune" -> { (s, dir) =>
+    Query("text_unigram_bytes_prune", {
+      // Prune replay: the retention rule (all singles + top-(300−S)
+      // multi-byte by (cnt DESC, piece ASC)), renormalized micro-nats,
+      // then the hard-EM round's backward walk OVER THE PRUNED TABLE.
+      val pruneCtes = s"""
+          pkeep AS MATERIALIZED (
+            SELECT piece, cnt FROM bukeep WHERE length(piece) = 2
+            UNION ALL
+            (SELECT piece, cnt FROM bukeep WHERE length(piece) > 2
+             ORDER BY cnt DESC, piece
+             LIMIT 300 - (SELECT count(*) FROM bukeep
+                          WHERE length(piece) = 2))),
+          pptot AS (SELECT sum(cnt) AS T3 FROM pkeep),
+          pptab AS MATERIALIZED (
+            SELECT piece,
+              CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T3 AS DOUBLE))
+                * 1000000 + 0.5) AS BIGINT) AS pm
+            FROM pkeep CROSS JOIN pptot),"""
+      s"""WITH RECURSIVE ${unigramBytesBkCtes(8, "pptab", pruneCtes)},
+            zemcnt AS MATERIALIZED (
+              SELECT bbk.piece, sum(u.f) AS cnt
+              FROM bbk JOIN bhw u ON bbk.hw = u.hw
+              WHERE bbk.piece IS NOT NULL
+              GROUP BY 1),
+            zemtot AS (SELECT sum(cnt) AS T4 FROM zemcnt)
+         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
+           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T4 AS DOUBLE))
+             * 1000000 + 0.5) AS BIGINT) AS logp_micro
+         FROM zemcnt CROSS JOIN zemtot
+         WHERE length(piece) >= 4
+         ORDER BY cnt DESC, piece LIMIT 40"""
+    }) { (s, dir) =>
       val docs = plantedDocs(s, dir)
       val init = TextAnalysis.unigramTrainBytes(docs, col("text"))
         .localCheckpoint()
@@ -2113,7 +3635,20 @@ object PipelineQueries {
     // byte CTEs. The float-side guarantees (EM likelihood monotone over
     // 2 rounds, expected piece mass inside its exact bounds) ride as
     // attested booleans, spec-pinned against brute-force enumeration.
-    "text_unigram_soft_em" -> { (s, dir) =>
+    Query("text_unigram_soft_em",
+      // The soft-EM support identities in exact BIGINTs: init-table size
+      // (= soft support, by the completability argument) and the hard
+      // Viterbi-path support from the shared backward CTEs.
+      s"""WITH RECURSIVE ${unigramBytesBkCtes(8)},
+            nh AS (SELECT count(DISTINCT piece) AS n FROM bbk
+                   WHERE piece IS NOT NULL)
+         SELECT
+           (SELECT CAST(count(*) AS BIGINT) FROM bukeep) AS n_pieces_init,
+           (SELECT CAST(count(*) AS BIGINT) FROM bukeep) AS n_pieces_soft,
+           (SELECT CAST(n AS BIGINT) FROM nh) AS n_pieces_hard,
+           true AS ll_nondecreasing,
+           true AS epieces_in_bounds,
+           true AS support_identity""") { (s, dir) =>
       val docs = plantedDocs(s, dir)
       val init = trainedUnigramBytes(s, dir)
       val (model, lls, ep) = TextAnalysis.unigramTrainBytesSoftDiag(
@@ -2146,7 +3681,12 @@ object PipelineQueries {
     // same oracle as text_unigram_bytes_em), the bpeTrainFast pattern:
     // the fast path is graded against the published algorithm, not
     // against itself.
-    "text_unigram_bytes_fast" -> { (s, dir) =>
+    Query("text_unigram_bytes_fast",
+      // The fast trainer at emRounds = 1 must land EXACTLY on the classic
+      // init→EM replay — same oracle text as text_unigram_bytes_em by
+      // construction (one string, two graded paths: the distributed
+      // kernel expression and the driver-local fast loop).
+      unigramBytesEmOracle) { (s, dir) =>
       TextAnalysis.unigramTrainBytesFast(plantedDocs(s, dir), col("text"),
           emRounds = 1)
         .where(length(col("piece")) >= 4)
@@ -2160,7 +3700,13 @@ object PipelineQueries {
     // merge application — as chained CTEs over the identical
     // double-separator string encoding, so a wrong count, tie-break, or
     // merge semantics diverges by round 2.
-    "text_bpe_train" -> { (s, dir) =>
+    Query("text_bpe_train", {
+      val rounds = 8
+      val tail = (1 to rounds)
+        .map(k => s"""SELECT $k AS rank, l AS "left", r AS "right", freq FROM m$k""")
+        .mkString("\n", "\nUNION ALL\n", "\nORDER BY rank")
+      bpeTrainCtes(rounds) + tail
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.bpeTrain(t.documents, col("text"), nMerges = 8)
         .orderBy(col("rank"))
@@ -2174,7 +3720,17 @@ object PipelineQueries {
     // at 12 rounds — deeper than every other training query — so a hash
     // match certifies the delta trainer IS the classic algorithm, merge
     // for merge, selection-time freqs included.
-    "text_bpe_train_fast" -> { (s, dir) =>
+    Query("text_bpe_train_fast", {
+      // The fast trainer's oracle is the CLASSIC loop — byte head, 12
+      // chained per-round argmax/replace rounds — so the delta-updated
+      // formulation is certified against the published algorithm, not
+      // against itself.
+      val rounds = 12
+      val tail = (1 to rounds)
+        .map(k => s"""SELECT $k AS rank, l AS "left", r AS "right", freq FROM m$k""")
+        .mkString("\n", "\nUNION ALL\n", "\nORDER BY rank")
+      bpeTrainBytesCtes(rounds) + tail
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.bpeTrainBytesFast(t.documents, col("text"), nMerges = 12)
         .orderBy(col("rank"))
@@ -2187,7 +3743,37 @@ object PipelineQueries {
     // boundary. The oracle replays training AND the rank-sequential
     // replace formulation — a hash match certifies the two encoder
     // algorithms agree on the whole corpus.
-    "text_bpe_encode" -> { (s, dir) =>
+    Query("text_bpe_encode", {
+      // Merge APPLICATION replayed end-to-end: training (`bpeTrainCtes`)
+      // then, per document token, the identical chained literal
+      // replaces in rank order over the double-separator encoding —
+      // lowercase words re-segment, everything else passes through as one
+      // OOV symbol. The Spark side runs the min-rank-present kernel
+      // (TextKernels.bpeEncode), so a hash match here certifies the
+      // classical equivalence of the two algorithms on the whole corpus.
+      val rounds = 8
+      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainCtes(rounds) +
+        s""",
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM documents),
+           encw AS (SELECT doc_id, i,
+                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
+                           THEN string_split(trim($chained, '|'), '||')
+                           ELSE [t] END AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS allsyms
+                   FROM encw GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(len(e.allsyms), 0) AS BIGINT) AS n_bpe,
+           coalesce(array_to_string(e.allsyms, ' '), '') AS bpe_text
+         FROM documents d LEFT JOIN enc e ON d.doc_id = e.doc_id
+         ORDER BY d.doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedMerges(s, dir)
       t.documents.select(col("doc_id"),
@@ -2203,7 +3789,39 @@ object PipelineQueries {
     // sequence invertible, and the query asserts the round trip per
     // document (detok(encodeMarked(text)) == whitespace-normalized
     // text) while the dumped marked sequence pins every boundary.
-    "text_bpe_detok" -> { (s, dir) =>
+    Query("text_bpe_detok", {
+      // Marked encode + detokenize replayed end-to-end: per token the
+      // first symbol takes the U+2581 prefix, and detok_ok re-derives the
+      // round trip in SQL (concat -> marker->space -> ltrim vs the
+      // whitespace-normalized tokens).
+      val rounds = 8
+      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainCtes(rounds) +
+        s""",
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM documents),
+           encw AS (SELECT doc_id, i,
+                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
+                           THEN string_split(trim($chained, '|'), '||')
+                           ELSE [t] END AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           mk AS (SELECT doc_id, i,
+                    [CASE WHEN r = 1 THEN '▁' || syms[r] ELSE syms[r] END
+                     for r in range(1, len(syms) + 1)] AS msyms
+                  FROM encw),
+           enc AS (SELECT doc_id, flatten(list(msyms ORDER BY i)) AS allsyms
+                   FROM mk GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           coalesce(array_to_string(e.allsyms, ' '), '') AS marked_text,
+           coalesce(ltrim(replace(array_to_string(e.allsyms, ''), '▁', ' '), ' '), '')
+             = array_to_string($tokensSql, ' ') AS detok_ok
+         FROM documents d LEFT JOIN enc e USING (doc_id)
+         ORDER BY d.doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedMerges(s, dir)
       Tables.spread(t.documents).select(col("doc_id"), col("text"),
@@ -2221,7 +3839,51 @@ object PipelineQueries {
     // surface as -1. The oracle rebuilds the vocab from the replayed
     // training and re-derives every id, so a drifted id space or a lost
     // OOV position hash-mismatches.
-    "text_bpe_ids" -> { (s, dir) =>
+    Query("text_bpe_ids", {
+      // Vocab rebuilt from the replayed training (letters 0-25, merge
+      // outputs 25+rank with first-wins dedup), every symbol re-derived
+      // and id-mapped, OOV -> -1 — the whole id space is checked, not
+      // just counts.
+      val rounds = 8
+      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      val vocabRows = (1 to rounds)
+        .map(k => s"SELECT l || r AS sym, ${25 + k} AS id FROM m$k")
+        .mkString("\nUNION ALL\n")
+      bpeTrainCtes(rounds) +
+        s""",
+           letters AS (SELECT chr(CAST(96 + i AS INT)) AS sym,
+                         CAST(i - 1 AS INT) AS id
+                       FROM unnest(range(1, 27)) AS u(i)),
+           vraw AS (SELECT sym, id FROM letters
+                    UNION ALL
+                    $vocabRows),
+           vocab AS (SELECT sym, min(id) AS id FROM vraw GROUP BY sym),
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM documents),
+           encw AS (SELECT doc_id, i,
+                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
+                           THEN string_split(trim($chained, '|'), '||')
+                           ELSE [t] END AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           symrows AS (SELECT doc_id, i, unnest(syms) AS sym,
+                         unnest(range(1, len(syms) + 1)) AS j
+                       FROM encw),
+           withid AS (SELECT s.doc_id, s.i, s.j, coalesce(v.id, -1) AS id
+                      FROM symrows s LEFT JOIN vocab v USING (sym)),
+           agg AS (SELECT doc_id,
+                     count(CASE WHEN id = -1 THEN 1 END) AS n_oov,
+                     string_agg(CAST(id AS VARCHAR), ' ' ORDER BY i, j) AS ids_text
+                   FROM withid GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
+           coalesce(a.ids_text, '') AS ids_text
+         FROM documents d LEFT JOIN agg a USING (doc_id)
+         ORDER BY d.doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedMerges(s, dir)
       Tables.spread(t.documents).select(col("doc_id"),
@@ -2238,7 +3900,34 @@ object PipelineQueries {
     // training and the rank-sequential replace over the identical
     // lower-hex encoding, so a hash match certifies byte decomposition,
     // training and both encoder algorithms at once.
-    "text_bpe_bytes" -> { (s, dir) =>
+    Query("text_bpe_bytes", {
+      // BYTE-LEVEL training + encode replayed end-to-end: the byte head
+      // (every token, lower-hex UTF-8 bytes) into the SAME 8 training
+      // rounds, then per token the chained literal replaces — no OOV
+      // branch exists. A hash match certifies byte decomposition, the
+      // byte-alphabet training AND the min-rank/sequential equivalence.
+      val rounds = 8
+      val sep =
+        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainBytesCtes(rounds) +
+        s""",
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM documents),
+           encw AS (SELECT doc_id, i,
+                      string_split(trim($chained, '|'), '||') AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS allsyms
+                   FROM encw GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(len(e.allsyms), 0) AS BIGINT) AS n_bpe,
+           coalesce(array_to_string(e.allsyms, ' '), '') AS bpe_text
+         FROM documents d LEFT JOIN enc e ON d.doc_id = e.doc_id
+         ORDER BY d.doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedByteMerges(s, dir)
       Tables.spread(t.documents).select(col("doc_id"),
@@ -2255,7 +3944,46 @@ object PipelineQueries {
     // byte round trip is EXACT on all of them: output symbols are pure
     // hex, so the marker cannot collide with input. Training stays on
     // the real corpus only.
-    "text_bpe_bytes_detok" -> { (s, dir) =>
+    Query("text_bpe_bytes_detok", {
+      // Byte-level marked encode + detokenize with the SAME planted
+      // non-BMP rows as the Spark side (training stays on the corpus):
+      // the oracle re-derives the marked hex stream AND independently
+      // reconstructs each document by unhex+decode, so detok_ok is a
+      // genuine second implementation of the round trip, not an echo.
+      val rounds = 8
+      val sep =
+        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainBytesCtes(rounds) +
+        s""",
+           docsrc AS (SELECT doc_id, text FROM documents
+                      UNION ALL SELECT CAST(-3 AS BIGINT), '😀 emoji 🤖🤖 mix'
+                      UNION ALL SELECT CAST(-2 AS BIGINT), '𠀀𠀁 cjk-b ▁ marker'
+                      UNION ALL SELECT CAST(-1 AS BIGINT),
+                        'tabs' || chr(9) || 'and' || chr(10) || 'newlines'),
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM docsrc),
+           encw AS (SELECT doc_id, i,
+                      string_split(trim($chained, '|'), '||') AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           mk AS (SELECT doc_id, i,
+                    [CASE WHEN r = 1 THEN '▁' || syms[r] ELSE syms[r] END
+                     for r in range(1, len(syms) + 1)] AS msyms,
+                    decode(unhex(array_to_string(syms, ''))) AS word
+                  FROM encw),
+           enc AS (SELECT doc_id,
+                     flatten(list(msyms ORDER BY i)) AS allsyms,
+                     string_agg(word, ' ' ORDER BY i) AS detok
+                   FROM mk GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           coalesce(array_to_string(e.allsyms, ' '), '') AS marked_text,
+           coalesce(e.detok, '') = array_to_string($tokensSql, ' ') AS detok_ok
+         FROM docsrc d LEFT JOIN enc e USING (doc_id)
+         ORDER BY d.doc_id"""
+    }) { (s, dir) =>
       import s.implicits._
       val t = Tables(s, dir)
       val merges = trainedByteMerges(s, dir)
@@ -2278,7 +4006,48 @@ object PipelineQueries {
     // outputs at 255+rank — and NO OOV id is reachable (the byte
     // alphabet's defining property; n_oov is asserted zero by both
     // sides rather than assumed).
-    "text_bpe_bytes_ids" -> { (s, dir) =>
+    Query("text_bpe_bytes_ids", {
+      // Byte vocab rebuilt from the replayed byte training (bytes 0-255
+      // at their values, merge outputs 255+rank, first-wins), every
+      // symbol re-derived and id-mapped; n_oov must come out zero.
+      val rounds = 8
+      val sep =
+        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      val vocabRows = (1 to rounds)
+        .map(k => s"SELECT l || r AS sym, ${255 + k} AS id FROM m$k")
+        .mkString("\nUNION ALL\n")
+      bpeTrainBytesCtes(rounds) +
+        s""",
+           basev AS (SELECT printf('%02x', i) AS sym, CAST(i AS INT) AS id
+                     FROM range(0, 256) t(i)),
+           vraw AS (SELECT sym, id FROM basev
+                    UNION ALL
+                    $vocabRows),
+           vocab AS (SELECT sym, min(id) AS id FROM vraw GROUP BY sym),
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
+                     unnest(range(1, len($tokensSql) + 1)) AS i
+                   FROM documents),
+           encw AS (SELECT doc_id, i,
+                      string_split(trim($chained, '|'), '||') AS syms
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           symrows AS (SELECT doc_id, i, unnest(syms) AS sym,
+                         unnest(range(1, len(syms) + 1)) AS j
+                       FROM encw),
+           withid AS (SELECT s.doc_id, s.i, s.j, coalesce(v.id, -1) AS id
+                      FROM symrows s LEFT JOIN vocab v USING (sym)),
+           agg AS (SELECT doc_id,
+                     count(CASE WHEN id = -1 THEN 1 END) AS n_oov,
+                     string_agg(CAST(id AS VARCHAR), ' ' ORDER BY i, j) AS ids_text
+                   FROM withid GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
+           coalesce(a.ids_text, '') AS ids_text
+         FROM documents d LEFT JOIN agg a USING (doc_id)
+         ORDER BY d.doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedByteMerges(s, dir)
       Tables.spread(t.documents).select(col("doc_id"),
@@ -2293,7 +4062,42 @@ object PipelineQueries {
     // team actually tracks when choosing vocab size and corpus mix:
     // UTF-8 bytes per produced token (and tokens per whitespace word)
     // under the trained byte-level tokenizer, aggregated per source.
-    "tokenizer_report" -> { (s, dir) =>
+    Query("tokenizer_report", {
+      // The byte training replayed, every document's encoded length and
+      // byte count re-derived, the per-source rollup and the fertility
+      // division recomputed.
+      val rounds = 8
+      val sep =
+        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
+      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
+        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
+      }
+      bpeTrainBytesCtes(rounds) +
+        s""",
+           tok AS (SELECT doc_id, unnest($tokensSql) AS t FROM documents),
+           encw AS (SELECT doc_id,
+                      len(string_split(trim($chained, '|'), '||')) AS ntok
+                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
+           d AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n
+                 FROM encw GROUP BY doc_id),
+           base AS (SELECT dd.doc_id, dd.source,
+                      CAST(CASE WHEN $blankSql THEN 0
+                           ELSE len($tokensSql) END AS BIGINT) AS ws,
+                      coalesce(d.n, 0) AS bpe,
+                      CAST(octet_length(encode(text)) AS BIGINT) AS nbytes
+                    FROM documents dd LEFT JOIN d ON dd.doc_id = d.doc_id),
+           agg AS (SELECT source, count(*) AS n_docs,
+                     CAST(sum(ws) AS BIGINT) AS n_ws_tokens,
+                     CAST(sum(bpe) AS BIGINT) AS n_bpe_tokens,
+                     CAST(sum(nbytes) AS BIGINT) AS n_text_bytes
+                   FROM base GROUP BY source)
+         SELECT source, n_docs, n_ws_tokens, n_bpe_tokens, n_text_bytes,
+           CASE WHEN n_bpe_tokens > 0
+                THEN floor((CAST(n_text_bytes AS DOUBLE) / n_bpe_tokens)
+                           * 1000000 + 0.5) / 1000000
+           END AS bytes_per_token
+         FROM agg ORDER BY source"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val merges = trainedByteMerges(s, dir)
       t.documents.select(col("source"),
@@ -2321,7 +4125,41 @@ object PipelineQueries {
     // Viterbi piece per source over the planted multilingual corpus.
     // With the BPE report this lets a tokenizer team A/B the two
     // trained families through one downstream query shape.
-    "tokenizer_report_unigram" -> { (s, dir) =>
+    Query("tokenizer_report_unigram",
+      // The unigram report: the byte-DP CTEs re-derive every word's
+      // Viterbi piece count under the replayed model, folded per source
+      // over the planted corpus — the stored model must match the replay
+      // exactly or every aggregate shifts.
+      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
+            trwseg AS MATERIALIZED (
+              SELECT hw,
+                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
+              FROM bdp WHERE i = len(hw) // 2),
+            trdoctok AS (SELECT doc_id, unnest($tokensSql) AS t
+                         FROM bdocs),
+            trdocsum AS (
+              SELECT d.doc_id, count(*) AS ws, sum(w.n_pieces) AS np
+              FROM trdoctok d JOIN trwseg w ON lower(hex(d.t)) = w.hw
+              GROUP BY 1),
+            trbase AS (
+              SELECT dd.source,
+                coalesce(s2.ws, 0) AS ws, coalesce(s2.np, 0) AS np,
+                CAST(octet_length(encode(b.text)) AS BIGINT) AS nbytes
+              FROM documents dd
+              JOIN bdocs b USING (doc_id)
+              LEFT JOIN trdocsum s2 ON dd.doc_id = s2.doc_id),
+            tragg AS (SELECT source, count(*) AS n_docs,
+                        CAST(sum(ws) AS BIGINT) AS n_ws_tokens,
+                        CAST(sum(np) AS BIGINT) AS n_unigram_pieces,
+                        CAST(sum(nbytes) AS BIGINT) AS n_text_bytes
+                      FROM trbase GROUP BY source)
+         SELECT source, n_docs, n_ws_tokens, n_unigram_pieces,
+           n_text_bytes,
+           CASE WHEN n_unigram_pieces > 0
+                THEN floor((CAST(n_text_bytes AS DOUBLE)
+                            / n_unigram_pieces) * 1000000 + 0.5) / 1000000
+           END AS bytes_per_piece
+         FROM tragg ORDER BY source""") { (s, dir) =>
       val (pieces, maxLen) = storedUnigramBytes(s, dir)
       plantedDocsWithSource(s, dir).select(col("source"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("ws"),
@@ -2349,7 +4187,47 @@ object PipelineQueries {
     // the reference's exact percentiles; Laplace-smoothed bin
     // probabilities; per-bin terms rounded then DECIMAL-summed
     // (engine-exact, the LM contract).
-    "drift_psi" -> { (s, dir) =>
+    Query("drift_psi",
+      // PSI replayed from scratch: reference quantile boundaries
+      // (quantile_cont == Spark's exact percentile, the established
+      // cross-engine pair), fold-count bin assignment, Laplace
+      // probabilities as IEEE integer-ratio divisions, per-bin terms
+      // rounded to 6dp and DECIMAL-summed.
+      """WITH ref AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
+                      WHERE o_orderkey % 2 = 0),
+            cur AS (SELECT CAST(o_totalprice AS DOUBLE) * 1.1 AS v
+                    FROM orders WHERE o_orderkey % 2 = 1),
+            b AS (SELECT quantile_cont(v, [0.1, 0.2, 0.3, 0.4, 0.5,
+                                           0.6, 0.7, 0.8, 0.9]) AS bs
+                  FROM ref),
+            rc AS (SELECT 1 + list_sum(list_transform(b.bs,
+                     x -> CASE WHEN v > x THEN 1 ELSE 0 END)) AS bin
+                   FROM ref, b),
+            cc AS (SELECT 1 + list_sum(list_transform(b.bs,
+                     x -> CASE WHEN v > x THEN 1 ELSE 0 END)) AS bin
+                   FROM cur, b),
+            rn AS (SELECT bin, count(*) AS ref_n FROM rc GROUP BY 1),
+            cn AS (SELECT bin, count(*) AS cur_n FROM cc GROUP BY 1),
+            bins AS (SELECT * FROM generate_series(1, 10) t(bin)),
+            tot AS (SELECT (SELECT count(*) FROM ref) AS rt,
+                      (SELECT count(*) FROM cur) AS ct),
+            j AS (SELECT bin, coalesce(ref_n, 0) AS ref_n,
+                    coalesce(cur_n, 0) AS cur_n
+                  FROM bins LEFT JOIN rn USING (bin)
+                            LEFT JOIN cn USING (bin)),
+            terms AS (SELECT ref_n, cur_n,
+                    CAST(round(
+                      (CAST(cur_n + 1 AS DOUBLE) / (ct + 10)
+                        - CAST(ref_n + 1 AS DOUBLE) / (rt + 10))
+                      * ln((CAST(cur_n + 1 AS DOUBLE) / (ct + 10))
+                           / (CAST(ref_n + 1 AS DOUBLE) / (rt + 10))), 6)
+                      AS DECIMAL(18,6)) AS term
+                  FROM j CROSS JOIN tot)
+         SELECT CAST(count(*) AS BIGINT) AS n_bins,
+           CAST(sum(ref_n) AS BIGINT) AS ref_n,
+           CAST(sum(cur_n) AS BIGINT) AS cur_n,
+           CAST(sum(term) AS DOUBLE) AS psi
+         FROM terms""") { (s, dir) =>
       val t = Tables(s, dir)
       val ref = t.orders.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_totalprice").cast("double").as("v"))
@@ -2362,7 +4240,39 @@ object PipelineQueries {
     // bucket, per-bucket probability gaps, with a planted drift token
     // appended to every current document — the earliest visible
     // symptom of an upstream source change.
-    "drift_tokens" -> { (s, dir) =>
+    Query("drift_tokens",
+      // Token drift replayed: top-30 reference tokens (count DESC, token
+      // ASC), left-joined current counts, the rest bucket from totals,
+      // quant6 integer-ratio probabilities and gaps.
+      s"""WITH refd AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
+            curd AS (SELECT text || ' zdrifttoken zdrifttoken' AS text
+                     FROM documents WHERE doc_id % 2 = 1),
+            rtok AS (SELECT unnest($tokensSql) AS token FROM refd),
+            ctok AS (SELECT unnest($tokensSql) AS token FROM curd),
+            rn AS (SELECT token, count(*) AS ref_n FROM rtok GROUP BY 1),
+            cn AS (SELECT token, count(*) AS cur_n FROM ctok GROUP BY 1),
+            top AS (SELECT token, ref_n FROM rn
+                    ORDER BY ref_n DESC, token LIMIT 30),
+            named AS (SELECT t.token AS bucket, false AS is_rest,
+                        t.ref_n, coalesce(c.cur_n, 0) AS cur_n
+                      FROM top t LEFT JOIN cn c ON t.token = c.token),
+            tot AS (SELECT (SELECT count(*) FROM rtok) AS rt,
+                      (SELECT count(*) FROM ctok) AS ct),
+            rest AS (SELECT '' AS bucket, true AS is_rest,
+                       rt - (SELECT sum(ref_n) FROM named) AS ref_n,
+                       ct - (SELECT sum(cur_n) FROM named) AS cur_n
+                     FROM tot),
+            uni AS (SELECT * FROM named UNION ALL SELECT * FROM rest)
+         SELECT bucket, is_rest, CAST(ref_n AS BIGINT) AS ref_n,
+           CAST(cur_n AS BIGINT) AS cur_n,
+           floor((CAST(ref_n AS DOUBLE) / rt) * 1000000 + 0.5) / 1000000
+             AS ref_p,
+           floor((CAST(cur_n AS DOUBLE) / ct) * 1000000 + 0.5) / 1000000
+             AS cur_p,
+           floor(abs(CAST(cur_n AS DOUBLE) / ct
+                     - CAST(ref_n AS DOUBLE) / rt) * 1000000 + 0.5)
+             / 1000000 AS gap
+         FROM uni CROSS JOIN tot ORDER BY is_rest, bucket""") { (s, dir) =>
       val t = Tables(s, dir)
       val ref = t.documents.filter(col("doc_id") % 2 === 0)
       val cur = t.documents.filter(col("doc_id") % 2 === 1)
@@ -2377,7 +4287,42 @@ object PipelineQueries {
     // drift on the current frame; the projection basis is not
     // SQL-replayable, so those columns are self-certifying attestations
     // (the embed_pca pattern).
-    "drift_embedding" -> { (s, dir) =>
+    Query("drift_embedding",
+      // Mean-vector shift replayed exactly (per-dimension DECIMAL(38,9)
+      // sums, dimension-order fold, quant6); the PCA-basis PSI columns
+      // are attested booleans (basis orthonormal, psi(ref,ref) = 0,
+      // terms nonneg, planted 1.5x+0.3 drift over the alert line).
+      """WITH refv AS (SELECT embedding::DOUBLE[] AS v FROM embeddings
+                       WHERE vec_id % 2 = 0),
+            curv AS (SELECT [x * 1.5 + 0.3 for x in embedding::DOUBLE[]]
+                       AS v
+                     FROM embeddings WHERE vec_id % 2 = 1),
+            re AS (SELECT unnest(v) AS e,
+                     unnest(range(1, len(v) + 1)) AS i
+                   FROM refv),
+            ce AS (SELECT unnest(v) AS e,
+                     unnest(range(1, len(v) + 1)) AS i
+                   FROM curv),
+            rs AS (SELECT i, sum(CAST(e AS DECIMAL(38,9))) AS s,
+                     count(*) AS n FROM re GROUP BY i),
+            cs AS (SELECT i, sum(CAST(e AS DECIMAL(38,9))) AS s,
+                     count(*) AS n FROM ce GROUP BY i),
+            dd AS (SELECT r.i,
+                     (CAST(c.s AS DOUBLE) / c.n
+                       - CAST(r.s AS DOUBLE) / r.n) AS d
+                   FROM rs r JOIN cs c ON r.i = c.i),
+            l2 AS (SELECT floor(sqrt(list_sum(list(d * d ORDER BY i)))
+                     * 1000000 + 0.5) / 1000000 AS ms
+                   FROM dd)
+         SELECT
+           (SELECT CAST(count(*) AS BIGINT) FROM refv) AS n_ref,
+           (SELECT CAST(count(*) AS BIGINT) FROM curv) AS n_cur,
+           CAST(64 AS INT) AS dim, CAST(4 AS INT) AS k,
+           (SELECT ms FROM l2) AS mean_shift_l2,
+           true AS basis_orthonormal,
+           true AS psi_self_zero,
+           true AS psi_all_nonneg,
+           true AS psi_alert""") { (s, dir) =>
       val t = Tables(s, dir)
       // NO spread here: embeddingDrift's PCA + moment passes re-execute
       // the input lineage several times over a node-sized frame — extra
@@ -2396,7 +4341,28 @@ object PipelineQueries {
     // not comparable across languages). One stratum-keyed exact
     // percentile + a map-only indicator bin; blank docs carry no LM
     // evidence and are out of scope (the quality gate owns them).
-    "ccnet_buckets" -> { (s, dir) =>
+    Query("ccnet_buckets",
+      // The same replayed LM joined with the replayed language argmax,
+      // per-language tercile boundaries via quantile_cont (the
+      // sample_curriculum-established exact-percentile mapping), the same
+      // indicator-sum bin, and the head/middle/tail labels.
+      (ngramSelfScoreCtes +
+        s""",
+            lng AS (SELECT doc_id, CASE $langCaseSql ELSE 'und' END AS lang
+                    FROM (SELECT doc_id,
+                            $langHitsSql
+                          FROM documents)),
+            j AS (SELECT l.doc_id, lng.lang, l.avg_neg_logp
+                  FROM lmscore l JOIN lng USING (doc_id)),
+            bnd AS (SELECT lang,
+                      quantile_cont(avg_neg_logp, 1.0/3) AS b1,
+                      quantile_cont(avg_neg_logp, 2.0/3) AS b2
+                    FROM j GROUP BY lang)
+         SELECT doc_id, lang, avg_neg_logp,
+           CASE 1 + (avg_neg_logp > b1)::INT + (avg_neg_logp > b2)::INT
+             WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
+           END AS bucket
+         FROM j JOIN bnd USING (lang) ORDER BY doc_id""")) { (s, dir) =>
       val t = Tables(s, dir)
       val lm = TextAnalysis.ngramLogProb(Tables.spread(t.documents), col("doc_id"),
         col("text"), minCount = 2)
@@ -2411,20 +4377,51 @@ object PipelineQueries {
         .orderBy(col("doc_id"))
     },
 
-    "text_quality" -> { (s, dir) =>
+    Query("text_quality",
+      s"""WITH f AS (
+           SELECT doc_id, length(text) AS n_chars,
+             CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
+             length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct
+           FROM documents),
+            g AS (
+           SELECT doc_id, n_chars, n_tokens, n_punct,
+             CASE WHEN n_tokens > 0
+                  THEN floor((CAST(n_chars - n_tokens + 1 AS DOUBLE) / n_tokens) * 1000000 + 0.5) / 1000000
+                  ELSE 0.0 END AS avg_token_len,
+             CASE WHEN n_chars > 0
+                  THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000 ELSE 0.0 END AS punct_ratio
+           FROM f)
+         SELECT doc_id, n_chars, n_tokens, n_punct, avg_token_len, punct_ratio,
+           floor((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
+             * (1.0 - least(punct_ratio * 5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS quality_score
+         FROM g ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.qualityFeatures(t.documents, col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
     },
 
-    "text_langid" -> { (s, dir) =>
+    Query("text_langid",
+      s"""WITH f AS (
+           SELECT doc_id,
+             $langHitsSql
+           FROM documents)
+         SELECT doc_id, CASE $langCaseSql ELSE 'und' END AS lang_pred
+         FROM f ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       t.documents.select(col("doc_id"),
           TextAnalysis.langId(col("text")).as("lang_pred"))
         .orderBy(col("doc_id"))
     },
 
-    "text_fingerprint" -> { (s, dir) =>
+    Query("text_fingerprint",
+      // NFC runs first on the Spark side too — on this ASCII corpus it is
+      // an identity, but the oracle replays it anyway so the composed
+      // pipeline stays pinned if the corpus ever grows non-ASCII text.
+      s"""SELECT doc_id,
+         md5(regexp_replace(lower(
+           regexp_replace(nfc_normalize(text), '^$wsClassSql+|$wsClassSql+$$', '', 'g')),
+           '$wsClassSql+', ' ', 'g')) AS fp
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       t.documents.select(col("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fp"))
@@ -2438,7 +4435,21 @@ object PipelineQueries {
     // (length shrinks by exactly the combining mark), hash identically
     // to DuckDB's own nfc_normalize, and leave the pure-ASCII original
     // untouched.
-    "text_nfc" -> { (s, dir) =>
+    Query("text_nfc",
+      // DuckDB's nfc_normalize implements the same UAX #15 algorithm, so
+      // the normalized hashes must agree byte for byte.
+      """WITH d AS (
+           SELECT doc_id, text,
+             text || ' e' || chr(769) || 'clair' AS dirty
+           FROM documents),
+          n AS (SELECT doc_id, text, dirty,
+                  nfc_normalize(dirty) AS norm FROM d)
+         SELECT doc_id,
+           norm <> dirty AS changed,
+           CAST(length(norm) AS BIGINT) AS n_chars_norm,
+           md5(norm) AS fp_norm,
+           nfc_normalize(text) = text AS ascii_stable
+         FROM n ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       // the suffix is DECOMPOSED on purpose: 'e' + U+0301 COMBINING
       // ACUTE, built via codepoint so no editor/tool can silently
@@ -2460,13 +4471,48 @@ object PipelineQueries {
     // Codepoint-entropy quality signal: one kernel pass per document,
     // 6-decimal terms summed exactly in codepoint order so the DuckDB
     // replay (histogram -> term -> DECIMAL sum) hash-matches bit for bit.
-    "text_entropy" -> { (s, dir) =>
+    Query("text_entropy",
+      // Histogram -> per-codepoint 6-decimal term -> exact DECIMAL sum,
+      // replaying the kernel's fixed-order arithmetic.
+      """WITH cps AS (
+           SELECT doc_id,
+             unnest([unicode(substr(text, i, 1))
+                     for i in range(1, length(text) + 1)]) AS cp
+           FROM documents),
+          hist AS (SELECT doc_id, cp, count(*) AS c FROM cps GROUP BY 1, 2),
+          tot AS (SELECT doc_id, sum(c) AS n FROM hist GROUP BY 1),
+          terms AS (
+           SELECT h.doc_id,
+             CAST(round(-(CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n), 6)
+               AS DECIMAL(18,6)) AS term
+           FROM hist h JOIN tot USING (doc_id)),
+          agg AS (SELECT doc_id, count(*) AS nd, CAST(sum(term) AS DOUBLE) AS ent
+                  FROM terms GROUP BY doc_id)
+         SELECT d.doc_id AS doc_id,
+           CAST(coalesce(t.n, 0) AS BIGINT) AS n_cp,
+           CAST(coalesce(a.nd, 0) AS BIGINT) AS n_distinct_cp,
+           round(coalesce(a.ent, 0.0), 6) AS char_entropy
+         FROM documents d
+         LEFT JOIN tot t USING (doc_id) LEFT JOIN agg a USING (doc_id)
+         ORDER BY d.doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.entropyFeatures(t.documents, col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
     },
 
-    "multimodal_features" -> { (s, dir) =>
+    Query("multimodal_features",
+      // FakeDecoder's byte histogram is deterministic, so the whole decode
+      // path is oracle-checkable: f0 = sum of payload bytes at offsets
+      // ≡ 0 (mod 8), each scaled by 1/255. The payload is the UTF-8 text —
+      // ASCII in this corpus (verified), so byte i == character i+1 and the
+      // oracle can walk substr() instead of blob bytes.
+      """SELECT doc_id AS media_id,
+         CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+              ELSE 'video' END AS media_type,
+         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+         round(coalesce(list_sum([ord(substr(text, i, 1)) / 255.0
+           for i in range(1, length(text) + 1) if (i - 1) % 8 = 0]), 0.0), 6) AS f0
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       implicit val sp: SparkSession = s
       val media = graft.operators.Multimodal.synthesize(Tables(s, dir).documents)
       graft.operators.Multimodal
@@ -2477,7 +4523,12 @@ object PipelineQueries {
         .orderBy(col("media_id"))
     },
 
-    "multimodal_meta" -> { (s, dir) =>
+    Query("multimodal_meta",
+      """SELECT CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+                ELSE 'video' END AS media_type,
+         count(*) AS n,
+         CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes
+         FROM documents GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       implicit val sp: SparkSession = s
       val media = graft.operators.Multimodal.synthesize(Tables(s, dir).documents)
       media.toDF()
@@ -2494,7 +4545,20 @@ object PipelineQueries {
     // arithmetically, so a broken encoder OR parser hash-mismatches; the
     // whole encode→decode round trip runs inside whole-stage codegen with
     // no shuffle — the shape a metadata pass over 100 TB of media wants.
-    "multimodal_decode" -> { (s, dir) =>
+    Query("multimodal_decode",
+      // The oracle recomputes every header field ARITHMETICALLY from doc_id;
+      // the Spark side gets them by parsing the byte streams it encoded, so a
+      // defect anywhere in the encode→parse round trip hash-mismatches.
+      """SELECT doc_id,
+         CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'gif' END AS format,
+         CAST(doc_id % 1920 + 1 AS INT) AS width,
+         CAST(doc_id % 1080 + 1 AS INT) AS height,
+         CAST(8 AS INT) AS bit_depth,
+         CAST(CASE doc_id % 3
+           WHEN 0 THEN CASE (doc_id // 3) % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END
+           WHEN 1 THEN CASE (doc_id // 3) % 2 WHEN 0 THEN 1 ELSE 3 END
+           ELSE 3 END AS INT) AS channels
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       val fid = pmod(col("doc_id"), lit(3))
       val sel = expr("doc_id div 3")
@@ -2523,7 +4587,18 @@ object PipelineQueries {
     // back by the chunk-walking wav_header expression; duration is derived
     // by the PARSER from data size / block align / rate, and the oracle
     // re-derives it arithmetically.
-    "multimodal_audio" -> { (s, dir) =>
+    Query("multimodal_audio",
+      """SELECT doc_id,
+         CAST(doc_id % 2 + 1 AS INT) AS channels,
+         CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END AS INT)
+           AS sample_rate,
+         CAST(CASE doc_id % 4 WHEN 0 THEN 8 WHEN 1 THEN 16 WHEN 2 THEN 24 ELSE 32 END AS INT)
+           AS bits_per_sample,
+         CAST(doc_id % 997 + 100 AS BIGINT) AS n_frames,
+         CAST((doc_id % 997 + 100) * 1000
+              // (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END)
+           AS BIGINT) AS duration_ms
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       val ch = (pmod(col("doc_id"), lit(2)) + 1).cast("int")
       val rate = element_at(typedLit(Seq(8000, 16000, 44100)),
@@ -2554,7 +4629,25 @@ object PipelineQueries {
     // deflate, inflate, any filter type, the resampler, or the CRC layer
     // hash-mismatches. Everything runs inside whole-stage codegen with
     // no shuffle — decode-and-resize travels to the data.
-    "multimodal_pixels" -> { (s, dir) =>
+    Query("multimodal_pixels",
+      // Replays the synth-pixel + nearest-neighbor-resample arithmetic:
+      // output byte i maps to source byte j via (x·w/wo, y·h/ho) integer
+      // coords, and synth byte j = (doc_id + 3j) mod 256. The Spark side
+      // gets px_sum by actually deflating, inflating, and defiltering PNGs.
+      """WITH d AS (
+           SELECT doc_id,
+             CAST(doc_id % 21 + 4 AS INT) AS w,
+             CAST(doc_id % 17 + 4 AS INT) AS h,
+             CAST(CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS INT) AS c,
+             CAST((doc_id % 21 + 4) // 2 AS INT) AS wo,
+             CAST((doc_id % 17 + 4) // 2 AS INT) AS ho
+           FROM documents)
+         SELECT doc_id, wo AS width, ho AS height, c AS channels,
+           CAST(list_sum([
+             (doc_id + 3 * (((((i // c) // wo) * h // ho) * w
+                             + (((i // c) % wo) * w // wo)) * c + (i % c))) % 256
+             for i in range(0, wo * ho * c)]) AS BIGINT) AS px_sum
+         FROM d ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2576,7 +4669,15 @@ object PipelineQueries {
     // SAMPLE-level audio decode: real 16-bit PCM payloads (sample j =
     // ((doc_id + 5j) mod 65536) − 32768) decoded back and reduced to a
     // total absolute amplitude; the oracle replays the sample arithmetic.
-    "multimodal_waveform" -> { (s, dir) =>
+    Query("multimodal_waveform",
+      """SELECT doc_id,
+         CAST(doc_id % 2 + 1 AS INT) AS channels,
+         CAST(16000 AS INT) AS sample_rate,
+         CAST(doc_id % 251 + 50 AS BIGINT) AS n_frames,
+         CAST(list_sum([abs(((doc_id + 5 * j) % 65536) - 32768)
+           for j in range(0, (doc_id % 251 + 50) * (doc_id % 2 + 1))]) AS BIGINT)
+           AS amp_sum
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       Tables(s, dir).documents.select(col("doc_id"))
         .select(col("doc_id"),
@@ -2600,7 +4701,15 @@ object PipelineQueries {
     // so a defect anywhere in the LZW compressor, the decompressor's
     // table/width/KwKwK handling, or the container walk hash-mismatches.
     // Closes the former "GIF LZW" half of the codec seam.
-    "multimodal_gif" -> { (s, dir) =>
+    Query("multimodal_gif",
+      """SELECT doc_id,
+         CAST(doc_id % 29 + 16 AS INT) AS width,
+         CAST(doc_id % 23 + 16 AS INT) AS height,
+         CAST(256 AS INT) AS n_colors,
+         CAST(list_sum([(doc_id + 3 * j) % 256
+           for j in range(0, (doc_id % 29 + 16) * (doc_id % 23 + 16))]) AS BIGINT)
+           AS idx_sum
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       Tables(s, dir).documents.select(col("doc_id"))
         .select(col("doc_id"),
@@ -2625,7 +4734,17 @@ object PipelineQueries {
     // stuffing, DC prediction, or the marker walk flips a boolean and
     // hash-mismatches. Closes the former "JPEG entropy decode" seam;
     // only video remains a genuine library format.
-    "multimodal_jpeg" -> { (s, dir) =>
+    Query("multimodal_jpeg",
+      // Self-certifying (see the query comment): DuckDB replays the dims
+      // arithmetic and the deterministic expectation — error inside the
+      // quantization bound, truncation rejected — for every document.
+      """SELECT doc_id,
+         CAST(doc_id % 27 + 9 AS INT) AS width,
+         CAST(doc_id % 19 + 9 AS INT) AS height,
+         CAST(doc_id % 2 * 2 + 1 AS INT) AS channels,
+         true AS err_in_bound,
+         true AS trunc_rejected
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.{JpegKernels, MediaExpressions}
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2650,7 +4769,16 @@ object PipelineQueries {
     // certifies BIT EQUALITY of the two decodes per document; a wrong
     // EOB run, a mis-interleaved correction bit, or a broken point
     // transform flips prog_equals_seq and hash-mismatches.
-    "multimodal_jpeg_prog" -> { (s, dir) =>
+    Query("multimodal_jpeg_prog",
+      // Progressive certifies bit equality with the sequential decode —
+      // the deterministic expectation is simply "true for every document".
+      """SELECT doc_id,
+         CAST(doc_id % 27 + 9 AS INT) AS width,
+         CAST(doc_id % 19 + 9 AS INT) AS height,
+         CAST(doc_id % 2 * 2 + 1 AS INT) AS channels,
+         true AS prog_equals_seq,
+         true AS trunc_rejected
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2677,7 +4805,18 @@ object PipelineQueries {
     // A single wrong Qe transition, renorm, or context index corrupts
     // every later decision and hash-mismatches. With this, the
     // multimodal codec seam narrows to inter-frame video only.
-    "multimodal_jpeg_arith" -> { (s, dir) =>
+    Query("multimodal_jpeg_arith",
+      // Arithmetic certifies bit equality with the sequential decode plus
+      // the QM coder beating the fixed Huffman tables on size — the
+      // deterministic expectation is "true for every document".
+      """SELECT doc_id,
+         CAST(doc_id % 27 + 9 AS INT) AS width,
+         CAST(doc_id % 19 + 9 AS INT) AS height,
+         CAST(doc_id % 2 * 2 + 1 AS INT) AS channels,
+         true AS arith_equals_seq,
+         true AS arith_smaller,
+         true AS trunc_rejected
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2704,7 +4843,18 @@ object PipelineQueries {
     // container must be rejected rather than decoded to fewer frames.
     // With this, the library seam is inter-frame codecs (H.264/VP9/AV1)
     // only — MJPEG is real video produced by real capture hardware.
-    "multimodal_video" -> { (s, dir) =>
+    Query("multimodal_video",
+      // Self-certifying (see the query comment): DuckDB replays the dims/
+      // fps/frame-count arithmetic and the deterministic expectation for
+      // every document.
+      """SELECT doc_id,
+         CAST(doc_id % 11 + 8 AS INT) AS width,
+         CAST(doc_id % 7 + 8 AS INT) AS height,
+         CAST(12 AS INT) AS fps,
+         CAST(doc_id % 6 + 2 AS INT) AS n_frames,
+         true AS err_in_bound,
+         true AS trunc_rejected
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.{JpegKernels, MediaExpressions}
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2729,7 +4879,19 @@ object PipelineQueries {
     // than re-keyframing (the inter-frame machinery provably engaged);
     // truncation of either the container or a frame stream must reject.
     // nFrames ≥ 2 always, so every document exercises a real delta.
-    "multimodal_video_delta" -> { (s, dir) =>
+    Query("multimodal_video_delta",
+      // Self-certifying: DuckDB replays the dims/frame-count arithmetic;
+      // the deterministic expectation is lossless equality, delta-beats-
+      // keyframe, and truncation rejection for every document.
+      """SELECT doc_id,
+         CAST(doc_id % 9 + 6 AS INT) AS width,
+         CAST(doc_id % 5 + 6 AS INT) AS height,
+         CAST(12 AS INT) AS fps,
+         CAST(doc_id % 5 + 2 AS INT) AS n_frames,
+         true AS exact,
+         true AS inter_saves,
+         true AS trunc_rejected
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       Tables(s, dir).documents.select(col("doc_id"))
         .select(col("doc_id"),
@@ -2757,7 +4919,22 @@ object PipelineQueries {
     // source-side quantization bound, and truncation of container or
     // frame stream must reject. nFrames ≥ 2, so every document exercises
     // real motion compensation.
-    "multimodal_video_mc" -> { (s, dir) =>
+    Query("multimodal_video_mc",
+      // Self-certifying: DuckDB replays the dims/frame-count arithmetic;
+      // the deterministic expectation is recon-exact closed-loop decode,
+      // error in bound vs source, motion vectors engaged, inter beating
+      // intra, and truncation rejection for every document.
+      """SELECT doc_id,
+         CAST(doc_id % 11 + 10 AS INT) AS width,
+         CAST(doc_id % 9 + 10 AS INT) AS height,
+         CAST(12 AS INT) AS fps,
+         CAST(doc_id % 4 + 2 AS INT) AS n_frames,
+         true AS err_in_bound,
+         true AS recon_exact,
+         true AS mv_engaged,
+         true AS inter_saves,
+         true AS trunc_rejected
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2789,7 +4966,22 @@ object PipelineQueries {
     // reconstructions, rejects truncation, and its start-code census
     // proves the payload never emulates a start code), certified per
     // row.
-    "multimodal_video_vlc" -> { (s, dir) =>
+    Query("multimodal_video_vlc",
+      // Self-certifying like multimodal_video_mc, with the sixth
+      // attestation: the VLC stream must beat the byte coder per row.
+      """SELECT doc_id,
+         CAST(doc_id % 11 + 10 AS INT) AS width,
+         CAST(doc_id % 9 + 10 AS INT) AS height,
+         CAST(12 AS INT) AS fps,
+         CAST(doc_id % 4 + 2 AS INT) AS n_frames,
+         true AS err_in_bound,
+         true AS recon_exact,
+         true AS mv_engaged,
+         true AS inter_saves,
+         true AS trunc_rejected,
+         true AS vlc_smaller,
+         true AS es_roundtrip
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2823,7 +5015,22 @@ object PipelineQueries {
     // engagement flags (cbp_partial/skip/intra/mc-only) are
     // content-dependent and spec-pinned (Mpeg1KernelsSpec), not
     // oracle-asserted.
-    "multimodal_video_mpeg1" -> { (s, dir) =>
+    Query("multimodal_video_mpeg1",
+      // Self-certifying (the multimodal pattern): DuckDB replays the
+      // dims/frame-count arithmetic and the deterministic expectation —
+      // the conformant stream decodes bit-exactly, within bound, with
+      // motion engaged (the planted translation), truncation rejected,
+      // and no start-code emulation — for every document.
+      """SELECT doc_id,
+         CAST(doc_id % 14 + 18 AS INT) AS width,
+         CAST(doc_id % 10 + 18 AS INT) AS height,
+         CAST(doc_id % 2 + 2 AS INT) AS n_frames,
+         true AS err_in_bound,
+         true AS recon_exact,
+         true AS mv_engaged,
+         true AS trunc_rejected,
+         true AS census_ok
+         FROM documents ORDER BY doc_id""") { (s, dir) =>
       import graft.functions.MediaExpressions
       docIds(s, dir)
         .select(col("doc_id"),
@@ -2850,7 +5057,18 @@ object PipelineQueries {
     // synthesized for its SOURCE position (i*total/take — certifying
     // the sampling arithmetic, not just payload integrity). Oracle
     // replays the dims / frame-count / position arithmetic per row.
-    "multimodal_frames" -> { (s, dir) =>
+    Query("multimodal_frames",
+      // Self-certifying (see the query comment): one row per sampled
+      // frame — frame_idx 0 until min(3, n_frames) per document — with
+      // the dims arithmetic replayed and frame_ok TRUE expected.
+      """SELECT doc_id,
+         CAST(i AS INT) AS frame_idx,
+         CAST(doc_id % 11 + 8 AS INT) AS width,
+         CAST(doc_id % 7 + 8 AS INT) AS height,
+         true AS frame_ok
+         FROM documents, range(3) AS t(i)
+         WHERE i < CASE WHEN doc_id % 6 + 2 < 3 THEN doc_id % 6 + 2 ELSE 3 END
+         ORDER BY doc_id, frame_idx""") { (s, dir) =>
       import s.implicits._
       import graft.functions.{AviKernels, JpegKernels, MediaKernels}
       import graft.operators.Multimodal
@@ -2885,14 +5103,40 @@ object PipelineQueries {
 
     // Top-5 TF-IDF terms per document: per-doc TF against the corpus-global
     // document-frequency table.
-    "text_tfidf" -> { (s, dir) =>
+    Query("text_tfidf",
+      s"""WITH tok AS (SELECT doc_id, unnest($tokensSql) AS token FROM documents),
+            tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
+            df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
+            n AS (SELECT count(*) AS n_docs FROM documents),
+            scored AS (
+              SELECT doc_id, token, tf,
+                round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
+              FROM tf JOIN df USING (token) CROSS JOIN n),
+            ranked AS (
+              SELECT doc_id, token, tf, tfidf,
+                row_number() OVER (PARTITION BY doc_id
+                                   ORDER BY tfidf DESC, token) AS rk
+              FROM scored)
+         SELECT doc_id, CAST(rk AS INT) AS rk, token, tf, tfidf
+         FROM ranked WHERE rk <= 5 ORDER BY doc_id, rk""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.tfIdf(t.documents, col("doc_id"), col("text"), k = 5)
         .orderBy(col("doc_id"), col("rk"))
     },
 
     // Corpus-unigram LM quality proxy: per-doc average token -ln p.
-    "text_unigram_logprob" -> { (s, dir) =>
+    Query("text_unigram_logprob",
+      s"""WITH tok AS (SELECT doc_id, unnest($tokensSql) AS token
+                       FROM documents WHERE NOT $blankSql),
+            f AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
+            t AS (SELECT sum(c) AS total FROM f),
+            s AS (SELECT doc_id,
+                    CAST(round(-ln(CAST(c AS DOUBLE) / total), 6)
+                      AS DECIMAL(18,6)) AS nl
+                  FROM tok JOIN f USING (token) CROSS JOIN t)
+         SELECT doc_id, count(*) AS n_tokens,
+           CAST(sum(nl) AS DOUBLE) / count(*) AS avg_neg_logp
+         FROM s GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.unigramLogProb(t.documents, col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
@@ -2901,7 +5145,16 @@ object PipelineQueries {
     // Stupid-backoff trigram LM quality score (the KenLM/CCNet-style
     // perplexity gate): minCount=2 exercises the singleton prune, so the
     // oracle replays training, pruning, backoff and scoring end to end.
-    "text_ngram_logprob" -> { (s, dir) =>
+    Query("text_ngram_logprob",
+      // Stupid-backoff trigram LM: grams extracted per doc by 1-based list
+      // index (p1/p2 null at document start), bigram/trigram types pruned
+      // at minCount=2, scored S(w|p2,p1)=c3/c2ctx with α=0.4 backoff —
+      // the CASE nesting and 0.4*(0.4*(...)) association mirror the Spark
+      // expression exactly so the IEEE doubles match bit for bit.
+      (ngramSelfScoreCtes +
+        """
+         SELECT doc_id, n_tokens, avg_neg_logp
+         FROM lmscore ORDER BY doc_id""")) { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.ngramLogProb(Tables.spread(t.documents), col("doc_id"), col("text"),
           minCount = 2)
@@ -2916,7 +5169,44 @@ object PipelineQueries {
     // oracle replays training counts, smoothing, the per-token rounded
     // llr sum and the prior from scratch in SQL — training AND scoring
     // certified end to end, not just the score arithmetic.
-    "text_quality_model" -> { (s, dir) =>
+    Query("text_quality_model",
+      // Naive-Bayes quality gate: the oracle retrains the model from
+      // scratch (per-class token counts, Laplace-1 smoothing, priors) and
+      // replays the scoring — exact-integer IEEE divisions, ln of the
+      // ratio rounded to 6dp per token, DECIMAL(18,6) fixed-order sum,
+      // the prior added at the same precision — so training and scoring
+      // must BOTH match bit for bit.
+      s"""WITH lab AS (SELECT doc_id,
+              (CAST(substring(source, 4, 8) AS INT) % 2 = 0) AS y, text
+            FROM documents),
+            tok AS (SELECT doc_id, y, unnest($tokensSql) AS token FROM lab),
+            cnt AS (SELECT token,
+                      sum(CASE WHEN y THEN 1 ELSE 0 END) AS c_pos,
+                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS c_neg
+                    FROM tok GROUP BY 1),
+            tot AS (SELECT sum(c_pos) AS tot_pos, sum(c_neg) AS tot_neg,
+                      count(*) AS vocab FROM cnt),
+            pri AS (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
+                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
+                    FROM lab),
+            s AS (SELECT t.doc_id,
+                    CAST(round(ln(
+                      (CAST(coalesce(c.c_pos, 0) + 1 AS DOUBLE)
+                         / CAST(tot.tot_pos + tot.vocab AS DOUBLE))
+                      / (CAST(coalesce(c.c_neg, 0) + 1 AS DOUBLE)
+                         / CAST(tot.tot_neg + tot.vocab AS DOUBLE))), 6)
+                      AS DECIMAL(18,6)) AS llr
+                  FROM tok t LEFT JOIN cnt c ON t.token = c.token
+                    CROSS JOIN tot),
+            agg AS (SELECT doc_id, count(*) AS n_tokens, sum(llr) AS sd
+                    FROM s GROUP BY 1),
+            pr AS (SELECT CAST(round(ln(CAST(n_pos + 1 AS DOUBLE)
+                      / CAST(n_neg + 1 AS DOUBLE)), 6) AS DECIMAL(18,6))
+                      AS prior FROM pri)
+         SELECT doc_id, n_tokens,
+           round(CAST(sd + prior AS DOUBLE), 6) AS score,
+           (sd + prior > CAST(0 AS DECIMAL(18,6))) AS predict_pos
+         FROM agg CROSS JOIN pr ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.nbQuality(t.documents, col("doc_id"),
           expr("cast(substring(source, 4, 8) as int) % 2 = 0"),
@@ -2931,7 +5221,60 @@ object PipelineQueries {
     // one-row confusion matrix + precision/recall/accuracy (quant6
     // quotients, null on empty denominators). The oracle retrains on
     // the same split and replays scoring + the rollup from scratch.
-    "text_classifier_eval" -> { (s, dir) =>
+    Query("text_classifier_eval",
+      // Retrains NB on the % 4 != 0 split, replays scoring over the
+      // held-out % 4 == 0 slice (identical arithmetic to
+      // text_quality_model), then the confusion rollup with quant6
+      // precision/recall/accuracy.
+      s"""WITH lab AS (SELECT doc_id,
+              (CAST(substring(source, 4, 8) AS INT) % 2 = 0) AS y, text
+            FROM documents),
+            trn AS (SELECT * FROM lab WHERE doc_id % 4 != 0),
+            hld AS (SELECT * FROM lab WHERE doc_id % 4 = 0),
+            tok AS (SELECT doc_id, y, unnest($tokensSql) AS token FROM trn),
+            cnt AS (SELECT token,
+                      sum(CASE WHEN y THEN 1 ELSE 0 END) AS c_pos,
+                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS c_neg
+                    FROM tok GROUP BY 1),
+            tot AS (SELECT sum(c_pos) AS tot_pos, sum(c_neg) AS tot_neg,
+                      count(*) AS vocab FROM cnt),
+            pri AS (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
+                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
+                    FROM trn),
+            htok AS (SELECT doc_id, unnest($tokensSql) AS token FROM hld),
+            s AS (SELECT t.doc_id,
+                    CAST(round(ln(
+                      (CAST(coalesce(c.c_pos, 0) + 1 AS DOUBLE)
+                         / CAST(tot.tot_pos + tot.vocab AS DOUBLE))
+                      / (CAST(coalesce(c.c_neg, 0) + 1 AS DOUBLE)
+                         / CAST(tot.tot_neg + tot.vocab AS DOUBLE))), 6)
+                      AS DECIMAL(18,6)) AS llr
+                  FROM htok t LEFT JOIN cnt c ON t.token = c.token
+                    CROSS JOIN tot),
+            agg AS (SELECT doc_id, sum(llr) AS sd FROM s GROUP BY 1),
+            pr AS (SELECT CAST(round(ln(CAST(n_pos + 1 AS DOUBLE)
+                      / CAST(n_neg + 1 AS DOUBLE)), 6) AS DECIMAL(18,6))
+                      AS prior FROM pri),
+            verdicts AS (SELECT a.doc_id,
+                      (a.sd + pr.prior > CAST(0 AS DECIMAL(18,6))) AS p,
+                      h.y
+                    FROM agg a CROSS JOIN pr JOIN hld h USING (doc_id)),
+            cm AS (SELECT count(*) AS n_docs,
+                     sum(CASE WHEN p AND y THEN 1 ELSE 0 END) AS tp,
+                     sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END) AS fp,
+                     sum(CASE WHEN NOT p AND NOT y THEN 1 ELSE 0 END) AS tn,
+                     sum(CASE WHEN NOT p AND y THEN 1 ELSE 0 END) AS fn
+                   FROM verdicts)
+         SELECT CAST(n_docs AS BIGINT) AS n_docs, CAST(tp AS BIGINT) AS tp,
+           CAST(fp AS BIGINT) AS fp, CAST(tn AS BIGINT) AS tn,
+           CAST(fn AS BIGINT) AS fn,
+           CASE WHEN tp + fp > 0 THEN floor((CAST(tp AS DOUBLE) / (tp + fp))
+             * 1000000 + 0.5) / 1000000 END AS precision,
+           CASE WHEN tp + fn > 0 THEN floor((CAST(tp AS DOUBLE) / (tp + fn))
+             * 1000000 + 0.5) / 1000000 END AS recall,
+           CASE WHEN n_docs > 0 THEN floor((CAST(tp + tn AS DOUBLE) / n_docs)
+             * 1000000 + 0.5) / 1000000 END AS accuracy
+         FROM cm""") { (s, dir) =>
       val t = Tables(s, dir)
       val label = expr("cast(substring(source, 4, 8) as int) % 2 = 0")
       val model = TextAnalysis.nbTrain(
@@ -2940,7 +5283,11 @@ object PipelineQueries {
         col("doc_id"), label, col("text"), model)
     },
 
-    "token_freq_topk" -> { (s, dir) =>
+    Query("token_freq_topk",
+      s"""SELECT token, count(*) AS n
+         FROM (SELECT unnest($tokensSql) AS token FROM documents
+               WHERE NOT $blankSql)
+         GROUP BY token ORDER BY n DESC, token LIMIT 20""") { (s, dir) =>
       val t = Tables(s, dir)
       t.documents
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
@@ -2951,7 +5298,11 @@ object PipelineQueries {
     },
 
     // Okapi-BM25 keyword retrieval: top-20 documents for a 3-term query.
-    "text_bm25_search" -> { (s, dir) =>
+    Query("text_bm25_search",
+      // Same expression shape as bm25Search step for step: every +−×÷ is
+      // correctly rounded on both engines, ln's 1-ulp slack is absorbed by
+      // the round-6 before the exact DECIMAL sum.
+      bm25OracleSql) { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.bm25Search(t.documents, col("doc_id"), col("text"),
         Seq("spark", "merge", "window"), k = 20)
@@ -2964,7 +5315,56 @@ object PipelineQueries {
     // sim_topk_bruteforce); the fusion is fixed-order IEEE arithmetic
     // over top-k-sized frames, so the WHOLE hybrid pipeline is
     // engine-exact and hash-oracle'd end to end.
-    "retrieval_hybrid" -> { (s, dir) =>
+    Query("retrieval_hybrid",
+      // The two input rankings' oracle CTEs verbatim, then the same
+      // fixed-order RRF arithmetic (txt term first, vec term second).
+      s"""WITH tok AS (SELECT doc_id, unnest($tokensSql) AS token FROM documents),
+            tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
+            dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
+            stats AS (SELECT count(*) AS n_docs, sum(dl) AS total_tokens FROM dl),
+            qtf AS (SELECT * FROM tf WHERE token IN ('spark', 'merge', 'window')),
+            dft AS (SELECT token, count(*) AS df FROM qtf GROUP BY 1),
+            bscored AS (
+              SELECT doc_id,
+                CAST(round(
+                  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+                    * ((tf * (1.2 + 1.0))
+                       / (tf + 1.2 * (1.0 - 0.75
+                          + 0.75 * dl / (CAST(total_tokens AS DOUBLE) / n_docs)))),
+                  6) AS DECIMAL(18,6)) AS s
+              FROM qtf JOIN dft USING (token) JOIN dl USING (doc_id)
+              CROSS JOIN stats),
+            bagg AS (SELECT doc_id, round(CAST(sum(s) AS DOUBLE), 6) AS bm25
+                     FROM bscored GROUP BY 1),
+            btop AS (SELECT * FROM bagg ORDER BY bm25 DESC, doc_id LIMIT 20),
+            txt AS (SELECT doc_id AS id,
+                      CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id)
+                        AS BIGINT) AS rk_txt
+                    FROM btop),
+            v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            nn AS (SELECT vec_id, vec,
+                     sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
+            qv AS (SELECT vec, nrm FROM nn WHERE vec_id = 7),
+            ascored AS (
+              SELECT c.vec_id AS id,
+                list_inner_product(c.vec, qv.vec) / (c.nrm * qv.nrm) AS cosine
+              FROM nn c, qv WHERE c.vec_id <> 7),
+            aranked AS (
+              SELECT id, CAST(row_number() OVER (ORDER BY cosine DESC, id)
+                AS BIGINT) AS rk_vec
+              FROM ascored),
+            vec AS (SELECT id, rk_vec FROM aranked WHERE rk_vec <= 20),
+            fused AS (
+              SELECT coalesce(t.id, a.id) AS id,
+                coalesce(t.rk_txt, 0) AS rk_txt,
+                coalesce(a.rk_vec, 0) AS rk_vec,
+                round(coalesce(1.0 / (60.0 + t.rk_txt), 0.0)
+                    + coalesce(1.0 / (60.0 + a.rk_vec), 0.0), 6) AS rrf
+              FROM txt t FULL OUTER JOIN vec a ON t.id = a.id),
+            ftop AS (SELECT * FROM fused ORDER BY rrf DESC, id LIMIT 10)
+         SELECT CAST(row_number() OVER (ORDER BY rrf DESC, id) AS INT) AS rk,
+           id, rk_txt, rk_vec, rrf
+         FROM ftop ORDER BY rk""") { (s, dir) =>
       val t = Tables(s, dir)
       val txt = TextAnalysis.bm25Search(t.documents, col("doc_id"),
           col("text"), Seq("spark", "merge", "window"), k = 20)
@@ -2983,7 +5383,10 @@ object PipelineQueries {
     // pure probe (no tokenization, bucket-pruned postings scan). Same
     // oracle as the in-query form: stored postings, stored stats, the
     // version fence, and the pruned scan must reproduce it exactly.
-    "text_bm25_store" -> { (s, dir) =>
+    Query("text_bm25_store",
+      // Stored-index probe: the answer must be identical to the in-query
+      // operator, so the oracle is too.
+      bm25OracleSql) { (s, dir) =>
       val p = ensureTextStore(s, dir)
       graft.sources.TextIndexStore.search(s, p,
         Seq("spark", "merge", "window"), k = 20)
@@ -2999,7 +5402,13 @@ object PipelineQueries {
     // non-increasing in k (all ks measured in one corpus aggregate).
     // A wrong rotation, an unsorted spectrum, or a broken projection
     // flips a boolean and hash-mismatches.
-    "embed_pca" -> { (s, dir) =>
+    Query("embed_pca",
+      // Self-certifying (see the query comment): the oracle pins shape,
+      // count and the all-true property booleans.
+      """SELECT k, (SELECT count(*) FROM embeddings) AS n_vectors,
+         64 AS dim, true AS orthonormal, true AS eigen_ok,
+         true AS err_improves
+         FROM (VALUES (4), (8), (16)) t(k) ORDER BY k""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Pca.certify(s, t.embeddings, col("embedding"),
         Seq(4, 8, 16))
@@ -3008,7 +5417,21 @@ object PipelineQueries {
     // Int8 embedding quantization; the oracle compares scale, two code
     // elements, and the whole-vector code checksum (array columns don't
     // hash-compare, scalar projections do).
-    "embed_quantize_int8" -> { (s, dir) =>
+    Query("embed_quantize_int8",
+      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+            m AS (SELECT vec_id, vec,
+                    list_max(list_transform(vec, x -> abs(x))) AS ma FROM v),
+            q AS (SELECT vec_id,
+                    CASE WHEN ma = 0 THEN 0.0 ELSE ma / 127.0 END AS scale,
+                    CASE WHEN ma = 0 THEN list_transform(vec, x -> 0)
+                         ELSE list_transform(vec,
+                           x -> CAST(round(x * 127.0 / ma) AS INTEGER)) END AS codes
+                  FROM m)
+         SELECT vec_id, round(scale, 6) AS scale,
+           CAST(codes[1] AS BIGINT) AS c0,
+           CAST(codes[64] AS BIGINT) AS c63,
+           CAST(list_sum(codes) AS BIGINT) AS code_sum
+         FROM q ORDER BY vec_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val emb = Similarity.prepared(t.embeddings, col("vec_id"), col("embedding"))
       Similarity.quantizeInt8(emb)
@@ -3021,7 +5444,37 @@ object PipelineQueries {
 
     // Gopher-style repetition quality signals, one shuffle-free expression
     // pass per document.
-    "text_repetition" -> { (s, dir) =>
+    Query("text_repetition",
+      s"""WITH t AS (
+           SELECT doc_id,
+             CASE WHEN $blankSql THEN []::VARCHAR[]
+                  ELSE $tokensSql END AS toks
+           FROM documents),
+          b AS (
+           SELECT doc_id, toks,
+             [toks[i] || ' ' || toks[i+1] for i in range(1, len(toks))] AS bgs
+           FROM t),
+          c AS (
+           SELECT doc_id,
+             len(toks) AS n_tokens,
+             len(list_distinct(toks)) AS n_distinct,
+             coalesce(list_max([len(list_filter(toks, y -> y = x))
+                                for x in list_distinct(toks)]), 0) AS top_tok,
+             coalesce(list_max([len(list_filter(bgs, y -> y = x))
+                                for x in list_distinct(bgs)]), 0) AS top_bg
+           FROM b)
+         SELECT doc_id,
+           CAST(n_tokens AS BIGINT) AS n_tokens,
+           CAST(n_distinct AS BIGINT) AS n_distinct,
+           CASE WHEN n_tokens > 0
+                THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_tokens, 6)
+                ELSE 0.0 END AS dup_token_ratio,
+           CAST(top_tok AS BIGINT) AS top_token_n,
+           CASE WHEN n_tokens > 0
+                THEN round(CAST(top_tok AS DOUBLE) / n_tokens, 6)
+                ELSE 0.0 END AS top_token_frac,
+           CAST(top_bg AS BIGINT) AS top_bigram_n
+         FROM c ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.repetitionFeatures(t.documents, col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
@@ -3029,7 +5482,19 @@ object PipelineQueries {
 
     // Token-window chunking for training context windows: 32-token chunks,
     // 8-token overlap; map-only (generate + explode, no shuffle).
-    "text_chunk" -> { (s, dir) =>
+    Query("text_chunk",
+      s"""WITH f AS (
+           SELECT doc_id, $tokensSql AS toks,
+             len($tokensSql) AS n
+           FROM documents WHERE NOT $blankSql),
+          e AS (
+           SELECT doc_id, i AS chunk_id,
+             array_to_string(list_slice(toks, i*24 + 1, i*24 + 32), ' ') AS chunk_text
+           FROM f, unnest(range(0, greatest(1,
+             CAST(ceil(CAST(n - 8 AS DOUBLE) / 24) AS INT)))) AS u(i))
+         SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, chunk_text,
+           CAST(len(string_split(chunk_text, ' ')) AS BIGINT) AS chunk_tokens
+         FROM e ORDER BY doc_id, chunk_id""") { (s, dir) =>
       val t = Tables(s, dir)
       TextAnalysis.chunkByTokens(t.documents, col("doc_id"), col("text"),
           chunkSize = 32, overlap = 8)
@@ -3040,7 +5505,23 @@ object PipelineQueries {
 
     // PII redaction over a corpus with deterministically planted emails,
     // IPs, and phone numbers (the synthetic docs contain none).
-    "text_redact_pii" -> { (s, dir) =>
+    Query("text_redact_pii",
+      s"""WITH planted AS (
+           SELECT doc_id,
+             text || ' reach me at user' || doc_id || '@example.com'
+                  || ' or +1 555 000 77' || (doc_id % 100)
+                  || ' host 10.0.' || (doc_id % 256) || '.7' AS text
+           FROM documents)
+         SELECT doc_id,
+           regexp_replace(
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(text,
+                   '${TextAnalysis.EmailRe}', '<EMAIL>', 'g'),
+                 '${TextAnalysis.Ipv4Re}', '<IP>', 'g'),
+               '${TextAnalysis.LongNumRe}', '<NUM>', 'g'),
+             '${TextAnalysis.PhoneRe}', '<PHONE>', 'g') AS clean
+         FROM planted ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val planted = Tables.spread(t.documents).select(col("doc_id"),
         concat(col("text"),
@@ -3056,7 +5537,23 @@ object PipelineQueries {
     // corrupted phrase on two of every three docs — the ftfy core case:
     // UTF-8 read as windows-1252. The clean third certifies the fixer
     // never touches healthy ASCII text.
-    "text_fix_mojibake" -> { (s, dir) =>
+    Query("text_fix_mojibake", {
+      // The oracle builds its replace chain from the SAME MojibakeTable
+      // the operator folds, so the table and the SQL can never drift;
+      // the planted literal is computed by the same mojify().
+      val corrupted = TextAnalysis.mojify(" café — “quoted” …costs €5•")
+      val fix = TextAnalysis.MojibakeTable.foldLeft("text") {
+        case (acc, (m, t)) => s"replace($acc, '$m', '$t')"
+      }
+      s"""WITH planted AS (
+           SELECT doc_id,
+             CASE WHEN doc_id % 3 = 0 THEN text
+                  ELSE text || '$corrupted' END AS text
+           FROM documents)
+         SELECT doc_id, $fix AS clean,
+           CAST(length(text) - length($fix) AS BIGINT) AS n_saved
+         FROM planted ORDER BY doc_id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       val corrupted = TextAnalysis.mojify(" café — “quoted” …costs €5•")
       val planted = Tables.spread(t.documents).select(col("doc_id"),
@@ -3073,7 +5570,28 @@ object PipelineQueries {
     // lines (every 5th doc gets a "subscribe" footer, every 7th a rights
     // notice): paragraphs occurring in >= 3 distinct docs are stripped
     // and documents reassembled from the survivors in order.
-    "text_strip_boilerplate" -> { (s, dir) =>
+    Query("text_strip_boilerplate",
+      """WITH pages AS (
+           SELECT doc_id, text
+             || CASE WHEN doc_id % 5 = 0
+                THEN chr(10) || 'subscribe to our newsletter for updates'
+                ELSE '' END
+             || CASE WHEN doc_id % 7 = 0
+                THEN chr(10) || 'all rights reserved'
+                ELSE '' END AS text
+           FROM documents),
+          p AS (
+           SELECT doc_id, i AS pos, parts[i] AS para
+           FROM (SELECT doc_id, string_split(text, chr(10)) AS parts FROM pages),
+                unnest(range(1, len(parts) + 1)) AS u(i)),
+          common AS (
+           SELECT para FROM p GROUP BY para
+           HAVING count(DISTINCT doc_id) >= 3),
+          kept AS (
+           SELECT doc_id, pos, para FROM p
+           WHERE para NOT IN (SELECT para FROM common))
+         SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS clean_text
+         FROM kept GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val pages = t.documents.select(col("doc_id"),
         concat(col("text"),
@@ -3093,7 +5611,25 @@ object PipelineQueries {
     // Dataset-release diff between two corpus snapshots: planted
     // removals (%31), edits (%37), and additions (%41). Fingerprint
     // comparison — text never shuffles through the full-outer join.
-    "corpus_diff" -> { (s, dir) =>
+    Query("corpus_diff",
+      // Payloads compared directly (the fingerprint stands in for text
+      // equality on the Spark side — the documented collision contract).
+      """WITH a AS (SELECT doc_id, text FROM documents),
+            b AS (SELECT doc_id,
+                    CASE WHEN doc_id % 37 = 0 THEN text || ' rev2'
+                         ELSE text END AS text
+                  FROM documents WHERE doc_id % 31 <> 0
+                  UNION ALL
+                  SELECT doc_id + 600000, text FROM documents
+                  WHERE doc_id % 41 = 0),
+            d AS (SELECT coalesce(a.doc_id, b.doc_id) AS key,
+                    CASE WHEN a.doc_id IS NULL THEN 'added'
+                         WHEN b.doc_id IS NULL THEN 'removed'
+                         WHEN a.text <> b.text THEN 'changed'
+                         END AS status
+                  FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
+         SELECT key, status FROM d WHERE status IS NOT NULL
+         ORDER BY key""") { (s, dir) =>
       val t = Tables(s, dir)
       val a = t.documents.select(col("doc_id"), col("text"))
       val b = a.filter(pmod(col("doc_id"), lit(31)) =!= 0)
@@ -3107,7 +5643,41 @@ object PipelineQueries {
         .orderBy(col("key"))
     },
 
-    "corpus_report" -> { (s, dir) =>
+    Query("corpus_report", {
+      val hits = langHitsSql
+      val cases = langCaseSql
+      s"""WITH f AS (
+           SELECT doc_id, text, length(text) AS n_chars,
+             CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
+             length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct,
+             $hits
+           FROM documents),
+          q AS (
+           SELECT doc_id, text, n_tokens,
+             CASE $cases ELSE 'und' END AS lang_pred,
+             floor((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
+               * (1.0 - least(CASE WHEN n_chars > 0
+                    THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000
+                    ELSE 0.0 END * 5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS quality_score
+           FROM f),
+          t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+          w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
+                FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
+                WHERE len(toks) >= 6),
+          g AS (SELECT win, count(DISTINCT doc_id) AS nd FROM w GROUP BY win),
+          sp AS (SELECT w.doc_id,
+                   max(CASE WHEN g.nd >= 2 THEN 1 ELSE 0 END) AS has_dup
+                 FROM w JOIN g USING (win) GROUP BY w.doc_id)
+         SELECT count(*) AS n_docs,
+           CAST(sum(q.n_tokens) AS BIGINT) AS total_tokens,
+           CAST(sum(CASE WHEN q.lang_pred = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
+           floor((CAST(sum(CAST(q.quality_score AS DECIMAL(18,6))) AS DOUBLE)
+             / count(*)) * 1000000 + 0.5) / 1000000 AS avg_quality,
+           CAST(sum(CASE WHEN coalesce(sp.has_dup, 0) = 1 THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_span_dup_docs,
+           count(DISTINCT q.text) AS n_distinct_texts
+         FROM q LEFT JOIN sp USING (doc_id)"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       // lang/fp ride the quality pass: one map-side corpus scan where
       // the old quality ⋈ lang shape paid a second full scan plus a
@@ -3134,7 +5704,14 @@ object PipelineQueries {
 
     // Cohort retention over the event stream — see operators.Retention for
     // the single-user-shuffle, join-free plan rationale.
-    "q_retention_cohort" -> { (s, dir) =>
+    Query("q_retention_cohort",
+      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+            c AS (SELECT user_id, min(day) AS cohort_day FROM d GROUP BY user_id)
+         SELECT strftime(c.cohort_day, '%Y-%m-%d') AS cohort_day,
+           date_diff('day', c.cohort_day, d.day) AS day_offset,
+           count(*) AS n_users
+         FROM d JOIN c USING (user_id)
+         GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Retention
         .cohortRetention(t.events, col("user_id"), col("ts"))
@@ -3155,7 +5732,95 @@ object PipelineQueries {
     // (text equality, brute-force 3-gram Jaccard, token-window overlap)
     // against the growing corpus. The store is dropped and rebuilt per
     // run so the query is deterministic under re-execution.
-    "ingest_loop" -> { (s, dir) =>
+    Query("ingest_loop",
+      // The two-batch loop replayed with exact logic against the growing
+      // corpus: batch-1 admissions join the corpus before batch 2 is
+      // checked. Stage mirror: exact = text equality; near = brute 3-gram
+      // Jaccard >= 0.8 on exact-new survivors; span = 6-token-window
+      // overlap > 0.5; within = greater id of each surviving near-dup pair.
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
+                    FROM documents),
+            sh AS (SELECT doc_id,
+                     list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                    for i in range(1, len(toks) - 1)]) AS sh
+                   FROM t WHERE len(toks) >= 3),
+            w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
+                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
+                  WHERE len(toks) >= 6),
+            c1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 >= 2),
+            b1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 = 0),
+            x1 AS (SELECT b.doc_id FROM b1 b
+                   WHERE EXISTS (SELECT 1 FROM c1 c WHERE c.text = b.text)),
+            s1 AS (SELECT doc_id, text FROM b1
+                   WHERE doc_id NOT IN (SELECT doc_id FROM x1)),
+            n1 AS (SELECT DISTINCT ns.doc_id
+                   FROM s1 JOIN sh ns ON ns.doc_id = s1.doc_id
+                        JOIN c1 ON true
+                        JOIN sh cs ON cs.doc_id = c1.doc_id
+                   WHERE CAST(len(list_intersect(cs.sh, ns.sh)) AS DOUBLE)
+                     / (len(cs.sh) + len(ns.sh) - len(list_intersect(cs.sh, ns.sh)))
+                     >= 0.8),
+            p1 AS (SELECT bw.doc_id
+                   FROM (SELECT s1.doc_id, w.win FROM s1
+                         JOIN w ON w.doc_id = s1.doc_id) bw
+                   LEFT JOIN (SELECT DISTINCT w.win FROM w
+                              JOIN c1 ON w.doc_id = c1.doc_id) iw
+                     ON bw.win = iw.win
+                   GROUP BY bw.doc_id
+                   HAVING CAST(sum(CASE WHEN iw.win IS NOT NULL THEN 1 ELSE 0 END)
+                       AS DOUBLE) / count(*) > 0.5),
+            wb1 AS (SELECT DISTINCT b.doc_id
+                    FROM s1 a JOIN sh sa ON sa.doc_id = a.doc_id
+                         JOIN s1 b ON a.doc_id < b.doc_id
+                         JOIN sh sb ON sb.doc_id = b.doc_id
+                    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+                      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
+                      >= 0.8),
+            r1 AS (SELECT doc_id, 'exact_dup_of_corpus' AS reason FROM x1
+                   UNION SELECT doc_id, 'near_dup_of_corpus' FROM n1
+                   UNION SELECT doc_id, 'span_overlap_with_corpus' FROM p1
+                   UNION SELECT doc_id, 'near_dup_within_batch' FROM wb1),
+            c2 AS (SELECT * FROM c1
+                   UNION ALL
+                   SELECT doc_id, text FROM b1
+                   WHERE doc_id NOT IN (SELECT doc_id FROM r1)),
+            b2 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 = 1),
+            x2 AS (SELECT b.doc_id FROM b2 b
+                   WHERE EXISTS (SELECT 1 FROM c2 c WHERE c.text = b.text)),
+            s2 AS (SELECT doc_id, text FROM b2
+                   WHERE doc_id NOT IN (SELECT doc_id FROM x2)),
+            n2 AS (SELECT DISTINCT ns.doc_id
+                   FROM s2 JOIN sh ns ON ns.doc_id = s2.doc_id
+                        JOIN c2 ON true
+                        JOIN sh cs ON cs.doc_id = c2.doc_id
+                   WHERE CAST(len(list_intersect(cs.sh, ns.sh)) AS DOUBLE)
+                     / (len(cs.sh) + len(ns.sh) - len(list_intersect(cs.sh, ns.sh)))
+                     >= 0.8),
+            p2 AS (SELECT bw.doc_id
+                   FROM (SELECT s2.doc_id, w.win FROM s2
+                         JOIN w ON w.doc_id = s2.doc_id) bw
+                   LEFT JOIN (SELECT DISTINCT w.win FROM w
+                              JOIN c2 ON w.doc_id = c2.doc_id) iw
+                     ON bw.win = iw.win
+                   GROUP BY bw.doc_id
+                   HAVING CAST(sum(CASE WHEN iw.win IS NOT NULL THEN 1 ELSE 0 END)
+                       AS DOUBLE) / count(*) > 0.5),
+            wb2 AS (SELECT DISTINCT b.doc_id
+                    FROM s2 a JOIN sh sa ON sa.doc_id = a.doc_id
+                         JOIN s2 b ON a.doc_id < b.doc_id
+                         JOIN sh sb ON sb.doc_id = b.doc_id
+                    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+                      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
+                      >= 0.8),
+            r2 AS (SELECT doc_id, 'exact_dup_of_corpus' AS reason FROM x2
+                   UNION SELECT doc_id, 'near_dup_of_corpus' FROM n2
+                   UNION SELECT doc_id, 'span_overlap_with_corpus' FROM p2
+                   UNION SELECT doc_id, 'near_dup_within_batch' FROM wb2)
+         SELECT batch, doc_id, reason FROM (
+           SELECT CAST(1 AS BIGINT) AS batch, doc_id, reason FROM r1
+           UNION ALL
+           SELECT CAST(2 AS BIGINT) AS batch, doc_id, reason FROM r2)
+         ORDER BY batch, doc_id, reason""") { (s, dir) =>
       val t = Tables(s, dir)
       val docs = t.documents.select(col("doc_id"), col("text"))
       val corpus = docs.filter(pmod(col("doc_id"), lit(4)) >= 2)
@@ -3205,7 +5870,129 @@ object PipelineQueries {
     // oracle retrains BOTH models from scratch on the same split and
     // replays every gate, so a drifted score, smoothing constant, OOV
     // floor or threshold comparison diverges.
-    "ingest_gate_model" -> { (s, dir) =>
+    Query("ingest_gate_model",
+      // The batch-1 slice of the `ingest_loop` oracle: one admission pass
+      // against the static build corpus (no append, no second batch).
+      // Both models retrained from scratch on the trusted slice, every
+      // gate replayed over the batch slice: heuristic quality arithmetic,
+      // the language argmax, the full stupid-backoff chain WITH the OOV
+      // floor (cross-scoring makes it reachable, unlike the self-scored
+      // text_ngram_logprob), NB Laplace smoothing + prior, and the exact
+      // threshold comparisons.
+      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 4 >= 2),
+            batch AS (SELECT * FROM documents WHERE doc_id % 4 = 0),
+            qf AS (SELECT doc_id, length(text) AS n_chars,
+                     CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
+                     length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct
+                   FROM batch),
+            qg AS (SELECT doc_id,
+                     floor((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
+                       * (1.0 - least((CASE WHEN n_chars > 0
+                            THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000
+                            ELSE 0.0 END) * 5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS q
+                   FROM qf),
+            lf AS (SELECT doc_id,
+                     $langHitsSql
+                   FROM batch),
+            langp AS (SELECT doc_id, CASE $langCaseSql ELSE 'und' END AS lang_pred
+                      FROM lf),
+            cd AS (SELECT doc_id, $tokensSql AS ts FROM corpus),
+            cg0 AS (SELECT doc_id,
+                      [struct_pack(cur := ts[i],
+                         p1 := CASE WHEN i >= 2 THEN ts[i-1] END,
+                         p2 := CASE WHEN i >= 3 THEN ts[i-2] END)
+                       for i in range(1, len(ts) + 1)] AS gs
+                    FROM cd),
+            cg AS (SELECT u.cur AS cur, u.p1 AS p1, u.p2 AS p2
+                   FROM (SELECT unnest(gs) AS u FROM cg0)),
+            uni AS (SELECT cur, count(*) AS c1 FROM cg GROUP BY 1),
+            tot AS (SELECT sum(c1) AS total FROM uni),
+            bi AS (SELECT p1, cur, count(*) AS c2 FROM cg
+                   WHERE p1 IS NOT NULL GROUP BY 1, 2
+                   HAVING count(*) >= 2),
+            tri AS (SELECT p2, p1, cur, count(*) AS c3 FROM cg
+                    WHERE p2 IS NOT NULL GROUP BY 1, 2, 3
+                    HAVING count(*) >= 2),
+            bd AS (SELECT doc_id, $tokensSql AS ts FROM batch),
+            bg0 AS (SELECT doc_id,
+                      [struct_pack(cur := ts[i],
+                         p1 := CASE WHEN i >= 2 THEN ts[i-1] END,
+                         p2 := CASE WHEN i >= 3 THEN ts[i-2] END)
+                       for i in range(1, len(ts) + 1)] AS gs
+                    FROM bd),
+            g AS (SELECT doc_id, u.cur AS cur, u.p1 AS p1, u.p2 AS p2
+                  FROM (SELECT doc_id, unnest(gs) AS u FROM bg0)),
+            sp AS (SELECT g.doc_id,
+                     CASE WHEN g.p2 IS NOT NULL THEN
+                            CASE WHEN t3.c3 IS NOT NULL
+                                 THEN CAST(t3.c3 AS DOUBLE) / b2.c2ctx
+                                 ELSE 0.4 * (CASE WHEN b.c2 IS NOT NULL
+                                   THEN CAST(b.c2 AS DOUBLE) / u1.c1p
+                                   ELSE 0.4 * (coalesce(CAST(u.c1 AS DOUBLE), 1.0)
+                                     / tot.total) END)
+                            END
+                          WHEN g.p1 IS NOT NULL THEN
+                            CASE WHEN b.c2 IS NOT NULL
+                                 THEN CAST(b.c2 AS DOUBLE) / u1.c1p
+                                 ELSE 0.4 * (coalesce(CAST(u.c1 AS DOUBLE), 1.0)
+                                   / tot.total) END
+                          ELSE coalesce(CAST(u.c1 AS DOUBLE), 1.0) / tot.total
+                     END AS p
+                   FROM g LEFT JOIN uni u ON g.cur = u.cur
+                     CROSS JOIN tot
+                     LEFT JOIN (SELECT cur AS tok, c1 AS c1p FROM uni) u1
+                       ON g.p1 = u1.tok
+                     LEFT JOIN bi b ON g.p1 = b.p1 AND g.cur = b.cur
+                     LEFT JOIN (SELECT p1 AS ctx2, cur AS ctx1, c2 AS c2ctx
+                                FROM bi) b2
+                       ON g.p2 = b2.ctx2 AND g.p1 = b2.ctx1
+                     LEFT JOIN tri t3
+                       ON g.p2 = t3.p2 AND g.p1 = t3.p1 AND g.cur = t3.cur),
+            nlr AS (SELECT doc_id,
+                      CAST(round(-ln(p), 6) AS DECIMAL(18,6)) AS nl FROM sp),
+            lms AS (SELECT doc_id,
+                      CAST(sum(nl) AS DOUBLE) / count(*) AS anlp
+                    FROM nlr GROUP BY doc_id),
+            clab AS (SELECT doc_id,
+                       (CAST(substring(source, 4, 8) AS INT) % 2 = 0) AS y, text
+                     FROM corpus),
+            ctok AS (SELECT doc_id, y, unnest($tokensSql) AS token FROM clab),
+            cnt AS (SELECT token,
+                      sum(CASE WHEN y THEN 1 ELSE 0 END) AS c_pos,
+                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS c_neg
+                    FROM ctok GROUP BY 1),
+            ntot AS (SELECT sum(c_pos) AS tot_pos, sum(c_neg) AS tot_neg,
+                       count(*) AS vocab FROM cnt),
+            pri AS (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
+                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
+                    FROM clab),
+            btok AS (SELECT doc_id, unnest($tokensSql) AS token FROM batch),
+            nbl AS (SELECT t.doc_id,
+                      CAST(round(ln(
+                        (CAST(coalesce(c.c_pos, 0) + 1 AS DOUBLE)
+                           / CAST(ntot.tot_pos + ntot.vocab AS DOUBLE))
+                        / (CAST(coalesce(c.c_neg, 0) + 1 AS DOUBLE)
+                           / CAST(ntot.tot_neg + ntot.vocab AS DOUBLE))), 6)
+                        AS DECIMAL(18,6)) AS llr
+                    FROM btok t LEFT JOIN cnt c ON t.token = c.token
+                      CROSS JOIN ntot),
+            nba AS (SELECT doc_id, sum(llr) AS sd FROM nbl GROUP BY 1),
+            npr AS (SELECT CAST(round(ln(CAST(n_pos + 1 AS DOUBLE)
+                      / CAST(n_neg + 1 AS DOUBLE)), 6) AS DECIMAL(18,6))
+                      AS prior FROM pri),
+            nbs AS (SELECT doc_id,
+                      (sd + prior > CAST(0 AS DECIMAL(18,6))) AS predict_pos
+                    FROM nba CROSS JOIN npr)
+         SELECT doc_id, reason FROM (
+           SELECT doc_id, 'low_quality' AS reason FROM qg WHERE q < 0.3
+           UNION ALL
+           SELECT doc_id, 'lang_not_allowed' FROM langp
+           WHERE lang_pred NOT IN ('de', 'en', 'es', 'fr')
+           UNION ALL
+           SELECT doc_id, 'lm_perplexity' FROM lms WHERE anlp > 4.2
+           UNION ALL
+           SELECT doc_id, 'classifier_rejected' FROM nbs WHERE NOT predict_pos)
+         ORDER BY doc_id, reason""") { (s, dir) =>
       val t = Tables(s, dir)
       val docs = t.documents.select(col("doc_id"), col("source"), col("text"))
       val batch = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -3231,13 +6018,57 @@ object PipelineQueries {
         .orderBy(col("doc_id"), col("reason"))
     },
 
-    "ingest_admit" -> { (s, dir) =>
+    Query("ingest_admit",
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
+                    FROM documents),
+            sh AS (SELECT doc_id,
+                     list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                    for i in range(1, len(toks) - 1)]) AS sh
+                   FROM t WHERE len(toks) >= 3),
+            w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
+                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
+                  WHERE len(toks) >= 6),
+            c1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 >= 2),
+            b1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 = 0),
+            x1 AS (SELECT b.doc_id FROM b1 b
+                   WHERE EXISTS (SELECT 1 FROM c1 c WHERE c.text = b.text)),
+            s1 AS (SELECT doc_id, text FROM b1
+                   WHERE doc_id NOT IN (SELECT doc_id FROM x1)),
+            n1 AS (SELECT DISTINCT ns.doc_id
+                   FROM s1 JOIN sh ns ON ns.doc_id = s1.doc_id
+                        JOIN c1 ON true
+                        JOIN sh cs ON cs.doc_id = c1.doc_id
+                   WHERE CAST(len(list_intersect(cs.sh, ns.sh)) AS DOUBLE)
+                     / (len(cs.sh) + len(ns.sh) - len(list_intersect(cs.sh, ns.sh)))
+                     >= 0.8),
+            p1 AS (SELECT bw.doc_id
+                   FROM (SELECT s1.doc_id, w.win FROM s1
+                         JOIN w ON w.doc_id = s1.doc_id) bw
+                   LEFT JOIN (SELECT DISTINCT w.win FROM w
+                              JOIN c1 ON w.doc_id = c1.doc_id) iw
+                     ON bw.win = iw.win
+                   GROUP BY bw.doc_id
+                   HAVING CAST(sum(CASE WHEN iw.win IS NOT NULL THEN 1 ELSE 0 END)
+                       AS DOUBLE) / count(*) > 0.5),
+            wb1 AS (SELECT DISTINCT b.doc_id
+                    FROM s1 a JOIN sh sa ON sa.doc_id = a.doc_id
+                         JOIN s1 b ON a.doc_id < b.doc_id
+                         JOIN sh sb ON sb.doc_id = b.doc_id
+                    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+                      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
+                      >= 0.8),
+            r1 AS (SELECT doc_id, 'exact_dup_of_corpus' AS reason FROM x1
+                   UNION SELECT doc_id, 'near_dup_of_corpus' FROM n1
+                   UNION SELECT doc_id, 'span_overlap_with_corpus' FROM p1
+                   UNION SELECT doc_id, 'near_dup_within_batch' FROM wb1)
+         SELECT doc_id, reason FROM r1 ORDER BY doc_id, reason""") { (s, dir) =>
       val t = Tables(s, dir)
       val docs = t.documents.select(col("doc_id"), col("text"))
       val corpus = docs.filter(pmod(col("doc_id"), lit(4)) >= 2)
       val b1 = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
-      val p = "ingest_admit_store_" +
+      val key =
         graft.sources.CatalogProps.contentKey(dir, "documents.parquet")
+      val p = "ingest_admit_store_" + key
       if (!s.catalog.tableExists(IndexStore.docsTable(p))) {
         // Only ONE probe store may exist at a time: the prefix is keyed
         // by the testdata fingerprint, so every regeneration mints a new
@@ -3245,16 +6076,7 @@ object PipelineQueries {
         // would otherwise accumulate forever. Sweep sibling prefixes
         // (catalog-registered or cross-JVM directory leftovers) before
         // building under the current one.
-        val wh = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"))
-        val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-          val nm = st.getPath.getName
-          if (nm.startsWith("ingest_admit_store_") && !nm.startsWith(p + "_")) {
-            if (s.catalog.tableExists(nm)) IndexStore.dropTable(s, nm)
-            else fs.delete(st.getPath, true)
-          }
-        }
+        graft.sources.Bucketing.sweepStale(s, "ingest_admit_store_", key)
         IndexStore.dropDocs(s, p) // clear any cross-JVM warehouse leftovers
         IndexStore.buildDocs(corpus, col("doc_id"), col("text"), p,
           IndexStore.DocConfig(buckets = 8))
@@ -3904,3170 +6726,4 @@ object PipelineQueries {
                                 UNION ALL SELECT 'b') dom
                     LEFT JOIN docw_m w
                       ON d.doc_id = w.doc_id AND dom.domain = w.domain)"""
-
-  def oracle: Map[String, String] = Map(
-    "dedup_exact" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id < 100)
-         SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-         FROM corpus GROUP BY text ORDER BY keep_id""",
-
-    "dedup_keep_first" ->
-      """SELECT user_id, event_type, event_id FROM (
-           SELECT user_id, event_type, event_id,
-             row_number() OVER (PARTITION BY user_id, event_type
-                                ORDER BY ts, event_id) AS rn
-           FROM events) WHERE rn = 1 ORDER BY user_id, event_type""",
-
-    "dedup_minhash_lsh" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-            d AS (SELECT doc_id,
-                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                   for i in range(1, len(toks) - 1)]) AS sh
-                  FROM t WHERE len(toks) >= 3)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-         FROM d a JOIN d b ON a.doc_id < b.doc_id
-         WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8
-         ORDER BY id_a, id_b""",
-
-    // The planted-corpus pair set is hash-free (see the query comment):
-    // byte-identical twins at +100000 are the ONLY pairs within hamming 3,
-    // so the oracle is pure id arithmetic over the same documents table.
-    "dedup_simhash" ->
-      """SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
-           CAST(0 AS INTEGER) AS hamming
-         FROM documents WHERE doc_id % 20 = 0 ORDER BY id_a, id_b""",
-
-    "dedup_semdedup" ->
-      """WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, label, vec,
-                    sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            d AS (SELECT DISTINCT b.vec_id
-                  FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-                  WHERE CASE WHEN a.nrm * b.nrm = 0 THEN NULL
-                        ELSE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm)
-                        END >= 0.3)
-         SELECT vec_id, CAST(label AS INT) AS cluster FROM v
-         WHERE vec_id NOT IN (SELECT vec_id FROM d)
-         ORDER BY vec_id""",
-
-    // Self-certifying (see the query comment): the DuckDB side is the
-    // deterministic expectation — every original kept, every twin's
-    // prune decision consistent with its cell, colocation ≥ 90% — with
-    // the n column anchored to corpus counts so a silently-empty Spark
-    // result can't hash-match.
-    "dedup_semdedup_ivf" ->
-      """SELECT * FROM (VALUES
-           ('originals_all_kept',
-            (SELECT count(*) FROM embeddings), true),
-           ('twin_colocation_floor',
-            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true),
-           ('twins_pruned_iff_colocated',
-            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true))
-         AS t(check_name, n, ok) ORDER BY check_name""",
-
-    // Same invariant protocol for the hierarchical-quantizer composition.
-    "dedup_semdedup_hier" ->
-      """SELECT * FROM (VALUES
-           ('originals_all_kept',
-            (SELECT count(*) FROM embeddings), true),
-           ('twin_colocation_floor',
-            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true),
-           ('twins_pruned_iff_colocated',
-            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true))
-         AS t(check_name, n, ok) ORDER BY check_name""",
-
-    // Same invariant protocol as dedup_semdedup_ivf: the PQ-coded path
-    // must reproduce exactly the same planted-corpus booleans.
-    "dedup_semdedup_pq" ->
-      """SELECT * FROM (VALUES
-           ('originals_all_kept',
-            (SELECT count(*) FROM embeddings), true),
-           ('twin_colocation_floor',
-            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true),
-           ('twins_pruned_iff_colocated',
-            (SELECT count(*) FROM embeddings WHERE vec_id % 10 = 0), true))
-         AS t(check_name, n, ok) ORDER BY check_name""",
-
-    "dedup_embedding" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) AS cosine
-         FROM n a JOIN n b ON a.vec_id < b.vec_id
-         WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.4
-         ORDER BY id_a, id_b""",
-
-    // The LSH path at the registered selective parameters returns the
-    // exact all-pairs answer on the planted gapped corpus (precision 1 by
-    // construction, recall 1 measured) — so its oracle IS the brute-force
-    // SQL over the same planted corpus, rebuilt here with identical
-    // double arithmetic.
-    "dedup_embedding_lsh" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            planted AS (
-              SELECT vec_id, vec FROM base
-              UNION ALL
-              SELECT vec_id + 100000 AS vec_id,
-                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
-                      for i in range(1, len(vec) + 1)] AS vec
-              FROM base WHERE vec_id % 10 = 0),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                  FROM planted)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) AS cosine
-         FROM n a JOIN n b ON a.vec_id < b.vec_id
-         WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.8
-         ORDER BY id_a, id_b""",
-
-    "dedup_embedding_canonical" ->
-      """WITH RECURSIVE
-           base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-           planted AS (
-             SELECT vec_id, vec FROM base
-             UNION ALL
-             SELECT vec_id + 100000 AS vec_id,
-                    [vec[i] + vec[len(vec) + 1 - i] * 0.01
-                     for i in range(1, len(vec) + 1)] AS vec
-             FROM base WHERE vec_id % 10 = 0),
-           n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                 FROM planted),
-           pairs AS (
-             SELECT a.vec_id AS id_a, b.vec_id AS id_b
-             FROM n a JOIN n b ON a.vec_id < b.vec_id
-             WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.8),
-           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                 UNION ALL SELECT id_b, id_a FROM pairs),
-           reach(id, r) AS (
-             SELECT vec_id, vec_id FROM planted
-             UNION
-             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-           c AS (SELECT id, CAST(min(r) AS BIGINT) AS cluster_id
-                 FROM reach GROUP BY id),
-           m AS (SELECT c.cluster_id, c.id, n.nrm
-                 FROM c JOIN n ON n.vec_id = c.id),
-           rnk AS (SELECT cluster_id, id, nrm,
-                     row_number() OVER (PARTITION BY cluster_id
-                                        ORDER BY nrm DESC, id) AS rn,
-                     count(*) OVER (PARTITION BY cluster_id) AS n_members,
-                     max(nrm) OVER (PARTITION BY cluster_id) AS keep_norm
-                   FROM m)
-         SELECT cluster_id, id AS keep_id, n_members,
-           round(keep_norm, 6) AS keep_norm
-         FROM rnk WHERE rn = 1 ORDER BY cluster_id""",
-
-    // Same brute-force contract as dedup_embedding_lsh: the wide config
-    // also carries recall 1.0 on the gapped corpus (finer buckets can
-    // only shrink candidates, and the 4-table OR keeps every planted
-    // pair), so its oracle is the identical SQL.
-    "dedup_embedding_lsh_wide" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            planted AS (
-              SELECT vec_id, vec FROM base
-              UNION ALL
-              SELECT vec_id + 100000 AS vec_id,
-                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
-                      for i in range(1, len(vec) + 1)] AS vec
-              FROM base WHERE vec_id % 10 = 0),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                  FROM planted)
-         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm), 6) AS cosine
-         FROM n a JOIN n b ON a.vec_id < b.vec_id
-         WHERE list_inner_product(a.vec, b.vec) / (a.nrm * b.nrm) >= 0.8
-         ORDER BY id_a, id_b""",
-
-    "q_range_join" ->
-      """WITH w AS (
-           SELECT event_id AS window_id, ts AS w_start,
-                  ts + INTERVAL 2 HOUR AS w_end
-           FROM events WHERE event_id % 499 = 0)
-         SELECT w.window_id, count(*) AS n_events
-         FROM w JOIN events e ON e.ts >= w.w_start AND e.ts < w.w_end
-         GROUP BY 1 ORDER BY 1""",
-
-    "pipeline_funnel" -> {
-      val hits = langHitsSql
-      val cases = langCaseSql
-      s"""WITH RECURSIVE
-           q AS (
-             SELECT doc_id, text, source,
-               CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
-               length(text) AS n_chars,
-               length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct,
-               $hits
-             FROM documents),
-           f AS (
-             SELECT doc_id, text, source FROM q
-             WHERE n_tokens >= 10
-               AND (CASE WHEN n_chars > 0
-                         THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000
-                         ELSE 0.0 END) < 0.2
-               AND (CASE $cases ELSE 'und' END) = 'en'),
-           t2 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM f),
-           d AS (SELECT doc_id,
-                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                  for i in range(1, len(toks) - 1)]) AS sh
-                 FROM t2 WHERE len(toks) >= 3),
-           pairs AS (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM d a JOIN d b ON a.doc_id < b.doc_id
-             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
-           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                 UNION ALL SELECT id_b, id_a FROM pairs),
-           reach(id, r) AS (
-             SELECT doc_id, doc_id FROM f
-             UNION
-             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-           keep AS (SELECT id AS doc_id FROM reach GROUP BY id HAVING min(r) = id),
-           kept AS (SELECT f.doc_id, f.text, f.source FROM f JOIN keep USING (doc_id)),
-           ranked AS (
-             SELECT doc_id, text, source,
-               row_number() OVER (PARTITION BY source
-                 ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
-               count(*) OVER (PARTITION BY source) AS n
-             FROM kept)
-         SELECT doc_id, source,
-           CAST(len(regexp_extract_all(text,
-             '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+'))
-             AS BIGINT) AS n_bpe
-         FROM ranked WHERE rn <= ceil(n * 0.5) ORDER BY doc_id"""
-    },
-
-    "pipeline_chunks" -> {
-      import graft.operators.Sampling.hexThreshold
-      s"""WITH planted AS (
-           SELECT doc_id,
-             text || ' reach me at user' || doc_id || '@example.com' AS text
-           FROM documents),
-          clean AS (
-           SELECT doc_id,
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(text,
-                     '${TextAnalysis.EmailRe}', '<EMAIL>', 'g'),
-                   '${TextAnalysis.Ipv4Re}', '<IP>', 'g'),
-                 '${TextAnalysis.LongNumRe}', '<NUM>', 'g'),
-               '${TextAnalysis.PhoneRe}', '<PHONE>', 'g') AS text
-           FROM planted),
-          tok AS (
-           SELECT doc_id, text, $tokensSql AS toks,
-             len($tokensSql) AS n
-           FROM clean WHERE NOT $blankSql),
-          kept AS (
-           SELECT doc_id, text, toks, n FROM tok
-           WHERE n >= 10
-             AND CAST(coalesce(list_max([len(list_filter(toks, y -> y = x))
-                                         for x in list_distinct(toks)]), 0)
-                      AS DOUBLE) / n <= 0.2),
-          sampled AS (
-           SELECT * FROM kept
-           WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-             < '${hexThreshold(0.5)}'),
-          chunks AS (
-           SELECT doc_id,
-             array_to_string(list_slice(toks, i*24 + 1, i*24 + 32), ' ') AS chunk_text
-           FROM sampled,
-             unnest(range(0, greatest(1,
-               CAST(ceil(CAST(n - 8 AS DOUBLE) / 24) AS INT)))) AS u(i))
-         SELECT doc_id, count(*) AS n_chunks,
-           CAST(sum(len(regexp_extract_all(chunk_text,
-             '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+')))
-             AS BIGINT) AS n_bpe
-         FROM chunks GROUP BY doc_id ORDER BY doc_id"""
-    },
-
-    "contamination_ngram" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-            d AS (SELECT doc_id,
-                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                   for i in range(1, len(toks) - 1)]) AS sh
-                  FROM t WHERE len(toks) >= 3)
-         SELECT a.doc_id AS doc_id, b.doc_id AS test_id,
-           CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_shared
-         FROM d a JOIN d b ON b.doc_id < 50 AND a.doc_id != b.doc_id
-         WHERE len(list_intersect(a.sh, b.sh)) >= 3
-         ORDER BY doc_id, test_id""",
-
-    "contamination_exact" ->
-      """WITH f AS (
-           SELECT doc_id AS test_id,
-             array_to_string((string_split(text, ' '))[6:13], ' ') AS frag
-           FROM documents
-           WHERE doc_id < 50 AND len(string_split(text, ' ')) >= 13)
-         SELECT d.doc_id, f.test_id
-         FROM documents d JOIN f ON position(f.frag IN d.text) > 0
-         ORDER BY d.doc_id, f.test_id""",
-
-    "contamination_exact_indexed" ->
-      """WITH f AS (
-           SELECT doc_id AS test_id,
-             array_to_string((string_split(text, ' '))[6:13], ' ') AS frag
-           FROM documents
-           WHERE doc_id < 50 AND len(string_split(text, ' ')) >= 13),
-          t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-          w AS (SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS win
-                FROM t, unnest(range(1, len(toks) - 6)) AS u(i)
-                WHERE len(toks) >= 8)
-         SELECT DISTINCT w.doc_id, f.test_id
-         FROM w JOIN f ON w.win = f.frag
-         ORDER BY w.doc_id, f.test_id""",
-
-    "sample_stratified" ->
-      """SELECT event_id, event_type FROM (
-           SELECT event_id, event_type,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS n
-           FROM events)
-         WHERE rn <= ceil(n * 0.1) ORDER BY event_id""",
-
-    // Fully independent re-derivation: counts → sqrt weights →
-    // 8-hex-digit thresholds (round half-up × 2^32, 'g' = keep-all) →
-    // kept rows. sqrt and the division are IEEE-correctly-rounded on
-    // both engines, so the thresholds — and therefore the row set —
-    // agree bit-for-bit at α = 0.5.
-    // Independent re-derivation of Sampling.uniformFromId's 52-bit
-    // uniform: per-hex-digit arithmetic instead of Spark's conv — the
-    // same integer, the same exactly-representable double.
-    "sample_weighted" ->
-      s"""WITH h AS (SELECT doc_id, n_chars,
-              substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
-            FROM documents WHERE n_chars > 0),
-            u AS (SELECT doc_id, n_chars,
-                    CAST(($md5DigitSumSql) + 1 AS DOUBLE)
-                      / 4503599627370496.0 AS u
-                  FROM h),
-            p AS (SELECT doc_id, n_chars,
-                    round(ln(u) / CAST(n_chars AS DOUBLE), 6) AS priority
-                  FROM u)
-         SELECT doc_id, n_chars, priority FROM p
-         ORDER BY priority DESC, doc_id LIMIT 50""",
-
-    "sample_weighted_strata" ->
-      s"""WITH h AS (SELECT doc_id, source, n_chars,
-              substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
-            FROM documents WHERE n_chars > 0),
-            u AS (SELECT doc_id, source, n_chars,
-                    CAST(($md5DigitSumSql) + 1 AS DOUBLE)
-                      / 4503599627370496.0 AS u
-                  FROM h),
-            p AS (SELECT doc_id, source,
-                    round(ln(u) / CAST(n_chars AS DOUBLE), 6) AS priority
-                  FROM u),
-            r AS (SELECT doc_id, source, priority,
-                    row_number() OVER (PARTITION BY source
-                      ORDER BY priority DESC, doc_id) AS rk
-                  FROM p)
-         SELECT doc_id, source, priority FROM r WHERE rk <= 10
-         ORDER BY source, priority DESC, doc_id""",
-
-    "sample_temperature" ->
-      """WITH c AS (SELECT lang AS s, count(*) AS n FROM documents GROUP BY 1),
-            m AS (SELECT min(n) AS nmin FROM c),
-            w AS (SELECT s, sqrt(CAST(nmin AS DOUBLE) / n) AS wt FROM c, m),
-            t AS (SELECT s,
-                    CASE WHEN CAST(round(wt * 4294967296) AS BIGINT) >= 4294967296
-                         THEN 'g'
-                         ELSE printf('%08x', CAST(round(wt * 4294967296) AS BIGINT))
-                    END AS thr
-                  FROM w)
-         SELECT d.doc_id, d.lang FROM documents d JOIN t ON d.lang = t.s
-         WHERE substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < t.thr
-         ORDER BY d.doc_id""",
-
-    "sample_hash_mixture" -> {
-      import graft.operators.Sampling.hexThreshold
-      s"""SELECT doc_id, source FROM documents
-         WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-           CASE source WHEN 'src0' THEN '${hexThreshold(0.5)}'
-                       WHEN 'src1' THEN '${hexThreshold(0.2)}'
-                       WHEN 'src3' THEN '${hexThreshold(1.0)}'
-                       ELSE '${hexThreshold(0.05)}' END
-         ORDER BY doc_id"""
-    },
-
-    "sample_token_budget" ->
-      s"""SELECT doc_id, source FROM (
-           SELECT doc_id, source,
-             coalesce(sum(n_tok) OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-           FROM (SELECT doc_id, source,
-                   CASE WHEN $blankSql THEN 0
-                        ELSE len($tokensSql) END AS n_tok
-                 FROM documents))
-         WHERE cum < 600 ORDER BY doc_id""",
-
-    // Training replayed, every document's ENCODED length re-derived, and
-    // the identical budget window run over those counts.
-    "sample_token_budget_bpe" -> {
-      val rounds = 8
-      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainCtes(rounds) +
-        s""",
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t FROM documents),
-           encw AS (SELECT doc_id,
-                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
-                           THEN len(string_split(trim($chained, '|'), '||'))
-                           ELSE 1 END AS ntok
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           d AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n
-                 FROM encw GROUP BY doc_id),
-           wd AS (SELECT dd.doc_id, dd.source, coalesce(d.n, 0) AS n_tok
-                  FROM documents dd LEFT JOIN d USING (doc_id))
-         SELECT doc_id, source FROM (
-           SELECT doc_id, source,
-             coalesce(sum(n_tok) OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-           FROM wd)
-         WHERE cum < 600 ORDER BY doc_id"""
-    },
-
-    // The unigram budget fill: per-doc Viterbi piece counts re-derived
-    // through the shared byte-DP CTEs, then the identical budget window
-    // over those counts.
-    "sample_token_budget_unigram" ->
-      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
-            sbwseg AS MATERIALIZED (
-              SELECT hw,
-                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
-              FROM bdp WHERE i = len(hw) // 2),
-            sbdoctok AS (SELECT doc_id, unnest($tokensSql) AS t
-                         FROM bdocs),
-            sbdocsum AS (SELECT d.doc_id, sum(w.n_pieces) AS np
-                         FROM sbdoctok d
-                         JOIN sbwseg w ON lower(hex(d.t)) = w.hw
-                         GROUP BY 1),
-            sbwd AS (SELECT dd.doc_id, dd.source,
-                       coalesce(np, 0) AS n_tok
-                     FROM documents dd
-                     LEFT JOIN sbdocsum s2 ON dd.doc_id = s2.doc_id)
-         SELECT doc_id, source FROM (
-           SELECT doc_id, source,
-             coalesce(sum(n_tok) OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-           FROM sbwd)
-         WHERE cum < 1200 ORDER BY doc_id""",
-
-    "corpus_shuffle" ->
-      """WITH h AS (
-           SELECT doc_id,
-             md5(CAST(doc_id AS VARCHAR) || 'r3') AS hh
-           FROM documents),
-          s AS (
-           SELECT doc_id, hh,
-             CAST(CAST(('0x' || substr(hh, 1, 8)) AS BIGINT) % 8 AS INT) AS shard
-           FROM h)
-         SELECT doc_id, shard,
-           CAST(row_number() OVER (PARTITION BY shard ORDER BY hh, doc_id)
-             AS INT) AS pos
-         FROM s ORDER BY shard, pos""",
-
-    "pack_sequences" ->
-      (packSeqCtes +
-        """
-         SELECT shard, seq_id, doc_id, tok_start, n_toks
-         FROM pieces ORDER BY shard, seq_id, doc_id"""),
-
-    // seq_pos comes from the same shared pieces CTE: a piece sits at 0
-    // when it continues a document across the cut, else at strt − seq·256.
-    "pack_doc_spans" ->
-      (packSeqCtes +
-        """
-         SELECT shard, seq_id, doc_id,
-           CAST(seq_pos AS BIGINT) AS span_start,
-           CAST(seq_pos + n_toks AS BIGINT) AS span_end
-         FROM pieces ORDER BY shard, seq_id, doc_id"""),
-
-    // One grouped pass over the packing map — the loader-team health
-    // report: sequence counts, split incidence, and fill (waste is the
-    // tail sequence only, since every non-last sequence is exactly
-    // seqLen by construction — asserted by the fill arithmetic itself).
-    "pack_report" ->
-      (packSeqCtes +
-        s""",
-          pd AS (SELECT shard, doc_id, count(*) AS pieces,
-                   sum(n_toks) AS dtoks, max(seq_id) AS mseq
-                 FROM pieces GROUP BY shard, doc_id)
-         SELECT shard,
-           CAST(max(mseq) + 1 AS BIGINT) AS n_seqs,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(pieces) AS BIGINT) AS n_pieces,
-           CAST(sum(CASE WHEN pieces > 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_split_docs,
-           CAST(sum(dtoks) AS BIGINT) AS total_tokens,
-           CAST((max(mseq) + 1) * 256 - sum(dtoks) AS BIGINT) AS tail_waste,
-           floor(CAST(sum(dtoks) AS DOUBLE) / ((max(mseq) + 1) * 256)
-             * 1000000 + 0.5) / 1000000 AS fill_frac
-         FROM pd GROUP BY shard ORDER BY shard"""),
-
-    "pack_bestfit" ->
-      (bfdCtes +
-        """
-         SELECT doc_id, CAST(bin - 1 AS BIGINT) AS seq_id,
-           n AS n_toks, pos AS seq_pos
-         FROM bfp WHERE i > 0 ORDER BY doc_id"""),
-
-    "pack_bestfit_report" ->
-      (bfdCtes +
-        """
-         SELECT CAST(0 AS INT) AS shard,
-           CAST(max(bin) AS BIGINT) AS n_seqs,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_pieces,
-           CAST(0 AS BIGINT) AS n_split_docs,
-           CAST(sum(n) AS BIGINT) AS total_tokens,
-           CAST(max(bin) * 256 - sum(n) AS BIGINT) AS tail_waste,
-           floor(CAST(sum(n) AS DOUBLE) / (max(bin) * 256)
-             * 1000000 + 0.5) / 1000000 AS fill_frac
-         FROM bfp WHERE i > 0"""),
-
-    "sample_mixture" ->
-      """SELECT doc_id, source FROM (
-           SELECT doc_id, source,
-             CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.2
-                         WHEN 'src3' THEN 1.0 ELSE 0.05 END AS w,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
-             count(*) OVER (PARTITION BY source) AS n
-           FROM documents)
-         WHERE rn <= ceil(n * w) ORDER BY doc_id""",
-
-    "dedup_minhash_clusters" ->
-      """WITH RECURSIVE
-           t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           d AS (SELECT doc_id,
-                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                  for i in range(1, len(toks) - 1)]) AS sh
-                 FROM t WHERE len(toks) >= 3),
-           pairs AS (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM d a JOIN d b ON a.doc_id < b.doc_id
-             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
-           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                 UNION ALL SELECT id_b, id_a FROM pairs),
-           reach(id, r) AS (
-             SELECT doc_id, doc_id FROM documents
-             UNION
-             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id)
-         SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-         FROM reach GROUP BY id ORDER BY doc_id""",
-
-    "dedup_canonical" ->
-      """WITH RECURSIVE
-           t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           d AS (SELECT doc_id,
-                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                  for i in range(1, len(toks) - 1)]) AS sh
-                 FROM t WHERE len(toks) >= 3),
-           pairs AS (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM d a JOIN d b ON a.doc_id < b.doc_id
-             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
-           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                 UNION ALL SELECT id_b, id_a FROM pairs),
-           reach(id, r) AS (
-             SELECT doc_id, doc_id FROM documents
-             UNION
-             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-           c AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-                 FROM reach GROUP BY id),
-           m AS (SELECT c.cluster_id, c.doc_id,
-                   CAST(length(documents.text) AS BIGINT) AS q
-                 FROM c JOIN documents USING (doc_id)),
-           rnk AS (SELECT cluster_id, doc_id, q,
-                     row_number() OVER (PARTITION BY cluster_id
-                                        ORDER BY q DESC, doc_id) AS rn,
-                     count(*) OVER (PARTITION BY cluster_id) AS n_members,
-                     max(q) OVER (PARTITION BY cluster_id) AS keep_quality
-                   FROM m)
-         SELECT cluster_id, doc_id AS keep_id, n_members, keep_quality
-         FROM rnk WHERE rn = 1 ORDER BY cluster_id""",
-
-    // quantile_cont == Spark's percentile (the q_percentile-established
-    // mapping); bin = 1 + Σ indicator(score > boundary), same ints.
-    "sample_curriculum" ->
-      """WITH b AS (SELECT quantile_cont(n_chars, 0.25) AS b1,
-               quantile_cont(n_chars, 0.5) AS b2,
-               quantile_cont(n_chars, 0.75) AS b3
-             FROM documents)
-         SELECT doc_id, n_chars,
-           CAST(1 + (n_chars > b1)::INT + (n_chars > b2)::INT
-              + (n_chars > b3)::INT AS INT) AS bin
-         FROM documents, b ORDER BY doc_id""",
-
-    // Same cluster derivation as dedup_canonical, then the md5-threshold
-    // split ladder on cluster_id (thresholds interpolated from the same
-    // hexThreshold the Spark side uses).
-    "split_leakage_safe" -> {
-      import graft.operators.Sampling.hexThreshold
-      s"""WITH RECURSIVE
-           t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-           d AS (SELECT doc_id,
-                   list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                  for i in range(1, len(toks) - 1)]) AS sh
-                 FROM t WHERE len(toks) >= 3),
-           pairs AS (
-             SELECT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM d a JOIN d b ON a.doc_id < b.doc_id
-             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8),
-           e AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                 UNION ALL SELECT id_b, id_a FROM pairs),
-           reach(id, r) AS (
-             SELECT doc_id, doc_id FROM documents
-             UNION
-             SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.id),
-           c AS (SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
-                 FROM reach GROUP BY id)
-         SELECT doc_id, cluster_id,
-           CASE WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8)
-                  < '${hexThreshold(0.8)}' THEN 'train'
-                WHEN substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8)
-                  < '${hexThreshold(0.9)}' THEN 'val'
-                ELSE 'test' END AS split
-         FROM c ORDER BY doc_id"""
-    },
-
-    // Exact brute force old x new over the same planted construction —
-    // the incremental LSH path returns exactly this set on the gapped
-    // corpus (recall 1 at 8x4, anchored like dedup_embedding_lsh).
-    "dedup_embedding_incremental" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            newb AS (
-              SELECT vec_id + 100000 AS vec_id,
-                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
-                      for i in range(1, len(vec) + 1)] AS vec
-              FROM base WHERE vec_id % 10 = 0),
-            no AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                   FROM base),
-            nn AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                   FROM newb)
-         SELECT o.vec_id AS old_id, n.vec_id AS new_id,
-           round(list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm), 6) AS cosine
-         FROM no o JOIN nn n ON true
-         WHERE list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm) >= 0.8
-         ORDER BY old_id, new_id""",
-
-    // Same planted construction, streamed: arrival order is ts = vec_id,
-    // so the within-stream operator's answer is again exact brute-force
-    // old x new (originals precede their twins; no other pair reaches
-    // the threshold on the gapped corpus, sf0.01 AND sf0.1).
-    "dedup_embedding_stream" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            newb AS (
-              SELECT vec_id + 100000 AS vec_id,
-                     [vec[i] + vec[len(vec) + 1 - i] * 0.01
-                      for i in range(1, len(vec) + 1)] AS vec
-              FROM base WHERE vec_id % 10 = 0),
-            no AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                   FROM base),
-            nn AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm
-                   FROM newb)
-         SELECT o.vec_id AS old_id, n.vec_id AS new_id,
-           round(list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm), 6) AS cosine
-         FROM no o JOIN nn n ON true
-         WHERE list_inner_product(o.vec, n.vec) / (o.nrm * n.nrm) >= 0.8
-         ORDER BY old_id, new_id""",
-
-    "dedup_incremental" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-            d AS (SELECT doc_id,
-                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                   for i in range(1, len(toks) - 1)]) AS sh
-                  FROM t WHERE len(toks) >= 3),
-            side_old AS (SELECT * FROM d WHERE doc_id % 4 <> 0),
-            side_new AS (SELECT * FROM d WHERE doc_id % 4 = 0)
-         SELECT o.doc_id AS old_id, n.doc_id AS new_id,
-           CAST(len(list_intersect(o.sh, n.sh)) AS DOUBLE)
-             / (len(o.sh) + len(n.sh) - len(list_intersect(o.sh, n.sh))) AS jaccard
-         FROM side_old o JOIN side_new n ON true
-         WHERE CAST(len(list_intersect(o.sh, n.sh)) AS DOUBLE)
-             / (len(o.sh) + len(n.sh) - len(list_intersect(o.sh, n.sh))) >= 0.8
-         ORDER BY new_id, old_id""",
-
-    "url_normalize" ->
-      """WITH u AS (
-           SELECT (CASE WHEN event_id % 2 = 0 THEN 'HTTP://WWW.Ex'
-                        ELSE 'https://ex' END)
-               || (event_id % 5) || '.COM/' || event_type || '/item'
-               || (user_id % 100)
-               || (CASE WHEN event_id % 3 = 0 THEN '/?utm_source=feed&b=2&a=1'
-                        WHEN event_id % 3 = 1 THEN '?b=2&a=1#frag'
-                        ELSE '?a=1&b=2&gclid=xyz' END) AS url
-           FROM events),
-         s1 AS (SELECT split_part(trim(url), '#', 1) AS no_frag FROM u),
-         s2 AS (SELECT
-             regexp_replace(regexp_replace(split_part(no_frag, '?', 1),
-               '^[Hh][Tt][Tt][Pp][Ss]?://', ''), '^[Ww]{3}\.', '') AS rest,
-             split_part(no_frag, '?', 2) AS query
-           FROM s1),
-         s3 AS (SELECT
-             lower(split_part(rest, '/', 1)) AS host,
-             regexp_replace(regexp_replace(rest, '^[^/]*', ''), '/+$', '') AS path,
-             list_sort(list_filter(string_split(query, '&'),
-               p -> NOT (starts_with(p, 'utm_') OR starts_with(p, 'gclid=')
-                         OR starts_with(p, 'fbclid=') OR p = ''))) AS kept
-           FROM s2),
-         n AS (SELECT 'https://' || host || path ||
-             (CASE WHEN len(kept) = 0 THEN ''
-                   ELSE '?' || array_to_string(kept, '&') END) AS url_norm
-           FROM s3)
-         SELECT url_norm, count(*) AS n FROM n
-         GROUP BY url_norm ORDER BY url_norm""",
-
-    "fuzzy_key_join" ->
-      """WITH keys AS (
-           SELECT p_name AS key FROM part
-           UNION ALL
-           SELECT substr(p_name, 1, 2) || substr(p_name, 4) AS key
-           FROM part WHERE p_partkey < 30),
-         dk AS (SELECT DISTINCT key FROM keys)
-         SELECT a.key AS key_a, b.key AS key_b,
-           levenshtein(a.key, b.key) AS dist
-         FROM dk a JOIN dk b ON a.key < b.key
-         WHERE levenshtein(a.key, b.key) <= 1
-         ORDER BY key_a, key_b""",
-
-    "dedup_bloom_admission" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 4 <> 0),
-         batch AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
-           UNION ALL
-           SELECT doc_id + 200000 AS doc_id, text FROM corpus WHERE doc_id < 40)
-         SELECT b.doc_id FROM batch b
-         WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)
-         ORDER BY doc_id""",
-
-    "dedup_span" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-            w AS (SELECT doc_id,
-                    [array_to_string(toks[i:i+5], ' ')
-                     for i in range(1, len(toks) - 4)] AS wins
-                  FROM t WHERE len(toks) >= 6),
-            e AS (SELECT doc_id, unnest(wins) AS win FROM w),
-            g AS (SELECT win, count(DISTINCT doc_id) AS nd FROM e GROUP BY win),
-            j AS (SELECT e.doc_id,
-                    CASE WHEN g.nd >= 2 THEN 1 ELSE 0 END AS isdup
-                  FROM e JOIN g USING (win))
-         SELECT doc_id, count(*) AS n_windows,
-           CAST(sum(isdup) AS BIGINT) AS n_dup_windows,
-           round(CAST(sum(isdup) AS DOUBLE) / count(*), 6) AS dup_frac
-         FROM j GROUP BY doc_id ORDER BY doc_id""",
-
-    // Self-certifying estimator (see q_approx_quantile's query comment):
-    // the oracle is the deterministic remainder — group counts + `true`.
-    "q_approx_quantile" ->
-      """SELECT l_returnflag, count(*) AS n, true AS p50_ok, true AS p95_ok
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "dedup_span_incremental" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-            w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
-                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
-                  WHERE len(toks) >= 6),
-            idx AS (SELECT DISTINCT win FROM w WHERE doc_id % 4 <> 0),
-            b AS (SELECT doc_id, win FROM w WHERE doc_id % 4 = 0),
-            j AS (SELECT b.doc_id,
-                    CASE WHEN idx.win IS NOT NULL THEN 1 ELSE 0 END AS hit
-                  FROM b LEFT JOIN idx USING (win))
-         SELECT doc_id, count(*) AS n_windows,
-           CAST(sum(hit) AS BIGINT) AS n_indexed_windows,
-           round(CAST(sum(hit) AS DOUBLE) / count(*), 6) AS overlap_frac
-         FROM j GROUP BY doc_id ORDER BY doc_id""",
-
-    // The two-batch loop replayed with exact logic against the growing
-    // corpus: batch-1 admissions join the corpus before batch 2 is
-    // checked. Stage mirror: exact = text equality; near = brute 3-gram
-    // Jaccard >= 0.8 on exact-new survivors; span = 6-token-window
-    // overlap > 0.5; within = greater id of each surviving near-dup pair.
-    "ingest_loop" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
-                    FROM documents),
-            sh AS (SELECT doc_id,
-                     list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                    for i in range(1, len(toks) - 1)]) AS sh
-                   FROM t WHERE len(toks) >= 3),
-            w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
-                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
-                  WHERE len(toks) >= 6),
-            c1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 >= 2),
-            b1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 = 0),
-            x1 AS (SELECT b.doc_id FROM b1 b
-                   WHERE EXISTS (SELECT 1 FROM c1 c WHERE c.text = b.text)),
-            s1 AS (SELECT doc_id, text FROM b1
-                   WHERE doc_id NOT IN (SELECT doc_id FROM x1)),
-            n1 AS (SELECT DISTINCT ns.doc_id
-                   FROM s1 JOIN sh ns ON ns.doc_id = s1.doc_id
-                        JOIN c1 ON true
-                        JOIN sh cs ON cs.doc_id = c1.doc_id
-                   WHERE CAST(len(list_intersect(cs.sh, ns.sh)) AS DOUBLE)
-                     / (len(cs.sh) + len(ns.sh) - len(list_intersect(cs.sh, ns.sh)))
-                     >= 0.8),
-            p1 AS (SELECT bw.doc_id
-                   FROM (SELECT s1.doc_id, w.win FROM s1
-                         JOIN w ON w.doc_id = s1.doc_id) bw
-                   LEFT JOIN (SELECT DISTINCT w.win FROM w
-                              JOIN c1 ON w.doc_id = c1.doc_id) iw
-                     ON bw.win = iw.win
-                   GROUP BY bw.doc_id
-                   HAVING CAST(sum(CASE WHEN iw.win IS NOT NULL THEN 1 ELSE 0 END)
-                       AS DOUBLE) / count(*) > 0.5),
-            wb1 AS (SELECT DISTINCT b.doc_id
-                    FROM s1 a JOIN sh sa ON sa.doc_id = a.doc_id
-                         JOIN s1 b ON a.doc_id < b.doc_id
-                         JOIN sh sb ON sb.doc_id = b.doc_id
-                    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-                      >= 0.8),
-            r1 AS (SELECT doc_id, 'exact_dup_of_corpus' AS reason FROM x1
-                   UNION SELECT doc_id, 'near_dup_of_corpus' FROM n1
-                   UNION SELECT doc_id, 'span_overlap_with_corpus' FROM p1
-                   UNION SELECT doc_id, 'near_dup_within_batch' FROM wb1),
-            c2 AS (SELECT * FROM c1
-                   UNION ALL
-                   SELECT doc_id, text FROM b1
-                   WHERE doc_id NOT IN (SELECT doc_id FROM r1)),
-            b2 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 = 1),
-            x2 AS (SELECT b.doc_id FROM b2 b
-                   WHERE EXISTS (SELECT 1 FROM c2 c WHERE c.text = b.text)),
-            s2 AS (SELECT doc_id, text FROM b2
-                   WHERE doc_id NOT IN (SELECT doc_id FROM x2)),
-            n2 AS (SELECT DISTINCT ns.doc_id
-                   FROM s2 JOIN sh ns ON ns.doc_id = s2.doc_id
-                        JOIN c2 ON true
-                        JOIN sh cs ON cs.doc_id = c2.doc_id
-                   WHERE CAST(len(list_intersect(cs.sh, ns.sh)) AS DOUBLE)
-                     / (len(cs.sh) + len(ns.sh) - len(list_intersect(cs.sh, ns.sh)))
-                     >= 0.8),
-            p2 AS (SELECT bw.doc_id
-                   FROM (SELECT s2.doc_id, w.win FROM s2
-                         JOIN w ON w.doc_id = s2.doc_id) bw
-                   LEFT JOIN (SELECT DISTINCT w.win FROM w
-                              JOIN c2 ON w.doc_id = c2.doc_id) iw
-                     ON bw.win = iw.win
-                   GROUP BY bw.doc_id
-                   HAVING CAST(sum(CASE WHEN iw.win IS NOT NULL THEN 1 ELSE 0 END)
-                       AS DOUBLE) / count(*) > 0.5),
-            wb2 AS (SELECT DISTINCT b.doc_id
-                    FROM s2 a JOIN sh sa ON sa.doc_id = a.doc_id
-                         JOIN s2 b ON a.doc_id < b.doc_id
-                         JOIN sh sb ON sb.doc_id = b.doc_id
-                    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-                      >= 0.8),
-            r2 AS (SELECT doc_id, 'exact_dup_of_corpus' AS reason FROM x2
-                   UNION SELECT doc_id, 'near_dup_of_corpus' FROM n2
-                   UNION SELECT doc_id, 'span_overlap_with_corpus' FROM p2
-                   UNION SELECT doc_id, 'near_dup_within_batch' FROM wb2)
-         SELECT batch, doc_id, reason FROM (
-           SELECT CAST(1 AS BIGINT) AS batch, doc_id, reason FROM r1
-           UNION ALL
-           SELECT CAST(2 AS BIGINT) AS batch, doc_id, reason FROM r2)
-         ORDER BY batch, doc_id, reason""",
-
-    // The batch-1 slice of the `ingest_loop` oracle: one admission pass
-    // against the static build corpus (no append, no second batch).
-    // Both models retrained from scratch on the trusted slice, every
-    // gate replayed over the batch slice: heuristic quality arithmetic,
-    // the language argmax, the full stupid-backoff chain WITH the OOV
-    // floor (cross-scoring makes it reachable, unlike the self-scored
-    // text_ngram_logprob), NB Laplace smoothing + prior, and the exact
-    // threshold comparisons.
-    "ingest_gate_model" ->
-      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 4 >= 2),
-            batch AS (SELECT * FROM documents WHERE doc_id % 4 = 0),
-            qf AS (SELECT doc_id, length(text) AS n_chars,
-                     CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
-                     length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct
-                   FROM batch),
-            qg AS (SELECT doc_id,
-                     floor((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-                       * (1.0 - least((CASE WHEN n_chars > 0
-                            THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000
-                            ELSE 0.0 END) * 5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS q
-                   FROM qf),
-            lf AS (SELECT doc_id,
-                     $langHitsSql
-                   FROM batch),
-            langp AS (SELECT doc_id, CASE $langCaseSql ELSE 'und' END AS lang_pred
-                      FROM lf),
-            cd AS (SELECT doc_id, $tokensSql AS ts FROM corpus),
-            cg0 AS (SELECT doc_id,
-                      [struct_pack(cur := ts[i],
-                         p1 := CASE WHEN i >= 2 THEN ts[i-1] END,
-                         p2 := CASE WHEN i >= 3 THEN ts[i-2] END)
-                       for i in range(1, len(ts) + 1)] AS gs
-                    FROM cd),
-            cg AS (SELECT u.cur AS cur, u.p1 AS p1, u.p2 AS p2
-                   FROM (SELECT unnest(gs) AS u FROM cg0)),
-            uni AS (SELECT cur, count(*) AS c1 FROM cg GROUP BY 1),
-            tot AS (SELECT sum(c1) AS total FROM uni),
-            bi AS (SELECT p1, cur, count(*) AS c2 FROM cg
-                   WHERE p1 IS NOT NULL GROUP BY 1, 2
-                   HAVING count(*) >= 2),
-            tri AS (SELECT p2, p1, cur, count(*) AS c3 FROM cg
-                    WHERE p2 IS NOT NULL GROUP BY 1, 2, 3
-                    HAVING count(*) >= 2),
-            bd AS (SELECT doc_id, $tokensSql AS ts FROM batch),
-            bg0 AS (SELECT doc_id,
-                      [struct_pack(cur := ts[i],
-                         p1 := CASE WHEN i >= 2 THEN ts[i-1] END,
-                         p2 := CASE WHEN i >= 3 THEN ts[i-2] END)
-                       for i in range(1, len(ts) + 1)] AS gs
-                    FROM bd),
-            g AS (SELECT doc_id, u.cur AS cur, u.p1 AS p1, u.p2 AS p2
-                  FROM (SELECT doc_id, unnest(gs) AS u FROM bg0)),
-            sp AS (SELECT g.doc_id,
-                     CASE WHEN g.p2 IS NOT NULL THEN
-                            CASE WHEN t3.c3 IS NOT NULL
-                                 THEN CAST(t3.c3 AS DOUBLE) / b2.c2ctx
-                                 ELSE 0.4 * (CASE WHEN b.c2 IS NOT NULL
-                                   THEN CAST(b.c2 AS DOUBLE) / u1.c1p
-                                   ELSE 0.4 * (coalesce(CAST(u.c1 AS DOUBLE), 1.0)
-                                     / tot.total) END)
-                            END
-                          WHEN g.p1 IS NOT NULL THEN
-                            CASE WHEN b.c2 IS NOT NULL
-                                 THEN CAST(b.c2 AS DOUBLE) / u1.c1p
-                                 ELSE 0.4 * (coalesce(CAST(u.c1 AS DOUBLE), 1.0)
-                                   / tot.total) END
-                          ELSE coalesce(CAST(u.c1 AS DOUBLE), 1.0) / tot.total
-                     END AS p
-                   FROM g LEFT JOIN uni u ON g.cur = u.cur
-                     CROSS JOIN tot
-                     LEFT JOIN (SELECT cur AS tok, c1 AS c1p FROM uni) u1
-                       ON g.p1 = u1.tok
-                     LEFT JOIN bi b ON g.p1 = b.p1 AND g.cur = b.cur
-                     LEFT JOIN (SELECT p1 AS ctx2, cur AS ctx1, c2 AS c2ctx
-                                FROM bi) b2
-                       ON g.p2 = b2.ctx2 AND g.p1 = b2.ctx1
-                     LEFT JOIN tri t3
-                       ON g.p2 = t3.p2 AND g.p1 = t3.p1 AND g.cur = t3.cur),
-            nlr AS (SELECT doc_id,
-                      CAST(round(-ln(p), 6) AS DECIMAL(18,6)) AS nl FROM sp),
-            lms AS (SELECT doc_id,
-                      CAST(sum(nl) AS DOUBLE) / count(*) AS anlp
-                    FROM nlr GROUP BY doc_id),
-            clab AS (SELECT doc_id,
-                       (CAST(substring(source, 4, 8) AS INT) % 2 = 0) AS y, text
-                     FROM corpus),
-            ctok AS (SELECT doc_id, y, unnest($tokensSql) AS token FROM clab),
-            cnt AS (SELECT token,
-                      sum(CASE WHEN y THEN 1 ELSE 0 END) AS c_pos,
-                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS c_neg
-                    FROM ctok GROUP BY 1),
-            ntot AS (SELECT sum(c_pos) AS tot_pos, sum(c_neg) AS tot_neg,
-                       count(*) AS vocab FROM cnt),
-            pri AS (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
-                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
-                    FROM clab),
-            btok AS (SELECT doc_id, unnest($tokensSql) AS token FROM batch),
-            nbl AS (SELECT t.doc_id,
-                      CAST(round(ln(
-                        (CAST(coalesce(c.c_pos, 0) + 1 AS DOUBLE)
-                           / CAST(ntot.tot_pos + ntot.vocab AS DOUBLE))
-                        / (CAST(coalesce(c.c_neg, 0) + 1 AS DOUBLE)
-                           / CAST(ntot.tot_neg + ntot.vocab AS DOUBLE))), 6)
-                        AS DECIMAL(18,6)) AS llr
-                    FROM btok t LEFT JOIN cnt c ON t.token = c.token
-                      CROSS JOIN ntot),
-            nba AS (SELECT doc_id, sum(llr) AS sd FROM nbl GROUP BY 1),
-            npr AS (SELECT CAST(round(ln(CAST(n_pos + 1 AS DOUBLE)
-                      / CAST(n_neg + 1 AS DOUBLE)), 6) AS DECIMAL(18,6))
-                      AS prior FROM pri),
-            nbs AS (SELECT doc_id,
-                      (sd + prior > CAST(0 AS DECIMAL(18,6))) AS predict_pos
-                    FROM nba CROSS JOIN npr)
-         SELECT doc_id, reason FROM (
-           SELECT doc_id, 'low_quality' AS reason FROM qg WHERE q < 0.3
-           UNION ALL
-           SELECT doc_id, 'lang_not_allowed' FROM langp
-           WHERE lang_pred NOT IN ('de', 'en', 'es', 'fr')
-           UNION ALL
-           SELECT doc_id, 'lm_perplexity' FROM lms WHERE anlp > 4.2
-           UNION ALL
-           SELECT doc_id, 'classifier_rejected' FROM nbs WHERE NOT predict_pos)
-         ORDER BY doc_id, reason""",
-
-    "ingest_admit" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
-                    FROM documents),
-            sh AS (SELECT doc_id,
-                     list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                    for i in range(1, len(toks) - 1)]) AS sh
-                   FROM t WHERE len(toks) >= 3),
-            w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
-                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
-                  WHERE len(toks) >= 6),
-            c1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 >= 2),
-            b1 AS (SELECT doc_id, text FROM t WHERE doc_id % 4 = 0),
-            x1 AS (SELECT b.doc_id FROM b1 b
-                   WHERE EXISTS (SELECT 1 FROM c1 c WHERE c.text = b.text)),
-            s1 AS (SELECT doc_id, text FROM b1
-                   WHERE doc_id NOT IN (SELECT doc_id FROM x1)),
-            n1 AS (SELECT DISTINCT ns.doc_id
-                   FROM s1 JOIN sh ns ON ns.doc_id = s1.doc_id
-                        JOIN c1 ON true
-                        JOIN sh cs ON cs.doc_id = c1.doc_id
-                   WHERE CAST(len(list_intersect(cs.sh, ns.sh)) AS DOUBLE)
-                     / (len(cs.sh) + len(ns.sh) - len(list_intersect(cs.sh, ns.sh)))
-                     >= 0.8),
-            p1 AS (SELECT bw.doc_id
-                   FROM (SELECT s1.doc_id, w.win FROM s1
-                         JOIN w ON w.doc_id = s1.doc_id) bw
-                   LEFT JOIN (SELECT DISTINCT w.win FROM w
-                              JOIN c1 ON w.doc_id = c1.doc_id) iw
-                     ON bw.win = iw.win
-                   GROUP BY bw.doc_id
-                   HAVING CAST(sum(CASE WHEN iw.win IS NOT NULL THEN 1 ELSE 0 END)
-                       AS DOUBLE) / count(*) > 0.5),
-            wb1 AS (SELECT DISTINCT b.doc_id
-                    FROM s1 a JOIN sh sa ON sa.doc_id = a.doc_id
-                         JOIN s1 b ON a.doc_id < b.doc_id
-                         JOIN sh sb ON sb.doc_id = b.doc_id
-                    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                      / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))
-                      >= 0.8),
-            r1 AS (SELECT doc_id, 'exact_dup_of_corpus' AS reason FROM x1
-                   UNION SELECT doc_id, 'near_dup_of_corpus' FROM n1
-                   UNION SELECT doc_id, 'span_overlap_with_corpus' FROM p1
-                   UNION SELECT doc_id, 'near_dup_within_batch' FROM wb1)
-         SELECT doc_id, reason FROM r1 ORDER BY doc_id, reason""",
-
-    "dedup_span_excise" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, text
-                    FROM documents),
-            w AS (SELECT doc_id, i - 1 AS pos,
-                    array_to_string(toks[i:i+5], ' ') AS win
-                  FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
-                  WHERE len(toks) >= 6),
-            r AS (SELECT doc_id, pos,
-                    row_number() OVER (PARTITION BY win ORDER BY doc_id, pos) AS rn,
-                    count(*) OVER (PARTITION BY win) AS n
-                  FROM w),
-            m AS (SELECT doc_id, list(pos ORDER BY pos) AS starts
-                  FROM r WHERE n > 1 AND rn > 1 GROUP BY doc_id)
-         SELECT t.doc_id,
-           CASE WHEN m.starts IS NULL THEN t.text
-                ELSE coalesce(array_to_string(
-                  [toks[i] for i in range(1, len(toks) + 1)
-                   if len(list_filter(m.starts,
-                         s -> i - 1 >= s AND i - 1 < s + 6)) = 0], ' '), '')
-           END AS clean_text
-         FROM t LEFT JOIN m USING (doc_id)
-         ORDER BY doc_id""",
-
-    "dedup_ngram_jaccard" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-            d AS (SELECT doc_id,
-                    list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                   for i in range(1, len(toks) - 1)]) AS sh
-                  FROM t WHERE len(toks) >= 3)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jaccard
-         FROM d a JOIN d b ON b.doc_id = a.doc_id + 1
-         ORDER BY id_a""",
-
-    "sim_centroids" ->
-      """WITH e AS (SELECT label, embedding::DOUBLE[] AS vec FROM embeddings)
-         SELECT label, count(*) AS n,
-           round(sum(vec[1]) / count(*), 6) AS c0,
-           round(sum(vec[64]) / count(*), 6) AS c63
-         FROM e GROUP BY label ORDER BY label""",
-
-    "sim_topk_bruteforce" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id AS query_id, vec AS qvec, nrm AS qnrm FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk <= 5 ORDER BY query_id, rk""",
-
-    // Multi-table ANN at the registered parameters covers every exact
-    // top-5 neighbor, so its oracle is brute-force top-k verbatim.
-    "sim_ann_lsh" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id AS query_id, vec AS qvec, nrm AS qnrm FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk <= 5 ORDER BY query_id, rk""",
-
-    // Planted-twin top-1 where the twin's survival is STRUCTURAL (the
-    // reduced-space score is maximized exactly at cz = qz — see the
-    // query comment), so brute-force top-1 holds train → project →
-    // reduced scan → re-rank to exact equality.
-    "sim_pca_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // Planted-copy top-1 (the sim_ivf_top1 protocol): the measured ADC
-    // rank of every planted original is 1, rerank=32 is the headroom, so
-    // the full PQ pipeline is held to brute-force top-1 verbatim.
-    "sim_pq_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // The persisted-store probe answers the same question as the
-    // in-query form — planted-twin top-1 over the same corpus — so the
-    // identical brute-force oracle holds it; what changes is WHAT is
-    // exercised (stored codes + codebooks + version fence + key-pushed
-    // fetch), not the answer.
-    "sim_pq_store" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // nProbe=1 is provably exact for planted-copy queries (the query's
-    // nearest centroid IS its twin's list), so the same top-1 oracle
-    // holds IVF-PQ at its most selective config.
-    "sim_ivfpq_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // Residual (true-IVFADC) codes answer the same planted-twin
-    // question — the twin guarantee and rerank headroom are unchanged —
-    // so the identical brute-force top-1 oracle holds the residual
-    // train/encode/probe pipeline to exact equality.
-    "sim_ivfpq_residual" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // The persisted IVF-PQ probe answers the same planted-twin question;
-    // the brute-force oracle transfers unchanged.
-    "sim_ivfpq_store" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // The persisted residual-IVFADC probe answers the same planted-twin
-    // question through the `_ivfr` family; the brute-force oracle
-    // transfers unchanged.
-    "sim_ivfadc_store" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // The hierarchical probe replays the assignment's own two-step
-    // argmin, so the twin guarantee — and therefore the brute-force
-    // top-1 oracle — transfers unchanged from the flat IVF.
-    "sim_ivf_hier" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // Multi-probe only ADDS cells around the pinned descent cell and
-    // scores exact cosine, so the twin still wins and the identical
-    // brute-force top-1 oracle holds at nProbe=4.
-    "sim_ivf_hier_multi" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    // IVF at nProbe=1 returns the exact nearest neighbor for the planted
-    // twin queries (the twin's list is always the probed list), so its
-    // oracle is brute-force top-1 over the same planted query set.
-    "sim_ivf_top1" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            q AS (SELECT vec_id + 100000 AS query_id, vec AS qvec, nrm AS qnrm
-                  FROM n WHERE vec_id < 10),
-            scored AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                list_inner_product(c.vec, q.qvec) / (c.nrm * q.qnrm) AS cosine
-              FROM n c, q WHERE c.vec_id <> q.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM scored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk = 1 ORDER BY query_id""",
-
-    "sim_quantized_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            n AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            m AS (SELECT vec_id, vec,
-                    list_max(list_transform(vec, x -> abs(x))) AS ma FROM v),
-            qz AS (SELECT vec_id,
-                     CASE WHEN ma = 0
-                          THEN list_transform(vec, x -> CAST(0 AS DOUBLE))
-                          ELSE list_transform(vec, x -> CAST(CAST(
-                            round(x * 127.0 / ma) AS INTEGER) AS DOUBLE)) END AS codes
-                   FROM m),
-            qn AS (SELECT vec_id, codes,
-                     sqrt(list_inner_product(codes, codes)) AS cn FROM qz),
-            qq AS (SELECT vec_id AS query_id, codes AS qcodes, cn AS qcn
-                   FROM qn WHERE vec_id < 10),
-            approx AS (
-              SELECT q.query_id, c.vec_id AS cand_id,
-                CASE WHEN c.cn * q.qcn = 0 THEN NULL
-                     ELSE list_inner_product(c.codes, q.qcodes) / (c.cn * q.qcn)
-                END AS acos
-              FROM qn c, qq q WHERE c.vec_id <> q.query_id),
-            cand AS (
-              SELECT query_id, cand_id FROM (
-                SELECT query_id, cand_id,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY acos DESC, cand_id) AS ark
-                FROM approx) WHERE ark <= 20),
-            rescored AS (
-              SELECT cand.query_id, cand.cand_id,
-                list_inner_product(c.vec, q.vec) / (c.nrm * q.nrm) AS cosine
-              FROM cand JOIN n c ON c.vec_id = cand.cand_id
-                        JOIN n q ON q.vec_id = cand.query_id),
-            ranked AS (
-              SELECT query_id, cand_id, cosine,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, cand_id) AS rk
-              FROM rescored)
-         SELECT query_id, rk, cand_id, round(cosine, 6) AS cosine
-         FROM ranked WHERE rk <= 5 ORDER BY query_id, rk""",
-
-    "text_token_stats" ->
-      s"""SELECT doc_id,
-         CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
-         length(text) AS len_chars
-         FROM documents ORDER BY doc_id""",
-
-    "text_bpe_tokens" ->
-      s"""SELECT doc_id,
-         CAST(len(regexp_extract_all(text,
-           '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+'))
-           AS BIGINT) AS n_bpe,
-         CAST(CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END
-           AS BIGINT) AS n_ws
-         FROM documents ORDER BY doc_id""",
-
-    // All 8 training rounds replayed as chained CTEs: pair counts from
-    // the double-separator symbol strings, the (freq DESC, l, r) argmax,
-    // and the SAME literal replace the Spark side applies (the
-    // double-bar encoding makes replace-all's non-overlapping scan a
-    // correct greedy merge — see TextAnalysis.bpeTrain).
-    "text_unigram_train" ->
-      s"""WITH $unigramTrainCtes
-         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
-           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T AS DOUBLE))
-             * 1000000 + 0.5) AS BIGINT) AS logp_micro
-         FROM ukeep CROSS JOIN utot
-         WHERE length(piece) >= 2
-         ORDER BY cnt DESC, piece LIMIT 40""",
-
-    // The Viterbi DP as a recursive CTE: one level per character
-    // position, each row carrying a 4-slot sliding window of DP states
-    // encoded as key = score_micro·2^20 − n_pieces (maximizing the key
-    // IS maximizing (score, fewest pieces) for n < 2^20 — corpus words
-    // are far shorter). Missing length-1 pieces take the −20e6 UNK
-    // penalty; missing longer pieces get a −4e18 sentinel. All exact
-    // BIGINT arithmetic — the quantization to micro-nats happened once
-    // in ptab.
-    "text_unigram_segment" ->
-      s"""WITH RECURSIVE $unigramDpCtes,
-            wseg AS MATERIALIZED (
-              SELECT w,
-                (k0 + (((-k0) % 1048576 + 1048576) % 1048576)) // 1048576
-                  AS score_micro,
-                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
-              FROM dp WHERE i = len(w)),
-            doctok AS (SELECT doc_id, unnest($tokensSql) AS t
-                       FROM documents),
-            docsum AS (
-              SELECT d.doc_id,
-                sum(CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
-                         THEN ws.score_micro ELSE -20000000 END) AS lm,
-                sum(CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
-                         THEN ws.n_pieces ELSE 1 END) AS np
-              FROM doctok d LEFT JOIN wseg ws ON d.t = ws.w
-              GROUP BY 1)
-         SELECT doc_id,
-           CAST(coalesce(lm, 0) AS BIGINT) AS logp_micro,
-           CAST(coalesce(np, 0) AS BIGINT) AS n_pieces
-         FROM documents LEFT JOIN docsum USING (doc_id)
-         ORDER BY doc_id""",
-
-    // Ids replayed from the shared backward paths: vocabulary ids by
-    // (cnt DESC, piece ASC) rank, per-word id strings in path order
-    // (bk rows sort forward on their start position), doc sequences
-    // assembled in token order with -1 for OOV passthrough tokens.
-    "text_unigram_ids" ->
-      s"""WITH RECURSIVE $unigramBkCtes,
-            uvocab AS (SELECT piece,
-                         CAST(row_number() OVER (ORDER BY cnt DESC, piece)
-                           - 1 AS INT) AS id
-                       FROM ukeep),
-            wids AS MATERIALIZED (
-              SELECT b.w,
-                string_agg(CAST(coalesce(v.id, -1) AS VARCHAR),
-                  ' ' ORDER BY b.pos) AS wt,
-                count(CASE WHEN v.id IS NULL THEN 1 END) AS woov
-              FROM bk b LEFT JOIN uvocab v ON b.piece = v.piece
-              WHERE b.piece IS NOT NULL
-              GROUP BY b.w),
-            idoctok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                          unnest(range(1, len($tokensSql) + 1)) AS j
-                        FROM documents),
-            idocids AS (
-              SELECT d.doc_id,
-                string_agg(
-                  CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
-                       THEN wa.wt ELSE '-1' END, ' ' ORDER BY d.j)
-                  AS ids_text,
-                sum(CASE WHEN regexp_matches(d.t, '^[a-z]+$$')
-                         THEN wa.woov ELSE 1 END) AS n_oov
-              FROM idoctok d LEFT JOIN wids wa ON d.t = wa.w
-              GROUP BY 1)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
-           coalesce(a.ids_text, '') AS ids_text
-         FROM documents d LEFT JOIN idocids a USING (doc_id)
-         ORDER BY d.doc_id""",
-
-    // Hard-EM round: the backward walk re-derives each word's unique
-    // Viterbi path by checking the forward DP's EXACT key identities
-    // longest-piece-first (k=4..2, else 1 — the kernel's tie-break),
-    // then occurrence-weighted piece counts re-normalize.
-    "text_unigram_em" -> {
-      s"""WITH RECURSIVE $unigramBkCtes,
-            emcnt AS MATERIALIZED (
-              SELECT bk.piece, sum(u.f) AS cnt
-              FROM bk JOIN uwords u ON bk.w = u.w
-              WHERE bk.piece IS NOT NULL
-              GROUP BY 1),
-            emtot AS (SELECT sum(cnt) AS T2 FROM emcnt)
-         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
-           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T2 AS DOUBLE))
-             * 1000000 + 0.5) AS BIGINT) AS logp_micro
-         FROM emcnt CROSS JOIN emtot
-         WHERE length(piece) >= 2
-         ORDER BY cnt DESC, piece LIMIT 40"""
-    },
-
-    // BYTE-level training replay: hex-substring counting over the
-    // planted corpus — every script participates, single bytes always
-    // kept.
-    "text_unigram_bytes_train" ->
-      s"""WITH ${unigramBytesTrainCtes(8)}
-         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
-           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T AS DOUBLE))
-             * 1000000 + 0.5) AS BIGINT) AS logp_micro
-         FROM bukeep CROSS JOIN butot
-         WHERE length(piece) >= 4
-         ORDER BY cnt DESC, piece LIMIT 40""",
-
-    // The byte Viterbi DP as a recursive CTE: one level per BYTE over
-    // the hex-encoded token, an 8-slot sliding window of
-    // score·2^20 − n_pieces keys; every token of every script joins —
-    // there is no OOV branch at all.
-    "text_unigram_bytes_segment" ->
-      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
-            bwseg AS MATERIALIZED (
-              SELECT hw,
-                (k0 + (((-k0) % 1048576 + 1048576) % 1048576)) // 1048576
-                  AS score_micro,
-                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
-              FROM bdp WHERE i = len(hw) // 2),
-            bdoctok AS (SELECT doc_id, unnest($tokensSql) AS t FROM bdocs),
-            bdocsum AS (
-              SELECT d.doc_id, sum(ws.score_micro) AS lm,
-                sum(ws.n_pieces) AS np
-              FROM bdoctok d JOIN bwseg ws ON lower(hex(d.t)) = ws.hw
-              GROUP BY 1)
-         SELECT doc_id,
-           CAST(coalesce(lm, 0) AS BIGINT) AS logp_micro,
-           CAST(coalesce(np, 0) AS BIGINT) AS n_pieces
-         FROM documents LEFT JOIN bdocsum USING (doc_id)
-         ORDER BY doc_id""",
-
-    // Byte ids replayed from the shared backward paths; byte fallback
-    // means coalesce(v.id, -1) never actually fires on in-corpus text
-    // and n_oov pins that at 0 per doc.
-    "text_unigram_bytes_ids" ->
-      s"""WITH RECURSIVE ${unigramBytesBkCtes(8)},
-            buvocab AS (SELECT piece,
-                          CAST(row_number() OVER (ORDER BY cnt DESC, piece)
-                            - 1 AS INT) AS id
-                        FROM bukeep),
-            bwids AS MATERIALIZED (
-              SELECT b.hw,
-                string_agg(CAST(coalesce(v.id, -1) AS VARCHAR),
-                  ' ' ORDER BY b.pos) AS wt,
-                count(CASE WHEN v.id IS NULL THEN 1 END) AS woov
-              FROM bbk b LEFT JOIN buvocab v ON b.piece = v.piece
-              WHERE b.piece IS NOT NULL
-              GROUP BY b.hw),
-            bidoctok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                           unnest(range(1, len($tokensSql) + 1)) AS j
-                         FROM bdocs),
-            bidocids AS (
-              SELECT d.doc_id,
-                string_agg(wa.wt, ' ' ORDER BY d.j) AS ids_text,
-                sum(wa.woov) AS n_oov
-              FROM bidoctok d JOIN bwids wa ON lower(hex(d.t)) = wa.hw
-              GROUP BY 1)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
-           coalesce(a.ids_text, '') AS ids_text
-         FROM documents d LEFT JOIN bidocids a USING (doc_id)
-         ORDER BY d.doc_id""",
-
-    "text_unigram_bytes_em" -> unigramBytesEmOracle,
-
-    // DSIR replayed end to end: md5-bucketed uni+bigram features,
-    // full-outer count join, Laplace over the shared bucket vocabulary,
-    // round-once log-ratios, DECIMAL-summed doc weights, top-20.
-    "dsir_select" ->
-      s"""WITH ${dsirCtes(4096)},
-          docw AS (SELECT rf.doc_id, count(*) AS n_feats,
-                     CAST(sum(lr) AS DOUBLE) AS logw
-                   FROM rfeat rf JOIN ratio USING (f) GROUP BY 1),
-          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
-                      coalesce(logw, 0.0) AS logw
-                    FROM rawd d LEFT JOIN docw USING (doc_id))
-         SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats, logw
-         FROM fullw ORDER BY logw DESC, doc_id LIMIT 20""",
-
-    // The gate replay: the 2^20-bucket model, a fresh batch (%5 docs,
-    // in-domain suffix on %10, novel grams on %20) scored through a
-    // LEFT join with the Laplace-default ratio on unseen buckets
-    // (counts 0/0 under the trained totals), and the threshold verdict.
-    "dsir_gate" ->
-      s"""WITH ${dsirCtes(1L << 20)},
-          l0 AS (SELECT CAST(round(
-                   ln(1.0 / (NT + V)) - ln(1.0 / (NR + V)), 6)
-                   AS DECIMAL(38,6)) AS lr0
-                 FROM st),
-          batch AS (SELECT doc_id,
-              text
-                || CASE WHEN doc_id % 10 = 0
-                        THEN ' quantum flux capacitor' ELSE '' END
-                || CASE WHEN doc_id % 20 = 0
-                        THEN ' zz9novelgram zz9weird' ELSE '' END
-                AS text
-            FROM documents WHERE doc_id % 5 = 0),
-          btok AS (SELECT doc_id, $tokensSql AS tk FROM batch),
-          bfeat AS (
-            SELECT doc_id,
-              CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT)
-                % ${1L << 20} AS VARCHAR) AS f
-            FROM (SELECT doc_id, unnest(list_concat(tk,
-                    [tk[i] || ' ' || tk[i+1]
-                     for i in range(1, len(tk))])) AS g
-                  FROM btok)),
-          docw AS (SELECT b.doc_id, count(*) AS n_feats,
-                     sum(CASE WHEN r.lr IS NULL THEN 1 ELSE 0 END)
-                       AS n_unseen,
-                     CAST(sum(coalesce(r.lr, (SELECT lr0 FROM l0)))
-                       AS DOUBLE) AS logw
-                   FROM bfeat b LEFT JOIN ratio r ON b.f = r.f
-                   GROUP BY 1),
-          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
-                      coalesce(n_unseen, 0) AS n_unseen,
-                      coalesce(logw, 0.0) AS logw
-                    FROM batch d LEFT JOIN docw USING (doc_id))
-         SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats,
-           CAST(n_unseen AS BIGINT) AS n_unseen, logw,
-           (n_feats = 0 OR logw >= $DsirGateMinLogw) AS admitted
-         FROM fullw ORDER BY doc_id""",
-
-    // Gumbel-top-k replay: u re-derived digit-by-digit from
-    // md5(doc_id) (the sample_weighted machinery), priority =
-    // round(logw − ln(−ln(u)), 6), top-20 without replacement.
-    "dsir_sampled" ->
-      s"""WITH ${dsirCtes(4096)},
-          docw AS (SELECT rf.doc_id, count(*) AS n_feats,
-                     CAST(sum(lr) AS DOUBLE) AS logw
-                   FROM rfeat rf JOIN ratio USING (f) GROUP BY 1),
-          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
-                      coalesce(logw, 0.0) AS logw
-                    FROM rawd d LEFT JOIN docw USING (doc_id)),
-          gh AS (SELECT doc_id, n_feats, logw,
-                   substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
-                 FROM fullw),
-          gp AS (SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats,
-                   logw,
-                   round(logw - ln(-ln(least(
-                     CAST(($md5DigitSumSql) + 1 AS DOUBLE)
-                       / 4503599627370496.0, 1.0 - 1e-16))), 6) AS priority
-                 FROM gh)
-         SELECT doc_id, n_feats, logw, priority FROM gp
-         ORDER BY priority DESC, doc_id LIMIT 20""",
-
-    // Per-domain draw: the same priority arithmetic under a
-    // source-partitioned rank window, 3 per source.
-    "dsir_sampled_strata" ->
-      s"""WITH ${dsirCtes(4096)},
-          docw AS (SELECT rf.doc_id, count(*) AS n_feats,
-                     CAST(sum(lr) AS DOUBLE) AS logw
-                   FROM rfeat rf JOIN ratio USING (f) GROUP BY 1),
-          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
-                      coalesce(logw, 0.0) AS logw
-                    FROM rawd d LEFT JOIN docw USING (doc_id)),
-          gh AS (SELECT f.doc_id, d.source, f.logw,
-                   substr(md5(CAST(f.doc_id AS VARCHAR)), 1, 13) AS h
-                 FROM fullw f JOIN documents d USING (doc_id)),
-          gp AS (SELECT doc_id, source, logw,
-                   round(logw - ln(-ln(least(
-                     CAST(($md5DigitSumSql) + 1 AS DOUBLE)
-                       / 4503599627370496.0, 1.0 - 1e-16))), 6) AS priority
-                 FROM gh),
-          grk AS (SELECT doc_id, source, logw, priority,
-                    row_number() OVER (PARTITION BY source
-                      ORDER BY priority DESC, doc_id) AS rn
-                  FROM gp)
-         SELECT doc_id, source, logw, priority FROM grk WHERE rn <= 3
-         ORDER BY source, priority DESC, doc_id""",
-
-    // Self-certifying (the q_quantile_rollup pattern — the gate
-    // threshold is the store's stamped KLL median of the training
-    // logw distribution, not SQL-replayable): the oracle states the
-    // deterministic remainder (corpus counts) plus the four
-    // scale-robust attestations — exact rank within 2·eps, rejected
-    // strictly below admitted, a median threshold splitting the batch
-    // nonempty both ways, and the no-threshold gateRejects entry point
-    // agreeing with the thresholded scores.
-    "dsir_gate_calibrated" ->
-      """SELECT
-           (SELECT count(*) FROM documents) AS n_train,
-           (SELECT count(*) FROM documents WHERE doc_id % 5 = 0)
-             AS n_batch,
-           true AS rank_ok,
-           true AS separation_ok,
-           true AS both_sides_nonempty,
-           true AS gate_api_consistent""",
-
-    // Staleness replay: the dsir_gate machinery (2^20-bucket model,
-    // %5 batch with planted novel grams on %20) folded per cohort —
-    // unseen counts, the quant6 unseen fraction, and the verdict
-    // against the 0.001 threshold, all re-derived from scratch.
-    "dsir_staleness" ->
-      s"""WITH ${dsirCtes(1L << 20)},
-          batch AS (SELECT doc_id,
-              text
-                || CASE WHEN doc_id % 10 = 0
-                        THEN ' quantum flux capacitor' ELSE '' END
-                || CASE WHEN doc_id % 20 = 0
-                        THEN ' zz9novelgram zz9weird' ELSE '' END
-                AS text
-            FROM documents WHERE doc_id % 5 = 0),
-          btok AS (SELECT doc_id, $tokensSql AS tk FROM batch),
-          bfeat AS (
-            SELECT doc_id,
-              CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT)
-                % ${1L << 20} AS VARCHAR) AS f
-            FROM (SELECT doc_id, unnest(list_concat(tk,
-                    [tk[i] || ' ' || tk[i+1]
-                     for i in range(1, len(tk))])) AS g
-                  FROM btok)),
-          docw AS (SELECT b.doc_id, count(*) AS n_feats,
-                     sum(CASE WHEN r.lr IS NULL THEN 1 ELSE 0 END)
-                       AS n_unseen
-                   FROM bfeat b LEFT JOIN ratio r ON b.f = r.f
-                   GROUP BY 1),
-          fullw AS (SELECT d.doc_id, coalesce(n_feats, 0) AS n_feats,
-                      coalesce(n_unseen, 0) AS n_unseen
-                    FROM batch d LEFT JOIN docw USING (doc_id)),
-          coh AS (SELECT
-                    CASE WHEN doc_id % 20 = 0 THEN 'novel'
-                         ELSE 'in_vocab' END AS cohort,
-                    count(*) AS n_docs,
-                    CAST(sum(n_feats) AS BIGINT) AS n_feats,
-                    CAST(sum(n_unseen) AS BIGINT) AS n_unseen
-                  FROM fullw GROUP BY 1)
-         SELECT cohort, n_docs, n_feats, n_unseen,
-           CASE WHEN n_feats > 0
-                THEN floor(CAST(n_unseen AS DOUBLE)
-                       / CAST(n_feats AS DOUBLE) * 1000000.0 + 0.5)
-                     / 1000000.0
-                ELSE 0.0 END AS unseen_frac,
-           (CASE WHEN n_feats > 0
-                 THEN floor(CAST(n_unseen AS DOUBLE)
-                        / CAST(n_feats AS DOUBLE) * 1000000.0 + 0.5)
-                      / 1000000.0
-                 ELSE 0.0 END) > CAST(0.001 AS DOUBLE) AS stale
-         FROM coh ORDER BY cohort""",
-
-    // Multi-target replay: both domain models re-derived over the
-    // SHARED vocabulary (per-domain Laplace totals, common raw side),
-    // one stacked ratio grid, per-(doc, domain) DECIMAL folds, and the
-    // per-domain Gumbel draw — the engine's one-exchange scoring
-    // reproduced as plain SQL.
-    "dsir_multi" ->
-      s"""WITH ${dsirMultiCtes(4096)},
-          gh AS (SELECT doc_id, domain, n_feats, logw,
-                   substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS h
-                 FROM fullw),
-          gp AS (SELECT doc_id, domain,
-                   CAST(n_feats AS BIGINT) AS n_feats, logw,
-                   round(logw - ln(-ln(least(
-                     CAST(($md5DigitSumSql) + 1 AS DOUBLE)
-                       / 4503599627370496.0, 1.0 - 1e-16))), 6)
-                     AS priority
-                 FROM gh),
-          grk AS (SELECT doc_id, domain, n_feats, logw, priority,
-                    row_number() OVER (PARTITION BY domain
-                      ORDER BY priority DESC, doc_id) AS rn
-                  FROM gp)
-         SELECT doc_id, domain, n_feats, logw, priority
-         FROM grk WHERE rn <= 3
-         ORDER BY domain, priority DESC, doc_id""",
-
-    // Multi-target gate replay: both domain models at 2^20 buckets,
-    // the fresh batch, unseen buckets counted once per doc and charged
-    // each domain's OWN Laplace default, DECIMAL folds — the
-    // one-exchange scoring reproduced as SQL.
-    "dsir_multi_gate" ->
-      s"""WITH ${dsirMultiCtes(1L << 20)},
-          l0 AS (SELECT 'a' AS domain,
-                   CAST(round(ln(1.0 / ((SELECT nt FROM nta) + V))
-                     - ln(1.0 / (NR + V)), 6) AS DECIMAL(38,6)) AS lr0
-                 FROM st
-                 UNION ALL
-                 SELECT 'b',
-                   CAST(round(ln(1.0 / ((SELECT nt FROM ntb) + V))
-                     - ln(1.0 / (NR + V)), 6) AS DECIMAL(38,6))
-                 FROM st),
-          gbatch AS (SELECT doc_id,
-              text
-                || CASE WHEN doc_id % 10 = 0
-                        THEN ' quantum flux capacitor' ELSE '' END
-                || CASE WHEN doc_id % 15 = 0
-                        THEN ' neural lattice resonator' ELSE '' END
-                || CASE WHEN doc_id % 20 = 0
-                        THEN ' zz9novelgram zz9weird' ELSE '' END
-                AS text
-            FROM documents WHERE doc_id % 5 = 0),
-          gbtok AS (SELECT doc_id, $tokensSql AS tk FROM gbatch),
-          gbfeat AS (
-            SELECT doc_id,
-              CAST(CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT)
-                % ${1L << 20} AS VARCHAR) AS f
-            FROM (SELECT doc_id, unnest(list_concat(tk,
-                    [tk[i] || ' ' || tk[i+1]
-                     for i in range(1, len(tk))])) AS g
-                  FROM gbtok)),
-          gseen AS (SELECT b.doc_id, r.domain, count(*) AS n_seen,
-                      sum(r.lr) AS seen_sum
-                    FROM gbfeat b JOIN ratio_m r USING (f)
-                    GROUP BY 1, 2),
-          guns AS (SELECT b.doc_id, count(*) AS n_unseen
-                   FROM gbfeat b LEFT JOIN vocab v ON b.f = v.f
-                   WHERE v.f IS NULL GROUP BY 1),
-          gfull AS (SELECT d.doc_id, dom.domain,
-                      CAST(coalesce(s.n_seen, 0)
-                        + coalesce(u.n_unseen, 0) AS BIGINT) AS n_feats,
-                      CAST(coalesce(u.n_unseen, 0) AS BIGINT) AS n_unseen,
-                      CAST(coalesce(s.seen_sum,
-                          CAST(0 AS DECIMAL(38,6)))
-                        + CAST(coalesce(u.n_unseen, 0) AS DECIMAL(18,0))
-                          * (SELECT lr0 FROM l0
-                             WHERE l0.domain = dom.domain)
-                        AS DOUBLE) AS logw
-                    FROM gbatch d
-                    CROSS JOIN (SELECT 'a' AS domain
-                                UNION ALL SELECT 'b') dom
-                    LEFT JOIN gseen s
-                      ON d.doc_id = s.doc_id AND dom.domain = s.domain
-                    LEFT JOIN guns u ON d.doc_id = u.doc_id)
-         SELECT doc_id, domain, n_feats, n_unseen, logw
-         FROM gfull ORDER BY doc_id, domain""",
-
-    // Interop parity replay: the per-family piece totals are
-    // re-derived from scratch (byte-BPE 8-round training + encode over
-    // `documents`; byte-unigram Viterbi DP over the planted corpus —
-    // the text_bpe_bytes / tokenizer_report_unigram machinery), and
-    // the round-trip flag is the deterministic expectation `true` —
-    // export → import must be lossless by construction.
-    "tokenizer_export" -> {
-      val rounds = 8
-      val sep =
-        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      s"""SELECT * FROM (
-           ${bpeTrainBytesCtes(rounds)},
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM documents),
-           encw AS (SELECT doc_id, i,
-                      string_split(trim($chained, '|'), '||') AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS allsyms
-                   FROM encw GROUP BY doc_id)
-           SELECT 'bpe_bytes' AS family,
-             count(*) AS n_docs,
-             CAST(sum(coalesce(len(e.allsyms), 0)) AS BIGINT) AS n_pieces,
-             true AS roundtrip_ok
-           FROM documents d LEFT JOIN enc e ON d.doc_id = e.doc_id)
-         UNION ALL
-         SELECT * FROM (
-           WITH RECURSIVE ${unigramBytesDpCtes(8)},
-             iwseg AS MATERIALIZED (
-               SELECT hw,
-                 ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
-               FROM bdp WHERE i = len(hw) // 2),
-             idoctok AS (SELECT doc_id, unnest($tokensSql) AS t
-                         FROM bdocs),
-             idocsum AS (
-               SELECT d.doc_id, sum(w.n_pieces) AS np
-               FROM idoctok d JOIN iwseg w ON lower(hex(d.t)) = w.hw
-               GROUP BY 1)
-           SELECT 'unigram_bytes' AS family,
-             count(*) AS n_docs,
-             CAST(sum(coalesce(s2.np, 0)) AS BIGINT) AS n_pieces,
-             true AS roundtrip_ok
-           FROM bdocs b LEFT JOIN idocsum s2 ON b.doc_id = s2.doc_id)
-         ORDER BY family"""
-    },
-
-    // The detok round-trip target is closed-form: the whitespace-joined
-    // token stream; n_pieces rides the existing byte-DP CTEs.
-    "text_unigram_bytes_detok" ->
-      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
-            dwseg AS MATERIALIZED (
-              SELECT hw,
-                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
-              FROM bdp WHERE i = len(hw) // 2),
-            ddoctok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                          unnest(range(1, len($tokensSql) + 1)) AS j
-                        FROM bdocs),
-            ddocsum AS (
-              SELECT d.doc_id,
-                string_agg(d.t, ' ' ORDER BY d.j) AS detok,
-                sum(ws.n_pieces) AS np
-              FROM ddoctok d JOIN dwseg ws ON lower(hex(d.t)) = ws.hw
-              GROUP BY 1)
-         SELECT doc_id,
-           coalesce(detok, '') AS detok,
-           CAST(coalesce(np, 0) AS BIGINT) AS n_pieces
-         FROM documents LEFT JOIN ddocsum USING (doc_id)
-         ORDER BY doc_id""",
-
-    // Prune replay: the retention rule (all singles + top-(300−S)
-    // multi-byte by (cnt DESC, piece ASC)), renormalized micro-nats,
-    // then the hard-EM round's backward walk OVER THE PRUNED TABLE.
-    "text_unigram_bytes_prune" -> {
-      val pruneCtes = s"""
-          pkeep AS MATERIALIZED (
-            SELECT piece, cnt FROM bukeep WHERE length(piece) = 2
-            UNION ALL
-            (SELECT piece, cnt FROM bukeep WHERE length(piece) > 2
-             ORDER BY cnt DESC, piece
-             LIMIT 300 - (SELECT count(*) FROM bukeep
-                          WHERE length(piece) = 2))),
-          pptot AS (SELECT sum(cnt) AS T3 FROM pkeep),
-          pptab AS MATERIALIZED (
-            SELECT piece,
-              CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T3 AS DOUBLE))
-                * 1000000 + 0.5) AS BIGINT) AS pm
-            FROM pkeep CROSS JOIN pptot),"""
-      s"""WITH RECURSIVE ${unigramBytesBkCtes(8, "pptab", pruneCtes)},
-            zemcnt AS MATERIALIZED (
-              SELECT bbk.piece, sum(u.f) AS cnt
-              FROM bbk JOIN bhw u ON bbk.hw = u.hw
-              WHERE bbk.piece IS NOT NULL
-              GROUP BY 1),
-            zemtot AS (SELECT sum(cnt) AS T4 FROM zemcnt)
-         SELECT piece, CAST(cnt AS BIGINT) AS cnt,
-           CAST(floor(ln(CAST(cnt AS DOUBLE) / CAST(T4 AS DOUBLE))
-             * 1000000 + 0.5) AS BIGINT) AS logp_micro
-         FROM zemcnt CROSS JOIN zemtot
-         WHERE length(piece) >= 4
-         ORDER BY cnt DESC, piece LIMIT 40"""
-    },
-
-    // The soft-EM support identities in exact BIGINTs: init-table size
-    // (= soft support, by the completability argument) and the hard
-    // Viterbi-path support from the shared backward CTEs.
-    "text_unigram_soft_em" ->
-      s"""WITH RECURSIVE ${unigramBytesBkCtes(8)},
-            nh AS (SELECT count(DISTINCT piece) AS n FROM bbk
-                   WHERE piece IS NOT NULL)
-         SELECT
-           (SELECT CAST(count(*) AS BIGINT) FROM bukeep) AS n_pieces_init,
-           (SELECT CAST(count(*) AS BIGINT) FROM bukeep) AS n_pieces_soft,
-           (SELECT CAST(n AS BIGINT) FROM nh) AS n_pieces_hard,
-           true AS ll_nondecreasing,
-           true AS epieces_in_bounds,
-           true AS support_identity""",
-
-    // The fast trainer at emRounds = 1 must land EXACTLY on the classic
-    // init→EM replay — same oracle text as text_unigram_bytes_em by
-    // construction (one string, two graded paths: the distributed
-    // kernel expression and the driver-local fast loop).
-    "text_unigram_bytes_fast" -> unigramBytesEmOracle,
-
-    "text_bpe_train" -> {
-      val rounds = 8
-      val tail = (1 to rounds)
-        .map(k => s"""SELECT $k AS rank, l AS "left", r AS "right", freq FROM m$k""")
-        .mkString("\n", "\nUNION ALL\n", "\nORDER BY rank")
-      bpeTrainCtes(rounds) + tail
-    },
-
-    // The fast trainer's oracle is the CLASSIC loop — byte head, 12
-    // chained per-round argmax/replace rounds — so the delta-updated
-    // formulation is certified against the published algorithm, not
-    // against itself.
-    "text_bpe_train_fast" -> {
-      val rounds = 12
-      val tail = (1 to rounds)
-        .map(k => s"""SELECT $k AS rank, l AS "left", r AS "right", freq FROM m$k""")
-        .mkString("\n", "\nUNION ALL\n", "\nORDER BY rank")
-      bpeTrainBytesCtes(rounds) + tail
-    },
-
-    // Merge APPLICATION replayed end-to-end: training (the shared CTEs
-    // above) then, per document token, the identical chained literal
-    // replaces in rank order over the double-separator encoding —
-    // lowercase words re-segment, everything else passes through as one
-    // OOV symbol. The Spark side runs the min-rank-present kernel
-    // (TextKernels.bpeEncode), so a hash match here certifies the
-    // classical equivalence of the two algorithms on the whole corpus.
-    "text_bpe_encode" -> {
-      val rounds = 8
-      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainCtes(rounds) +
-        s""",
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM documents),
-           encw AS (SELECT doc_id, i,
-                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
-                           THEN string_split(trim($chained, '|'), '||')
-                           ELSE [t] END AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS allsyms
-                   FROM encw GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(len(e.allsyms), 0) AS BIGINT) AS n_bpe,
-           coalesce(array_to_string(e.allsyms, ' '), '') AS bpe_text
-         FROM documents d LEFT JOIN enc e ON d.doc_id = e.doc_id
-         ORDER BY d.doc_id"""
-    },
-
-    // Marked encode + detokenize replayed end-to-end: per token the
-    // first symbol takes the U+2581 prefix, and detok_ok re-derives the
-    // round trip in SQL (concat -> marker->space -> ltrim vs the
-    // whitespace-normalized tokens).
-    "text_bpe_detok" -> {
-      val rounds = 8
-      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainCtes(rounds) +
-        s""",
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM documents),
-           encw AS (SELECT doc_id, i,
-                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
-                           THEN string_split(trim($chained, '|'), '||')
-                           ELSE [t] END AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           mk AS (SELECT doc_id, i,
-                    [CASE WHEN r = 1 THEN '▁' || syms[r] ELSE syms[r] END
-                     for r in range(1, len(syms) + 1)] AS msyms
-                  FROM encw),
-           enc AS (SELECT doc_id, flatten(list(msyms ORDER BY i)) AS allsyms
-                   FROM mk GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           coalesce(array_to_string(e.allsyms, ' '), '') AS marked_text,
-           coalesce(ltrim(replace(array_to_string(e.allsyms, ''), '▁', ' '), ' '), '')
-             = array_to_string($tokensSql, ' ') AS detok_ok
-         FROM documents d LEFT JOIN enc e USING (doc_id)
-         ORDER BY d.doc_id"""
-    },
-
-    // Vocab rebuilt from the replayed training (letters 0-25, merge
-    // outputs 25+rank with first-wins dedup), every symbol re-derived
-    // and id-mapped, OOV -> -1 — the whole id space is checked, not
-    // just counts.
-    "text_bpe_ids" -> {
-      val rounds = 8
-      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      val vocabRows = (1 to rounds)
-        .map(k => s"SELECT l || r AS sym, ${25 + k} AS id FROM m$k")
-        .mkString("\nUNION ALL\n")
-      bpeTrainCtes(rounds) +
-        s""",
-           letters AS (SELECT chr(CAST(96 + i AS INT)) AS sym,
-                         CAST(i - 1 AS INT) AS id
-                       FROM unnest(range(1, 27)) AS u(i)),
-           vraw AS (SELECT sym, id FROM letters
-                    UNION ALL
-                    $vocabRows),
-           vocab AS (SELECT sym, min(id) AS id FROM vraw GROUP BY sym),
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM documents),
-           encw AS (SELECT doc_id, i,
-                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
-                           THEN string_split(trim($chained, '|'), '||')
-                           ELSE [t] END AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           symrows AS (SELECT doc_id, i, unnest(syms) AS sym,
-                         unnest(range(1, len(syms) + 1)) AS j
-                       FROM encw),
-           withid AS (SELECT s.doc_id, s.i, s.j, coalesce(v.id, -1) AS id
-                      FROM symrows s LEFT JOIN vocab v USING (sym)),
-           agg AS (SELECT doc_id,
-                     count(CASE WHEN id = -1 THEN 1 END) AS n_oov,
-                     string_agg(CAST(id AS VARCHAR), ' ' ORDER BY i, j) AS ids_text
-                   FROM withid GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
-           coalesce(a.ids_text, '') AS ids_text
-         FROM documents d LEFT JOIN agg a USING (doc_id)
-         ORDER BY d.doc_id"""
-    },
-
-    // BYTE-LEVEL training + encode replayed end-to-end: the byte head
-    // (every token, lower-hex UTF-8 bytes) into the SAME 8 training
-    // rounds, then per token the chained literal replaces — no OOV
-    // branch exists. A hash match certifies byte decomposition, the
-    // byte-alphabet training AND the min-rank/sequential equivalence.
-    "text_bpe_bytes" -> {
-      val rounds = 8
-      val sep =
-        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainBytesCtes(rounds) +
-        s""",
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM documents),
-           encw AS (SELECT doc_id, i,
-                      string_split(trim($chained, '|'), '||') AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           enc AS (SELECT doc_id, flatten(list(syms ORDER BY i)) AS allsyms
-                   FROM encw GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(len(e.allsyms), 0) AS BIGINT) AS n_bpe,
-           coalesce(array_to_string(e.allsyms, ' '), '') AS bpe_text
-         FROM documents d LEFT JOIN enc e ON d.doc_id = e.doc_id
-         ORDER BY d.doc_id"""
-    },
-
-    // Byte-level marked encode + detokenize with the SAME planted
-    // non-BMP rows as the Spark side (training stays on the corpus):
-    // the oracle re-derives the marked hex stream AND independently
-    // reconstructs each document by unhex+decode, so detok_ok is a
-    // genuine second implementation of the round trip, not an echo.
-    "text_bpe_bytes_detok" -> {
-      val rounds = 8
-      val sep =
-        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainBytesCtes(rounds) +
-        s""",
-           docsrc AS (SELECT doc_id, text FROM documents
-                      UNION ALL SELECT CAST(-3 AS BIGINT), '😀 emoji 🤖🤖 mix'
-                      UNION ALL SELECT CAST(-2 AS BIGINT), '𠀀𠀁 cjk-b ▁ marker'
-                      UNION ALL SELECT CAST(-1 AS BIGINT),
-                        'tabs' || chr(9) || 'and' || chr(10) || 'newlines'),
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM docsrc),
-           encw AS (SELECT doc_id, i,
-                      string_split(trim($chained, '|'), '||') AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           mk AS (SELECT doc_id, i,
-                    [CASE WHEN r = 1 THEN '▁' || syms[r] ELSE syms[r] END
-                     for r in range(1, len(syms) + 1)] AS msyms,
-                    decode(unhex(array_to_string(syms, ''))) AS word
-                  FROM encw),
-           enc AS (SELECT doc_id,
-                     flatten(list(msyms ORDER BY i)) AS allsyms,
-                     string_agg(word, ' ' ORDER BY i) AS detok
-                   FROM mk GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           coalesce(array_to_string(e.allsyms, ' '), '') AS marked_text,
-           coalesce(e.detok, '') = array_to_string($tokensSql, ' ') AS detok_ok
-         FROM docsrc d LEFT JOIN enc e USING (doc_id)
-         ORDER BY d.doc_id"""
-    },
-
-    // Byte vocab rebuilt from the replayed byte training (bytes 0-255
-    // at their values, merge outputs 255+rank, first-wins), every
-    // symbol re-derived and id-mapped; n_oov must come out zero.
-    "text_bpe_bytes_ids" -> {
-      val rounds = 8
-      val sep =
-        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      val vocabRows = (1 to rounds)
-        .map(k => s"SELECT l || r AS sym, ${255 + k} AS id FROM m$k")
-        .mkString("\nUNION ALL\n")
-      bpeTrainBytesCtes(rounds) +
-        s""",
-           basev AS (SELECT printf('%02x', i) AS sym, CAST(i AS INT) AS id
-                     FROM range(0, 256) t(i)),
-           vraw AS (SELECT sym, id FROM basev
-                    UNION ALL
-                    $vocabRows),
-           vocab AS (SELECT sym, min(id) AS id FROM vraw GROUP BY sym),
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t,
-                     unnest(range(1, len($tokensSql) + 1)) AS i
-                   FROM documents),
-           encw AS (SELECT doc_id, i,
-                      string_split(trim($chained, '|'), '||') AS syms
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           symrows AS (SELECT doc_id, i, unnest(syms) AS sym,
-                         unnest(range(1, len(syms) + 1)) AS j
-                       FROM encw),
-           withid AS (SELECT s.doc_id, s.i, s.j, coalesce(v.id, -1) AS id
-                      FROM symrows s LEFT JOIN vocab v USING (sym)),
-           agg AS (SELECT doc_id,
-                     count(CASE WHEN id = -1 THEN 1 END) AS n_oov,
-                     string_agg(CAST(id AS VARCHAR), ' ' ORDER BY i, j) AS ids_text
-                   FROM withid GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(a.n_oov, 0) AS BIGINT) AS n_oov,
-           coalesce(a.ids_text, '') AS ids_text
-         FROM documents d LEFT JOIN agg a USING (doc_id)
-         ORDER BY d.doc_id"""
-    },
-
-    // The byte training replayed, every document's encoded length and
-    // byte count re-derived, the per-source rollup and the fertility
-    // division recomputed.
-    "tokenizer_report" -> {
-      val rounds = 8
-      val sep =
-        """'||' || regexp_replace(lower(hex(encode(t))), '(..)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainBytesCtes(rounds) +
-        s""",
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t FROM documents),
-           encw AS (SELECT doc_id,
-                      len(string_split(trim($chained, '|'), '||')) AS ntok
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           d AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n
-                 FROM encw GROUP BY doc_id),
-           base AS (SELECT dd.doc_id, dd.source,
-                      CAST(CASE WHEN $blankSql THEN 0
-                           ELSE len($tokensSql) END AS BIGINT) AS ws,
-                      coalesce(d.n, 0) AS bpe,
-                      CAST(octet_length(encode(text)) AS BIGINT) AS nbytes
-                    FROM documents dd LEFT JOIN d ON dd.doc_id = d.doc_id),
-           agg AS (SELECT source, count(*) AS n_docs,
-                     CAST(sum(ws) AS BIGINT) AS n_ws_tokens,
-                     CAST(sum(bpe) AS BIGINT) AS n_bpe_tokens,
-                     CAST(sum(nbytes) AS BIGINT) AS n_text_bytes
-                   FROM base GROUP BY source)
-         SELECT source, n_docs, n_ws_tokens, n_bpe_tokens, n_text_bytes,
-           CASE WHEN n_bpe_tokens > 0
-                THEN floor((CAST(n_text_bytes AS DOUBLE) / n_bpe_tokens)
-                           * 1000000 + 0.5) / 1000000
-           END AS bytes_per_token
-         FROM agg ORDER BY source"""
-    },
-
-    // The unigram report: the byte-DP CTEs re-derive every word's
-    // Viterbi piece count under the replayed model, folded per source
-    // over the planted corpus — the stored model must match the replay
-    // exactly or every aggregate shifts.
-    "tokenizer_report_unigram" ->
-      s"""WITH RECURSIVE ${unigramBytesDpCtes(8)},
-            trwseg AS MATERIALIZED (
-              SELECT hw,
-                ((-k0) % 1048576 + 1048576) % 1048576 AS n_pieces
-              FROM bdp WHERE i = len(hw) // 2),
-            trdoctok AS (SELECT doc_id, unnest($tokensSql) AS t
-                         FROM bdocs),
-            trdocsum AS (
-              SELECT d.doc_id, count(*) AS ws, sum(w.n_pieces) AS np
-              FROM trdoctok d JOIN trwseg w ON lower(hex(d.t)) = w.hw
-              GROUP BY 1),
-            trbase AS (
-              SELECT dd.source,
-                coalesce(s2.ws, 0) AS ws, coalesce(s2.np, 0) AS np,
-                CAST(octet_length(encode(b.text)) AS BIGINT) AS nbytes
-              FROM documents dd
-              JOIN bdocs b USING (doc_id)
-              LEFT JOIN trdocsum s2 ON dd.doc_id = s2.doc_id),
-            tragg AS (SELECT source, count(*) AS n_docs,
-                        CAST(sum(ws) AS BIGINT) AS n_ws_tokens,
-                        CAST(sum(np) AS BIGINT) AS n_unigram_pieces,
-                        CAST(sum(nbytes) AS BIGINT) AS n_text_bytes
-                      FROM trbase GROUP BY source)
-         SELECT source, n_docs, n_ws_tokens, n_unigram_pieces,
-           n_text_bytes,
-           CASE WHEN n_unigram_pieces > 0
-                THEN floor((CAST(n_text_bytes AS DOUBLE)
-                            / n_unigram_pieces) * 1000000 + 0.5) / 1000000
-           END AS bytes_per_piece
-         FROM tragg ORDER BY source""",
-
-    // BPE-token packing: the pack_sequences map recomputed over REAL
-    // trained-tokenizer counts — training CTEs + per-token encoded
-    // lengths + the identical md5-shard/window/bin-explode chain.
-    "pack_bpe_sequences" -> {
-      val rounds = 8
-      val sep = """'||' || regexp_replace(t, '(.)', '\1||', 'g')"""
-      val chained = (1 to rounds).foldLeft(sep) { (c, k) =>
-        s"replace($c, '|' || m$k.l || '||' || m$k.r || '|', '|' || m$k.l || m$k.r || '|')"
-      }
-      bpeTrainCtes(rounds) +
-        s""",
-           tok AS (SELECT doc_id, unnest($tokensSql) AS t FROM documents),
-           encw AS (SELECT doc_id,
-                      CASE WHEN regexp_matches(t, '^[a-z]+$$')
-                           THEN len(string_split(trim($chained, '|'), '||'))
-                           ELSE 1 END AS ntok
-                    FROM tok, ${(1 to rounds).map("m" + _).mkString(", ")}),
-           d AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n
-                 FROM encw GROUP BY doc_id),
-           nz AS (SELECT doc_id, n FROM d WHERE n > 0),
-           h AS (SELECT doc_id, n,
-                   md5(CAST(doc_id AS VARCHAR) || 'r5b') AS hh
-                 FROM nz),
-           sh AS (SELECT doc_id, n, hh,
-                    CAST(CAST(('0x' || substr(hh, 1, 8)) AS BIGINT) % 4 AS INT) AS shard
-                  FROM h),
-           p AS (SELECT doc_id, n, shard,
-                   CAST(coalesce(sum(n) OVER (PARTITION BY shard
-                     ORDER BY hh, doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS BIGINT) AS strt
-                 FROM sh),
-           e AS (SELECT shard, doc_id, n, strt, b AS seq_id
-                 FROM p, unnest(range(strt // 256, (strt + n - 1) // 256 + 1)) AS u(b))
-         SELECT shard, CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-           greatest(0, seq_id * 256 - strt) AS tok_start,
-           least(n, (seq_id + 1) * 256 - strt)
-             - greatest(0, seq_id * 256 - strt) AS n_toks
-         FROM e ORDER BY shard, seq_id, doc_id"""
-    },
-
-    "text_quality" ->
-      s"""WITH f AS (
-           SELECT doc_id, length(text) AS n_chars,
-             CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
-             length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct
-           FROM documents),
-            g AS (
-           SELECT doc_id, n_chars, n_tokens, n_punct,
-             CASE WHEN n_tokens > 0
-                  THEN floor((CAST(n_chars - n_tokens + 1 AS DOUBLE) / n_tokens) * 1000000 + 0.5) / 1000000
-                  ELSE 0.0 END AS avg_token_len,
-             CASE WHEN n_chars > 0
-                  THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000 ELSE 0.0 END AS punct_ratio
-           FROM f)
-         SELECT doc_id, n_chars, n_tokens, n_punct, avg_token_len, punct_ratio,
-           floor((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-             * (1.0 - least(punct_ratio * 5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS quality_score
-         FROM g ORDER BY doc_id""",
-
-    "text_langid" ->
-      s"""WITH f AS (
-           SELECT doc_id,
-             $langHitsSql
-           FROM documents)
-         SELECT doc_id, CASE $langCaseSql ELSE 'und' END AS lang_pred
-         FROM f ORDER BY doc_id""",
-
-    // FakeDecoder's byte histogram is deterministic, so the whole decode
-    // path is oracle-checkable: f0 = sum of payload bytes at offsets
-    // ≡ 0 (mod 8), each scaled by 1/255. The payload is the UTF-8 text —
-    // ASCII in this corpus (verified), so byte i == character i+1 and the
-    // oracle can walk substr() instead of blob bytes.
-    "multimodal_features" ->
-      """SELECT doc_id AS media_id,
-         CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-              ELSE 'video' END AS media_type,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         round(coalesce(list_sum([ord(substr(text, i, 1)) / 255.0
-           for i in range(1, length(text) + 1) if (i - 1) % 8 = 0]), 0.0), 6) AS f0
-         FROM documents ORDER BY doc_id""",
-
-    "multimodal_meta" ->
-      """SELECT CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                ELSE 'video' END AS media_type,
-         count(*) AS n,
-         CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes
-         FROM documents GROUP BY 1 ORDER BY 1""",
-
-    // The oracle recomputes every header field ARITHMETICALLY from doc_id;
-    // the Spark side gets them by parsing the byte streams it encoded, so a
-    // defect anywhere in the encode→parse round trip hash-mismatches.
-    "multimodal_decode" ->
-      """SELECT doc_id,
-         CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'gif' END AS format,
-         CAST(doc_id % 1920 + 1 AS INT) AS width,
-         CAST(doc_id % 1080 + 1 AS INT) AS height,
-         CAST(8 AS INT) AS bit_depth,
-         CAST(CASE doc_id % 3
-           WHEN 0 THEN CASE (doc_id // 3) % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END
-           WHEN 1 THEN CASE (doc_id // 3) % 2 WHEN 0 THEN 1 ELSE 3 END
-           ELSE 3 END AS INT) AS channels
-         FROM documents ORDER BY doc_id""",
-
-    "multimodal_audio" ->
-      """SELECT doc_id,
-         CAST(doc_id % 2 + 1 AS INT) AS channels,
-         CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END AS INT)
-           AS sample_rate,
-         CAST(CASE doc_id % 4 WHEN 0 THEN 8 WHEN 1 THEN 16 WHEN 2 THEN 24 ELSE 32 END AS INT)
-           AS bits_per_sample,
-         CAST(doc_id % 997 + 100 AS BIGINT) AS n_frames,
-         CAST((doc_id % 997 + 100) * 1000
-              // (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END)
-           AS BIGINT) AS duration_ms
-         FROM documents ORDER BY doc_id""",
-
-    // Replays the synth-pixel + nearest-neighbor-resample arithmetic:
-    // output byte i maps to source byte j via (x·w/wo, y·h/ho) integer
-    // coords, and synth byte j = (doc_id + 3j) mod 256. The Spark side
-    // gets px_sum by actually deflating, inflating, and defiltering PNGs.
-    "multimodal_pixels" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(doc_id % 21 + 4 AS INT) AS w,
-             CAST(doc_id % 17 + 4 AS INT) AS h,
-             CAST(CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS INT) AS c,
-             CAST((doc_id % 21 + 4) // 2 AS INT) AS wo,
-             CAST((doc_id % 17 + 4) // 2 AS INT) AS ho
-           FROM documents)
-         SELECT doc_id, wo AS width, ho AS height, c AS channels,
-           CAST(list_sum([
-             (doc_id + 3 * (((((i // c) // wo) * h // ho) * w
-                             + (((i // c) % wo) * w // wo)) * c + (i % c))) % 256
-             for i in range(0, wo * ho * c)]) AS BIGINT) AS px_sum
-         FROM d ORDER BY doc_id""",
-
-    "multimodal_waveform" ->
-      """SELECT doc_id,
-         CAST(doc_id % 2 + 1 AS INT) AS channels,
-         CAST(16000 AS INT) AS sample_rate,
-         CAST(doc_id % 251 + 50 AS BIGINT) AS n_frames,
-         CAST(list_sum([abs(((doc_id + 5 * j) % 65536) - 32768)
-           for j in range(0, (doc_id % 251 + 50) * (doc_id % 2 + 1))]) AS BIGINT)
-           AS amp_sum
-         FROM documents ORDER BY doc_id""",
-
-    "multimodal_gif" ->
-      """SELECT doc_id,
-         CAST(doc_id % 29 + 16 AS INT) AS width,
-         CAST(doc_id % 23 + 16 AS INT) AS height,
-         CAST(256 AS INT) AS n_colors,
-         CAST(list_sum([(doc_id + 3 * j) % 256
-           for j in range(0, (doc_id % 29 + 16) * (doc_id % 23 + 16))]) AS BIGINT)
-           AS idx_sum
-         FROM documents ORDER BY doc_id""",
-
-    // Self-certifying (see the query comment): one row per sampled
-    // frame — frame_idx 0 until min(3, n_frames) per document — with
-    // the dims arithmetic replayed and frame_ok TRUE expected.
-    "multimodal_frames" ->
-      """SELECT doc_id,
-         CAST(i AS INT) AS frame_idx,
-         CAST(doc_id % 11 + 8 AS INT) AS width,
-         CAST(doc_id % 7 + 8 AS INT) AS height,
-         true AS frame_ok
-         FROM documents, range(3) AS t(i)
-         WHERE i < CASE WHEN doc_id % 6 + 2 < 3 THEN doc_id % 6 + 2 ELSE 3 END
-         ORDER BY doc_id, frame_idx""",
-
-    // Self-certifying (see the query comment): DuckDB replays the dims/
-    // fps/frame-count arithmetic and the deterministic expectation for
-    // every document.
-    "multimodal_video" ->
-      """SELECT doc_id,
-         CAST(doc_id % 11 + 8 AS INT) AS width,
-         CAST(doc_id % 7 + 8 AS INT) AS height,
-         CAST(12 AS INT) AS fps,
-         CAST(doc_id % 6 + 2 AS INT) AS n_frames,
-         true AS err_in_bound,
-         true AS trunc_rejected
-         FROM documents ORDER BY doc_id""",
-
-    // Self-certifying: DuckDB replays the dims/frame-count arithmetic;
-    // the deterministic expectation is lossless equality, delta-beats-
-    // keyframe, and truncation rejection for every document.
-    "multimodal_video_delta" ->
-      """SELECT doc_id,
-         CAST(doc_id % 9 + 6 AS INT) AS width,
-         CAST(doc_id % 5 + 6 AS INT) AS height,
-         CAST(12 AS INT) AS fps,
-         CAST(doc_id % 5 + 2 AS INT) AS n_frames,
-         true AS exact,
-         true AS inter_saves,
-         true AS trunc_rejected
-         FROM documents ORDER BY doc_id""",
-
-    // Self-certifying: DuckDB replays the dims/frame-count arithmetic;
-    // the deterministic expectation is recon-exact closed-loop decode,
-    // error in bound vs source, motion vectors engaged, inter beating
-    // intra, and truncation rejection for every document.
-    "multimodal_video_mc" ->
-      """SELECT doc_id,
-         CAST(doc_id % 11 + 10 AS INT) AS width,
-         CAST(doc_id % 9 + 10 AS INT) AS height,
-         CAST(12 AS INT) AS fps,
-         CAST(doc_id % 4 + 2 AS INT) AS n_frames,
-         true AS err_in_bound,
-         true AS recon_exact,
-         true AS mv_engaged,
-         true AS inter_saves,
-         true AS trunc_rejected
-         FROM documents ORDER BY doc_id""",
-
-    // Self-certifying like multimodal_video_mc, with the sixth
-    // attestation: the VLC stream must beat the byte coder per row.
-    "multimodal_video_vlc" ->
-      """SELECT doc_id,
-         CAST(doc_id % 11 + 10 AS INT) AS width,
-         CAST(doc_id % 9 + 10 AS INT) AS height,
-         CAST(12 AS INT) AS fps,
-         CAST(doc_id % 4 + 2 AS INT) AS n_frames,
-         true AS err_in_bound,
-         true AS recon_exact,
-         true AS mv_engaged,
-         true AS inter_saves,
-         true AS trunc_rejected,
-         true AS vlc_smaller,
-         true AS es_roundtrip
-         FROM documents ORDER BY doc_id""",
-
-    // Self-certifying (the multimodal pattern): DuckDB replays the
-    // dims/frame-count arithmetic and the deterministic expectation —
-    // the conformant stream decodes bit-exactly, within bound, with
-    // motion engaged (the planted translation), truncation rejected,
-    // and no start-code emulation — for every document.
-    "multimodal_video_mpeg1" ->
-      """SELECT doc_id,
-         CAST(doc_id % 14 + 18 AS INT) AS width,
-         CAST(doc_id % 10 + 18 AS INT) AS height,
-         CAST(doc_id % 2 + 2 AS INT) AS n_frames,
-         true AS err_in_bound,
-         true AS recon_exact,
-         true AS mv_engaged,
-         true AS trunc_rejected,
-         true AS census_ok
-         FROM documents ORDER BY doc_id""",
-
-    // Self-certifying (see the query comment): DuckDB replays the dims
-    // arithmetic and the deterministic expectation — error inside the
-    // quantization bound, truncation rejected — for every document.
-    "multimodal_jpeg" ->
-      """SELECT doc_id,
-         CAST(doc_id % 27 + 9 AS INT) AS width,
-         CAST(doc_id % 19 + 9 AS INT) AS height,
-         CAST(doc_id % 2 * 2 + 1 AS INT) AS channels,
-         true AS err_in_bound,
-         true AS trunc_rejected
-         FROM documents ORDER BY doc_id""",
-
-    // Progressive certifies bit equality with the sequential decode —
-    // the deterministic expectation is simply "true for every document".
-    "multimodal_jpeg_prog" ->
-      """SELECT doc_id,
-         CAST(doc_id % 27 + 9 AS INT) AS width,
-         CAST(doc_id % 19 + 9 AS INT) AS height,
-         CAST(doc_id % 2 * 2 + 1 AS INT) AS channels,
-         true AS prog_equals_seq,
-         true AS trunc_rejected
-         FROM documents ORDER BY doc_id""",
-
-    // Arithmetic certifies bit equality with the sequential decode plus
-    // the QM coder beating the fixed Huffman tables on size — the
-    // deterministic expectation is "true for every document".
-    "multimodal_jpeg_arith" ->
-      """SELECT doc_id,
-         CAST(doc_id % 27 + 9 AS INT) AS width,
-         CAST(doc_id % 19 + 9 AS INT) AS height,
-         CAST(doc_id % 2 * 2 + 1 AS INT) AS channels,
-         true AS arith_equals_seq,
-         true AS arith_smaller,
-         true AS trunc_rejected
-         FROM documents ORDER BY doc_id""",
-
-    // NFC runs first on the Spark side too — on this ASCII corpus it is
-    // an identity, but the oracle replays it anyway so the composed
-    // pipeline stays pinned if the corpus ever grows non-ASCII text.
-    "text_fingerprint" ->
-      s"""SELECT doc_id,
-         md5(regexp_replace(lower(
-           regexp_replace(nfc_normalize(text), '^$wsClassSql+|$wsClassSql+$$', '', 'g')),
-           '$wsClassSql+', ' ', 'g')) AS fp
-         FROM documents ORDER BY doc_id""",
-
-    // DuckDB's nfc_normalize implements the same UAX #15 algorithm, so
-    // the normalized hashes must agree byte for byte.
-    "text_nfc" ->
-      """WITH d AS (
-           SELECT doc_id, text,
-             text || ' e' || chr(769) || 'clair' AS dirty
-           FROM documents),
-          n AS (SELECT doc_id, text, dirty,
-                  nfc_normalize(dirty) AS norm FROM d)
-         SELECT doc_id,
-           norm <> dirty AS changed,
-           CAST(length(norm) AS BIGINT) AS n_chars_norm,
-           md5(norm) AS fp_norm,
-           nfc_normalize(text) = text AS ascii_stable
-         FROM n ORDER BY doc_id""",
-
-    // Histogram -> per-codepoint 6-decimal term -> exact DECIMAL sum,
-    // replaying the kernel's fixed-order arithmetic.
-    "text_entropy" ->
-      """WITH cps AS (
-           SELECT doc_id,
-             unnest([unicode(substr(text, i, 1))
-                     for i in range(1, length(text) + 1)]) AS cp
-           FROM documents),
-          hist AS (SELECT doc_id, cp, count(*) AS c FROM cps GROUP BY 1, 2),
-          tot AS (SELECT doc_id, sum(c) AS n FROM hist GROUP BY 1),
-          terms AS (
-           SELECT h.doc_id,
-             CAST(round(-(CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n), 6)
-               AS DECIMAL(18,6)) AS term
-           FROM hist h JOIN tot USING (doc_id)),
-          agg AS (SELECT doc_id, count(*) AS nd, CAST(sum(term) AS DOUBLE) AS ent
-                  FROM terms GROUP BY doc_id)
-         SELECT d.doc_id AS doc_id,
-           CAST(coalesce(t.n, 0) AS BIGINT) AS n_cp,
-           CAST(coalesce(a.nd, 0) AS BIGINT) AS n_distinct_cp,
-           round(coalesce(a.ent, 0.0), 6) AS char_entropy
-         FROM documents d
-         LEFT JOIN tot t USING (doc_id) LEFT JOIN agg a USING (doc_id)
-         ORDER BY d.doc_id""",
-
-    "text_tfidf" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokensSql) AS token FROM documents),
-            tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-            df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-            n AS (SELECT count(*) AS n_docs FROM documents),
-            scored AS (
-              SELECT doc_id, token, tf,
-                round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-              FROM tf JOIN df USING (token) CROSS JOIN n),
-            ranked AS (
-              SELECT doc_id, token, tf, tfidf,
-                row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY tfidf DESC, token) AS rk
-              FROM scored)
-         SELECT doc_id, CAST(rk AS INT) AS rk, token, tf, tfidf
-         FROM ranked WHERE rk <= 5 ORDER BY doc_id, rk""",
-
-    // Same expression shape as bm25Search step for step: every +−×÷ is
-    // correctly rounded on both engines, ln's 1-ulp slack is absorbed by
-    // the round-6 before the exact DECIMAL sum.
-    "text_bm25_search" -> bm25OracleSql,
-
-    // The two input rankings' oracle CTEs verbatim, then the same
-    // fixed-order RRF arithmetic (txt term first, vec term second).
-    "retrieval_hybrid" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokensSql) AS token FROM documents),
-            tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-            dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-            stats AS (SELECT count(*) AS n_docs, sum(dl) AS total_tokens FROM dl),
-            qtf AS (SELECT * FROM tf WHERE token IN ('spark', 'merge', 'window')),
-            dft AS (SELECT token, count(*) AS df FROM qtf GROUP BY 1),
-            bscored AS (
-              SELECT doc_id,
-                CAST(round(
-                  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                    * ((tf * (1.2 + 1.0))
-                       / (tf + 1.2 * (1.0 - 0.75
-                          + 0.75 * dl / (CAST(total_tokens AS DOUBLE) / n_docs)))),
-                  6) AS DECIMAL(18,6)) AS s
-              FROM qtf JOIN dft USING (token) JOIN dl USING (doc_id)
-              CROSS JOIN stats),
-            bagg AS (SELECT doc_id, round(CAST(sum(s) AS DOUBLE), 6) AS bm25
-                     FROM bscored GROUP BY 1),
-            btop AS (SELECT * FROM bagg ORDER BY bm25 DESC, doc_id LIMIT 20),
-            txt AS (SELECT doc_id AS id,
-                      CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id)
-                        AS BIGINT) AS rk_txt
-                    FROM btop),
-            v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            nn AS (SELECT vec_id, vec,
-                     sqrt(list_inner_product(vec, vec)) AS nrm FROM v),
-            qv AS (SELECT vec, nrm FROM nn WHERE vec_id = 7),
-            ascored AS (
-              SELECT c.vec_id AS id,
-                list_inner_product(c.vec, qv.vec) / (c.nrm * qv.nrm) AS cosine
-              FROM nn c, qv WHERE c.vec_id <> 7),
-            aranked AS (
-              SELECT id, CAST(row_number() OVER (ORDER BY cosine DESC, id)
-                AS BIGINT) AS rk_vec
-              FROM ascored),
-            vec AS (SELECT id, rk_vec FROM aranked WHERE rk_vec <= 20),
-            fused AS (
-              SELECT coalesce(t.id, a.id) AS id,
-                coalesce(t.rk_txt, 0) AS rk_txt,
-                coalesce(a.rk_vec, 0) AS rk_vec,
-                round(coalesce(1.0 / (60.0 + t.rk_txt), 0.0)
-                    + coalesce(1.0 / (60.0 + a.rk_vec), 0.0), 6) AS rrf
-              FROM txt t FULL OUTER JOIN vec a ON t.id = a.id),
-            ftop AS (SELECT * FROM fused ORDER BY rrf DESC, id LIMIT 10)
-         SELECT CAST(row_number() OVER (ORDER BY rrf DESC, id) AS INT) AS rk,
-           id, rk_txt, rk_vec, rrf
-         FROM ftop ORDER BY rk""",
-
-    // Stored-index probe: the answer must be identical to the in-query
-    // operator, so the oracle is too.
-    "text_bm25_store" -> bm25OracleSql,
-
-    "text_unigram_logprob" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokensSql) AS token
-                       FROM documents WHERE NOT $blankSql),
-            f AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
-            t AS (SELECT sum(c) AS total FROM f),
-            s AS (SELECT doc_id,
-                    CAST(round(-ln(CAST(c AS DOUBLE) / total), 6)
-                      AS DECIMAL(18,6)) AS nl
-                  FROM tok JOIN f USING (token) CROSS JOIN t)
-         SELECT doc_id, count(*) AS n_tokens,
-           CAST(sum(nl) AS DOUBLE) / count(*) AS avg_neg_logp
-         FROM s GROUP BY doc_id ORDER BY doc_id""",
-
-    // Stupid-backoff trigram LM: grams extracted per doc by 1-based list
-    // index (p1/p2 null at document start), bigram/trigram types pruned
-    // at minCount=2, scored S(w|p2,p1)=c3/c2ctx with α=0.4 backoff —
-    // the CASE nesting and 0.4*(0.4*(...)) association mirror the Spark
-    // expression exactly so the IEEE doubles match bit for bit.
-    "text_ngram_logprob" ->
-      (ngramSelfScoreCtes +
-        """
-         SELECT doc_id, n_tokens, avg_neg_logp
-         FROM lmscore ORDER BY doc_id"""),
-
-    // The same replayed LM joined with the replayed language argmax,
-    // per-language tercile boundaries via quantile_cont (the
-    // sample_curriculum-established exact-percentile mapping), the same
-    // indicator-sum bin, and the head/middle/tail labels.
-    "ccnet_buckets" ->
-      (ngramSelfScoreCtes +
-        s""",
-            lng AS (SELECT doc_id, CASE $langCaseSql ELSE 'und' END AS lang
-                    FROM (SELECT doc_id,
-                            $langHitsSql
-                          FROM documents)),
-            j AS (SELECT l.doc_id, lng.lang, l.avg_neg_logp
-                  FROM lmscore l JOIN lng USING (doc_id)),
-            bnd AS (SELECT lang,
-                      quantile_cont(avg_neg_logp, 1.0/3) AS b1,
-                      quantile_cont(avg_neg_logp, 2.0/3) AS b2
-                    FROM j GROUP BY lang)
-         SELECT doc_id, lang, avg_neg_logp,
-           CASE 1 + (avg_neg_logp > b1)::INT + (avg_neg_logp > b2)::INT
-             WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
-           END AS bucket
-         FROM j JOIN bnd USING (lang) ORDER BY doc_id"""),
-
-    // Naive-Bayes quality gate: the oracle retrains the model from
-    // scratch (per-class token counts, Laplace-1 smoothing, priors) and
-    // replays the scoring — exact-integer IEEE divisions, ln of the
-    // ratio rounded to 6dp per token, DECIMAL(18,6) fixed-order sum,
-    // the prior added at the same precision — so training and scoring
-    // must BOTH match bit for bit.
-    "text_quality_model" ->
-      s"""WITH lab AS (SELECT doc_id,
-              (CAST(substring(source, 4, 8) AS INT) % 2 = 0) AS y, text
-            FROM documents),
-            tok AS (SELECT doc_id, y, unnest($tokensSql) AS token FROM lab),
-            cnt AS (SELECT token,
-                      sum(CASE WHEN y THEN 1 ELSE 0 END) AS c_pos,
-                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS c_neg
-                    FROM tok GROUP BY 1),
-            tot AS (SELECT sum(c_pos) AS tot_pos, sum(c_neg) AS tot_neg,
-                      count(*) AS vocab FROM cnt),
-            pri AS (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
-                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
-                    FROM lab),
-            s AS (SELECT t.doc_id,
-                    CAST(round(ln(
-                      (CAST(coalesce(c.c_pos, 0) + 1 AS DOUBLE)
-                         / CAST(tot.tot_pos + tot.vocab AS DOUBLE))
-                      / (CAST(coalesce(c.c_neg, 0) + 1 AS DOUBLE)
-                         / CAST(tot.tot_neg + tot.vocab AS DOUBLE))), 6)
-                      AS DECIMAL(18,6)) AS llr
-                  FROM tok t LEFT JOIN cnt c ON t.token = c.token
-                    CROSS JOIN tot),
-            agg AS (SELECT doc_id, count(*) AS n_tokens, sum(llr) AS sd
-                    FROM s GROUP BY 1),
-            pr AS (SELECT CAST(round(ln(CAST(n_pos + 1 AS DOUBLE)
-                      / CAST(n_neg + 1 AS DOUBLE)), 6) AS DECIMAL(18,6))
-                      AS prior FROM pri)
-         SELECT doc_id, n_tokens,
-           round(CAST(sd + prior AS DOUBLE), 6) AS score,
-           (sd + prior > CAST(0 AS DECIMAL(18,6))) AS predict_pos
-         FROM agg CROSS JOIN pr ORDER BY doc_id""",
-
-    // PSI replayed from scratch: reference quantile boundaries
-    // (quantile_cont == Spark's exact percentile, the established
-    // cross-engine pair), fold-count bin assignment, Laplace
-    // probabilities as IEEE integer-ratio divisions, per-bin terms
-    // rounded to 6dp and DECIMAL-summed.
-    "drift_psi" ->
-      """WITH ref AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-                      WHERE o_orderkey % 2 = 0),
-            cur AS (SELECT CAST(o_totalprice AS DOUBLE) * 1.1 AS v
-                    FROM orders WHERE o_orderkey % 2 = 1),
-            b AS (SELECT quantile_cont(v, [0.1, 0.2, 0.3, 0.4, 0.5,
-                                           0.6, 0.7, 0.8, 0.9]) AS bs
-                  FROM ref),
-            rc AS (SELECT 1 + list_sum(list_transform(b.bs,
-                     x -> CASE WHEN v > x THEN 1 ELSE 0 END)) AS bin
-                   FROM ref, b),
-            cc AS (SELECT 1 + list_sum(list_transform(b.bs,
-                     x -> CASE WHEN v > x THEN 1 ELSE 0 END)) AS bin
-                   FROM cur, b),
-            rn AS (SELECT bin, count(*) AS ref_n FROM rc GROUP BY 1),
-            cn AS (SELECT bin, count(*) AS cur_n FROM cc GROUP BY 1),
-            bins AS (SELECT * FROM generate_series(1, 10) t(bin)),
-            tot AS (SELECT (SELECT count(*) FROM ref) AS rt,
-                      (SELECT count(*) FROM cur) AS ct),
-            j AS (SELECT bin, coalesce(ref_n, 0) AS ref_n,
-                    coalesce(cur_n, 0) AS cur_n
-                  FROM bins LEFT JOIN rn USING (bin)
-                            LEFT JOIN cn USING (bin)),
-            terms AS (SELECT ref_n, cur_n,
-                    CAST(round(
-                      (CAST(cur_n + 1 AS DOUBLE) / (ct + 10)
-                        - CAST(ref_n + 1 AS DOUBLE) / (rt + 10))
-                      * ln((CAST(cur_n + 1 AS DOUBLE) / (ct + 10))
-                           / (CAST(ref_n + 1 AS DOUBLE) / (rt + 10))), 6)
-                      AS DECIMAL(18,6)) AS term
-                  FROM j CROSS JOIN tot)
-         SELECT CAST(count(*) AS BIGINT) AS n_bins,
-           CAST(sum(ref_n) AS BIGINT) AS ref_n,
-           CAST(sum(cur_n) AS BIGINT) AS cur_n,
-           CAST(sum(term) AS DOUBLE) AS psi
-         FROM terms""",
-
-    // Mean-vector shift replayed exactly (per-dimension DECIMAL(38,9)
-    // sums, dimension-order fold, quant6); the PCA-basis PSI columns
-    // are attested booleans (basis orthonormal, psi(ref,ref) = 0,
-    // terms nonneg, planted 1.5x+0.3 drift over the alert line).
-    "drift_embedding" ->
-      """WITH refv AS (SELECT embedding::DOUBLE[] AS v FROM embeddings
-                       WHERE vec_id % 2 = 0),
-            curv AS (SELECT [x * 1.5 + 0.3 for x in embedding::DOUBLE[]]
-                       AS v
-                     FROM embeddings WHERE vec_id % 2 = 1),
-            re AS (SELECT unnest(v) AS e,
-                     unnest(range(1, len(v) + 1)) AS i
-                   FROM refv),
-            ce AS (SELECT unnest(v) AS e,
-                     unnest(range(1, len(v) + 1)) AS i
-                   FROM curv),
-            rs AS (SELECT i, sum(CAST(e AS DECIMAL(38,9))) AS s,
-                     count(*) AS n FROM re GROUP BY i),
-            cs AS (SELECT i, sum(CAST(e AS DECIMAL(38,9))) AS s,
-                     count(*) AS n FROM ce GROUP BY i),
-            dd AS (SELECT r.i,
-                     (CAST(c.s AS DOUBLE) / c.n
-                       - CAST(r.s AS DOUBLE) / r.n) AS d
-                   FROM rs r JOIN cs c ON r.i = c.i),
-            l2 AS (SELECT floor(sqrt(list_sum(list(d * d ORDER BY i)))
-                     * 1000000 + 0.5) / 1000000 AS ms
-                   FROM dd)
-         SELECT
-           (SELECT CAST(count(*) AS BIGINT) FROM refv) AS n_ref,
-           (SELECT CAST(count(*) AS BIGINT) FROM curv) AS n_cur,
-           CAST(64 AS INT) AS dim, CAST(4 AS INT) AS k,
-           (SELECT ms FROM l2) AS mean_shift_l2,
-           true AS basis_orthonormal,
-           true AS psi_self_zero,
-           true AS psi_all_nonneg,
-           true AS psi_alert""",
-
-    // Token drift replayed: top-30 reference tokens (count DESC, token
-    // ASC), left-joined current counts, the rest bucket from totals,
-    // quant6 integer-ratio probabilities and gaps.
-    "drift_tokens" ->
-      s"""WITH refd AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
-            curd AS (SELECT text || ' zdrifttoken zdrifttoken' AS text
-                     FROM documents WHERE doc_id % 2 = 1),
-            rtok AS (SELECT unnest($tokensSql) AS token FROM refd),
-            ctok AS (SELECT unnest($tokensSql) AS token FROM curd),
-            rn AS (SELECT token, count(*) AS ref_n FROM rtok GROUP BY 1),
-            cn AS (SELECT token, count(*) AS cur_n FROM ctok GROUP BY 1),
-            top AS (SELECT token, ref_n FROM rn
-                    ORDER BY ref_n DESC, token LIMIT 30),
-            named AS (SELECT t.token AS bucket, false AS is_rest,
-                        t.ref_n, coalesce(c.cur_n, 0) AS cur_n
-                      FROM top t LEFT JOIN cn c ON t.token = c.token),
-            tot AS (SELECT (SELECT count(*) FROM rtok) AS rt,
-                      (SELECT count(*) FROM ctok) AS ct),
-            rest AS (SELECT '' AS bucket, true AS is_rest,
-                       rt - (SELECT sum(ref_n) FROM named) AS ref_n,
-                       ct - (SELECT sum(cur_n) FROM named) AS cur_n
-                     FROM tot),
-            uni AS (SELECT * FROM named UNION ALL SELECT * FROM rest)
-         SELECT bucket, is_rest, CAST(ref_n AS BIGINT) AS ref_n,
-           CAST(cur_n AS BIGINT) AS cur_n,
-           floor((CAST(ref_n AS DOUBLE) / rt) * 1000000 + 0.5) / 1000000
-             AS ref_p,
-           floor((CAST(cur_n AS DOUBLE) / ct) * 1000000 + 0.5) / 1000000
-             AS cur_p,
-           floor(abs(CAST(cur_n AS DOUBLE) / ct
-                     - CAST(ref_n AS DOUBLE) / rt) * 1000000 + 0.5)
-             / 1000000 AS gap
-         FROM uni CROSS JOIN tot ORDER BY is_rest, bucket""",
-
-    // Retrains NB on the % 4 != 0 split, replays scoring over the
-    // held-out % 4 == 0 slice (identical arithmetic to
-    // text_quality_model), then the confusion rollup with quant6
-    // precision/recall/accuracy.
-    "text_classifier_eval" ->
-      s"""WITH lab AS (SELECT doc_id,
-              (CAST(substring(source, 4, 8) AS INT) % 2 = 0) AS y, text
-            FROM documents),
-            trn AS (SELECT * FROM lab WHERE doc_id % 4 != 0),
-            hld AS (SELECT * FROM lab WHERE doc_id % 4 = 0),
-            tok AS (SELECT doc_id, y, unnest($tokensSql) AS token FROM trn),
-            cnt AS (SELECT token,
-                      sum(CASE WHEN y THEN 1 ELSE 0 END) AS c_pos,
-                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS c_neg
-                    FROM tok GROUP BY 1),
-            tot AS (SELECT sum(c_pos) AS tot_pos, sum(c_neg) AS tot_neg,
-                      count(*) AS vocab FROM cnt),
-            pri AS (SELECT sum(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos,
-                      sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg
-                    FROM trn),
-            htok AS (SELECT doc_id, unnest($tokensSql) AS token FROM hld),
-            s AS (SELECT t.doc_id,
-                    CAST(round(ln(
-                      (CAST(coalesce(c.c_pos, 0) + 1 AS DOUBLE)
-                         / CAST(tot.tot_pos + tot.vocab AS DOUBLE))
-                      / (CAST(coalesce(c.c_neg, 0) + 1 AS DOUBLE)
-                         / CAST(tot.tot_neg + tot.vocab AS DOUBLE))), 6)
-                      AS DECIMAL(18,6)) AS llr
-                  FROM htok t LEFT JOIN cnt c ON t.token = c.token
-                    CROSS JOIN tot),
-            agg AS (SELECT doc_id, sum(llr) AS sd FROM s GROUP BY 1),
-            pr AS (SELECT CAST(round(ln(CAST(n_pos + 1 AS DOUBLE)
-                      / CAST(n_neg + 1 AS DOUBLE)), 6) AS DECIMAL(18,6))
-                      AS prior FROM pri),
-            verdicts AS (SELECT a.doc_id,
-                      (a.sd + pr.prior > CAST(0 AS DECIMAL(18,6))) AS p,
-                      h.y
-                    FROM agg a CROSS JOIN pr JOIN hld h USING (doc_id)),
-            cm AS (SELECT count(*) AS n_docs,
-                     sum(CASE WHEN p AND y THEN 1 ELSE 0 END) AS tp,
-                     sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END) AS fp,
-                     sum(CASE WHEN NOT p AND NOT y THEN 1 ELSE 0 END) AS tn,
-                     sum(CASE WHEN NOT p AND y THEN 1 ELSE 0 END) AS fn
-                   FROM verdicts)
-         SELECT CAST(n_docs AS BIGINT) AS n_docs, CAST(tp AS BIGINT) AS tp,
-           CAST(fp AS BIGINT) AS fp, CAST(tn AS BIGINT) AS tn,
-           CAST(fn AS BIGINT) AS fn,
-           CASE WHEN tp + fp > 0 THEN floor((CAST(tp AS DOUBLE) / (tp + fp))
-             * 1000000 + 0.5) / 1000000 END AS precision,
-           CASE WHEN tp + fn > 0 THEN floor((CAST(tp AS DOUBLE) / (tp + fn))
-             * 1000000 + 0.5) / 1000000 END AS recall,
-           CASE WHEN n_docs > 0 THEN floor((CAST(tp + tn AS DOUBLE) / n_docs)
-             * 1000000 + 0.5) / 1000000 END AS accuracy
-         FROM cm""",
-
-    "token_freq_topk" ->
-      s"""SELECT token, count(*) AS n
-         FROM (SELECT unnest($tokensSql) AS token FROM documents
-               WHERE NOT $blankSql)
-         GROUP BY token ORDER BY n DESC, token LIMIT 20""",
-
-    // Self-certifying (see the query comment): the oracle pins shape,
-    // count and the all-true property booleans.
-    "embed_pca" ->
-      """SELECT k, (SELECT count(*) FROM embeddings) AS n_vectors,
-         64 AS dim, true AS orthonormal, true AS eigen_ok,
-         true AS err_improves
-         FROM (VALUES (4), (8), (16)) t(k) ORDER BY k""",
-
-    "embed_quantize_int8" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-            m AS (SELECT vec_id, vec,
-                    list_max(list_transform(vec, x -> abs(x))) AS ma FROM v),
-            q AS (SELECT vec_id,
-                    CASE WHEN ma = 0 THEN 0.0 ELSE ma / 127.0 END AS scale,
-                    CASE WHEN ma = 0 THEN list_transform(vec, x -> 0)
-                         ELSE list_transform(vec,
-                           x -> CAST(round(x * 127.0 / ma) AS INTEGER)) END AS codes
-                  FROM m)
-         SELECT vec_id, round(scale, 6) AS scale,
-           CAST(codes[1] AS BIGINT) AS c0,
-           CAST(codes[64] AS BIGINT) AS c63,
-           CAST(list_sum(codes) AS BIGINT) AS code_sum
-         FROM q ORDER BY vec_id""",
-
-    "text_repetition" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-             CASE WHEN $blankSql THEN []::VARCHAR[]
-                  ELSE $tokensSql END AS toks
-           FROM documents),
-          b AS (
-           SELECT doc_id, toks,
-             [toks[i] || ' ' || toks[i+1] for i in range(1, len(toks))] AS bgs
-           FROM t),
-          c AS (
-           SELECT doc_id,
-             len(toks) AS n_tokens,
-             len(list_distinct(toks)) AS n_distinct,
-             coalesce(list_max([len(list_filter(toks, y -> y = x))
-                                for x in list_distinct(toks)]), 0) AS top_tok,
-             coalesce(list_max([len(list_filter(bgs, y -> y = x))
-                                for x in list_distinct(bgs)]), 0) AS top_bg
-           FROM b)
-         SELECT doc_id,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(n_distinct AS BIGINT) AS n_distinct,
-           CASE WHEN n_tokens > 0
-                THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_tokens, 6)
-                ELSE 0.0 END AS dup_token_ratio,
-           CAST(top_tok AS BIGINT) AS top_token_n,
-           CASE WHEN n_tokens > 0
-                THEN round(CAST(top_tok AS DOUBLE) / n_tokens, 6)
-                ELSE 0.0 END AS top_token_frac,
-           CAST(top_bg AS BIGINT) AS top_bigram_n
-         FROM c ORDER BY doc_id""",
-
-    "text_chunk" ->
-      s"""WITH f AS (
-           SELECT doc_id, $tokensSql AS toks,
-             len($tokensSql) AS n
-           FROM documents WHERE NOT $blankSql),
-          e AS (
-           SELECT doc_id, i AS chunk_id,
-             array_to_string(list_slice(toks, i*24 + 1, i*24 + 32), ' ') AS chunk_text
-           FROM f, unnest(range(0, greatest(1,
-             CAST(ceil(CAST(n - 8 AS DOUBLE) / 24) AS INT)))) AS u(i))
-         SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, chunk_text,
-           CAST(len(string_split(chunk_text, ' ')) AS BIGINT) AS chunk_tokens
-         FROM e ORDER BY doc_id, chunk_id""",
-
-    "text_redact_pii" ->
-      s"""WITH planted AS (
-           SELECT doc_id,
-             text || ' reach me at user' || doc_id || '@example.com'
-                  || ' or +1 555 000 77' || (doc_id % 100)
-                  || ' host 10.0.' || (doc_id % 256) || '.7' AS text
-           FROM documents)
-         SELECT doc_id,
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(text,
-                   '${TextAnalysis.EmailRe}', '<EMAIL>', 'g'),
-                 '${TextAnalysis.Ipv4Re}', '<IP>', 'g'),
-               '${TextAnalysis.LongNumRe}', '<NUM>', 'g'),
-             '${TextAnalysis.PhoneRe}', '<PHONE>', 'g') AS clean
-         FROM planted ORDER BY doc_id""",
-
-    // The oracle builds its replace chain from the SAME MojibakeTable
-    // the operator folds, so the table and the SQL can never drift;
-    // the planted literal is computed by the same mojify().
-    "text_fix_mojibake" -> {
-      val corrupted = TextAnalysis.mojify(" café — “quoted” …costs €5•")
-      val fix = TextAnalysis.MojibakeTable.foldLeft("text") {
-        case (acc, (m, t)) => s"replace($acc, '$m', '$t')"
-      }
-      s"""WITH planted AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0 THEN text
-                  ELSE text || '$corrupted' END AS text
-           FROM documents)
-         SELECT doc_id, $fix AS clean,
-           CAST(length(text) - length($fix) AS BIGINT) AS n_saved
-         FROM planted ORDER BY doc_id"""
-    },
-
-    // The synth and the strip are the same regex/concat pipeline on
-    // both engines; (?is)/(?s) inline flags and 'g' are RE2-valid, and
-    // &amp; decodes LAST on both sides.
-    "text_strip_html" ->
-      """WITH pages AS (
-           SELECT doc_id,
-             '<html><head><script type="text/javascript">var id=' || doc_id
-             || ';</script><style>p{color:red}</style></head>'
-             || '<body><!-- doc --><h1>Doc &#39;' || doc_id
-             || '&#39;</h1><p class="main">'
-             || CASE WHEN doc_id % 5 = 0 THEN replace(text, ' ', '&nbsp;')
-                     ELSE text END
-             || '</p><div>Tom &amp; Jerry &lt;escaped&gt;</div></body></html>'
-             AS html
-           FROM documents),
-          stripped AS (
-           SELECT doc_id,
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(html, '(?is)<script\b(?:>|[^>]*[^/>]>).*?</script>', ' ', 'g'),
-                   '(?is)<style\b(?:>|[^>]*[^/>]>).*?</style>', ' ', 'g'),
-                 '(?s)<!--.*?-->', ' ', 'g'),
-               '<[^>]*>', ' ', 'g') AS t
-           FROM pages),
-          decoded AS (
-           SELECT doc_id,
-             replace(
-               replace(
-                 regexp_replace(
-                   replace(
-                     replace(
-                       replace(t, '&lt;', '<'),
-                       '&gt;', '>'),
-                     '&quot;', '"'),
-                   '&#39;|&apos;', '''', 'g'),
-                 '&nbsp;', ' '),
-               '&amp;', '&') AS t
-           FROM stripped)
-         SELECT doc_id,
-           trim(regexp_replace(t, '[ \t\n\f\r\x0B]+', ' ', 'g')) AS text
-         FROM decoded ORDER BY doc_id""",
-
-    "text_strip_boilerplate" ->
-      """WITH pages AS (
-           SELECT doc_id, text
-             || CASE WHEN doc_id % 5 = 0
-                THEN chr(10) || 'subscribe to our newsletter for updates'
-                ELSE '' END
-             || CASE WHEN doc_id % 7 = 0
-                THEN chr(10) || 'all rights reserved'
-                ELSE '' END AS text
-           FROM documents),
-          p AS (
-           SELECT doc_id, i AS pos, parts[i] AS para
-           FROM (SELECT doc_id, string_split(text, chr(10)) AS parts FROM pages),
-                unnest(range(1, len(parts) + 1)) AS u(i)),
-          common AS (
-           SELECT para FROM p GROUP BY para
-           HAVING count(DISTINCT doc_id) >= 3),
-          kept AS (
-           SELECT doc_id, pos, para FROM p
-           WHERE para NOT IN (SELECT para FROM common))
-         SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS clean_text
-         FROM kept GROUP BY doc_id ORDER BY doc_id""",
-
-    // Payloads compared directly (the fingerprint stands in for text
-    // equality on the Spark side — the documented collision contract).
-    "corpus_diff" ->
-      """WITH a AS (SELECT doc_id, text FROM documents),
-            b AS (SELECT doc_id,
-                    CASE WHEN doc_id % 37 = 0 THEN text || ' rev2'
-                         ELSE text END AS text
-                  FROM documents WHERE doc_id % 31 <> 0
-                  UNION ALL
-                  SELECT doc_id + 600000, text FROM documents
-                  WHERE doc_id % 41 = 0),
-            d AS (SELECT coalesce(a.doc_id, b.doc_id) AS key,
-                    CASE WHEN a.doc_id IS NULL THEN 'added'
-                         WHEN b.doc_id IS NULL THEN 'removed'
-                         WHEN a.text <> b.text THEN 'changed'
-                         END AS status
-                  FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-         SELECT key, status FROM d WHERE status IS NOT NULL
-         ORDER BY key""",
-
-    "corpus_report" -> {
-      val hits = langHitsSql
-      val cases = langCaseSql
-      s"""WITH f AS (
-           SELECT doc_id, text, length(text) AS n_chars,
-             CASE WHEN $blankSql THEN 0 ELSE len($tokensSql) END AS n_tokens,
-             length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{'||chr(45)||'}~]', '', 'g')) AS n_punct,
-             $hits
-           FROM documents),
-          q AS (
-           SELECT doc_id, text, n_tokens,
-             CASE $cases ELSE 'und' END AS lang_pred,
-             floor((least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-               * (1.0 - least(CASE WHEN n_chars > 0
-                    THEN floor((CAST(n_punct AS DOUBLE) / n_chars) * 1000000 + 0.5) / 1000000
-                    ELSE 0.0 END * 5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS quality_score
-           FROM f),
-          t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-          w AS (SELECT doc_id, array_to_string(toks[i:i+5], ' ') AS win
-                FROM t, unnest(range(1, len(toks) - 4)) AS u(i)
-                WHERE len(toks) >= 6),
-          g AS (SELECT win, count(DISTINCT doc_id) AS nd FROM w GROUP BY win),
-          sp AS (SELECT w.doc_id,
-                   max(CASE WHEN g.nd >= 2 THEN 1 ELSE 0 END) AS has_dup
-                 FROM w JOIN g USING (win) GROUP BY w.doc_id)
-         SELECT count(*) AS n_docs,
-           CAST(sum(q.n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CASE WHEN q.lang_pred = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-           floor((CAST(sum(CAST(q.quality_score AS DECIMAL(18,6))) AS DOUBLE)
-             / count(*)) * 1000000 + 0.5) / 1000000 AS avg_quality,
-           CAST(sum(CASE WHEN coalesce(sp.has_dup, 0) = 1 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_span_dup_docs,
-           count(DISTINCT q.text) AS n_distinct_texts
-         FROM q LEFT JOIN sp USING (doc_id)"""
-    },
-
-    "q_retention_cohort" ->
-      """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-            c AS (SELECT user_id, min(day) AS cohort_day FROM d GROUP BY user_id)
-         SELECT strftime(c.cohort_day, '%Y-%m-%d') AS cohort_day,
-           date_diff('day', c.cohort_day, d.day) AS day_offset,
-           count(*) AS n_users
-         FROM d JOIN c USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2"""
-  )
 }

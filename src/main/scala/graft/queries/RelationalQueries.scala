@@ -24,9 +24,20 @@ object RelationalQueries {
   private def dec2(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
   private def dec6(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 6))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def all: Seq[Query] = Seq(
     // TPC-H Q1-shaped scan → filter → hash agg (partial+final, codegen'd).
-    "q1_agg" -> { (s, dir) =>
+    Query("q1_agg",
+      """SELECT l_returnflag, l_linestatus,
+         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+         CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
+         CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
+         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
+         count(*) AS count_order
+         FROM lineitem
+         WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00'
+         GROUP BY l_returnflag, l_linestatus
+         ORDER BY l_returnflag, l_linestatus""") { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem
         .filter(col("l_shipdate") <= lit("1999-12-31").cast("timestamp"))
@@ -45,7 +56,9 @@ object RelationalQueries {
 
     // Projection + predicate that must reach the parquet scan
     // (PushedFilters / 2-column ReadSchema).
-    "q_filter_project" -> { (s, dir) =>
+    Query("q_filter_project",
+      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+         WHERE l_quantity > 45.0 ORDER BY l_orderkey, l_linenumber""") { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem
         .filter(col("l_quantity") > 45.0)
@@ -55,7 +68,17 @@ object RelationalQueries {
 
     // TPC-H Q3-shaped 3-way join: broadcast dim (customer) into orders,
     // shuffle join with lineitem, agg, top-k by revenue.
-    "q3_join_topk" -> { (s, dir) =>
+    Query("q3_join_topk",
+      """SELECT l_orderkey, o_orderdate,
+         CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+           AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+         GROUP BY l_orderkey, o_orderdate
+         ORDER BY revenue DESC, l_orderkey LIMIT 10""") { (s, dir) =>
       val t = Tables(s, dir)
       val cust = t.customer.filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"))
@@ -75,7 +98,13 @@ object RelationalQueries {
     },
 
     // Broadcast star join across three dims + distinct + sort.
-    "q_broadcast_star" -> { (s, dir) =>
+    Query("q_broadcast_star",
+      """SELECT r_name, n_name, count(*) AS n_cust,
+         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
+         FROM customer
+         JOIN nation ON c_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         GROUP BY r_name, n_name ORDER BY r_name, n_name""") { (s, dir) =>
       val t = Tables(s, dir)
       t.customer
         .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
@@ -87,7 +116,11 @@ object RelationalQueries {
     },
 
     // Left-semi join: orders having at least one high-quantity line (EXISTS).
-    "q_semi_join" -> { (s, dir) =>
+    Query("q_semi_join",
+      """SELECT o_orderkey, o_totalprice FROM orders
+         WHERE EXISTS (SELECT 1 FROM lineitem
+                       WHERE l_orderkey = o_orderkey AND l_quantity >= 49.0)
+         ORDER BY o_orderkey""") { (s, dir) =>
       val t = Tables(s, dir)
       val big = t.lineitem.filter(col("l_quantity") >= 49.0)
         .select(col("l_orderkey"))
@@ -97,7 +130,11 @@ object RelationalQueries {
     },
 
     // Left-anti join: customers with no large order (NOT EXISTS).
-    "q_anti_join" -> { (s, dir) =>
+    Query("q_anti_join",
+      """SELECT c_custkey, c_name FROM customer
+         WHERE NOT EXISTS (SELECT 1 FROM orders
+                           WHERE o_custkey = c_custkey AND o_totalprice > 300000.0)
+         ORDER BY c_custkey""") { (s, dir) =>
       val t = Tables(s, dir)
       val big = t.orders.filter(col("o_totalprice") > 300000.0)
         .select(col("o_custkey"))
@@ -107,7 +144,12 @@ object RelationalQueries {
     },
 
     // Ranking window: top-3 parts by retail price per brand.
-    "q_window_topk" -> { (s, dir) =>
+    Query("q_window_topk",
+      """SELECT p_brand, rk, p_partkey, p_retailprice FROM (
+           SELECT p_brand, p_partkey, p_retailprice,
+             row_number() OVER (PARTITION BY p_brand
+               ORDER BY p_retailprice DESC, p_partkey) AS rk
+           FROM part) WHERE rk <= 3 ORDER BY p_brand, rk""") { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val t = Tables(s, dir)
       val w = Window.partitionBy(col("p_brand"))
@@ -121,7 +163,14 @@ object RelationalQueries {
 
     // Analytic window: per-supplier running quantity ordered by ship date
     // (unique tie-break: orderkey, linenumber).
-    "q_window_running" -> { (s, dir) =>
+    Query("q_window_running",
+      """SELECT l_suppkey, l_orderkey, l_linenumber,
+         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER (
+           PARTITION BY l_suppkey
+           ORDER BY l_shipdate, l_orderkey, l_linenumber
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
+         FROM lineitem WHERE l_suppkey <= 10
+         ORDER BY l_suppkey, l_orderkey, l_linenumber""") { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val t = Tables(s, dir)
       val w = Window.partitionBy(col("l_suppkey"))
@@ -136,7 +185,11 @@ object RelationalQueries {
 
     // Skew-safe fact-dim shuffle join: fact salted, dim replicated 8x —
     // result identical to the plain join (which IS the oracle).
-    "q_salted_join" -> { (s, dir) =>
+    Query("q_salted_join",
+      """WITH dim AS (SELECT user_id, count(*) AS user_n FROM events GROUP BY user_id)
+         SELECT e.event_type, count(*) AS n, CAST(sum(d.user_n) AS BIGINT) AS s
+         FROM events e JOIN dim d USING (user_id)
+         GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       val dim = t.events.groupBy(col("user_id")).agg(count(lit(1)).as("user_n"))
       graft.operators.Skew
@@ -154,7 +207,19 @@ object RelationalQueries {
     // frame so float ordering can't break cross-engine equality. The window
     // runs over the (tiny) daily aggregate, not the event stream — at scale
     // the shuffle is days-sized.
-    "q_rolling_7day" -> { (s, dir) =>
+    Query("q_rolling_7day",
+      """WITH daily AS (
+           SELECT CAST(ts AS DATE) AS day,
+             sum(CAST(value AS DECIMAL(18,6))) AS rev
+           FROM events GROUP BY 1)
+         SELECT strftime(day, '%Y-%m-%d') AS day,
+           round(CAST(rev AS DOUBLE), 6) AS revenue,
+           round(CAST(sum(rev) OVER (ORDER BY day
+             RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
+             AS DOUBLE), 6) AS roll_sum_7d,
+           count(*) OVER (ORDER BY day
+             RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW) AS n_days_7d
+         FROM daily ORDER BY day""") { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val t = Tables(s, dir)
       val daily = t.events
@@ -183,7 +248,35 @@ object RelationalQueries {
     // holds counts, flags, and carried doubles to hash equality. The
     // fill value is always an ORIGINAL stored double (no arithmetic),
     // hence bit-exact.
-    "q_gapfill_ffill" -> { (s, dir) =>
+    Query("q_gapfill_ffill",
+      // Grid arithmetic is exact integer day indexes; the forward fill is
+      // re-derived portably with the grouping-run trick (count of non-null
+      // so far = fill group, max within group = the carried value), so no
+      // IGNORE NULLS support is assumed of the oracle engine.
+      """WITH e AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS bucket,
+               ts, event_id, value
+             FROM events),
+            obs AS (SELECT user_id, bucket, count(*) AS n_events,
+                      (max(struct_pack(ts := ts, eid := event_id,
+                                       v := value))).v AS vlast
+                    FROM e GROUP BY 1, 2),
+            r AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
+                  FROM obs GROUP BY 1),
+            grid AS (SELECT user_id, unnest(generate_series(b0, b1)) AS bucket
+                     FROM r),
+            j AS (SELECT g.user_id, g.bucket,
+                    coalesce(o.n_events, 0) AS n_events,
+                    o.n_events IS NOT NULL AS observed, o.vlast
+                  FROM grid g LEFT JOIN obs o
+                    ON g.user_id = o.user_id AND g.bucket = o.bucket),
+            w AS (SELECT user_id, bucket, n_events, observed, vlast,
+                    count(vlast) OVER (PARTITION BY user_id ORDER BY bucket
+                                       ROWS UNBOUNDED PRECEDING) AS grp
+                  FROM j)
+         SELECT user_id, bucket, n_events, observed,
+           max(vlast) OVER (PARTITION BY user_id, grp) AS value_ffill
+         FROM w ORDER BY user_id, bucket""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.TimeSeries.gapFillForwardFill(t.events,
           key = col("user_id"),
@@ -202,7 +295,54 @@ object RelationalQueries {
     // engines — integer buckets convert to double exactly and +−×÷ are
     // each correctly rounded, so identical expression shape gives
     // identical bits and the oracle hash holds without a tolerance.
-    "q_gapfill_interp" -> { (s, dir) =>
+    Query("q_gapfill_interp",
+      // Same grid and carried values as q_gapfill_ffill; the previous
+      // observed bucket is a running max (buckets ascend, so max == last
+      // non-null without IGNORE NULLS), and the NEXT observed (bucket,
+      // value) pair rides one struct-min over the following window so the
+      // pair can never be torn. The lerp's expression shape matches the
+      // Spark side exactly — each IEEE op correctly rounded, hence
+      // hash-exact.
+      """WITH e AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS bucket,
+               ts, event_id, value
+             FROM events),
+            obs AS (SELECT user_id, bucket, count(*) AS n_events,
+                      (max(struct_pack(ts := ts, eid := event_id,
+                                       v := value))).v AS vlast
+                    FROM e GROUP BY 1, 2),
+            r AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
+                  FROM obs GROUP BY 1),
+            grid AS (SELECT user_id, unnest(generate_series(b0, b1)) AS bucket
+                     FROM r),
+            j AS (SELECT g.user_id, g.bucket,
+                    coalesce(o.n_events, 0) AS n_events,
+                    o.n_events IS NOT NULL AS observed, o.vlast
+                  FROM grid g LEFT JOIN obs o
+                    ON g.user_id = o.user_id AND g.bucket = o.bucket),
+            w AS (SELECT user_id, bucket, n_events, observed, vlast,
+                    count(vlast) OVER (PARTITION BY user_id ORDER BY bucket
+                                       ROWS UNBOUNDED PRECEDING) AS grp
+                  FROM j),
+            f AS (SELECT user_id, bucket, n_events, observed,
+                    max(vlast) OVER (PARTITION BY user_id, grp) AS vf
+                  FROM w),
+            nn AS (SELECT user_id, bucket, n_events, observed, vf,
+                     max(CASE WHEN observed THEN bucket END)
+                       OVER (PARTITION BY user_id ORDER BY bucket
+                             ROWS UNBOUNDED PRECEDING) AS pb,
+                     min(CASE WHEN observed
+                              THEN struct_pack(b := bucket, v := vf) END)
+                       OVER (PARTITION BY user_id ORDER BY bucket
+                             ROWS BETWEEN 1 FOLLOWING
+                                      AND UNBOUNDED FOLLOWING) AS nx
+                   FROM f)
+         SELECT user_id, bucket, n_events, observed,
+           CASE WHEN observed OR nx IS NULL THEN vf
+                ELSE vf + ((nx).v - vf)
+                  * (CAST(bucket - pb AS DOUBLE)
+                     / CAST((nx).b - pb AS DOUBLE)) END AS value_interp
+         FROM nn ORDER BY user_id, bucket""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.TimeSeries.gapFillInterpolate(t.events,
           key = col("user_id"),
@@ -218,7 +358,39 @@ object RelationalQueries {
     // Rolling z-score anomaly scoring of each user's daily value total
     // against its own trailing week — exact DECIMAL rolling moments, so
     // the score is engine-independent without a tolerance.
-    "ts_anomaly" -> { (s, dir) =>
+    Query("ts_anomaly",
+      // Mirrors anomalyZScore's exact-moment construction: round-6
+      // quantized values, DECIMAL Σv and Σv² (associativity-free — the
+      // segment-tree window sum cannot diverge from Spark's running sum),
+      // then identical correctly-rounded ÷ √ − shapes.
+      """WITH d AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v0
+             FROM events GROUP BY 1, 2),
+            q AS (SELECT user_id, day, round(v0, 6) AS v,
+                    CAST(round(v0, 6) AS DECIMAL(38,6)) AS v1,
+                    CAST(round(round(v0, 6) * round(v0, 6), 6)
+                      AS DECIMAL(38,6)) AS v2
+                  FROM d),
+            wnd AS (SELECT user_id, day, v,
+                      count(v1) OVER w AS n_prior,
+                      CAST(sum(v1) OVER w AS DOUBLE) AS s1,
+                      CAST(sum(v2) OVER w AS DOUBLE) AS s2
+                    FROM q
+                    WINDOW w AS (PARTITION BY user_id ORDER BY day
+                                 ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
+            sc AS (SELECT user_id, day, v, n_prior,
+                     CASE WHEN n_prior >= 2 AND
+                         sqrt(greatest((s2 - s1 * s1 / n_prior)
+                                         / (n_prior - 1), 0.0)) > 0
+                       THEN round((v - s1 / n_prior)
+                         / sqrt(greatest((s2 - s1 * s1 / n_prior)
+                                           / (n_prior - 1), 0.0)), 6)
+                     END AS z
+                   FROM wnd)
+         SELECT user_id, day, v, n_prior, z,
+           coalesce(abs(z) > 3.0, false) AS is_anomaly
+         FROM sc ORDER BY user_id, day""") { (s, dir) =>
       val t = Tables(s, dir)
       val daily = t.events
         .groupBy(col("user_id"),
@@ -237,7 +409,21 @@ object RelationalQueries {
     // Final EWMA level per user over the same daily series (α = 0.25 —
     // both α and 1−α are exactly representable, so the fold is
     // bit-reproducible on any engine).
-    "ts_ewma" -> { (s, dir) =>
+    Query("ts_ewma",
+      // list_reduce seeds with the first element, exactly like the Spark
+      // fold's slice-plus-init — same per-step IEEE ops, same order.
+      """WITH d AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+             FROM events GROUP BY 1, 2),
+            a AS (SELECT user_id, count(*) AS n_points,
+                    max(day) AS last_bucket,
+                    list(v ORDER BY day) AS vals
+                  FROM d GROUP BY 1)
+         SELECT user_id, n_points, last_bucket,
+           round(list_reduce(vals,
+             (acc, x) -> 0.25 * x + (1.0 - 0.25) * acc), 6) AS ewma
+         FROM a ORDER BY user_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val daily = t.events
         .groupBy(col("user_id"),
@@ -257,7 +443,34 @@ object RelationalQueries {
     // daily series — α = 0.5, β = 0.25: both factors AND their
     // complements are exactly representable, so the two-field fold is
     // bit-reproducible and the oracle replays it without a tolerance.
-    "ts_holt" -> { (s, dir) =>
+    Query("ts_holt",
+      // The Holt recurrence unrolled as a recursive CTE, one step per
+      // (user, observation) — same IEEE ops in the same order as the
+      // Spark fold, so the hash holds without a tolerance. (A DuckDB
+      // struct-accumulator list_reduce was tried first and mis-evaluates
+      // the second field — the recursion is the explicit, engine-stable
+      // form.)
+      """WITH RECURSIVE d0 AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+             FROM events GROUP BY 1, 2),
+            d AS (SELECT user_id, day, v,
+                    row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
+                  FROM d0),
+            n AS (SELECT user_id, count(*) AS n_points,
+                    max(day) AS last_bucket FROM d GROUP BY 1),
+            rec(user_id, i, l, b) AS (
+              SELECT user_id, 1, v, CAST(0.0 AS DOUBLE) FROM d WHERE rn = 1
+              UNION ALL
+              SELECT r.user_id, r.i + 1,
+                0.5 * d.v + 0.5 * (r.l + r.b),
+                0.25 * ((0.5 * d.v + 0.5 * (r.l + r.b)) - r.l) + 0.75 * r.b
+              FROM rec r JOIN d ON d.user_id = r.user_id AND d.rn = r.i + 1)
+         SELECT rec.user_id, n.n_points, n.last_bucket,
+           round(l, 6) AS level, round(b, 6) AS trend,
+           round(l + b, 6) AS forecast_1
+         FROM rec JOIN n ON n.user_id = rec.user_id AND rec.i = n.n_points
+         ORDER BY rec.user_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val daily = t.events
         .groupBy(col("user_id"),
@@ -276,7 +489,7 @@ object RelationalQueries {
 
     // PageRank over the (sparse, undirected) supplier—part co-occurrence
     // graph: 5 power iterations, engine-exact DECIMAL contribution sums.
-    "graph_pagerank" -> { (s, dir) =>
+    Query("graph_pagerank", pageRankSql(5)) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Graph
         .pageRank(graphEdges(t), col("a"), col("b"), iters = 5)
@@ -289,7 +502,7 @@ object RelationalQueries {
     // mode that closes the documented dropped-mass trade. The oracle
     // unrolls the recurrence including each iteration's exact DECIMAL
     // dangling sum.
-    "graph_pagerank_dangling" -> { (s, dir) =>
+    Query("graph_pagerank_dangling", pageRankDanglingSql(5)) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Graph
         .pageRank(directedGraphEdges(t), col("a"), col("b"), iters = 5,
@@ -299,7 +512,17 @@ object RelationalQueries {
 
     // Connected components of the same graph (min-id labels) via the
     // union-find / pointer-jumping operator the dedup family uses.
-    "graph_components" -> { (s, dir) =>
+    Query("graph_components",
+      // Min-label transitive closure to fixpoint: r holds (v, u) for every
+      // u that reaches v; the component label is the minimum — exactly the
+      // min-root invariant of the union-find/pointer-jumping operator.
+      s"""WITH RECURSIVE $graphBaseSql,
+            r(node, lab) AS (
+              SELECT node, node FROM nodes
+              UNION
+              SELECT e.dst, r.lab FROM r JOIN e ON e.src = r.node)
+         SELECT node AS id, min(lab) AS label FROM r
+         GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Dedup
         .componentsFromPairs(graphEdges(t)
@@ -310,7 +533,44 @@ object RelationalQueries {
     // HITS hubs/authorities on the DIRECTED supplier→part graph
     // (bipartite: hubs = suppliers, authorities = parts), 4 rounds,
     // L1-normalized engine-exact iteration.
-    "graph_hits" -> { (s, dir) =>
+    Query("graph_hits", {
+      // HITS unrolled: per round an exact-DECIMAL in-neighbor hub sum,
+      // L1 normalization in IEEE doubles, re-quantized — then the same
+      // for hubs over the fresh authorities. Same DECIMAL discipline as
+      // the pageRank oracles.
+      val iters = 4
+      val steps = (1 to iters).map { k =>
+        s"""arr$k AS MATERIALIZED (SELECT e.dst AS node,
+                    sum(CAST(h.h AS DECIMAL(38,9))) AS s
+                  FROM e JOIN h${k - 1} h ON e.src = h.node GROUP BY 1),
+            arf$k AS MATERIALIZED (SELECT n.node,
+                        coalesce(s, CAST(0 AS DECIMAL(38,9))) AS ar
+                      FROM nodes n LEFT JOIN arr$k r ON n.node = r.node),
+            a$k AS MATERIALIZED (SELECT node, round(CAST(ar AS DOUBLE)
+                      / (SELECT CAST(sum(ar) AS DOUBLE) FROM arf$k), 9)
+                      AS a
+                    FROM arf$k),
+            hrr$k AS MATERIALIZED (SELECT e.src AS node,
+                        sum(CAST(a.a AS DECIMAL(38,9))) AS s
+                      FROM e JOIN a$k a ON e.dst = a.node GROUP BY 1),
+            hrf$k AS MATERIALIZED (SELECT n.node,
+                        coalesce(s, CAST(0 AS DECIMAL(38,9))) AS hr
+                      FROM nodes n LEFT JOIN hrr$k r ON n.node = r.node),
+            h$k AS MATERIALIZED (SELECT node, round(CAST(hr AS DOUBLE)
+                      / (SELECT CAST(sum(hr) AS DOUBLE) FROM hrf$k), 9)
+                      AS h
+                    FROM hrf$k)"""
+      }.mkString(",\n")
+      s"""WITH fd AS (SELECT CAST(l_suppkey AS BIGINT) AS a,
+               CAST(l_partkey AS BIGINT) + 10000000 AS b
+             FROM lineitem WHERE l_quantity >= 48),
+           e AS (SELECT DISTINCT a AS src, b AS dst FROM fd),
+           nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
+           h0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS h FROM nodes),
+           $steps
+         SELECT h.node AS node, h.h AS hub, a.a AS authority
+         FROM h$iters h JOIN a$iters a USING (node) ORDER BY node"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Graph
         .hits(directedGraphEdges(t), col("a"), col("b"), iters = 4)
@@ -319,7 +579,27 @@ object RelationalQueries {
 
     // Label-propagation communities (synchronous, 4 rounds,
     // smallest-label tie-break) on the undirected co-occurrence graph.
-    "graph_label_prop" -> { (s, dir) =>
+    Query("graph_label_prop", {
+      // The synchronous recurrence unrolled: per round, votes = in-
+      // neighbor labels counted per (dst, label), mode = row_number over
+      // (cnt DESC, label ASC), keep-own for nodes with no in-edges.
+      val iters = 4
+      val steps = (1 to iters).map { k =>
+        s"""v$k AS (SELECT e.dst, l.lab, count(*) AS cnt
+                    FROM e JOIN l${k - 1} l ON e.src = l.node
+                    GROUP BY 1, 2),
+            m$k AS (SELECT dst, lab FROM (
+                      SELECT dst, lab, row_number() OVER (
+                        PARTITION BY dst ORDER BY cnt DESC, lab ASC) AS rn
+                      FROM v$k) WHERE rn = 1),
+            l$k AS (SELECT l.node, coalesce(m.lab, l.lab) AS lab
+                    FROM l${k - 1} l LEFT JOIN m$k m ON l.node = m.dst)"""
+      }.mkString(",\n")
+      s"""WITH $graphBaseSql,
+            l0 AS (SELECT node, node AS lab FROM nodes),
+            $steps
+         SELECT node AS id, lab AS label FROM l$iters ORDER BY id"""
+    }) { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Graph
         .labelPropagation(graphEdges(t), col("a"), col("b"), iters = 4)
@@ -327,7 +607,9 @@ object RelationalQueries {
     },
 
     // Global sort + limit (TakeOrderedAndProject, no full sort at scale).
-    "q_sort_limit" -> { (s, dir) =>
+    Query("q_sort_limit",
+      """SELECT o_orderkey, o_totalprice FROM orders
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""") { (s, dir) =>
       val t = Tables(s, dir)
       t.orders
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -336,7 +618,12 @@ object RelationalQueries {
     },
 
     // Distinct aggregates alongside plain ones.
-    "q_distinct_agg" -> { (s, dir) =>
+    Query("q_distinct_agg",
+      """SELECT l_returnflag,
+         count(DISTINCT l_suppkey) AS n_supp,
+         count(DISTINCT l_partkey) AS n_part,
+         count(*) AS n_rows
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem
         .groupBy(col("l_returnflag"))
@@ -348,7 +635,16 @@ object RelationalQueries {
     },
 
     // Set operations: UNION / INTERSECT / EXCEPT over key sets.
-    "q_set_ops" -> { (s, dir) =>
+    Query("q_set_ops",
+      """WITH auto AS (SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'),
+            bldg AS (SELECT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING')
+         SELECT * FROM (
+           SELECT 'union' AS op, c_nationkey FROM (SELECT DISTINCT c_nationkey FROM (SELECT * FROM auto UNION ALL SELECT * FROM bldg))
+           UNION ALL
+           SELECT 'intersect' AS op, c_nationkey FROM (SELECT c_nationkey FROM auto INTERSECT SELECT c_nationkey FROM bldg)
+           UNION ALL
+           SELECT 'except' AS op, c_nationkey FROM (SELECT c_nationkey FROM auto EXCEPT SELECT c_nationkey FROM bldg)
+         ) ORDER BY op, c_nationkey""") { (s, dir) =>
       val t = Tables(s, dir)
       val auto = t.customer.filter(col("c_mktsegment") === "AUTOMOBILE")
         .select(col("c_nationkey"))
@@ -363,7 +659,11 @@ object RelationalQueries {
     },
 
     // Grouping sets via CUBE with grouping_id to disambiguate null keys.
-    "q_cube" -> { (s, dir) =>
+    Query("q_cube",
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""") { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem
         .cube(col("l_returnflag"), col("l_linestatus"))
@@ -382,7 +682,11 @@ object RelationalQueries {
     // and a broken estimator flips the boolean -> hash mismatch. The
     // exact count costs one extra shuffle at VERIFY scale; the estimator
     // itself is still what this entry exists to exercise.
-    "q_approx_distinct" -> { (s, dir) =>
+    Query("q_approx_distinct",
+      // The estimator attests its own bound (see the query's comment); the
+      // oracle side is the deterministic remainder: exact counts + `true`.
+      """SELECT count(*) AS n, count(DISTINCT user_id) AS exact_users,
+           true AS within_bound FROM events""") { (s, dir) =>
       val t = Tables(s, dir)
       t.events.agg(
         approx_count_distinct(col("user_id")).as("approx_users"),
@@ -402,7 +706,23 @@ object RelationalQueries {
     // (report-sized at sf; the thing the sketch replaces at 100 TB) and
     // a boolean attesting the union estimate landed within 10% (default
     // lgConfigK=12 → ~1.6% expected error, so the bound has headroom).
-    "q_sketch_rollup" -> { (s, dir) =>
+    Query("q_sketch_rollup",
+      // Self-certifying (see the query comment): the oracle is the exact
+      // per-range distinct + `true`; the union-estimate bound is attested
+      // Spark-side.
+      """WITH d AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+             FROM events)
+         SELECT 'month' AS range_name, count(DISTINCT day) AS n_days,
+           count(DISTINCT user_id) AS exact_users, true AS within_bound
+         FROM d WHERE day BETWEEN 19723 AND 19752
+         UNION ALL
+         SELECT 'week1', count(DISTINCT day), count(DISTINCT user_id), true
+         FROM d WHERE day BETWEEN 19723 AND 19729
+         UNION ALL
+         SELECT 'weeks2_3', count(DISTINCT day), count(DISTINCT user_id), true
+         FROM d WHERE day BETWEEN 19730 AND 19743
+         ORDER BY range_name""") { (s, dir) =>
       val t = Tables(s, dir)
       val day = datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
       val daily = t.events.groupBy(day.as("day"))
@@ -436,7 +756,23 @@ object RelationalQueries {
     // and a boolean attests |rank − q| ≤ 2·eps, eps read from the
     // sketch itself. Oracle side is the deterministic remainder: exact
     // n_days/n + `true`.
-    "q_quantile_rollup" -> { (s, dir) =>
+    Query("q_quantile_rollup",
+      // Self-certifying (see the query comment): the oracle is the exact
+      // per-range day/row counts + `true`; the quantile rank bound is
+      // attested Spark-side from the range's own rows.
+      """WITH d AS (SELECT value,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+             FROM events)
+         SELECT 'month' AS range_name, count(DISTINCT day) AS n_days,
+           count(*) AS n, true AS p50_ok, true AS p90_ok, true AS p99_ok
+         FROM d WHERE day BETWEEN 19723 AND 19752
+         UNION ALL
+         SELECT 'week1', count(DISTINCT day), count(*), true, true, true
+         FROM d WHERE day BETWEEN 19723 AND 19729
+         UNION ALL
+         SELECT 'weeks2_3', count(DISTINCT day), count(*), true, true, true
+         FROM d WHERE day BETWEEN 19730 AND 19743
+         ORDER BY range_name""") { (s, dir) =>
       val t = Tables(s, dir)
       import graft.functions.SketchAggregators
       val day = datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
@@ -475,7 +811,29 @@ object RelationalQueries {
     // [lower, upper]. At test SFs the per-range distincts sit below
     // nominalEntries=16384, the sketches stay in exact mode and the
     // interval is a point — the bound is tight, not vacuous.
-    "q_sketch_intersect" -> { (s, dir) =>
+    Query("q_sketch_intersect",
+      // Self-certifying (see the query comment): the oracle is the exact
+      // distinct-user intersection per range pair + `true`; the
+      // [lower, upper] containment is attested Spark-side.
+      """WITH d AS (SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+             FROM events)
+         SELECT 'h1_h2' AS pair_name, count(*) AS exact_both,
+           true AS within_bound
+         FROM (SELECT user_id FROM d WHERE day BETWEEN 19723 AND 19737
+               INTERSECT
+               SELECT user_id FROM d WHERE day BETWEEN 19738 AND 19752)
+         UNION ALL
+         SELECT 'w1_w2', count(*), true
+         FROM (SELECT user_id FROM d WHERE day BETWEEN 19723 AND 19729
+               INTERSECT
+               SELECT user_id FROM d WHERE day BETWEEN 19730 AND 19736)
+         UNION ALL
+         SELECT 'w1_w4', count(*), true
+         FROM (SELECT user_id FROM d WHERE day BETWEEN 19723 AND 19729
+               INTERSECT
+               SELECT user_id FROM d WHERE day BETWEEN 19744 AND 19752)
+         ORDER BY pair_name""") { (s, dir) =>
       val t = Tables(s, dir)
       import graft.functions.SketchAggregators
       val day = datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
@@ -511,7 +869,15 @@ object RelationalQueries {
     // differ by format. All three rows must equal the parquet-direct
     // oracle — a format that drops precision, mangles a header, or
     // nulls a row breaks the hash.
-    "fmt_roundtrip" -> { (s, dir) =>
+    Query("fmt_roundtrip",
+      // Every format must reproduce the parquet-direct aggregate.
+      """WITH a AS (SELECT l_returnflag, count(*) AS n,
+               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+             FROM lineitem GROUP BY 1)
+         SELECT f.fmt, a.l_returnflag, a.n, a.sum_qty, a.sum_price
+         FROM a CROSS JOIN (VALUES ('orc'), ('csv'), ('json')) AS f(fmt)
+         ORDER BY fmt, l_returnflag""") { (s, dir) =>
       val t = Tables(s, dir)
       // spread before the store build: the single-row-group lineitem
       // scan would otherwise write ONE gzip part per format, and gzip
@@ -607,7 +973,26 @@ object RelationalQueries {
     // test SFs the per-range distinct users sit below maxMapSize=2048,
     // the sketch is exact, maxError is 0 and the intervals are points —
     // tight, not vacuous.
-    "q_topk_rollup" -> { (s, dir) =>
+    Query("q_topk_rollup",
+      // Self-certifying (see the query comment): the oracle is the exact
+      // top-5 per range + `true`; the interval bracketing is attested
+      // Spark-side.
+      """WITH d AS (SELECT CAST(user_id AS VARCHAR) AS item,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+             FROM events)
+         SELECT * FROM (
+           SELECT 'week1' AS range_name, rk, item, n, true AS within_bound
+           FROM (SELECT item, count(*) AS n,
+                   row_number() OVER (ORDER BY count(*) DESC, item) AS rk
+                 FROM d WHERE day BETWEEN 19723 AND 19729 GROUP BY item)
+           WHERE rk <= 5
+           UNION ALL
+           SELECT 'month', rk, item, n, true
+           FROM (SELECT item, count(*) AS n,
+                   row_number() OVER (ORDER BY count(*) DESC, item) AS rk
+                 FROM d WHERE day BETWEEN 19723 AND 19752 GROUP BY item)
+           WHERE rk <= 5)
+         ORDER BY range_name, rk""") { (s, dir) =>
       val t = Tables(s, dir)
       import graft.functions.SketchAggregators
       val day = datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
@@ -626,9 +1011,10 @@ object RelationalQueries {
         val exact = t.events.filter(day.between(lo, hi))
           .groupBy(col("user_id").cast("string").as("item"))
           .agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("item"))
+          .limit(5) // rank the top 5 only, not every distinct user
           .withColumn("rk", row_number().over(
             Window.orderBy(col("n").desc, col("item"))))
-          .filter(col("rk") <= 5)
         exact.join(skRows, Seq("item"), "left")
           .crossJoin(broadcast(maxErr))
           .select(lit(name).as("range_name"), col("rk"), col("item"),
@@ -648,7 +1034,36 @@ object RelationalQueries {
     // violation counting is exercised, not just its happy path. All
     // row-level constraints ride ONE aggregate; the referential check
     // is one anti-join against the customer dimension.
-    "dq_report" -> { (s, dir) =>
+    Query("dq_report",
+      // Each constraint's exact violation count, recomputed from scratch.
+      """WITH n AS (SELECT count(*) AS n_rows FROM orders)
+         SELECT "constraint", n_rows, violations, violations = 0 AS pass
+         FROM (
+           SELECT 'not_null(o_custkey)' AS "constraint", n.n_rows,
+             (SELECT count(*) FROM orders WHERE o_custkey IS NULL)
+               AS violations FROM n
+           UNION ALL
+           SELECT 'unique(o_orderkey)', n.n_rows,
+             n.n_rows - (SELECT count(DISTINCT o_orderkey) FROM orders)
+           FROM n
+           UNION ALL
+           SELECT 'in_range(o_totalprice)', n.n_rows,
+             (SELECT count(*) FROM orders WHERE o_totalprice IS NULL
+                OR o_totalprice < 0.0 OR o_totalprice > 1e9) FROM n
+           UNION ALL
+           SELECT 'in_range(o_orderkey)', n.n_rows,
+             (SELECT count(*) FROM orders WHERE o_orderkey IS NULL
+                OR o_orderkey < 0.0 OR o_orderkey > 1000.0) FROM n
+           UNION ALL
+           SELECT 'matches(o_orderpriority)', n.n_rows,
+             (SELECT count(*) FROM orders WHERE o_orderpriority IS NULL
+                OR NOT regexp_matches(o_orderpriority, '^[1-5]-')) FROM n
+           UNION ALL
+           SELECT 'ref(o_custkey->c_custkey)', n.n_rows,
+             (SELECT count(*) FROM orders o WHERE o.o_custkey IS NOT NULL
+                AND NOT EXISTS (SELECT 1 FROM customer c
+                                WHERE c.c_custkey = o.o_custkey)) FROM n)
+         ORDER BY "constraint"""") { (s, dir) =>
       val t = Tables(s, dir)
       import graft.operators.Quality
       Quality.report(t.orders, Seq(
@@ -667,7 +1082,29 @@ object RelationalQueries {
     // pipeline reads the table anyway). The returned frame is the
     // observation rendered report-shaped; InRange(value <= 100) is a
     // REAL violation (values reach ~490) so the counting is exercised.
-    "dq_observe" -> { (s, dir) =>
+    Query("dq_observe",
+      // The observed counts recomputed from scratch, plus the piggyback
+      // job's own group count — the observation must equal a dedicated
+      // scan's answer.
+      """WITH n AS (SELECT count(*) AS n_rows FROM events),
+            g AS (SELECT count(*) AS main_job_groups FROM
+                    (SELECT strftime(ts, '%Y-%m-%d-%H') AS h FROM events
+                     GROUP BY 1))
+         SELECT "constraint", n_rows, violations, violations = 0 AS pass,
+           g.main_job_groups
+         FROM (
+           SELECT 'not_null(user_id)' AS "constraint", n.n_rows,
+             (SELECT count(*) FROM events WHERE user_id IS NULL)
+               AS violations FROM n
+           UNION ALL
+           SELECT 'in_range(value)', n.n_rows,
+             (SELECT count(*) FROM events WHERE value IS NULL
+                OR value < 0.0 OR value > 100.0) FROM n
+           UNION ALL
+           SELECT 'matches(event_type)', n.n_rows,
+             (SELECT count(*) FROM events WHERE event_type IS NULL
+                OR NOT regexp_matches(event_type, '^[a-z_]+$')) FROM n)
+         CROSS JOIN g ORDER BY "constraint"""") { (s, dir) =>
       val t = Tables(s, dir)
       import graft.operators.Quality
       val constraints = Seq(
@@ -691,7 +1128,11 @@ object RelationalQueries {
     // seed). The sketch is fixed-size and mergeable (treeAggregate under
     // stat.countMinSketch), so the build is one pass at any corpus
     // size; the 10-row exact side is report-sized.
-    "q_approx_freq" -> { (s, dir) =>
+    Query("q_approx_freq",
+      // Self-certifying sketch (see the query comment): oracle is the
+      // deterministic remainder — exact per-key counts + `true`.
+      """SELECT event_type, count(*) AS n, true AS within_bound
+         FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
       import s.implicits._
       val t = Tables(s, dir)
       val ev = t.events
@@ -720,7 +1161,14 @@ object RelationalQueries {
     // SQL front end: spark.sql over registered views, exercising a
     // correlated scalar subquery (decorrelated to a join by Catalyst) and
     // an IN-subquery (planned as a semi join).
-    "q_sql_subqueries" -> { (s, dir) =>
+    Query("q_sql_subqueries",
+      """SELECT c_custkey, c_name
+         FROM customer c
+         WHERE (SELECT count(*) FROM orders o
+                WHERE o.o_custkey = c.c_custkey) > 12
+           AND c_nationkey IN (SELECT n_nationkey FROM nation
+                               WHERE n_regionkey = 2)
+         ORDER BY c_custkey""") { (s, dir) =>
       val t = Tables(s, dir)
       t.customer.createOrReplaceTempView("v_customer")
       t.orders.createOrReplaceTempView("v_orders")
@@ -736,7 +1184,25 @@ object RelationalQueries {
     },
 
     // Gap-based sessionization (30 min) with per-session rollup.
-    "q_sessionize" -> { (s, dir) =>
+    Query("q_sessionize",
+      """WITH flagged AS (
+           SELECT user_id, ts, event_id, value,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+                  THEN 1 ELSE 0 END AS new_session
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+            sess AS (
+           SELECT user_id, ts, value,
+             CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+           FROM flagged)
+         SELECT user_id, session_id,
+           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS s_start,
+           count(*) AS n_events,
+           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+         FROM sess GROUP BY user_id, session_id
+         ORDER BY user_id, session_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Sessionize
         .sessionStats(t.events, col("user_id"), col("ts"), 1800L,
@@ -749,7 +1215,20 @@ object RelationalQueries {
 
     // SCD2 dimension build from the event history: per user, versions of
     // the tracked attribute (event_type) with [valid_from, valid_to).
-    "q_scd2" -> { (s, dir) =>
+    Query("q_scd2",
+      """WITH o AS (SELECT user_id, ts, event_type,
+             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+            r AS (SELECT user_id, event_type, ts FROM o
+                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
+            v AS (SELECT user_id, event_type, ts AS vf,
+                    lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS vt
+                  FROM r)
+         SELECT user_id, event_type,
+           strftime(vf, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+           strftime(vt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
+           vt IS NULL AS is_current
+         FROM v ORDER BY user_id, vf""") { (s, dir) =>
       val t = Tables(s, dir)
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       graft.operators.Cdc
@@ -766,7 +1245,22 @@ object RelationalQueries {
     // dimension is built from the first 19 days, the remaining days are
     // folded in with scd2Merge, and the ORACLE is the full-history SQL —
     // the merge must be indistinguishable from a rebuild.
-    "q_scd2_merge" -> { (s, dir) =>
+    Query("q_scd2_merge",
+      // Identical to q_scd2 on purpose: the merge path must reproduce the
+      // full-history rebuild bit for bit.
+      """WITH o AS (SELECT user_id, ts, event_type,
+             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+            r AS (SELECT user_id, event_type, ts FROM o
+                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
+            v AS (SELECT user_id, event_type, ts AS vf,
+                    lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS vt
+                  FROM r)
+         SELECT user_id, event_type,
+           strftime(vf, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+           strftime(vt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
+           vt IS NULL AS is_current
+         FROM v ORDER BY user_id, vf""") { (s, dir) =>
       val t = Tables(s, dir)
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       val split = lit("2024-01-20 00:00:00").cast("timestamp")
@@ -791,7 +1285,23 @@ object RelationalQueries {
     // recomputes only the violating keys from the full history. The
     // oracle is the full-rebuild SQL — merge-plus-repair must be
     // indistinguishable from never having lost the rows.
-    "q_scd2_rebuild" -> { (s, dir) =>
+    Query("q_scd2_rebuild",
+      // Identical full-rebuild SQL again, on purpose: merge-the-clean-rest
+      // plus rebuildKeys-for-the-late-keys must reproduce exactly what a
+      // rebuild over the never-lost history produces.
+      """WITH o AS (SELECT user_id, ts, event_type,
+             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+            r AS (SELECT user_id, event_type, ts FROM o
+                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
+            v AS (SELECT user_id, event_type, ts AS vf,
+                    lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS vt
+                  FROM r)
+         SELECT user_id, event_type,
+           strftime(vf, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+           strftime(vt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
+           vt IS NULL AS is_current
+         FROM v ORDER BY user_id, vf""") { (s, dir) =>
       val t = Tables(s, dir)
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       val split = lit("2024-01-20 00:00:00").cast("timestamp")
@@ -822,7 +1332,18 @@ object RelationalQueries {
     // active a day earlier, via the as-of operator (union-and-carry-
     // forward: one shuffle, no per-key version multiplication; chain
     // continuity makes the latest valid_from <= t the active version).
-    "q_scd2_lookup" -> { (s, dir) =>
+    Query("q_scd2_lookup",
+      """WITH o AS (SELECT user_id, ts, event_type,
+             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
+           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+            v AS (SELECT user_id, event_type, ts AS vf FROM o
+                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
+            e AS (SELECT event_id, user_id, ts - INTERVAL 1 DAY AS at
+                  FROM events)
+         SELECT e.event_id, e.user_id, v.event_type AS event_type_1d_ago
+         FROM e ASOF LEFT JOIN v
+           ON e.user_id = v.user_id AND e.at >= v.vf
+         ORDER BY e.event_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val dim = graft.operators.Cdc.scd2FromHistory(t.events, col("user_id"),
         col("ts"), col("event_type"), Seq(col("event_id")))
@@ -837,7 +1358,14 @@ object RelationalQueries {
 
     // As-of backward join: each event picks the latest prior order in its
     // (synthetic) customer bucket. Union-and-carry-forward plan: one shuffle.
-    "q_asof_join" -> { (s, dir) =>
+    Query("q_asof_join",
+      """WITH r AS (SELECT o_custkey % 50 AS k, o_orderdate,
+                      max(o_orderkey) AS last_orderkey
+                    FROM orders GROUP BY 1, 2)
+         SELECT e.event_id, r.last_orderkey
+         FROM events e ASOF LEFT JOIN r
+           ON e.user_id % 50 = r.k AND e.ts >= r.o_orderdate
+         ORDER BY e.event_id""") { (s, dir) =>
       val t = Tables(s, dir)
       val right = t.orders
         .groupBy(pmod(col("o_custkey"), lit(50)).as("k"), col("o_orderdate"))
@@ -852,7 +1380,14 @@ object RelationalQueries {
     },
 
     // Pivot: day x event_type metric matrix.
-    "q_pivot" -> { (s, dir) =>
+    Query("q_pivot",
+      """SELECT strftime(ts, '%Y-%m-%d') AS day,
+         CAST(sum(CASE WHEN event_type='click' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS click,
+         CAST(sum(CASE WHEN event_type='error' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS error,
+         CAST(sum(CASE WHEN event_type='purchase' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS purchase,
+         CAST(sum(CASE WHEN event_type='signup' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS signup,
+         CAST(sum(CASE WHEN event_type='view' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS view
+         FROM events GROUP BY 1 ORDER BY 1""") { (s, dir) =>
       val t = Tables(s, dir)
       t.events
         .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -863,7 +1398,11 @@ object RelationalQueries {
 
     // Two-phase salted aggregation — skew-safe groupBy; oracle is the
     // plain single-shuffle aggregation (results must be identical).
-    "q_salted_agg" -> { (s, dir) =>
+    Query("q_salted_agg",
+      """SELECT user_id, count(*) AS n,
+         CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v,
+         CAST(max(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS max_v
+         FROM events GROUP BY user_id ORDER BY user_id""") { (s, dir) =>
       val t = Tables(s, dir)
       graft.operators.Skew.saltedAgg(
           t.events.select(col("event_id"), col("user_id"),
@@ -880,7 +1419,12 @@ object RelationalQueries {
     },
 
     // Exact interpolated percentiles per group.
-    "q_percentile" -> { (s, dir) =>
+    Query("q_percentile",
+      """SELECT l_returnflag,
+         quantile_cont(l_quantity, 0.25) AS p25,
+         quantile_cont(l_quantity, 0.5) AS p50,
+         quantile_cont(l_quantity, 0.75) AS p75
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""") { (s, dir) =>
       val t = Tables(s, dir)
       t.lineitem
         .groupBy(col("l_returnflag"))
@@ -976,634 +1520,4 @@ object RelationalQueries {
           $steps
        SELECT node, r AS rank FROM pr$iters ORDER BY node"""
   }
-
-  def oracle: Map[String, String] = Map(
-    "graph_pagerank" -> pageRankSql(5),
-    "graph_pagerank_dangling" -> pageRankDanglingSql(5),
-
-    // HITS unrolled: per round an exact-DECIMAL in-neighbor hub sum,
-    // L1 normalization in IEEE doubles, re-quantized — then the same
-    // for hubs over the fresh authorities. Same DECIMAL discipline as
-    // the pageRank oracles.
-    "graph_hits" -> {
-      val iters = 4
-      val steps = (1 to iters).map { k =>
-        s"""arr$k AS MATERIALIZED (SELECT e.dst AS node,
-                    sum(CAST(h.h AS DECIMAL(38,9))) AS s
-                  FROM e JOIN h${k - 1} h ON e.src = h.node GROUP BY 1),
-            arf$k AS MATERIALIZED (SELECT n.node,
-                        coalesce(s, CAST(0 AS DECIMAL(38,9))) AS ar
-                      FROM nodes n LEFT JOIN arr$k r ON n.node = r.node),
-            a$k AS MATERIALIZED (SELECT node, round(CAST(ar AS DOUBLE)
-                      / (SELECT CAST(sum(ar) AS DOUBLE) FROM arf$k), 9)
-                      AS a
-                    FROM arf$k),
-            hrr$k AS MATERIALIZED (SELECT e.src AS node,
-                        sum(CAST(a.a AS DECIMAL(38,9))) AS s
-                      FROM e JOIN a$k a ON e.dst = a.node GROUP BY 1),
-            hrf$k AS MATERIALIZED (SELECT n.node,
-                        coalesce(s, CAST(0 AS DECIMAL(38,9))) AS hr
-                      FROM nodes n LEFT JOIN hrr$k r ON n.node = r.node),
-            h$k AS MATERIALIZED (SELECT node, round(CAST(hr AS DOUBLE)
-                      / (SELECT CAST(sum(hr) AS DOUBLE) FROM hrf$k), 9)
-                      AS h
-                    FROM hrf$k)"""
-      }.mkString(",\n")
-      s"""WITH fd AS (SELECT CAST(l_suppkey AS BIGINT) AS a,
-               CAST(l_partkey AS BIGINT) + 10000000 AS b
-             FROM lineitem WHERE l_quantity >= 48),
-           e AS (SELECT DISTINCT a AS src, b AS dst FROM fd),
-           nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-           h0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS h FROM nodes),
-           $steps
-         SELECT h.node AS node, h.h AS hub, a.a AS authority
-         FROM h$iters h JOIN a$iters a USING (node) ORDER BY node"""
-    },
-
-    // The synchronous recurrence unrolled: per round, votes = in-
-    // neighbor labels counted per (dst, label), mode = row_number over
-    // (cnt DESC, label ASC), keep-own for nodes with no in-edges.
-    "graph_label_prop" -> {
-      val iters = 4
-      val steps = (1 to iters).map { k =>
-        s"""v$k AS (SELECT e.dst, l.lab, count(*) AS cnt
-                    FROM e JOIN l${k - 1} l ON e.src = l.node
-                    GROUP BY 1, 2),
-            m$k AS (SELECT dst, lab FROM (
-                      SELECT dst, lab, row_number() OVER (
-                        PARTITION BY dst ORDER BY cnt DESC, lab ASC) AS rn
-                      FROM v$k) WHERE rn = 1),
-            l$k AS (SELECT l.node, coalesce(m.lab, l.lab) AS lab
-                    FROM l${k - 1} l LEFT JOIN m$k m ON l.node = m.dst)"""
-      }.mkString(",\n")
-      s"""WITH $graphBaseSql,
-            l0 AS (SELECT node, node AS lab FROM nodes),
-            $steps
-         SELECT node AS id, lab AS label FROM l$iters ORDER BY id"""
-    },
-
-    // Min-label transitive closure to fixpoint: r holds (v, u) for every
-    // u that reaches v; the component label is the minimum — exactly the
-    // min-root invariant of the union-find/pointer-jumping operator.
-    "graph_components" ->
-      s"""WITH RECURSIVE $graphBaseSql,
-            r(node, lab) AS (
-              SELECT node, node FROM nodes
-              UNION
-              SELECT e.dst, r.lab FROM r JOIN e ON e.src = r.node)
-         SELECT node AS id, min(lab) AS label FROM r
-         GROUP BY 1 ORDER BY 1""",
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-         CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-         count(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00'
-         GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-
-    "q_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-         WHERE l_quantity > 45.0 ORDER BY l_orderkey, l_linenumber""",
-
-    "q3_join_topk" ->
-      """SELECT l_orderkey, o_orderdate,
-         CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-           AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-         GROUP BY l_orderkey, o_orderdate
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-
-    "q_broadcast_star" ->
-      """SELECT r_name, n_name, count(*) AS n_cust,
-         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-         FROM customer
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-
-    "q_semi_join" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey AND l_quantity >= 49.0)
-         ORDER BY o_orderkey""",
-
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey = c_custkey AND o_totalprice > 300000.0)
-         ORDER BY c_custkey""",
-
-    "q_window_topk" ->
-      """SELECT p_brand, rk, p_partkey, p_retailprice FROM (
-           SELECT p_brand, p_partkey, p_retailprice,
-             row_number() OVER (PARTITION BY p_brand
-               ORDER BY p_retailprice DESC, p_partkey) AS rk
-           FROM part) WHERE rk <= 3 ORDER BY p_brand, rk""",
-
-    "q_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER (
-           PARTITION BY l_suppkey
-           ORDER BY l_shipdate, l_orderkey, l_linenumber
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty
-         FROM lineitem WHERE l_suppkey <= 10
-         ORDER BY l_suppkey, l_orderkey, l_linenumber""",
-
-    "q_salted_join" ->
-      """WITH dim AS (SELECT user_id, count(*) AS user_n FROM events GROUP BY user_id)
-         SELECT e.event_type, count(*) AS n, CAST(sum(d.user_n) AS BIGINT) AS s
-         FROM events e JOIN dim d USING (user_id)
-         GROUP BY 1 ORDER BY 1""",
-
-    // Grid arithmetic is exact integer day indexes; the forward fill is
-    // re-derived portably with the grouping-run trick (count of non-null
-    // so far = fill group, max within group = the carried value), so no
-    // IGNORE NULLS support is assumed of the oracle engine.
-    "q_gapfill_ffill" ->
-      """WITH e AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS bucket,
-               ts, event_id, value
-             FROM events),
-            obs AS (SELECT user_id, bucket, count(*) AS n_events,
-                      (max(struct_pack(ts := ts, eid := event_id,
-                                       v := value))).v AS vlast
-                    FROM e GROUP BY 1, 2),
-            r AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
-                  FROM obs GROUP BY 1),
-            grid AS (SELECT user_id, unnest(generate_series(b0, b1)) AS bucket
-                     FROM r),
-            j AS (SELECT g.user_id, g.bucket,
-                    coalesce(o.n_events, 0) AS n_events,
-                    o.n_events IS NOT NULL AS observed, o.vlast
-                  FROM grid g LEFT JOIN obs o
-                    ON g.user_id = o.user_id AND g.bucket = o.bucket),
-            w AS (SELECT user_id, bucket, n_events, observed, vlast,
-                    count(vlast) OVER (PARTITION BY user_id ORDER BY bucket
-                                       ROWS UNBOUNDED PRECEDING) AS grp
-                  FROM j)
-         SELECT user_id, bucket, n_events, observed,
-           max(vlast) OVER (PARTITION BY user_id, grp) AS value_ffill
-         FROM w ORDER BY user_id, bucket""",
-
-    // Same grid and carried values as q_gapfill_ffill; the previous
-    // observed bucket is a running max (buckets ascend, so max == last
-    // non-null without IGNORE NULLS), and the NEXT observed (bucket,
-    // value) pair rides one struct-min over the following window so the
-    // pair can never be torn. The lerp's expression shape matches the
-    // Spark side exactly — each IEEE op correctly rounded, hence
-    // hash-exact.
-    "q_gapfill_interp" ->
-      """WITH e AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS bucket,
-               ts, event_id, value
-             FROM events),
-            obs AS (SELECT user_id, bucket, count(*) AS n_events,
-                      (max(struct_pack(ts := ts, eid := event_id,
-                                       v := value))).v AS vlast
-                    FROM e GROUP BY 1, 2),
-            r AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
-                  FROM obs GROUP BY 1),
-            grid AS (SELECT user_id, unnest(generate_series(b0, b1)) AS bucket
-                     FROM r),
-            j AS (SELECT g.user_id, g.bucket,
-                    coalesce(o.n_events, 0) AS n_events,
-                    o.n_events IS NOT NULL AS observed, o.vlast
-                  FROM grid g LEFT JOIN obs o
-                    ON g.user_id = o.user_id AND g.bucket = o.bucket),
-            w AS (SELECT user_id, bucket, n_events, observed, vlast,
-                    count(vlast) OVER (PARTITION BY user_id ORDER BY bucket
-                                       ROWS UNBOUNDED PRECEDING) AS grp
-                  FROM j),
-            f AS (SELECT user_id, bucket, n_events, observed,
-                    max(vlast) OVER (PARTITION BY user_id, grp) AS vf
-                  FROM w),
-            nn AS (SELECT user_id, bucket, n_events, observed, vf,
-                     max(CASE WHEN observed THEN bucket END)
-                       OVER (PARTITION BY user_id ORDER BY bucket
-                             ROWS UNBOUNDED PRECEDING) AS pb,
-                     min(CASE WHEN observed
-                              THEN struct_pack(b := bucket, v := vf) END)
-                       OVER (PARTITION BY user_id ORDER BY bucket
-                             ROWS BETWEEN 1 FOLLOWING
-                                      AND UNBOUNDED FOLLOWING) AS nx
-                   FROM f)
-         SELECT user_id, bucket, n_events, observed,
-           CASE WHEN observed OR nx IS NULL THEN vf
-                ELSE vf + ((nx).v - vf)
-                  * (CAST(bucket - pb AS DOUBLE)
-                     / CAST((nx).b - pb AS DOUBLE)) END AS value_interp
-         FROM nn ORDER BY user_id, bucket""",
-
-    "q_rolling_7day" ->
-      """WITH daily AS (
-           SELECT CAST(ts AS DATE) AS day,
-             sum(CAST(value AS DECIMAL(18,6))) AS rev
-           FROM events GROUP BY 1)
-         SELECT strftime(day, '%Y-%m-%d') AS day,
-           round(CAST(rev AS DOUBLE), 6) AS revenue,
-           round(CAST(sum(rev) OVER (ORDER BY day
-             RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
-             AS DOUBLE), 6) AS roll_sum_7d,
-           count(*) OVER (ORDER BY day
-             RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW) AS n_days_7d
-         FROM daily ORDER BY day""",
-
-    "q_sort_limit" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""",
-
-    "q_distinct_agg" ->
-      """SELECT l_returnflag,
-         count(DISTINCT l_suppkey) AS n_supp,
-         count(DISTINCT l_partkey) AS n_part,
-         count(*) AS n_rows
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_set_ops" ->
-      """WITH auto AS (SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'),
-            bldg AS (SELECT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING')
-         SELECT * FROM (
-           SELECT 'union' AS op, c_nationkey FROM (SELECT DISTINCT c_nationkey FROM (SELECT * FROM auto UNION ALL SELECT * FROM bldg))
-           UNION ALL
-           SELECT 'intersect' AS op, c_nationkey FROM (SELECT c_nationkey FROM auto INTERSECT SELECT c_nationkey FROM bldg)
-           UNION ALL
-           SELECT 'except' AS op, c_nationkey FROM (SELECT c_nationkey FROM auto EXCEPT SELECT c_nationkey FROM bldg)
-         ) ORDER BY op, c_nationkey""",
-
-    // The estimator attests its own bound (see the query's comment); the
-    // oracle side is the deterministic remainder: exact counts + `true`.
-    "q_approx_distinct" ->
-      """SELECT count(*) AS n, count(DISTINCT user_id) AS exact_users,
-           true AS within_bound FROM events""",
-
-    // Self-certifying (see the query comment): the oracle is the exact
-    // per-range distinct + `true`; the union-estimate bound is attested
-    // Spark-side.
-    "q_sketch_rollup" ->
-      """WITH d AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
-             FROM events)
-         SELECT 'month' AS range_name, count(DISTINCT day) AS n_days,
-           count(DISTINCT user_id) AS exact_users, true AS within_bound
-         FROM d WHERE day BETWEEN 19723 AND 19752
-         UNION ALL
-         SELECT 'week1', count(DISTINCT day), count(DISTINCT user_id), true
-         FROM d WHERE day BETWEEN 19723 AND 19729
-         UNION ALL
-         SELECT 'weeks2_3', count(DISTINCT day), count(DISTINCT user_id), true
-         FROM d WHERE day BETWEEN 19730 AND 19743
-         ORDER BY range_name""",
-
-    // Self-certifying (see the query comment): the oracle is the exact
-    // per-range day/row counts + `true`; the quantile rank bound is
-    // attested Spark-side from the range's own rows.
-    "q_quantile_rollup" ->
-      """WITH d AS (SELECT value,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
-             FROM events)
-         SELECT 'month' AS range_name, count(DISTINCT day) AS n_days,
-           count(*) AS n, true AS p50_ok, true AS p90_ok, true AS p99_ok
-         FROM d WHERE day BETWEEN 19723 AND 19752
-         UNION ALL
-         SELECT 'week1', count(DISTINCT day), count(*), true, true, true
-         FROM d WHERE day BETWEEN 19723 AND 19729
-         UNION ALL
-         SELECT 'weeks2_3', count(DISTINCT day), count(*), true, true, true
-         FROM d WHERE day BETWEEN 19730 AND 19743
-         ORDER BY range_name""",
-
-    // Self-certifying (see the query comment): the oracle is the exact
-    // distinct-user intersection per range pair + `true`; the
-    // [lower, upper] containment is attested Spark-side.
-    "q_sketch_intersect" ->
-      """WITH d AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
-             FROM events)
-         SELECT 'h1_h2' AS pair_name, count(*) AS exact_both,
-           true AS within_bound
-         FROM (SELECT user_id FROM d WHERE day BETWEEN 19723 AND 19737
-               INTERSECT
-               SELECT user_id FROM d WHERE day BETWEEN 19738 AND 19752)
-         UNION ALL
-         SELECT 'w1_w2', count(*), true
-         FROM (SELECT user_id FROM d WHERE day BETWEEN 19723 AND 19729
-               INTERSECT
-               SELECT user_id FROM d WHERE day BETWEEN 19730 AND 19736)
-         UNION ALL
-         SELECT 'w1_w4', count(*), true
-         FROM (SELECT user_id FROM d WHERE day BETWEEN 19723 AND 19729
-               INTERSECT
-               SELECT user_id FROM d WHERE day BETWEEN 19744 AND 19752)
-         ORDER BY pair_name""",
-
-    // Self-certifying (see the query comment): the oracle is the exact
-    // top-5 per range + `true`; the interval bracketing is attested
-    // Spark-side.
-    "q_topk_rollup" ->
-      """WITH d AS (SELECT CAST(user_id AS VARCHAR) AS item,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
-             FROM events)
-         SELECT * FROM (
-           SELECT 'week1' AS range_name, rk, item, n, true AS within_bound
-           FROM (SELECT item, count(*) AS n,
-                   row_number() OVER (ORDER BY count(*) DESC, item) AS rk
-                 FROM d WHERE day BETWEEN 19723 AND 19729 GROUP BY item)
-           WHERE rk <= 5
-           UNION ALL
-           SELECT 'month', rk, item, n, true
-           FROM (SELECT item, count(*) AS n,
-                   row_number() OVER (ORDER BY count(*) DESC, item) AS rk
-                 FROM d WHERE day BETWEEN 19723 AND 19752 GROUP BY item)
-           WHERE rk <= 5)
-         ORDER BY range_name, rk""",
-
-    // Each constraint's exact violation count, recomputed from scratch.
-    "dq_report" ->
-      """WITH n AS (SELECT count(*) AS n_rows FROM orders)
-         SELECT "constraint", n_rows, violations, violations = 0 AS pass
-         FROM (
-           SELECT 'not_null(o_custkey)' AS "constraint", n.n_rows,
-             (SELECT count(*) FROM orders WHERE o_custkey IS NULL)
-               AS violations FROM n
-           UNION ALL
-           SELECT 'unique(o_orderkey)', n.n_rows,
-             n.n_rows - (SELECT count(DISTINCT o_orderkey) FROM orders)
-           FROM n
-           UNION ALL
-           SELECT 'in_range(o_totalprice)', n.n_rows,
-             (SELECT count(*) FROM orders WHERE o_totalprice IS NULL
-                OR o_totalprice < 0.0 OR o_totalprice > 1e9) FROM n
-           UNION ALL
-           SELECT 'in_range(o_orderkey)', n.n_rows,
-             (SELECT count(*) FROM orders WHERE o_orderkey IS NULL
-                OR o_orderkey < 0.0 OR o_orderkey > 1000.0) FROM n
-           UNION ALL
-           SELECT 'matches(o_orderpriority)', n.n_rows,
-             (SELECT count(*) FROM orders WHERE o_orderpriority IS NULL
-                OR NOT regexp_matches(o_orderpriority, '^[1-5]-')) FROM n
-           UNION ALL
-           SELECT 'ref(o_custkey->c_custkey)', n.n_rows,
-             (SELECT count(*) FROM orders o WHERE o.o_custkey IS NOT NULL
-                AND NOT EXISTS (SELECT 1 FROM customer c
-                                WHERE c.c_custkey = o.o_custkey)) FROM n)
-         ORDER BY "constraint"""",
-
-    // The observed counts recomputed from scratch, plus the piggyback
-    // job's own group count — the observation must equal a dedicated
-    // scan's answer.
-    "dq_observe" ->
-      """WITH n AS (SELECT count(*) AS n_rows FROM events),
-            g AS (SELECT count(*) AS main_job_groups FROM
-                    (SELECT strftime(ts, '%Y-%m-%d-%H') AS h FROM events
-                     GROUP BY 1))
-         SELECT "constraint", n_rows, violations, violations = 0 AS pass,
-           g.main_job_groups
-         FROM (
-           SELECT 'not_null(user_id)' AS "constraint", n.n_rows,
-             (SELECT count(*) FROM events WHERE user_id IS NULL)
-               AS violations FROM n
-           UNION ALL
-           SELECT 'in_range(value)', n.n_rows,
-             (SELECT count(*) FROM events WHERE value IS NULL
-                OR value < 0.0 OR value > 100.0) FROM n
-           UNION ALL
-           SELECT 'matches(event_type)', n.n_rows,
-             (SELECT count(*) FROM events WHERE event_type IS NULL
-                OR NOT regexp_matches(event_type, '^[a-z_]+$')) FROM n)
-         CROSS JOIN g ORDER BY "constraint"""",
-
-    // Every format must reproduce the parquet-direct aggregate.
-    "fmt_roundtrip" ->
-      """WITH a AS (SELECT l_returnflag, count(*) AS n,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-             FROM lineitem GROUP BY 1)
-         SELECT f.fmt, a.l_returnflag, a.n, a.sum_qty, a.sum_price
-         FROM a CROSS JOIN (VALUES ('orc'), ('csv'), ('json')) AS f(fmt)
-         ORDER BY fmt, l_returnflag""",
-
-    // Self-certifying sketch (see the query comment): oracle is the
-    // deterministic remainder — exact per-key counts + `true`.
-    "q_approx_freq" ->
-      """SELECT event_type, count(*) AS n, true AS within_bound
-         FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "q_sql_subqueries" ->
-      """SELECT c_custkey, c_name
-         FROM customer c
-         WHERE (SELECT count(*) FROM orders o
-                WHERE o.o_custkey = c.c_custkey) > 12
-           AND c_nationkey IN (SELECT n_nationkey FROM nation
-                               WHERE n_regionkey = 2)
-         ORDER BY c_custkey""",
-
-    "q_sessionize" ->
-      """WITH flagged AS (
-           SELECT user_id, ts, event_id, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            sess AS (
-           SELECT user_id, ts, value,
-             CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-           FROM flagged)
-         SELECT user_id, session_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS s_start,
-           count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-         FROM sess GROUP BY user_id, session_id
-         ORDER BY user_id, session_id""",
-
-    // Mirrors anomalyZScore's exact-moment construction: round-6
-    // quantized values, DECIMAL Σv and Σv² (associativity-free — the
-    // segment-tree window sum cannot diverge from Spark's running sum),
-    // then identical correctly-rounded ÷ √ − shapes.
-    "ts_anomaly" ->
-      """WITH d AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v0
-             FROM events GROUP BY 1, 2),
-            q AS (SELECT user_id, day, round(v0, 6) AS v,
-                    CAST(round(v0, 6) AS DECIMAL(38,6)) AS v1,
-                    CAST(round(round(v0, 6) * round(v0, 6), 6)
-                      AS DECIMAL(38,6)) AS v2
-                  FROM d),
-            wnd AS (SELECT user_id, day, v,
-                      count(v1) OVER w AS n_prior,
-                      CAST(sum(v1) OVER w AS DOUBLE) AS s1,
-                      CAST(sum(v2) OVER w AS DOUBLE) AS s2
-                    FROM q
-                    WINDOW w AS (PARTITION BY user_id ORDER BY day
-                                 ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-            sc AS (SELECT user_id, day, v, n_prior,
-                     CASE WHEN n_prior >= 2 AND
-                         sqrt(greatest((s2 - s1 * s1 / n_prior)
-                                         / (n_prior - 1), 0.0)) > 0
-                       THEN round((v - s1 / n_prior)
-                         / sqrt(greatest((s2 - s1 * s1 / n_prior)
-                                           / (n_prior - 1), 0.0)), 6)
-                     END AS z
-                   FROM wnd)
-         SELECT user_id, day, v, n_prior, z,
-           coalesce(abs(z) > 3.0, false) AS is_anomaly
-         FROM sc ORDER BY user_id, day""",
-
-    // list_reduce seeds with the first element, exactly like the Spark
-    // fold's slice-plus-init — same per-step IEEE ops, same order.
-    "ts_ewma" ->
-      """WITH d AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-             FROM events GROUP BY 1, 2),
-            a AS (SELECT user_id, count(*) AS n_points,
-                    max(day) AS last_bucket,
-                    list(v ORDER BY day) AS vals
-                  FROM d GROUP BY 1)
-         SELECT user_id, n_points, last_bucket,
-           round(list_reduce(vals,
-             (acc, x) -> 0.25 * x + (1.0 - 0.25) * acc), 6) AS ewma
-         FROM a ORDER BY user_id""",
-
-    // The Holt recurrence unrolled as a recursive CTE, one step per
-    // (user, observation) — same IEEE ops in the same order as the
-    // Spark fold, so the hash holds without a tolerance. (A DuckDB
-    // struct-accumulator list_reduce was tried first and mis-evaluates
-    // the second field — the recursion is the explicit, engine-stable
-    // form.)
-    "ts_holt" ->
-      """WITH RECURSIVE d0 AS (SELECT user_id,
-               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-             FROM events GROUP BY 1, 2),
-            d AS (SELECT user_id, day, v,
-                    row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
-                  FROM d0),
-            n AS (SELECT user_id, count(*) AS n_points,
-                    max(day) AS last_bucket FROM d GROUP BY 1),
-            rec(user_id, i, l, b) AS (
-              SELECT user_id, 1, v, CAST(0.0 AS DOUBLE) FROM d WHERE rn = 1
-              UNION ALL
-              SELECT r.user_id, r.i + 1,
-                0.5 * d.v + 0.5 * (r.l + r.b),
-                0.25 * ((0.5 * d.v + 0.5 * (r.l + r.b)) - r.l) + 0.75 * r.b
-              FROM rec r JOIN d ON d.user_id = r.user_id AND d.rn = r.i + 1)
-         SELECT rec.user_id, n.n_points, n.last_bucket,
-           round(l, 6) AS level, round(b, 6) AS trend,
-           round(l + b, 6) AS forecast_1
-         FROM rec JOIN n ON n.user_id = rec.user_id AND rec.i = n.n_points
-         ORDER BY rec.user_id""",
-
-    "q_scd2" ->
-      """WITH o AS (SELECT user_id, ts, event_type,
-             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            r AS (SELECT user_id, event_type, ts FROM o
-                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-            v AS (SELECT user_id, event_type, ts AS vf,
-                    lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS vt
-                  FROM r)
-         SELECT user_id, event_type,
-           strftime(vf, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-           strftime(vt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
-           vt IS NULL AS is_current
-         FROM v ORDER BY user_id, vf""",
-
-    // Identical to q_scd2 on purpose: the merge path must reproduce the
-    // full-history rebuild bit for bit.
-    "q_scd2_merge" ->
-      """WITH o AS (SELECT user_id, ts, event_type,
-             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            r AS (SELECT user_id, event_type, ts FROM o
-                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-            v AS (SELECT user_id, event_type, ts AS vf,
-                    lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS vt
-                  FROM r)
-         SELECT user_id, event_type,
-           strftime(vf, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-           strftime(vt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
-           vt IS NULL AS is_current
-         FROM v ORDER BY user_id, vf""",
-
-    // Identical full-rebuild SQL again, on purpose: merge-the-clean-rest
-    // plus rebuildKeys-for-the-late-keys must reproduce exactly what a
-    // rebuild over the never-lost history produces.
-    "q_scd2_rebuild" ->
-      """WITH o AS (SELECT user_id, ts, event_type,
-             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            r AS (SELECT user_id, event_type, ts FROM o
-                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-            v AS (SELECT user_id, event_type, ts AS vf,
-                    lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS vt
-                  FROM r)
-         SELECT user_id, event_type,
-           strftime(vf, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-           strftime(vt, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
-           vt IS NULL AS is_current
-         FROM v ORDER BY user_id, vf""",
-
-    "q_scd2_lookup" ->
-      """WITH o AS (SELECT user_id, ts, event_type,
-             row_number() OVER w AS rn, lag(event_type) OVER w AS prev
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            v AS (SELECT user_id, event_type, ts AS vf FROM o
-                  WHERE rn = 1 OR event_type IS DISTINCT FROM prev),
-            e AS (SELECT event_id, user_id, ts - INTERVAL 1 DAY AS at
-                  FROM events)
-         SELECT e.event_id, e.user_id, v.event_type AS event_type_1d_ago
-         FROM e ASOF LEFT JOIN v
-           ON e.user_id = v.user_id AND e.at >= v.vf
-         ORDER BY e.event_id""",
-
-    "q_asof_join" ->
-      """WITH r AS (SELECT o_custkey % 50 AS k, o_orderdate,
-                      max(o_orderkey) AS last_orderkey
-                    FROM orders GROUP BY 1, 2)
-         SELECT e.event_id, r.last_orderkey
-         FROM events e ASOF LEFT JOIN r
-           ON e.user_id % 50 = r.k AND e.ts >= r.o_orderdate
-         ORDER BY e.event_id""",
-
-    "q_pivot" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day,
-         CAST(sum(CASE WHEN event_type='click' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS click,
-         CAST(sum(CASE WHEN event_type='error' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS error,
-         CAST(sum(CASE WHEN event_type='purchase' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS purchase,
-         CAST(sum(CASE WHEN event_type='signup' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS signup,
-         CAST(sum(CASE WHEN event_type='view' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE) AS view
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "q_salted_agg" ->
-      """SELECT user_id, count(*) AS n,
-         CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v,
-         CAST(max(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS max_v
-         FROM events GROUP BY user_id ORDER BY user_id""",
-
-    "q_percentile" ->
-      """SELECT l_returnflag,
-         quantile_cont(l_quantity, 0.25) AS p25,
-         quantile_cont(l_quantity, 0.5) AS p50,
-         quantile_cont(l_quantity, 0.75) AS p75
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
-  )
 }

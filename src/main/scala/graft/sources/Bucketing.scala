@@ -62,6 +62,26 @@ object Bucketing {
     if (fs.exists(path)) fs.delete(path, true)
   }
 
+  /** Sweep a key-scoped store family's superseded entries from the
+    * warehouse: every entry whose name starts with `family` and does not
+    * contain `key` (a store of another corpus fingerprint) is dropped with
+    * [[dropManagedTable]] when the catalog has it, and deleted as a plain
+    * path otherwise (a cross-JVM leftover or an exported file). Entries of
+    * the current key stay; the store builds that follow a sweep drop their
+    * own targets first. */
+  def sweepStale(spark: SparkSession, family: String, key: String): Unit = {
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
+      val nm = st.getPath.getName
+      if (nm.startsWith(family) && !nm.contains(key)) {
+        if (spark.catalog.tableExists(nm)) dropManagedTable(spark, nm)
+        else fs.delete(st.getPath, true)
+      }
+    }
+  }
+
   /** Compact an appended bucketed table back to ONE file per bucket.
     *
     * Every [[appendBucketed]] adds a file set per touched bucket, so a

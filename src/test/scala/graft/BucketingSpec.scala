@@ -37,6 +37,35 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
+  test("sweepStale drops exactly a family's entries of other keys") {
+    import org.apache.hadoop.fs.Path
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val family = "sweep_spec_store_"
+    val staleTable = family + "0ld0_tbl"
+    val staleDir = new Path(wh, family + "0ld1_leftover")
+    val staleFile = new Path(wh, family + "0ld2.json") // an exported file
+    val current = family + "c0ffee_tbl"
+    val currentImp = family + "c0ffee_imp_tbl"
+    val otherFamily = "sweep_spec_other_0ld0_tbl"
+    val tables = Seq(staleTable, current, currentImp, otherFamily)
+    try {
+      tables.foreach(t => spark.range(3).write.saveAsTable(t))
+      fs.create(new Path(staleDir, "part-0")).close()
+      fs.create(staleFile).close()
+      Bucketing.sweepStale(spark, family, "c0ffee")
+      assert(!spark.catalog.tableExists(staleTable), "stale table kept")
+      assert(!fs.exists(new Path(wh, staleTable)), "stale table's files kept")
+      assert(!fs.exists(staleDir), "stale leftover directory kept")
+      assert(!fs.exists(staleFile), "stale exported file kept")
+      for (t <- Seq(current, currentImp, otherFamily))
+        assert(spark.table(t).count() == 3, s"$t was swept")
+    } finally {
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      Seq(staleDir, staleFile).foreach(p => fs.delete(p, true))
+    }
+  }
+
   test("zorderKey interleaves bits; known values round-trip") {
     import spark.implicits._
     // (1,0) -> bit 0 of dim 0 = 1 -> z=1; (0,1) -> bit 0 of dim 1 -> z=2;

@@ -120,6 +120,24 @@ class SketchRollupSpec extends SparkSpec {
       s"no map-side partial sketch aggregate:\n$plan")
   }
 
+  test("plan guard: q_topk_rollup ranks only the top-5 limit, not every distinct user") {
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val q = SparkEntry.queries("q_topk_rollup")(spark, sfDir)
+    // pre-AQE physical plan: the window's direct input, before any
+    // exchange planning
+    val windows = q.queryExecution.sparkPlan.collect { case w: WindowExec => w }
+    assert(windows.size == 2, s"want one ranking window per range:\n${q.queryExecution.sparkPlan}")
+    windows.foreach { w =>
+      w.child match {
+        case t: TakeOrderedAndProjectExec =>
+          assert(t.limit == 5, s"window input limits to ${t.limit}, want 5:\n$w")
+        case other =>
+          fail(s"window ranks ${other.nodeName}, not the top-5 limit:\n$w")
+      }
+    }
+  }
+
   test("theta: intersection of range unions brackets the exact overlap; exact mode is a point") {
     import graft.functions.SketchAggregators._
     val ev = Tables(spark, sfDir).events

@@ -73,6 +73,18 @@ class TestdataDriftSpec extends SparkSpec {
     assert(got == want, s"event_hourly_stats schema drifted: $got")
   }
 
+  test("a query name registered twice fails by name") {
+    import graft.queries.Query
+    def q(name: String) = Query(name, "SELECT 1")((s, _) => s.range(1).toDF())
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.uniqueNames(Seq(q("dup_b"), q("solo"), q("dup_a"), q("dup_b"),
+        q("dup_a")))
+    }
+    assert(e.getMessage.contains("dup_a, dup_b"), e.getMessage)
+    assert(!e.getMessage.contains("solo"), e.getMessage)
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+  }
+
   test("every registered query analyzes against sf0.001") {
     val broken = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
       try {
